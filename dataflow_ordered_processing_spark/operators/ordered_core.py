@@ -21,6 +21,12 @@ OrderBookProcessingPipelineTest.java:91-195):
   O8  a status snapshot (OrderedProcessingStatus analog) is available after
       every batch.
 
+``transition`` wraps ``apply_batch`` with every per-conversation policy
+decision of the streaming engines (arrival vs heartbeat timer, status,
+TTL eviction, completion cleanup vs tombstone, CEP carry, timer re-arm);
+the classic and sharded engines are adapters around it that differ only in
+where the state lives.
+
 Everything is vectorized: one numpy sort + one contiguity scan per
 (key, batch) — no per-row Python (input_hint requirement).
 """
@@ -28,10 +34,12 @@ Everything is vectorized: one numpy sort + one contiguity scan per
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
+
+from .cep_core import CEP_COLS
 
 INITIAL_TURN_IDX = 1
 END_ROLE = "system"
@@ -78,10 +86,6 @@ _EMPTY_BUFFER: dict[str, np.ndarray] = {
 }
 
 
-def _empty_buffer() -> dict[str, np.ndarray]:
-    return _EMPTY_BUFFER
-
-
 @dataclass
 class OrderedState:
     """Cursor + counters + sorted pending buffer for one key.
@@ -106,7 +110,7 @@ class OrderedState:
     n_tool: int = 0
     chars: int = 0
     idle_heartbeats: int = 0  # timer firings since last arrival (TTL eviction)
-    buffer: dict = field(default_factory=_empty_buffer)
+    buffer: dict = field(default_factory=lambda: _EMPTY_BUFFER)
 
     @property
     def buffered_count(self) -> int:
@@ -126,6 +130,22 @@ class OrderedState:
     def complete(self) -> bool:
         """Key finished: final event seen and nothing pending (→ state cleanup)."""
         return self.last_event_received and self.buffered_count == 0
+
+
+def counters(state: OrderedState) -> tuple:
+    """The cursor and counters, in field order (last_emitted … chars): the
+    common prefix of both engines' state encodings."""
+    return (
+        state.last_emitted,
+        state.received_count,
+        state.result_count,
+        state.duplicate_count,
+        state.last_event_received,
+        state.n_user,
+        state.n_assistant,
+        state.n_tool,
+        state.chars,
+    )
 
 
 def apply_batch(
@@ -255,3 +275,85 @@ def status_dict(conv_id: str, state: OrderedState) -> dict:
         "duplicate_count": state.duplicate_count,
         "last_event_received": state.last_event_received,
     }
+
+
+# Dispositions: what the engine does with a conversation's state afterwards.
+KEEP = "keep"  # store the state (open conversation)
+TOMBSTONE = "tombstone"  # completed: keep cursor + counters so late duplicates count
+REMOVE = "remove"  # drop the state (eager cleanup or TTL eviction)
+
+
+class Disposition(NamedTuple):
+    action: str  # KEEP / TOMBSTONE / REMOVE
+    rearm_ms: int | None  # heartbeat timer to re-arm with; None = no timer
+
+
+class Transition(NamedTuple):
+    emitted: dict  # apply_batch(..., as_arrays=True) columns
+    matches: dict | None  # CEP match columns (None without a pattern/new rows)
+    carry: dict | None  # CEP carry to store; None = store none
+    status: dict | None  # status_dict snapshot, or None
+    disposition: Disposition
+
+
+def timer_ms(cfg, complete: bool) -> int | None:
+    """Heartbeat duration a key must re-arm with: every open key while
+    heartbeats are on; a completed key (frozen tombstone) only when a TTL
+    will eventually evict it — otherwise its timer would fire forever."""
+    if cfg.status_heartbeat_ms and (
+        not complete or cfg.evict_idle_after_heartbeats is not None
+    ):
+        return cfg.status_heartbeat_ms
+    return None
+
+
+def transition(conv_id, state: OrderedState, carry, batch, cfg, matcher=None) -> Transition:
+    """One step of one conversation: an arrival ``batch`` (BUF_COLS frame or
+    dict of arrays) or, with ``batch=None``, a heartbeat timer firing.
+    Mutates ``state``. ``cfg`` is an OrderedStreamConfig; ``matcher`` a
+    cep_core.StreamMatcher or None.
+
+    Timer firings drain a capped remainder (the timer is the only future
+    invocation an idle key is guaranteed), count toward the TTL, and report
+    a status unless the key is a completed tombstone (its counters are
+    frozen; the completion status was already emitted). A key is TTL-evicted
+    only on a firing that emitted nothing — evicting after a capped drain
+    would drop its contiguous remainder. A completed key is removed under
+    ``cleanup_on_complete``, else tombstoned; either way its CEP carry goes
+    (the final sentinel delimits pattern scope)."""
+    timer = batch is None
+    emitted = apply_batch(
+        state,
+        _EMPTY_BUFFER if timer else batch,
+        max_emit=cfg.max_emit_per_batch,
+        as_arrays=True,
+    )
+    state.idle_heartbeats = state.idle_heartbeats + 1 if timer else 0
+    n = len(emitted["turn_idx"])
+    complete = state.complete
+    matches = None
+    if matcher is not None and n:
+        # final=complete: the completion flush closes quantified open runs
+        matches, carry = matcher.match(
+            {c: emitted[c] for c in CEP_COLS}, carry, final=complete
+        )
+    if timer:
+        report = n or not complete
+        ttl = cfg.evict_idle_after_heartbeats
+        evict = ttl is not None and state.idle_heartbeats >= ttl and not n
+    else:
+        report = cfg.emit_status_every_batch
+        evict = False
+    if evict:
+        action = REMOVE
+    elif complete:
+        action = REMOVE if cfg.cleanup_on_complete else TOMBSTONE
+    else:
+        action = KEEP
+    return Transition(
+        emitted,
+        matches,
+        carry if action == KEEP else None,
+        status_dict(conv_id, state) if report else None,
+        Disposition(action, None if action == REMOVE else timer_ms(cfg, complete)),
+    )

@@ -64,7 +64,7 @@ def _fast_scratch() -> str | None:
     + shuffle volume (tens of MB at bench scale, a few GB at sf10), far
     under that floor."""
     env = os.environ.get("SPARK_GRAFT_SCRATCH")
-    if env:
+    if env is not None:
         return None if env in ("0", "off", "") else env
     shm = "/dev/shm"
     try:

@@ -4,6 +4,11 @@ from .sinks import split_sink, start_ordered_pipeline
 from .hotkey import order_hot_channel, read_pipeline_output
 from .metrics import BufferMetricsListener
 
+# THE default streaming engine, read by build_ordered_stream,
+# start_ordered_pipeline and run_pipeline --engine: the shard-keyed engine
+# (same output as classic, one invocation per shard per batch).
+DEFAULT_ENGINE = "sharded"
+
 
 def resolve_n_shards(source, n_shards=None) -> int:
     """THE single definition of the shard-count default: None → 8 ×
@@ -16,7 +21,7 @@ def resolve_n_shards(source, n_shards=None) -> int:
     return n_shards
 
 
-def build_ordered_stream(source, cfg=None, engine="classic", n_shards=None):
+def build_ordered_stream(source, cfg=None, engine=DEFAULT_ENGINE, n_shards=None):
     """Single engine-dispatch point (used by the pipeline entrypoint, the
     sink wiring, and the test harness): 'classic' = state per conv_id,
     'sharded' = state per hash shard (same output, ~3x throughput)."""
@@ -30,6 +35,7 @@ def build_ordered_stream(source, cfg=None, engine="classic", n_shards=None):
 
 
 __all__ = [
+    "DEFAULT_ENGINE",
     "OrderedStreamConfig",
     "resolve_n_shards",
     "ordered_stream",

@@ -10,12 +10,15 @@ per-conversation states inside one pickled binary state value:
 
   - ONE stateful-group invocation per shard per micro-batch, amortizing the
     invocation overhead over every active conversation in the shard;
-  - the inner loop runs the SAME per-conversation state machine
-    (ordered_core.apply_batch), so emitted rows, statuses, duplicate
-    handling, capped drain, TTL eviction, and cleanup semantics are
-    IDENTICAL to the classic operator (tests assert row-level equality);
-  - output frames are built once per shard from concatenated numpy columns,
-    not once per conversation.
+  - the inner loop runs the SAME per-conversation step as the classic
+    operator (ordered_core.transition), so emitted rows, statuses,
+    duplicate handling, capped drain, TTL eviction, cleanup and timer
+    re-arm decisions are made in one place (tests assert row-level
+    equality between the engines); this module only maps the step's
+    disposition onto the shard dict;
+  - output frames are built once per shard from concatenated numpy columns
+    (the builder shared with the classic operator), not once per
+    conversation.
 
 Trade-off (why both variants exist): the shard state blob is rewritten
 every micro-batch. Since round 3, per-conversation entries inside the dict
@@ -35,14 +38,16 @@ parallelism unit here — at 1000 executors give it 8-32k shards).
 with a different n_shards would silently re-key conversations to different
 shards, stranding their state — the marker fails fast instead).
 
-State growth: COMPLETED conversations shrink to a compact 9-int tombstone in
-a side map (``_TOMBS``) that heartbeat sweeps never iterate — sweep cost is
-O(pending conversations), and the blob grows by ~100 bytes per completed
-conversation, retained only to discard+count post-completion re-delivery.
-With ``evict_idle_after_heartbeats`` set, tombstones age out silently after
-that many sweeps (there is no unresolved gap to report), bounding the blob
-at O(pending + recently-completed); without a TTL they accumulate like any
-keyed state store's kept keys — set a TTL on long-running streams, or
+State growth: COMPLETED conversations (the TOMBSTONE disposition) shrink
+to a compact 9-int tombstone in a side map (``_TOMBS``) — the blob grows by
+~100 bytes per completed conversation, retained only to discard+count
+post-completion re-delivery. Heartbeat sweeps iterate tombstones only when
+a TTL needs their timer (``ordered_core.timer_ms``), so without one sweep
+cost is O(pending conversations). With ``evict_idle_after_heartbeats``
+set, tombstones age out silently after that many idle heartbeats (there is
+no unresolved gap to report), bounding the blob at O(pending +
+recently-completed); without a TTL they accumulate like any keyed state
+store's kept keys — set a TTL on long-running streams, or
 ``cleanup_on_complete=True`` to skip tombstones entirely and lean on the
 sink's merge_on_key for post-completion duplicates.
 
@@ -54,6 +59,7 @@ output; docs/pipeline-design.md ordering rules).
 from __future__ import annotations
 
 import pickle
+import time
 from typing import Any, Iterator
 
 import numpy as np
@@ -62,110 +68,20 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators import cep_core
 from ..operators import ordered_core as core
 from ..schemas import STREAM_OUTPUT_SCHEMA, STREAM_OUTPUT_SCHEMA_CEP
-from .ordered_stream import (
-    OrderedStreamConfig,
-    _DEPTH_COLS,
-    _STATUS_COLS,
-    _match_frame,
-    _pad_cep,
-    cfg_matcher,
-)
+from .ordered_stream import OrderedStreamConfig, _Output, cfg_matcher
 
 SHARD_STATE_SCHEMA = T.StructType([T.StructField("blob", T.BinaryType(), True)])
 
-_EMPTY_BATCH = core._EMPTY_BUFFER
-
 
 def _conv_to_tuple(st: core.OrderedState) -> tuple:
-    buf = st.buffer
-    return (
-        st.last_emitted,
-        st.received_count,
-        st.result_count,
-        st.duplicate_count,
-        st.last_event_received,
-        st.n_user,
-        st.n_assistant,
-        st.n_tool,
-        st.chars,
-        st.idle_heartbeats,
-        {c: core._col(buf, c) for c in core.BUF_COLS}
-        if len(core._col(buf, "turn_idx"))
-        else None,
-    )
+    buf = {c: core._col(st.buffer, c) for c in core.BUF_COLS} if st.buffered_count else None
+    return (*core.counters(st), st.idle_heartbeats, buf)
 
 
 def _conv_from_tuple(t: tuple) -> core.OrderedState:
-    buf = t[10] if t[10] is not None else core._EMPTY_BUFFER
-    return core.OrderedState(
-        last_emitted=t[0],
-        received_count=t[1],
-        result_count=t[2],
-        duplicate_count=t[3],
-        last_event_received=t[4],
-        n_user=t[5],
-        n_assistant=t[6],
-        n_tool=t[7],
-        chars=t[8],
-        idle_heartbeats=t[9],
-        buffer=buf,
-    )
-
-
-def _shard_data_frame(conv_ids: list[np.ndarray], parts: list[dict]) -> pd.DataFrame:
-    """One STREAM_OUTPUT_SCHEMA frame for ALL conversations emitted by this
-    shard in this batch — the amortization that makes sharding pay."""
-    conv = np.concatenate(conv_ids)
-    n = len(conv)
-    cols = {
-        c: np.concatenate([p[c] for p in parts])
-        for c in ("turn_idx", "role", "text", "tool", "ts_us", "emit_seq", *_DEPTH_COLS)
-    }
-    nan = np.full(n, np.nan)
-    return pd.DataFrame(
-        {
-            "row_type": np.full(n, "data", dtype=object),
-            "conv_id": conv,
-            "turn_idx": cols["turn_idx"].astype("int32", copy=False),
-            "role": cols["role"],
-            "text": cols["text"],
-            "tool": cols["tool"],
-            "ts": cols["ts_us"].astype("int64", copy=False).view("M8[us]"),
-            "emit_seq": cols["emit_seq"].astype("int64", copy=False),
-            **{c: cols[c].astype("int64", copy=False) for c in _DEPTH_COLS},
-            "status_ts": pd.Series(np.full(n, None), dtype="datetime64[us]"),
-            **{c: nan for c in _STATUS_COLS if c != "last_event_received"},
-            "last_event_received": np.full(n, None, dtype=object),
-        }
-    )
-
-
-def _shard_status_frame(statuses: list[dict]) -> pd.DataFrame:
-    from datetime import datetime, timezone
-
-    n = len(statuses)
-    now = datetime.now(timezone.utc).replace(tzinfo=None)
-    return pd.DataFrame(
-        {
-            "row_type": np.full(n, "status", dtype=object),
-            "conv_id": np.array([s["conv_id"] for s in statuses], dtype=object),
-            "turn_idx": np.full(n, None, dtype=object),
-            "role": np.full(n, None, dtype=object),
-            "text": np.full(n, None, dtype=object),
-            "tool": np.full(n, None, dtype=object),
-            "ts": pd.Series(np.full(n, None), dtype="datetime64[us]"),
-            "emit_seq": np.full(n, None, dtype=object),
-            **{c: np.full(n, None, dtype=object) for c in _DEPTH_COLS},
-            "status_ts": pd.Series(np.full(n, now), dtype="datetime64[us]"),
-            **{
-                c: np.array([s[c] for s in statuses], dtype=object)
-                for c in _STATUS_COLS
-            },
-        }
-    )
+    return core.OrderedState(*t[:10], t[10] if t[10] is not None else core._EMPTY_BUFFER)
 
 
 # Reserved (non-string) keys inside the shard state dict — conv_id keys are
@@ -177,33 +93,15 @@ _CEP = 2  # side map {conv_id: CEP state} — strict carry / skip frontier
 
 def _tomb_from_state(st: core.OrderedState) -> tuple:
     """Compact tombstone for a completed conversation: cursor + frozen
-    counters (no buffer — it's empty by definition of complete), plus the
-    idle-sweep age for TTL aging. ~100 bytes pickled vs the full tuple."""
-    return (
-        st.last_emitted,
-        st.received_count,
-        st.result_count,
-        st.duplicate_count,
-        st.n_user,
-        st.n_assistant,
-        st.n_tool,
-        st.chars,
-        0,  # sweeps since tombstoned
-    )
+    counters without last_event_received (True by definition of complete)
+    or the buffer (empty), plus the idle-heartbeat count for TTL aging.
+    ~100 bytes pickled vs the full tuple."""
+    c = core.counters(st)
+    return (*c[:4], *c[5:], st.idle_heartbeats)
 
 
 def _state_from_tomb(t: tuple) -> core.OrderedState:
-    return core.OrderedState(
-        last_emitted=t[0],
-        received_count=t[1],
-        result_count=t[2],
-        duplicate_count=t[3],
-        last_event_received=True,
-        n_user=t[4],
-        n_assistant=t[5],
-        n_tool=t[6],
-        chars=t[7],
-    )
+    return core.OrderedState(*t[:4], True, *t[4:8], idle_heartbeats=t[8])
 
 
 def _conv_loads(v) -> tuple:
@@ -221,93 +119,56 @@ def _conv_dumps(st: core.OrderedState) -> bytes:
 
 
 def make_sharded_func(cfg: OrderedStreamConfig):
-    matcher = cfg_matcher(cfg)  # ONE mode dispatcher shared with the
-    has_cep = matcher is not None  # classic engine (strict carry / skip frontier)
+    """Build the (shard, pdf_iter, state) function: decode the shard dict,
+    run ordered_core.transition per conversation, and map each disposition
+    onto a dict entry (KEEP), a ``_TOMBS`` entry (TOMBSTONE) or neither
+    (REMOVE)."""
+    matcher = cfg_matcher(cfg)
+    has_cep = matcher is not None
 
     def func(key: tuple, pdfs: Iterator[pd.DataFrame], state: Any) -> Iterator[pd.DataFrame]:
-        import time
-
-        states: dict = (
-            pickle.loads(state.get[0]) if state.exists else {}
-        )
+        states: dict = pickle.loads(state.get[0]) if state.exists else {}
+        tombs: dict = states.setdefault(_TOMBS, {})
         cep_map: dict = states.get(_CEP, {}) if has_cep else {}
+        out = _Output(has_cep)
 
-        data_convs: list[np.ndarray] = []
-        data_parts: list[dict] = []
-        match_convs: list[np.ndarray] = []
-        match_parts: list[dict] = []
-        statuses: list[dict] = []
-
-        def run_conv(conv_id: str, st: core.OrderedState, batch) -> int:
-            emitted = core.apply_batch(
-                st, batch, max_emit=cfg.max_emit_per_batch, as_arrays=True
-            )
-            n = len(emitted["turn_idx"])
-            if n:
-                data_convs.append(np.full(n, conv_id, dtype=object))
-                data_parts.append(emitted)
-                if has_cep:
-                    run = {c: emitted[c] for c in cep_core.CEP_COLS}
-                    # final=complete: the completion flush closes quantified
-                    # open runs (a run touching the final turn is maximal)
-                    matches, cstate = matcher.match(
-                        run, cep_map.get(conv_id), final=st.complete
-                    )
-                    cep_map[conv_id] = cstate
-                    m = len(matches["start_idx"])
-                    if m:
-                        match_convs.append(np.full(m, conv_id, dtype=object))
-                        match_parts.append(matches)
-            return n
+        def step(conv_id: str, st: core.OrderedState, batch) -> bool:
+            """Transition one conversation; store everything but an open
+            conversation's entry (the caller encodes it). True = open."""
+            tr = core.transition(conv_id, st, cep_map.get(conv_id), batch, cfg, matcher)
+            out.add(conv_id, tr)
+            if tr.carry is not None:
+                cep_map[conv_id] = tr.carry
+            else:
+                cep_map.pop(conv_id, None)
+            action = tr.disposition.action
+            if action == core.KEEP:
+                # a post-final turn that re-opened a gap resurrects a
+                # tombstone: drop it so it can't shadow the live entry
+                tombs.pop(conv_id, None)
+                return True
+            states.pop(conv_id, None)
+            if action == core.TOMBSTONE:
+                tombs[conv_id] = _tomb_from_state(st)
+            else:
+                tombs.pop(conv_id, None)
+            return False
 
         def heartbeat_sweep(skip: set) -> None:
-            """Per-conversation heartbeat: drain capped remainders, emit a
-            status, TTL-evict idle gapped keys — same per-key semantics as
-            the classic engine's timer. `skip` = convs that just received
-            arrivals (their idle clock was reset this batch). Tombstones
-            (completed conversations) are NOT swept — their counters are
-            frozen, so a heartbeat status would only repeat the completion
-            snapshot already emitted on the final arrival; under a TTL they
-            age out silently below (no unresolved gap to report)."""
+            """One timer firing for every conversation of the shard except
+            `skip` (those that just received arrivals). Tombstones are swept
+            only when they need a timer at all (a TTL ages them out);
+            otherwise the sweep is O(pending conversations)."""
+            swept_tombs = list(tombs) if core.timer_ms(cfg, complete=True) else []
             for conv_id in list(states):
                 if isinstance(conv_id, int) or conv_id in skip:
-                    continue  # reserved keys (_HB_AT, _TOMBS) + fresh arrivals
+                    continue  # reserved keys (_HB_AT, _TOMBS, _CEP)
                 st = _conv_from_tuple(_conv_loads(states[conv_id]))
-                st.idle_heartbeats += 1
-                n_emitted = run_conv(conv_id, st, _EMPTY_BATCH)
-                statuses.append(core.status_dict(conv_id, st))
-                evict = (
-                    cfg.evict_idle_after_heartbeats is not None
-                    and st.idle_heartbeats >= cfg.evict_idle_after_heartbeats
-                )
-                # NEVER evict while a capped drain just emitted rows — the
-                # contiguous remainder would be silently dropped (classic
-                # engine guard: ordered_stream.py `evict and not len(emitted)`)
-                if evict and n_emitted == 0:
-                    del states[conv_id]
-                    cep_map.pop(conv_id, None)
-                elif st.complete:
-                    # a capped drain just finished the conversation — same
-                    # completion contract as the arrival path: eager cleanup
-                    # under cleanup_on_complete, else a compact tombstone
-                    del states[conv_id]
-                    cep_map.pop(conv_id, None)  # compact tombstone (see arrival path)
-                    if not cfg.cleanup_on_complete:
-                        states.setdefault(_TOMBS, {})[conv_id] = _tomb_from_state(st)
-                else:
+                if step(conv_id, st, None):
                     states[conv_id] = _conv_dumps(st)
-            if cfg.evict_idle_after_heartbeats is not None and _TOMBS in states:
-                tombs = states[_TOMBS]
-                for conv_id in list(tombs):
-                    if conv_id in skip:
-                        continue
-                    t = tombs[conv_id]
-                    age = t[8] + 1
-                    if age >= cfg.evict_idle_after_heartbeats:
-                        del tombs[conv_id]  # silent: counters frozen, no gap
-                        cep_map.pop(conv_id, None)
-                    else:
-                        tombs[conv_id] = (*t[:8], age)
+            for conv_id in swept_tombs:
+                if conv_id not in skip:
+                    step(conv_id, _state_from_tomb(tombs[conv_id]), None)
             states[_HB_AT] = time.time()
 
         if state.hasTimedOut:
@@ -317,7 +178,7 @@ def make_sharded_func(cfg: OrderedStreamConfig):
             batch = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
             # Pandas exits here: pull the shard batch into numpy columns ONCE
             # (incl. one vectorized ts conversion), segment by conv_id with a
-            # stable argsort (within-conv arrival order preserved — the
+            # stable sort (within-conv arrival order preserved — the
             # duplicate-winner rule depends on it), and slice raw arrays per
             # conversation. Per-group pandas construction/access dominated
             # the profile (~0.6 ms/conv); array slicing is ~20 µs.
@@ -326,52 +187,25 @@ def make_sharded_func(cfg: OrderedStreamConfig):
                 for c in ("conv_id", "turn_idx", "role", "text", "tool")
             }
             cols["ts_us"] = core.ts_to_us(batch["ts"]).to_numpy()
-            conv_arr = cols["conv_id"]
-            order = np.argsort(conv_arr, kind="stable")
-            sorted_conv = conv_arr[order]
-            n_rows = len(sorted_conv)
-            bounds = [0] + list(np.flatnonzero(sorted_conv[1:] != sorted_conv[:-1]) + 1) + [n_rows]
+            # NULL conv_ids factorize to -1: their own group, like the
+            # classic engine's NULL key (the sink routes it to the DLQ)
+            codes, _ = pd.factorize(cols["conv_id"], sort=True)
+            order = np.argsort(codes, kind="stable")
+            cuts = np.flatnonzero(np.diff(codes[order])) + 1
             arrived = set()
             touched: dict = {}  # conv_id → OrderedState, encoded after the loop
-            for i in range(len(bounds) - 1):
-                lo, hi = bounds[i], bounds[i + 1]
-                if lo == hi:
-                    continue
-                seg = order[lo:hi]
-                conv_id = sorted_conv[lo]
+            for seg in np.split(order, cuts) if len(order) else []:
+                conv_id = cols["conv_id"][seg[0]]
                 g = {c: cols[c][seg] for c in core.BUF_COLS}
                 arrived.add(conv_id)
                 t = states.get(conv_id)
                 if t is not None:
                     st = _conv_from_tuple(_conv_loads(t))
+                elif conv_id in tombs:
+                    st = _state_from_tomb(tombs[conv_id])
                 else:
-                    tomb = states.get(_TOMBS, {}).get(conv_id)
-                    st = (
-                        _state_from_tomb(tomb)
-                        if tomb is not None
-                        else core.OrderedState(last_emitted=cfg.initial_turn_idx - 1)
-                    )
-                run_conv(conv_id, st, g)
-                st.idle_heartbeats = 0
-                if cfg.emit_status_every_batch:
-                    statuses.append(core.status_dict(conv_id, st))
-                if st.complete:
-                    states.pop(conv_id, None)
-                    touched.pop(conv_id, None)
-                    # completed conv: drop the carry in every case (review
-                    # r6c — a tombstone must stay ~50 bytes; the final
-                    # sentinel delimits pattern scope)
-                    cep_map.pop(conv_id, None)
-                    if cfg.cleanup_on_complete:
-                        states.get(_TOMBS, {}).pop(conv_id, None)
-                    else:
-                        states.setdefault(_TOMBS, {})[conv_id] = _tomb_from_state(st)
-                else:
-                    # if this conv was resurrected from a tombstone (a
-                    # post-final turn re-opened a gap), the tombstone is now
-                    # stale state — drop it so a later TTL eviction or
-                    # re-delivery can't consult regressed counters
-                    states.get(_TOMBS, {}).pop(conv_id, None)
+                    st = core.OrderedState(last_emitted=cfg.initial_turn_idx - 1)
+                if step(conv_id, st, g):
                     touched[conv_id] = st
             # Adaptive entry encoding: pre-pickled bytes pay off when MOST
             # entries are untouched next batch (their bytes memcpy through
@@ -397,42 +231,24 @@ def make_sharded_func(cfg: OrderedStreamConfig):
                 elif (time.time() - hb_at) * 1000.0 >= cfg.status_heartbeat_ms:
                     heartbeat_sweep(skip=arrived)
 
-        if has_cep:
-            if cep_map:
-                states[_CEP] = cep_map
-            else:
-                states.pop(_CEP, None)
-        if _TOMBS in states and not states[_TOMBS]:
+        if cep_map:
+            states[_CEP] = cep_map
+        else:
+            states.pop(_CEP, None)
+        if not tombs:
             del states[_TOMBS]
         active_keys = states.keys() - {_HB_AT, _TOMBS, _CEP}
-        if active_keys or states.get(_TOMBS):
+        if active_keys or tombs:
             state.update((pickle.dumps(states, protocol=5),))
-            # a shard holding ONLY tombstones needs a timer iff a TTL will
-            # eventually age them out — otherwise sweeps would fire forever
-            # with nothing to do
-            if cfg.status_heartbeat_ms and (
-                active_keys or cfg.evict_idle_after_heartbeats is not None
-            ):
-                state.setTimeoutDuration(cfg.status_heartbeat_ms)
+            # the shard needs a timer iff one of its entries does: any open
+            # conversation, or tombstones that a TTL will age out
+            rearm_ms = core.timer_ms(cfg, complete=not active_keys)
+            if rearm_ms:
+                state.setTimeoutDuration(rearm_ms)
         else:
             state.remove()
 
-        if data_parts:
-            df = _shard_data_frame(data_convs, data_parts)
-            yield _pad_cep(df) if has_cep else df
-        if match_parts:
-            # ONE builder shared with the classic engine (review r6c):
-            # concatenate the per-conv match columns, pass the conv array
-            yield _match_frame(
-                np.concatenate(match_convs),
-                {
-                    c: np.concatenate([p[c] for p in match_parts])
-                    for c in ("start_idx", "end_idx", "ts_first_us", "ts_last_us")
-                },
-            )
-        if statuses:
-            df = _shard_status_frame(statuses)
-            yield _pad_cep(df) if has_cep else df
+        yield from out.frames()
 
     return func
 

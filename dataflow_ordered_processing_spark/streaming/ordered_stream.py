@@ -9,18 +9,25 @@ docs/pipeline-design.md and OrderBookProcessingPipelineTest.java:91-195):
     keyed state implies).
   - Per key, state holds the last-emitted cursor, counters, and a sorted
     columnar buffer of pending out-of-sequence turns (STATE_SCHEMA).
-  - Each micro-batch appends its rows to the buffer and drains the maximal
-    contiguous run (ordered_core.apply_batch — all vectorized).
+  - Each micro-batch (or heartbeat timer firing) runs one
+    ordered_core.transition step: it appends the rows to the buffer,
+    drains the maximal contiguous run (ordered_core.apply_batch — all
+    vectorized), and decides the status, the CEP carry, TTL eviction,
+    completion cleanup vs tombstone, and the timer re-arm. This module
+    only decodes the STATE_SCHEMA* tuple and maps the step's disposition
+    onto state.update / state.remove; the sharded engine
+    (ordered_sharded.py) runs the same step per conversation.
   - The same operator emits both ordered data rows and
     OrderedProcessingStatus rows, discriminated by `row_type` — the
     reference's dual-output (results + statuses,
-    OrderBookProcessingPipeline.java:107-120).
+    OrderBookProcessingPipeline.java:107-120) — through the frame builder
+    (``_Output``) both engines share.
   - A processing-time timeout emits heartbeat statuses for idle keys with
     buffered gaps (the reference's timer-driven status,
     OrderBookProcessingPipelineTest.java:214-215).
   - When a key's final event was seen and its buffer is empty, state is
     removed (cleanup on lastContractMessage,
-    OrderBookEventExaminer.java:46-49).
+    OrderBookEventExaminer.java:46-49) or kept as a tombstone.
 
 At 100 TB: state is per-key O(pending gap), not O(history); the only shuffle
 is the hash exchange on conv_id; the Python boundary is Arrow-batched and
@@ -37,6 +44,7 @@ from typing import Any, Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import types as T
 
 from ..operators import cep_core
 from ..operators import ordered_core as core
@@ -68,56 +76,42 @@ class OrderedStreamConfig:
     """Knobs mirroring the reference's OrderBookProducer options
     (OrderBookProducer.java:41-57)."""
 
+    # How these knobs drive each step (status, TTL eviction, completion
+    # cleanup vs tombstone, timer re-arm): ordered_core.transition.
     emit_status_every_batch: bool = True  # produceStatusUpdatesOnEveryEvent analog
     status_heartbeat_ms: int | None = None  # timer-driven status frequency (O10)
     max_emit_per_batch: int | None = None  # maxOutputElementsPerBundle analog (O9)
     initial_turn_idx: int = core.INITIAL_TURN_IDX
-    # False (default): on completion keep a ~50-byte tombstone (cursor +
-    # counters, empty buffer) so duplicates re-delivered AFTER the final turn
-    # are still discarded+counted (docs/pipeline-design.md:115-122). True:
-    # remove state eagerly like the reference's cleanup-on-last-event
-    # (OrderBookEventExaminer.java:46-49) — then post-completion re-delivery
-    # re-emits, and the sink's (conv_id, turn_idx) idempotent MERGE is what
-    # guarantees exactly-once.
+    # False (default): on completion keep a ~50-byte tombstone so duplicates
+    # re-delivered AFTER the final turn are still discarded+counted
+    # (docs/pipeline-design.md:115-122). True: remove state eagerly like the
+    # reference (OrderBookEventExaminer.java:46-49) — post-completion
+    # re-delivery then re-emits, and the sink's (conv_id, turn_idx)
+    # idempotent MERGE guarantees exactly-once.
     cleanup_on_complete: bool = False
-    # State TTL (bounds state for turns that never arrive — the reference
-    # leaves this open, docs/pipeline-design.md:124-128): when set, a key
-    # idle for this long (no arrivals between two timer firings) emits a
-    # final status row and its state is EVICTED — pending buffered turns are
-    # dropped. Requires status_heartbeat_ms (the timer that detects idleness).
+    # State TTL for turns that never arrive (docs/pipeline-design.md:124-128
+    # leaves this open): evict a key after this many idle heartbeat firings,
+    # dropping its pending turns. Requires status_heartbeat_ms.
     evict_idle_after_heartbeats: int | None = None
-    # CEP (north rule "structured-streaming / CEP engine"): a tuple of
-    # cep_core.Step — strict-contiguity pattern matched over the in-order
-    # EMITTED turns, once per match even across micro-batch boundaries and
-    # capped drains (a (k-1)-turn carry rides in the state; dropped when the
-    # conversation completes — the final sentinel delimits pattern scope).
-    # Exactly-once at the sink mirrors the data rows' contract: epoch
-    # idempotency covers crash replay; under cleanup_on_complete=True (or a
-    # TTL eviction) re-delivered turns re-emit AND re-match, and
-    # SinkConfig.merge_on_key dedupes BOTH (a match whose end turn is at or
-    # below the conversation's committed watermark is dropped with them).
-    # Matches surface as row_type='match' rows; output/state use the *_CEP
-    # schema variants, so enabling a pattern on an existing checkpoint is
-    # refused by the state store's schema-compat check rather than silently
-    # mismatching.
+    # CEP: a tuple of cep_core.Step matched over the in-order EMITTED turns,
+    # once per match across micro-batch boundaries and capped drains (the
+    # carry rides in the state and is dropped at completion). Under
+    # cleanup_on_complete=True or a TTL eviction re-delivered turns re-emit
+    # AND re-match; SinkConfig.merge_on_key dedupes both. Matches surface as
+    # row_type='match' rows; output/state use the *_CEP schema variants, so
+    # a checkpoint refuses a pattern change via the schema-compat check.
     pattern: tuple | None = None
     pattern_within_s: int | None = None  # FlinkCEP within() on first→last ts
-    # "strict" (Flink `next`) or "skip" (Flink `followedBy` — the funnel
-    # monitor mode, r7): skip state is a partial-match FRONTIER (one open
-    # candidate per anchor, (anchor_idx, anchor_ts, next step awaited))
-    # instead of the strict carry; matches still surface as row_type='match'
-    # and the two modes use DIFFERENT state schemas so a checkpoint written
-    # under one refuses the other. Bound open candidates with
-    # pattern_within_s / pattern_within_turns for unbounded keys (unbounded
-    # candidates otherwise live until the conversation completes).
+    # "strict" (Flink `next`) or "skip" (Flink `followedBy`): skip state is a
+    # partial-match FRONTIER (one open candidate per anchor) with its own
+    # state schema. Bound open candidates with pattern_within_s /
+    # pattern_within_turns (otherwise they live until completion).
     pattern_mode: str = "strict"
     pattern_within_turns: int | None = None  # skip: max last_idx - first_idx
     pattern_not_between: dict | None = None  # skip: {segment_i: Step} guards
 
     def __post_init__(self) -> None:
-        # shared validation (raises on strict+skip-only knobs, bad mode,
-        # non-Step guards) — fail at config time, not mid-stream; ONE
-        # helper for every engine config (review r7b)
+        # fail at config time, not mid-stream
         cep_core.validate_pattern_knobs(
             self.pattern,
             self.pattern_mode,
@@ -129,137 +123,101 @@ class OrderedStreamConfig:
 
 def _state_to_tuple(st: core.OrderedState) -> tuple:
     # field order MUST match schemas.STATE_SCHEMA
-    buf = st.buffer
     return (
-        st.last_emitted,
-        st.received_count,
-        st.result_count,
-        st.duplicate_count,
-        st.last_event_received,
-        st.n_user,
-        st.n_assistant,
-        st.n_tool,
-        st.chars,
-        core._col(buf, "turn_idx").tolist(),
-        core._col(buf, "role").tolist(),
-        core._col(buf, "text").tolist(),
-        core._col(buf, "tool").tolist(),
-        core._col(buf, "ts_us").tolist(),
+        *core.counters(st),
+        *(core._col(st.buffer, c).tolist() for c in core.BUF_COLS),
         st.idle_heartbeats,
     )
 
 
 def _state_from_tuple(t: tuple) -> core.OrderedState:
     buf = {
-        "turn_idx": np.asarray(list(t[9] or []), dtype="int64"),
-        "role": np.asarray(list(t[10] or []), dtype=object),
-        "text": np.asarray(list(t[11] or []), dtype=object),
-        "tool": np.asarray(list(t[12] or []), dtype=object),
-        "ts_us": np.asarray(list(t[13] or []), dtype="int64"),
+        c: np.asarray(list(v or []), dtype=core._EMPTY_BUFFER[c].dtype)
+        for c, v in zip(core.BUF_COLS, t[9:14])
     }
-    return core.OrderedState(
-        last_emitted=int(t[0]),
-        received_count=int(t[1]),
-        result_count=int(t[2]),
-        duplicate_count=int(t[3]),
-        last_event_received=bool(t[4]),
-        n_user=int(t[5]),
-        n_assistant=int(t[6]),
-        n_tool=int(t[7]),
-        chars=int(t[8]),
-        idle_heartbeats=int(t[14]) if len(t) > 14 and t[14] is not None else 0,
-        buffer=buf,
-    )
+    idle = t[14] if len(t) > 14 and t[14] is not None else 0
+    return core.OrderedState(*t[:9], idle_heartbeats=idle, buffer=buf)
 
 
-def _data_frame(conv_id: str, emitted: pd.DataFrame) -> pd.DataFrame:
-    """STREAM_OUTPUT_SCHEMA frame of data rows — dict-of-arrays construction,
-    no concat, int64-μs → datetime64[us] via view (zero-copy)."""
-    n = len(emitted)
-    nan = np.full(n, np.nan)
-    none = np.full(n, None, dtype=object)
+def _null(dtype: T.DataType, n: int):
+    """A column of n typed nulls (NaN for numbers: Arrow masks it)."""
+    if isinstance(dtype, T.TimestampType):
+        return pd.Series(np.full(n, None), dtype="datetime64[us]")
+    if isinstance(dtype, (T.StringType, T.BooleanType)):
+        return np.full(n, None, dtype=object)
+    return np.full(n, np.nan)
+
+
+def _frame(schema: T.StructType, n: int, cols: dict) -> pd.DataFrame:
+    """An output frame of n rows: ``cols``, and nulls in every other column
+    of ``schema`` (data rows leave status fields null and vice versa)."""
     return pd.DataFrame(
-        {
-            "row_type": np.full(n, "data", dtype=object),
-            "conv_id": np.full(n, conv_id, dtype=object),
-            "turn_idx": emitted["turn_idx"].to_numpy(dtype="int32", copy=False),
-            "role": emitted["role"].to_numpy(copy=False),
-            "text": emitted["text"].to_numpy(copy=False),
-            "tool": emitted["tool"].to_numpy(copy=False),
-            "ts": emitted["ts_us"].to_numpy(dtype="int64", copy=False).view("M8[us]"),
-            "emit_seq": emitted["emit_seq"].to_numpy(dtype="int64", copy=False),
-            **{
-                c: emitted[c].to_numpy(dtype="int64", copy=False) for c in _DEPTH_COLS
-            },
-            "status_ts": pd.Series(np.full(n, None), dtype="datetime64[us]"),
-            **{c: nan for c in _STATUS_COLS if c != "last_event_received"},
-            "last_event_received": none,
-        }
+        {f.name: cols[f.name] if f.name in cols else _null(f.dataType, n) for f in schema}
     )
 
 
-def _status_frame(conv_id: str, status: dict) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "row_type": ["status"],
-            "conv_id": [conv_id],
-            "turn_idx": [None],
-            "role": [None],
-            "text": [None],
-            "tool": [None],
-            "ts": pd.Series([None], dtype="datetime64[us]"),
-            "emit_seq": [None],
-            **{c: [None] for c in _DEPTH_COLS},
-            "status_ts": pd.Series(
-                [datetime.now(timezone.utc).replace(tzinfo=None)], dtype="datetime64[us]"
-            ),
-            **{c: [status[c]] for c in _STATUS_COLS},
-        }
-    )
+class _Output:
+    """Output rows of one engine invocation, collected per conversation and
+    built into output frames once (data, matches, statuses). ONE builder for
+    both engines, so the row layout cannot drift."""
 
+    def __init__(self, has_cep: bool):
+        self.schema = STREAM_OUTPUT_SCHEMA_CEP if has_cep else STREAM_OUTPUT_SCHEMA
+        self.data_convs: list[np.ndarray] = []
+        self.data: list[dict] = []
+        self.match_convs: list[np.ndarray] = []
+        self.matches: list[dict] = []
+        self.statuses: list[dict] = []
 
-def _pad_cep(df: pd.DataFrame) -> pd.DataFrame:
-    """Add null match columns to a data/status frame (CEP schema variant)."""
-    n = len(df)
-    for c in ("match_start_idx", "match_end_idx", "match_span_us"):
-        df[c] = np.full(n, np.nan)
-    for c in ("match_ts_first", "match_ts_last"):
-        df[c] = pd.Series(np.full(n, None), dtype="datetime64[us]")
-    return df
+    def add(self, conv_id, tr: core.Transition) -> None:
+        n = len(tr.emitted["turn_idx"])
+        if n:
+            self.data_convs.append(np.full(n, conv_id, dtype=object))
+            self.data.append(tr.emitted)
+        m = 0 if tr.matches is None else len(tr.matches["start_idx"])
+        if m:
+            self.match_convs.append(np.full(m, conv_id, dtype=object))
+            self.matches.append(tr.matches)
+        if tr.status is not None:
+            self.statuses.append(tr.status)
 
-
-def _match_frame(conv, matches: dict) -> pd.DataFrame:
-    """STREAM_OUTPUT_SCHEMA_CEP frame of match rows. ``conv`` is a single
-    conv_id (classic engine) or a per-match ndarray (sharded engine) — ONE
-    builder so the match-row layout can never drift between engines."""
-    n = len(matches["start_idx"])
-    conv_arr = (
-        conv if isinstance(conv, np.ndarray) else np.full(n, conv, dtype=object)
-    )
-    none = np.full(n, None, dtype=object)
-    nan = np.full(n, np.nan)
-    null_ts = pd.Series(np.full(n, None), dtype="datetime64[us]")
-    return pd.DataFrame(
-        {
-            "row_type": np.full(n, "match", dtype=object),
-            "conv_id": conv_arr,
-            "turn_idx": nan,
-            "role": none,
-            "text": none,
-            "tool": none,
-            "ts": null_ts,
-            "emit_seq": nan,
-            **{c: nan for c in _DEPTH_COLS},
-            "status_ts": null_ts,
-            **{c: nan for c in _STATUS_COLS if c != "last_event_received"},
-            "last_event_received": none,
-            "match_start_idx": matches["start_idx"],
-            "match_end_idx": matches["end_idx"],
-            "match_ts_first": matches["ts_first_us"].view("M8[us]"),
-            "match_ts_last": matches["ts_last_us"].view("M8[us]"),
-            "match_span_us": matches["ts_last_us"] - matches["ts_first_us"],
-        }
-    )
+    def frames(self) -> Iterator[pd.DataFrame]:
+        if self.data:
+            conv = np.concatenate(self.data_convs)
+            d = {k: np.concatenate([p[k] for p in self.data]) for k in self.data[0]}
+            yield _frame(self.schema, len(conv), {
+                "row_type": np.full(len(conv), "data", dtype=object),
+                "conv_id": conv,
+                "turn_idx": d["turn_idx"].astype("int32", copy=False),
+                "role": d["role"],
+                "text": d["text"],
+                "tool": d["tool"],
+                "ts": d["ts_us"].astype("int64", copy=False).view("M8[us]"),
+                **{c: d[c].astype("int64", copy=False) for c in ("emit_seq", *_DEPTH_COLS)},
+            })
+        if self.matches:
+            conv = np.concatenate(self.match_convs)
+            m = {k: np.concatenate([p[k] for p in self.matches]) for k in self.matches[0]}
+            yield _frame(self.schema, len(conv), {
+                "row_type": np.full(len(conv), "match", dtype=object),
+                "conv_id": conv,
+                "match_start_idx": m["start_idx"],
+                "match_end_idx": m["end_idx"],
+                "match_ts_first": m["ts_first_us"].view("M8[us]"),
+                "match_ts_last": m["ts_last_us"].view("M8[us]"),
+                "match_span_us": m["ts_last_us"] - m["ts_first_us"],
+            })
+        if self.statuses:
+            n = len(self.statuses)
+            now = datetime.now(timezone.utc).replace(tzinfo=None)
+            yield _frame(self.schema, n, {
+                "row_type": np.full(n, "status", dtype=object),
+                "status_ts": pd.Series(np.full(n, now), dtype="datetime64[us]"),
+                **{
+                    c: np.array([s[c] for s in self.statuses], dtype=object)
+                    for c in ("conv_id", *_STATUS_COLS)
+                },
+            })
 
 
 def cfg_matcher(cfg: "OrderedStreamConfig") -> cep_core.StreamMatcher | None:
@@ -277,140 +235,44 @@ def cfg_matcher(cfg: "OrderedStreamConfig") -> cep_core.StreamMatcher | None:
 
 
 def make_ordered_func(cfg: OrderedStreamConfig):
-    """Build the (key, pdf_iter, state) function for applyInPandasWithState."""
+    """Build the (key, pdf_iter, state) function for applyInPandasWithState:
+    decode the key's STATE_SCHEMA* tuple, run ordered_core.transition, and
+    map its disposition onto state.update / state.remove."""
 
     matcher = cfg_matcher(cfg)
     has_cep = matcher is not None
 
-    def _carry_from_tuple(t: tuple) -> dict:
-        # CEP state fields start at position 15 (after idle_heartbeats) and
-        # span matcher.n_state_fields (4 for strict carry / plain frontier,
-        # 10 for the quantified frontier); absent/None → empty state
-        if len(t) <= 15 or t[15] is None:
-            return matcher.empty_state()
-        return matcher.state_from_lists(*t[15:15 + matcher.n_state_fields])
-
-    def _carry_fields(cstate: dict) -> tuple:
-        return tuple(matcher.state_to_lists(cstate))
-
-    def _cep_run(emitted: pd.DataFrame, cstate: dict, final: bool = False):
-        run = {
-            "turn_idx": emitted["turn_idx"].to_numpy(dtype="int64", copy=False),
-            "role": emitted["role"].to_numpy(copy=False),
-            "tool": emitted["tool"].to_numpy(copy=False),
-            "ts_us": emitted["ts_us"].to_numpy(dtype="int64", copy=False),
-        }
-        return matcher.match(run, cstate, final=final)
-
-    def _finish(df: pd.DataFrame) -> pd.DataFrame:
-        return _pad_cep(df) if has_cep else df
-
     def func(key: tuple, pdfs: Iterator[pd.DataFrame], state: Any) -> Iterator[pd.DataFrame]:
         conv_id = key[0]
-
-        if state.hasTimedOut:
-            t = tuple(state.get)
-            st = _state_from_tuple(t)
-            carry = _carry_from_tuple(t) if has_cep else None
-            st.idle_heartbeats += 1
-            # a capped drain (max_emit_per_batch) may have left a CONTIGUOUS
-            # run in the buffer; the timer is the only guaranteed future
-            # invocation for an idle key, so drain here too — otherwise the
-            # remainder never reaches the sink
-            emitted = core.apply_batch(
-                st, core._EMPTY_BUFFER, max_emit=cfg.max_emit_per_batch
-            )
-            matches = None
-            if has_cep and len(emitted):
-                matches, carry = _cep_run(emitted, carry, final=st.complete)
-            # A COMPLETED key (final seen, buffer drained) is a tombstone:
-            # its counters are frozen, so a heartbeat status would only
-            # repeat the completion snapshot already emitted on the final
-            # arrival — emit nothing, and under a TTL evict silently (there
-            # is no unresolved gap to report). Mirrors the sharded engine.
-            is_tomb = st.complete and not len(emitted)
-            status = None
-            if not is_tomb:
-                status = core.status_dict(conv_id, st)
-                del status["conv_id"]
-            evict = (
-                cfg.evict_idle_after_heartbeats is not None
-                and st.idle_heartbeats >= cfg.evict_idle_after_heartbeats
-            )
-            if evict and not len(emitted):
-                # state TTL (SURVEY §7): gap never closed — drop pending
-                # turns, free the state; for gapped keys the emitted status
-                # is the tombstone record (gap_report picks it up downstream)
-                state.remove()
-            elif st.complete and cfg.cleanup_on_complete:
-                # a timer-driven capped drain finished the conversation —
-                # same eager-cleanup contract as the arrival path (review
-                # r6d: this branch used to tombstone forever, diverging
-                # from the arrival path and the sharded sweep)
-                state.remove()
-            else:
-                t_new = _state_to_tuple(st)
-                if has_cep and st.complete:
-                    # completed conv = frozen tombstone; drop the CEP state
-                    # so the tombstone stays compact (review r6c) — the
-                    # final sentinel delimits pattern scope (skip mode: open
-                    # candidates can never complete once the conv has)
-                    carry = matcher.empty_state()
-                state.update(t_new + _carry_fields(carry) if has_cep else t_new)
-                if cfg.status_heartbeat_ms and (
-                    not st.complete or cfg.evict_idle_after_heartbeats is not None
-                ):
-                    state.setTimeoutDuration(cfg.status_heartbeat_ms)
-            if len(emitted):
-                yield _finish(_data_frame(conv_id, emitted))
-            if matches is not None and len(matches["start_idx"]):
-                yield _match_frame(conv_id, matches)
-            if status is not None:
-                yield _finish(_status_frame(conv_id, status))
-            return
-
+        carry = None
         if state.exists:
             t = tuple(state.get)
             st = _state_from_tuple(t)
-            carry = _carry_from_tuple(t) if has_cep else None
+            # CEP state fields start at position 15 (after idle_heartbeats)
+            # and span matcher.n_state_fields; absent/None → no carry
+            if has_cep and len(t) > 15 and t[15] is not None:
+                carry = matcher.state_from_lists(*t[15:15 + matcher.n_state_fields])
         else:
             st = core.OrderedState(last_emitted=cfg.initial_turn_idx - 1)
-            carry = matcher.empty_state() if has_cep else None
-
-        frames = list(pdfs)
-        batch = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
-        emitted = core.apply_batch(st, batch, max_emit=cfg.max_emit_per_batch)
-        st.idle_heartbeats = 0  # arrival resets the idle-eviction clock
-        matches = None
-        if has_cep and len(emitted):
-            matches, carry = _cep_run(emitted, carry, final=st.complete)
-
-        status = None
-        if cfg.emit_status_every_batch:
-            status = core.status_dict(conv_id, st)
-            del status["conv_id"]
-
-        if st.complete and cfg.cleanup_on_complete:
-            state.remove()  # O4: eager cleanup on last event (examiner contract)
+        batch = None
+        if not state.hasTimedOut:
+            frames = list(pdfs)
+            batch = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+        tr = core.transition(conv_id, st, carry, batch, cfg, matcher)
+        action, rearm_ms = tr.disposition
+        if action == core.REMOVE:
+            state.remove()
         else:
             t_new = _state_to_tuple(st)
-            if has_cep and st.complete:
-                carry = matcher.empty_state()  # compact tombstone (see timer path)
-            state.update(t_new + _carry_fields(carry) if has_cep else t_new)
-            # completed keys are frozen tombstones — re-arm the timer only
-            # when a TTL exists to eventually evict them; otherwise heartbeat
-            # timers would fire (and emit unchanged statuses) forever
-            if cfg.status_heartbeat_ms and (
-                not st.complete or cfg.evict_idle_after_heartbeats is not None
-            ):
-                state.setTimeoutDuration(cfg.status_heartbeat_ms)
-
-        if len(emitted):
-            yield _finish(_data_frame(conv_id, emitted))
-        if matches is not None and len(matches["start_idx"]):
-            yield _match_frame(conv_id, matches)
-        if status is not None:
-            yield _finish(_status_frame(conv_id, status))
+            if has_cep:
+                c = tr.carry if tr.carry is not None else matcher.empty_state()
+                t_new += tuple(matcher.state_to_lists(c))
+            state.update(t_new)
+            if rearm_ms:
+                state.setTimeoutDuration(rearm_ms)
+        out = _Output(has_cep)
+        out.add(conv_id, tr)
+        yield from out.frames()
 
     return func
 

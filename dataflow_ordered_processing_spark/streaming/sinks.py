@@ -1238,41 +1238,57 @@ def _check_engine_marker(
             json.dump(current, f)
 
 
+def _marked_ordered_stream(
+    source: DataFrame,
+    checkpoint: str | None,
+    cfg: OrderedStreamConfig | None = None,
+    engine: str | None = None,
+    n_shards: int | None = None,
+) -> DataFrame:
+    """Resolve the engine (None → streaming.DEFAULT_ENGINE) and its shard
+    count, pin both and the pattern in the checkpoint marker, and build the
+    unified ordered stream — the one wiring every pipeline entrypoint uses."""
+    from . import DEFAULT_ENGINE, build_ordered_stream, resolve_n_shards
+
+    engine = engine or DEFAULT_ENGINE
+    if engine == "sharded":
+        n_shards = resolve_n_shards(source, n_shards)
+    if checkpoint:
+        c = cfg or OrderedStreamConfig()
+        _check_engine_marker(
+            checkpoint,
+            engine,
+            n_shards,
+            _pattern_spec(
+                c.pattern,
+                c.pattern_within_s,
+                c.pattern_mode,
+                c.pattern_within_turns,
+                c.pattern_not_between,
+            ),
+        )
+    return build_ordered_stream(source, cfg, engine=engine, n_shards=n_shards)
+
+
 def start_ordered_pipeline(
     source: DataFrame,
     sink: SinkConfig,
     stream_cfg: OrderedStreamConfig | None = None,
-    engine: str = "classic",
+    engine: str | None = None,
     n_shards: int | None = None,
 ) -> StreamingQuery:
     """Wire source → ordered processor → dual sink; return the running query.
 
     ``source`` is a streaming DataFrame with TRANSCRIPT_SCHEMA (e.g.
     readStream over an Iceberg/parquet directory of arrival batches).
-    ``engine='sharded'`` selects the shard-keyed state variant (same output,
-    ~3× throughput; see ordered_sharded.py). ``n_shards=None`` resolves to
-    8 × defaultParallelism — the measured sweet spot (~8 shards per core,
-    BENCH/BASELINE.md shard sweep); the choice is pinned in a checkpoint
-    marker and validated on resume.
+    ``engine=None`` means streaming.DEFAULT_ENGINE; 'sharded' is the
+    shard-keyed state variant (same output, ~3× throughput; see
+    ordered_sharded.py), 'classic' keys state per conv_id.
+    ``n_shards=None`` resolves to 8 × defaultParallelism — the measured
+    sweet spot (~8 shards per core, BENCH/BASELINE.md shard sweep); the
+    choice is pinned in a checkpoint marker and validated on resume.
     """
-    from . import build_ordered_stream, resolve_n_shards
-
-    if engine == "sharded":
-        n_shards = resolve_n_shards(source, n_shards)
-    if sink.checkpoint:
-        _check_engine_marker(
-            sink.checkpoint,
-            engine,
-            n_shards,
-            _pattern_spec(
-                stream_cfg.pattern if stream_cfg else None,
-                stream_cfg.pattern_within_s if stream_cfg else None,
-                stream_cfg.pattern_mode if stream_cfg else "strict",
-                stream_cfg.pattern_within_turns if stream_cfg else None,
-                stream_cfg.pattern_not_between if stream_cfg else None,
-            ),
-        )
-    unified = build_ordered_stream(source, stream_cfg, engine=engine, n_shards=n_shards)
+    unified = _marked_ordered_stream(source, sink.checkpoint, stream_cfg, engine, n_shards)
     writer = (
         unified.writeStream.outputMode("append")
         .foreachBatch(split_sink(sink))

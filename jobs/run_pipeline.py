@@ -295,6 +295,8 @@ def parse_not_between(spec: str) -> dict:
 
 
 def main() -> int:
+    from dataflow_ordered_processing_spark.streaming import DEFAULT_ENGINE
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--source", required=True, help="directory of arrival parquet files")
     ap.add_argument("--out", required=True, help="output base dir (data/, status/, dlq/)")
@@ -348,7 +350,7 @@ def main() -> int:
     ap.add_argument(
         "--engine",
         choices=["classic", "sharded"],
-        default="classic",
+        default=DEFAULT_ENGINE,
         help="classic = state per conv_id (applyInPandasWithState per key); "
         "sharded = state per hash shard, one invocation per shard per batch "
         "(amortizes per-group overhead across conversations)",
@@ -513,11 +515,10 @@ def main() -> int:
     from dataflow_ordered_processing_spark.streaming import (
         BufferMetricsListener,
         OrderedStreamConfig,
-        build_ordered_stream,
     )
     from dataflow_ordered_processing_spark.streaming.sinks import (
         SinkConfig,
-        _check_engine_marker,
+        _marked_ordered_stream,
         export_table,
         raw_passthrough_sink,
         read_sink,
@@ -559,8 +560,6 @@ def main() -> int:
     reader = spark.readStream.schema(TRANSCRIPT_SCHEMA)
     if args.max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", args.max_files_per_trigger)
-    from dataflow_ordered_processing_spark.streaming import resolve_n_shards
-
     src = reader.parquet(args.source)
 
     # ---- hot-key routing (north_rule skew, streaming answer) ----
@@ -618,22 +617,7 @@ def main() -> int:
             F.col("conv_id").isNull() | ~F.col("conv_id").isin(hot_list)
         )
 
-    n_shards = args.n_shards
-    if args.engine == "sharded":
-        n_shards = resolve_n_shards(src, n_shards)
-    from dataflow_ordered_processing_spark.streaming.sinks import _pattern_spec
-
-    _check_engine_marker(
-        args.checkpoint, args.engine, n_shards,
-        _pattern_spec(
-            pattern,
-            args.pattern_within_s,
-            args.pattern_mode,
-            args.pattern_within_turns,
-            not_between,
-        ),
-    )
-    unified = build_ordered_stream(src, cfg, engine=args.engine, n_shards=n_shards)
+    unified = _marked_ordered_stream(src, args.checkpoint, cfg, args.engine, args.n_shards)
     writer = (
         unified.writeStream.outputMode("append")
         .foreachBatch(split_sink(sink))

@@ -17,7 +17,6 @@ import pytest
 from dataflow_ordered_processing_spark.operators.cep_core import (
     Step,
     Times,
-    empty_frontier_q,
     frontier_q_from_lists,
     frontier_q_to_lists,
     match_skip_quant,
@@ -388,42 +387,6 @@ def test_quant_cli_parse():
     assert isinstance(steps[1], Step)
     assert steps[2].n_min == 2 and steps[2].n_max == 4
     assert steps[3].n_min == 2 and steps[3].n_max == 2
-
-
-def test_quant_tws_body_parity(spark):
-    from test_ordered_tws import FakeHandle
-
-    from dataflow_ordered_processing_spark.streaming.ordered_tws import (
-        OrderedProcessor,
-        TwsConfig,
-    )
-
-    full = _random_convs(17, n_convs=3, max_turns=20)
-    cfg = TwsConfig(pattern=STEPS, pattern_mode="skip")
-    matches = []
-    procs = {}
-    b1 = full[full.turn_idx % 2 == 0]
-    b2 = full[full.turn_idx % 2 == 1]
-    for batch in [b1, b2]:
-        for conv_id, g in batch.groupby("conv_id", sort=True):
-            p = procs.get(conv_id)
-            if p is None:
-                p = OrderedProcessor(cfg)
-                p.init(FakeHandle())
-                procs[conv_id] = p
-            for f in p.handleInputRows(
-                (conv_id,), iter([g.reset_index(drop=True)]), None
-            ):
-                m = f[f["row_type"] == "match"]
-                if len(m):
-                    matches.append(m[["conv_id", "match_start_idx", "match_end_idx"]])
-    got = sorted(
-        pd.concat(matches, ignore_index=True)
-        .astype({"match_start_idx": "int64", "match_end_idx": "int64"})
-        .itertuples(index=False, name=None)
-    ) if matches else []
-    assert got == _batch_expected(spark, full)
-    assert all(not p.cep_state.exists() for p in procs.values())
 
 
 def test_in_set_step_sql_mask_and_validation():

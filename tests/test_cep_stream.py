@@ -269,8 +269,8 @@ def test_parse_pattern_cli():
 
 
 class _FakeGroupState:
-    """Minimal applyInPandasWithState GroupState stand-in (the TWS tests'
-    fake-handle pattern) — lets us assert what the function SAVES."""
+    """Minimal applyInPandasWithState GroupState stand-in — lets us assert
+    what the function SAVES."""
 
     def __init__(self, value=None):
         self._value = value

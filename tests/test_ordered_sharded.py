@@ -225,3 +225,17 @@ def _shard_batch_rows(conv_turns):
             "ts": [t0 + timedelta(seconds=t) for _, t in conv_turns],
         }
     )
+
+
+def test_null_conv_id_is_its_own_group():
+    """A NULL conv_id sharing a shard with real keys is ordered as its own
+    group (as the classic engine's NULL key is), so the sink can route its
+    rows to the DLQ instead of the shard failing."""
+    func = make_sharded_func(OrderedStreamConfig())
+    state = _FakeState()
+    batch = _shard_batch_rows([("cB", 1), (None, 1), ("cA", 1), (None, 2)])
+    data, statuses = _collect(func((0,), iter([batch]), state))
+    assert sorted(data, key=str) == sorted(
+        [("cA", 1), ("cB", 1), (None, 1), (None, 2)], key=str
+    )
+    assert sorted(statuses, key=str) == sorted(["cA", "cB", None], key=str)

@@ -5,7 +5,6 @@ exactly the serial oracle. The reference has no property tests
 
 from datetime import datetime, timedelta
 
-import numpy as np
 import pandas as pd
 from hypothesis import given, settings, strategies as st
 
@@ -116,45 +115,10 @@ def test_max_emit_never_changes_the_final_result(plan, cap):
 
 
 # ------------------------- sharded engine: same properties, real func body
-class _FakeGroupState:
-    """Minimal GroupState stand-in to drive make_sharded_func directly —
-    tests the exact production function body without a Spark session."""
-
-    def __init__(self):
-        self._v = None
-        self.hasTimedOut = False
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-    def remove(self):
-        self._v = None
-
-    def setTimeoutDuration(self, ms):
-        pass
-
-
-def _shard_batch(conv_turns):
-    """conv_turns: list of (conv_id, turn_idx) arrival rows, in order."""
-    n = len(conv_turns)
-    return pd.DataFrame(
-        {
-            "conv_id": [c for c, _ in conv_turns],
-            "turn_idx": pd.Series([t for _, t in conv_turns], dtype="int32"),
-            "role": ["user"] * n,
-            "text": [f"t{t}" for _, t in conv_turns],
-            "tool": [None] * n,
-            "ts": [T0 + timedelta(seconds=30 * t) for _, t in conv_turns],
-        }
-    )
+from test_ordered_sharded import (  # GroupState stand-in, arrival frames
+    _FakeState,
+    _shard_batch_rows as _shard_batch,
+)
 
 
 @given(st.lists(arrival_plan(), min_size=1, max_size=3), st.randoms())
@@ -168,7 +132,7 @@ def test_sharded_func_multi_conv_matches_serial_oracle(plans, rng):
     )
 
     func = make_sharded_func(OrderedStreamConfig())
-    state = _FakeGroupState()
+    state = _FakeState()
     # interleave the per-conv batch lists into shared shard batches
     n_rounds = max(len(p[2]) for p in plans)
     emitted: dict[str, list] = {f"c{i}": [] for i in range(len(plans))}
@@ -194,36 +158,45 @@ def test_sharded_func_multi_conv_matches_serial_oracle(plans, rng):
         assert emitted[f"c{i}"] == expected, f"conv c{i}"
 
 
-# --------------------- TWS engine: same properties, real processor body
-@given(arrival_plan())
+# ------------------- engine transition: arrivals, capped drains and timers
+@given(
+    arrival_plan(),
+    st.one_of(st.none(), st.integers(min_value=1, max_value=7)),
+    st.lists(st.booleans(), min_size=6, max_size=6),
+)
 @settings(max_examples=100, deadline=None)
-def test_tws_body_any_arrival_plan_matches_serial_oracle(plan):
-    """Every arrival permutation/batching/duplication drains the
-    transformWithState processor body to exactly the serial oracle —
-    including the append-only in-buffer-duplicate divergence, which must
-    CONVERGE once the gap closes (final emitted rows and final
-    duplicate_count equal the classic engine's)."""
-    from test_ordered_tws import FakeHandle
-    from dataflow_ordered_processing_spark.streaming.ordered_tws import (
-        OrderedProcessor,
+def test_transition_any_arrival_plan_matches_serial_oracle(plan, cap, timers):
+    """ordered_core.transition, the step both streaming engines run: any
+    permutation/batching/duplication, any max_emit cap, with heartbeat
+    firings between batches, drains to exactly the serial oracle; statuses
+    track the counters; an open conversation is always kept and re-armed."""
+    from dataflow_ordered_processing_spark.operators.ordered_core import (
+        KEEP,
+        transition,
     )
+    from dataflow_ordered_processing_spark.streaming import OrderedStreamConfig
 
     present, seq, batches = plan
-    p = OrderedProcessor()
-    p.init(FakeHandle())
-    emitted, last_status = [], None
-    for b in batches:
-        if not len(b):
-            continue
-        rows = _rows(b).rename(columns={"ts_us": "ts"})
-        rows["ts"] = pd.to_datetime(rows["ts"], unit="us")
-        rows.insert(0, "conv_id", "c")
-        for frame in p.handleInputRows(("c",), iter([rows]), None):
-            data = frame[frame["row_type"] == "data"]
-            emitted.extend(int(t) for t in data["turn_idx"])
-            status = frame[frame["row_type"] == "status"]
-            if len(status):
-                last_status = status.iloc[-1]
+    cfg = OrderedStreamConfig(status_heartbeat_ms=1000, max_emit_per_batch=cap)
+    state = OrderedState()
+    emitted, statuses = [], []
+
+    def step(batch):
+        tr = transition("c", state, None, batch, cfg)
+        emitted.extend(tr.emitted["turn_idx"].tolist())
+        statuses.append(tr.status)
+        assert tr.disposition == (KEEP, 1000)  # no final turn: never complete
+        return len(tr.emitted["turn_idx"])
+
+    for b, fire in zip(batches, timers):
+        step(_rows(b))
+        assert state.idle_heartbeats == 0
+        if fire:
+            step(None)
+            assert state.idle_heartbeats == 1
+    for _ in range(200):  # heartbeats flush whatever the cap left behind
+        if not step(None):
+            break
 
     expected = []
     t = 1
@@ -231,12 +204,9 @@ def test_tws_body_any_arrival_plan_matches_serial_oracle(plan):
         expected.append(t)
         t += 1
     assert emitted == expected
-    if last_status is not None:
-        assert last_status["received_count"] == len(seq)
-        assert last_status["result_count"] == len(expected)
-        # duplicates of EMITTED turns are counted on arrival; duplicates
-        # still sitting in the pending buffer surface at drain time — if
-        # the gap never closes they remain uncounted (documented
-        # divergence), so the exact-count assertion applies when drained
-        if len(expected) == len(present):  # everything drained
-            assert last_status["duplicate_count"] == len(seq) - len(present)
+    assert state.duplicate_count == len(seq) - len(present)
+    last = statuses[-1]
+    assert last["received_count"] == len(seq)
+    assert last["result_count"] == len(expected)
+    assert last["duplicate_count"] == len(seq) - len(present)
+    assert last["buffered_count"] == len(present) - len(expected)

@@ -2,8 +2,8 @@
 
   R4-A1  integer-micros money sums: BIGINT wraps silently past its per-group
          bound; exact_decimal=True must survive the same input (ADVICE #1)
-  (R4-A2 TWS cap config guard lives in test_ordered_tws.py; R4-A3 max_bucket
-   opt-in default is covered by the updated test_lsh_degenerate_bucket_capped)
+  (R4-A3 max_bucket opt-in default is covered by the updated
+   test_lsh_degenerate_bucket_capped)
 """
 
 import pytest
@@ -105,6 +105,26 @@ def test_dedup_clusters_multiple_components_and_empty(spark):
     # no pairs at all → every doc is its own cluster
     none = dedup.dedup_clusters(docs, _pairs(spark)).collect()
     assert all(r["cluster_id"] == r["doc_id"] for r in none)
+
+
+def test_dedup_clusters_distributed_rounds_match_driver_path(spark):
+    """driver_max_edges=0 forces the iterative min-label rounds; on a small
+    graph (chain, star via a larger doc, isolated docs) they must return
+    exactly the driver union-find's labelling."""
+    from dataflow_ordered_processing_spark.functions import dedup
+
+    docs = _docs(spark, 12)
+    pairs = _pairs(spark, (1, 2), (2, 3), (3, 4), (5, 9), (6, 9), (7, 10))
+
+    def labels(**kw):
+        return sorted(
+            (r["doc_id"], r["cluster_id"])
+            for r in dedup.dedup_clusters(docs, pairs, **kw).collect()
+        )
+
+    driver = labels()
+    assert labels(driver_max_edges=0) == driver
+    assert dict(driver)[4] == 1 and dict(driver)[9] == 5 and dict(driver)[11] == 11
 
 
 def test_dedup_keep_first_transitive_beats_one_round(spark):
