@@ -13,7 +13,12 @@ Runs the engine's headline operators at $SPARK_GRAFT_SF_DIR (default
 
 Output: {"metric": "...", "value": total_sec, "unit": "sec",
          "queries": {name: sec}, "sf": ..., "ordered_turns_per_sec": ...,
-         "staging_spread_p99_s": ...}
+         "staging_spread_p99_s": ..., "session_s": ..., "process_wall_s": ...}
+
+`value` sums the timed queries only. `session_s` is the get_spark() time
+(JVM launch, plus the session warm-up under SPARK_GRAFT_WARM=1) and
+`process_wall_s` runs from the top of this script, before pyspark is
+imported, to the JSON line: the end-to-end figure.
 
 `staging_spread_p99_s` is NOT emission latency: it is the p99 spread of
 ingest_ts over a run that replays pre-staged history as fast as triggers
@@ -31,6 +36,8 @@ import sys
 import tempfile
 import time
 
+_T0 = time.time()
+
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -46,7 +53,9 @@ def main() -> int:
     from dataflow_ordered_processing_spark.streaming import ordered_stream
     from dataflow_ordered_processing_spark.streaming.ordered_stream import split_output
 
+    t_session = time.time()
     spark = get_spark("bench", master=f"local[{cpus}]", shuffle_partitions=cpus)
+    session_s = time.time() - t_session
 
     timings: dict[str, float] = {}
     extras: dict[str, float] = {}
@@ -198,6 +207,10 @@ def main() -> int:
 
     total = round(sum(timings.values()), 3)
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
+    # stop every query (and with it its state stores) before the JSON line,
+    # so no teardown error can interleave with it
+    for q in spark.streams.active:
+        q.stop()
     print(
         json.dumps(
             {
@@ -207,8 +220,11 @@ def main() -> int:
                 "queries": timings,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
                 **extras,
+                "session_s": round(session_s, 3),
+                "process_wall_s": round(time.time() - _T0, 3),
             }
-        )
+        ),
+        flush=True,
     )
     spark.stop()
     return 0

@@ -26,30 +26,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _warmup(spark) -> None:
-    """Touch every python worker with the state-function code path once so
-    the timed run measures steady-state throughput, not 32× cold pandas
-    imports (real clusters run warm, long-lived executors)."""
-    import pandas as pd
-    from pyspark.sql import functions as F
+    """Touch every Python worker once before the timed run (the package's
+    one session warm-up; a no-op if get_spark already ran it)."""
+    from dataflow_ordered_processing_spark import session
 
-    from dataflow_ordered_processing_spark.operators.ordered_batch import (
-        ordered_emit_batch,
-    )
-
-    cores = spark.sparkContext.defaultParallelism
-    pdf = pd.DataFrame(
-        {
-            "conv_id": [f"warm-{i}" for i in range(cores * 4)],
-            "turn_idx": [1] * cores * 4,
-            "role": ["user"] * cores * 4,
-            "text": ["w"] * cores * 4,
-            "tool": [None] * cores * 4,
-            "ts": pd.Timestamp("2026-01-01"),
-        }
-    )
-    df = spark.createDataFrame(pdf).repartition(cores, "conv_id")
-    ordered_emit_batch(df, impl="pandas").count()
-    df.groupBy("conv_id").agg(F.count("*")).count()
+    session._warm_session(spark, spark.sparkContext.defaultParallelism)
 
 
 def _hot_candidates(spark, data_path: str, threshold: int) -> set[str]:

@@ -5,12 +5,6 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# The one-time session warm-up exists to keep fresh-JVM bench/production
-# sessions from charging init costs to their first query; tiny test sessions
-# (and the subprocess legs tests spawn — they inherit the env) don't need it
-# and would pay it once per JVM. Opt out unless a test explicitly opts in.
-os.environ.setdefault("SPARK_GRAFT_WARM", "0")
-
 from dataflow_ordered_processing_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")

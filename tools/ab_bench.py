@@ -4,9 +4,9 @@ Round-3's driver bench drifted ~15% vs round 2 on queries whose code did not
 change — on this box only INTERLEAVED same-session runs can tell machine
 drift from a real regression (BENCH/BASELINE.md methodology note). This tool
 runs `python bench.py` (and optionally a scaling_bench 4M sharded point)
-against several checked-out HEADs in strict interleaved order:
+against several checked-out HEADs in interleaved order:
 
-    r2, r3, r4, r2, r3, r4, ...   (one process per run, fresh JVM each)
+    r2, r3, r4, r4, r3, r2, ...   (one process per run, fresh JVM each)
 
 Usage:
   python tools/ab_bench.py --heads r2=/dev/shm/ab-r2 r3=/dev/shm/ab-r3 \
@@ -26,6 +26,7 @@ import statistics
 import subprocess
 import sys
 import tempfile
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -97,15 +98,22 @@ def main() -> int:
 
     runs: list[dict] = []
     for rep in range(args.reps):
-        for name, path in heads.items():
+        # alternate which head runs first, so neither always follows the other
+        order = list(heads.items())
+        for name, path in order[::-1] if rep % 2 else order:
+            t0 = time.time()
             r = run_bench(path, args.sf_dir, args.cpus)
-            rec = {"head": name, "rep": rep, "bench": r}
+            # launch to exit as the harness sees it: interpreter start, session
+            # build and teardown included, whatever the head's bench.py reports
+            rec = {"head": name, "rep": rep, "process_wall_s": round(time.time() - t0, 3),
+                   "bench": r}
             if scaling_src:
                 s = run_scaling_leg(path, scaling_src, args.cpus)
                 rec["scaling_4m"] = s
             runs.append(rec)
             print(json.dumps({"event": "run", "head": name, "rep": rep,
                               "total_s": r.get("value"),
+                              "process_wall_s": rec["process_wall_s"],
                               "sharded_tps": r.get("queries", {}).get(
                                   "sharded_turns_per_sec"),
                               "scaling_4m_tps": rec.get("scaling_4m", {}).get(
@@ -132,11 +140,14 @@ def main() -> int:
                     "n": len(vals),
                 }
         totals = [r["bench"]["value"] for r in mine if "value" in r["bench"]]
+        walls = [r["process_wall_s"] for r in mine]
         sc = [r["scaling_4m"].get("sustained_turns_per_sec") for r in mine
               if "scaling_4m" in r and r["scaling_4m"].get("sustained_turns_per_sec")]
         summary[name] = {
             "total_s": {"mean": round(statistics.mean(totals), 2),
                         "all": [round(t, 2) for t in totals]} if totals else None,
+            "process_wall_s": {"median": round(statistics.median(walls), 2),
+                               "all": walls},
             "scaling_4m_sustained_tps": {
                 "mean": round(statistics.mean(sc), 1), "all": sc} if sc else None,
             "queries": agg,
@@ -147,7 +158,7 @@ def main() -> int:
         "sf_dir": args.sf_dir,
         "cpus": args.cpus,
         "reps": args.reps,
-        "order": "strict interleave (head1, head2, ... per rep)",
+        "order": "interleaved; head order reversed on odd reps",
         "heads": {k: v for k, v in heads.items()},
         "runs": runs,
         "summary": summary,
