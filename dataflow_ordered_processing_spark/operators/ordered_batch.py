@@ -27,17 +27,28 @@ from pyspark.sql import functions as F
 from . import ordered_core as core
 from ..schemas import ORDERED_OUTPUT_SCHEMA, STATUS_SCHEMA, ddl
 
-def _dedupe(df: DataFrame) -> DataFrame:
-    """Drop duplicate (conv_id, turn_idx) deliveries, first-by-ts wins.
+# running conversation depth columns and the per-row amount each one sums
+DEPTHS = {
+    "n_user_cum": "CASE WHEN role = 'user' THEN 1 ELSE 0 END",
+    "n_assistant_cum": "CASE WHEN role = 'assistant' THEN 1 ELSE 0 END",
+    "n_tool_cum": "CASE WHEN role = 'tool' THEN 1 ELSE 0 END",
+    "chars_cum": "CAST(coalesce(length(text), 0) AS BIGINT)",
+}
 
-    Implemented as lag() within the conv_id partitioning (NOT a window over
-    (conv_id, turn_idx)) so the downstream per-key prefix window reuses the
-    SAME exchange and sort — the whole batch ordering plan then shuffles the
-    data exactly once on conv_id."""
-    w = Window.partitionBy("conv_id").orderBy("turn_idx", "ts")
+
+def _dedupe(df: DataFrame, initial_idx: int, *part: str) -> DataFrame:
+    """Drop duplicate (conv_id, turn_idx) deliveries, first-by-ts wins, and
+    rows below ``initial_idx``: already-emitted history, which the streaming
+    core discards as duplicates and which must not shift ranks.
+
+    Implemented as lag() within the (conv_id, *part) partitioning (NOT a
+    window over (conv_id, turn_idx)) so the downstream prefix window reuses
+    the SAME exchange and sort: dedup and ranking share one shuffle."""
+    w = Window.partitionBy("conv_id", *part).orderBy("turn_idx", "ts")
     prev = F.lag("turn_idx").over(w)
     return (
-        df.withColumn("_prev_idx", prev)
+        df.filter(F.col("turn_idx").cast("long") >= initial_idx)
+        .withColumn("_prev_idx", prev)
         .filter(F.col("_prev_idx").isNull() | (F.col("_prev_idx") != F.col("turn_idx")))
         .drop("_prev_idx")
     )
@@ -50,10 +61,7 @@ def ordered_emit_batch(
     ``initial_idx``, in order, with a 1-based ``emit_seq``. Rows beyond a gap
     are withheld (they'd stay buffered in the streaming engine)."""
     if impl == "sql":
-        # rows below the initial sequence are already-emitted history: the
-        # streaming core discards them as duplicates (seq <= last_emitted);
-        # they must not shift ranks here
-        deduped = _dedupe(df.filter(F.col("turn_idx").cast("long") >= initial_idx))
+        deduped = _dedupe(df, initial_idx)
         w = Window.partitionBy("conv_id").orderBy("turn_idx")
         wcum = w.rowsBetween(Window.unboundedPreceding, 0)
         emitted = (
@@ -64,23 +72,8 @@ def ordered_emit_batch(
         )
         # per-turn running conversation depth (MarketDepth-snapshot analog);
         # same conv_id partitioning + turn_idx order → reuses the exchange
-        return (
-            emitted.withColumn(
-                "n_user_cum",
-                F.sum(F.when(F.col("role") == "user", 1).otherwise(0)).over(wcum),
-            )
-            .withColumn(
-                "n_assistant_cum",
-                F.sum(F.when(F.col("role") == "assistant", 1).otherwise(0)).over(wcum),
-            )
-            .withColumn(
-                "n_tool_cum",
-                F.sum(F.when(F.col("role") == "tool", 1).otherwise(0)).over(wcum),
-            )
-            .withColumn(
-                "chars_cum",
-                F.sum(F.coalesce(F.length("text"), F.lit(0)).cast("long")).over(wcum),
-            )
+        return emitted.select(
+            "*", *[F.sum(F.expr(v)).over(wcum).alias(c) for c, v in DEPTHS.items()]
         )
     if impl == "pandas":
 
@@ -101,11 +94,7 @@ def ordered_emit_batch(
                     "text": out["text"],
                     "tool": out["tool"],
                     "ts": pd.to_datetime(out["ts_us"], unit="us"),
-                    "emit_seq": out["emit_seq"].astype("int64"),
-                    "n_user_cum": out["n_user_cum"].astype("int64"),
-                    "n_assistant_cum": out["n_assistant_cum"].astype("int64"),
-                    "n_tool_cum": out["n_tool_cum"].astype("int64"),
-                    "chars_cum": out["chars_cum"].astype("int64"),
+                    **{c: out[c].astype("int64") for c in ("emit_seq", *DEPTHS)},
                 }
             )
 
@@ -215,7 +204,7 @@ def ordered_status_batch(df: DataFrame, initial_idx: int = core.INITIAL_TURN_IDX
     """
     base = initial_idx - 1
     # sub-initial rows count as duplicates (computed from received - rest)
-    deduped = _dedupe(df.filter(F.col("turn_idx").cast("long") >= initial_idx))
+    deduped = _dedupe(df, initial_idx)
     w = Window.partitionBy("conv_id").orderBy("turn_idx")
     classified = deduped.withColumn("_rn", F.row_number().over(w)).withColumn(
         "_emitted", F.col("turn_idx").cast("long") == F.col("_rn") + base

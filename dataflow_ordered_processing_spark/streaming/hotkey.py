@@ -42,11 +42,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.ordered_batch import DEPTHS
 from ..operators.skew import salted_ordered_emit_batch
 from .sinks import epoch_dirs, read_raw
 
-_DEPTHS = ["n_user_cum", "n_assistant_cum", "n_tool_cum", "chars_cum"]
-_OUT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "emit_seq", *_DEPTHS]
+_OUT_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts", "emit_seq", *DEPTHS]
 
 
 def _raw_state(raw_path: str, committed: list[str]) -> dict:
@@ -159,7 +159,7 @@ def order_hot_channel(
         .agg(
             F.max("turn_idx").alias("turn_idx"),
             F.max_by("emit_seq", "turn_idx").alias("emit_seq"),
-            *[F.max_by(c, "turn_idx").alias(c) for c in _DEPTHS],
+            *[F.max_by(c, "turn_idx").alias(c) for c in DEPTHS],
         )
         .collect()
     }
@@ -183,7 +183,7 @@ def order_hot_channel(
         ordered = ordered.withColumn(
             "emit_seq", F.col("emit_seq") + F.lit(int(st["emit_seq"]))
         )
-        for c in _DEPTHS:
+        for c in DEPTHS:
             ordered = ordered.withColumn(c, F.col(c) + F.lit(int(st[c])))
         parts.append(ordered)
     prior_total = int(meta["rows_total"]) if meta else prior.count()

@@ -1,12 +1,12 @@
-"""Per-turn running conversation-depth snapshot (MarketDepth analog): all
-three implementations agree with a pandas oracle."""
+"""Per-turn running conversation-depth snapshot (MarketDepth analog): both
+single-phase implementations agree with a pandas oracle (the salted plan is
+held to the SQL one column for column in test_skew.py)."""
 
 import numpy as np
 import pandas as pd
 import pytest
 
 from dataflow_ordered_processing_spark.operators.ordered_batch import ordered_emit_batch
-from dataflow_ordered_processing_spark.operators.skew import salted_ordered_emit_batch
 from dataflow_ordered_processing_spark.schemas import TRANSCRIPT_SCHEMA
 from dataflow_ordered_processing_spark.sources.scenarios import scenario, serial_oracle
 
@@ -27,16 +27,12 @@ def _depth_oracle(batches):
     return pd.concat(out, ignore_index=True)
 
 
-@pytest.mark.parametrize("impl", ["sql", "pandas", "salted"])
+@pytest.mark.parametrize("impl", ["sql", "pandas"])
 def test_depth_matches_oracle(spark, impl):
     batches = scenario("multi_conversation")
     df = spark.createDataFrame(pd.concat(batches, ignore_index=True), schema=TRANSCRIPT_SCHEMA)
-    op = (
-        (lambda d: salted_ordered_emit_batch(d, block=8))
-        if impl == "salted"
-        else (lambda d: ordered_emit_batch(d, impl=impl))
-    )
-    got = op(df).select(*KEYS, *DEPTH).toPandas().sort_values(KEYS).reset_index(drop=True)
+    got = ordered_emit_batch(df, impl=impl).select(*KEYS, *DEPTH).toPandas()
+    got = got.sort_values(KEYS).reset_index(drop=True)
     want = _depth_oracle(batches)[KEYS + DEPTH].sort_values(KEYS).reset_index(drop=True)
     got["turn_idx"] = got["turn_idx"].astype("int64")
     want["turn_idx"] = want["turn_idx"].astype("int64")

@@ -7,10 +7,18 @@ import time
 import pandas as pd
 import pytest
 
-from dataflow_ordered_processing_spark.sources.scenarios import scenario, serial_oracle
-from dataflow_ordered_processing_spark.streaming import OrderedStreamConfig
+from dataflow_ordered_processing_spark.sources.scenarios import (
+    conversation,
+    scenario,
+    serial_oracle,
+)
+from dataflow_ordered_processing_spark.streaming import (
+    OrderedStreamConfig,
+    build_ordered_stream,
+    ordered_stream,
+)
 
-from streaming_utils import run_to_memory
+from streaming_utils import StagedStream, run_to_memory
 
 CMP = ["conv_id", "turn_idx", "role", "text", "tool", "emit_seq"]
 
@@ -137,10 +145,6 @@ def test_heartbeat_status_for_idle_gapped_key(spark, tmp_path):
     # Spark constructs timer micro-batches continuously, so
     # processAllAvailable() never quiesces — poll the sink instead.
     cfg = OrderedStreamConfig(status_heartbeat_ms=300)
-
-    from streaming_utils import StagedStream
-    from dataflow_ordered_processing_spark.streaming import ordered_stream
-
     st_src = StagedStream(spark, str(tmp_path))
     q = (
         ordered_stream(st_src.source(), cfg)
@@ -183,10 +187,6 @@ def test_idle_state_eviction(spark, tmp_path):
     # State TTL (SURVEY §7): a key stuck on a gap is evicted after K idle
     # heartbeats — pending turns dropped, state freed, final status emitted.
     cfg = OrderedStreamConfig(status_heartbeat_ms=300, evict_idle_after_heartbeats=3)
-
-    from streaming_utils import StagedStream
-    from dataflow_ordered_processing_spark.streaming import ordered_stream
-
     st_src = StagedStream(spark, str(tmp_path))
     q = (
         ordered_stream(st_src.source(), cfg)
@@ -221,3 +221,36 @@ def test_idle_state_eviction(spark, tmp_path):
         assert last["buffered_count"] == 2 and last["last_emitted"] == 2
     finally:
         q.stop()
+
+
+@pytest.mark.parametrize("engine", ["classic", "sharded"])
+def test_capped_drain_tombstone_ttl_counts_idle_firings(spark, tmp_path, engine):
+    """A conversation completed by a timer-driven capped drain is evicted on
+    exactly the evict_idle_after_heartbeats-th timer firing after its last
+    arrival: the drain firings count toward the TTL, in both engines."""
+    # 10 turns, cap 3: batch 0 (the arrival) emits 3, firings 1-3 drain the
+    # rest and complete it, firings 4-5 age the tombstone, firing 6 evicts.
+    # A 1 ms heartbeat has expired by every next batch (they run back to
+    # back), so batch k is firing k.
+    cfg = OrderedStreamConfig(
+        status_heartbeat_ms=1, max_emit_per_batch=3, evict_idle_after_heartbeats=6
+    )
+    st_src = StagedStream(spark, str(tmp_path))
+    st_src.push(conversation(1, 10))
+    stream = build_ordered_stream(st_src.source(), cfg, engine=engine, n_shards=2)
+    q = stream.writeStream.format("memory").queryName(f"ttl_{engine}").start()
+
+    def state_rows():
+        return {p["batchId"]: p["stateOperators"][0]["numRowsTotal"] for p in q.recentProgress}
+
+    try:
+        deadline = time.time() + 120
+        while 0 not in state_rows().values() and time.time() < deadline:
+            time.sleep(0.2)
+    finally:
+        q.stop()
+    rows = state_rows()
+    assert [rows.get(b) for b in range(7)] == [1] * 6 + [0], rows
+    got = _data(spark, f"ttl_{engine}")
+    assert list(got["turn_idx"]) == list(range(1, 11))
+    assert list(got["emit_seq"]) == list(range(1, 11))

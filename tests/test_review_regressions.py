@@ -9,7 +9,6 @@ from dataflow_ordered_processing_spark.operators.ordered_batch import (
     ordered_emit_batch,
     ordered_status_batch,
 )
-from dataflow_ordered_processing_spark.operators.skew import salted_ordered_emit_batch
 from dataflow_ordered_processing_spark.schemas import TRANSCRIPT_SCHEMA
 from dataflow_ordered_processing_spark.sources.scenarios import conversation
 from dataflow_ordered_processing_spark.streaming import OrderedStreamConfig, ordered_stream
@@ -17,15 +16,13 @@ from dataflow_ordered_processing_spark.streaming import OrderedStreamConfig, ord
 from streaming_utils import StagedStream
 
 
-@pytest.mark.parametrize("impl", ["sql", "pandas", "salted"])
+@pytest.mark.parametrize("impl", ["sql", "pandas"])
 def test_initial_idx_discards_subinitial_rows(spark, impl):
     # rows below initial_idx are already-emitted history: discard as
-    # duplicates, never shift ranks (review finding #2)
+    # duplicates, never shift ranks (review finding #2); the salted plan is
+    # held to the SQL one at initial_idx=3 in test_skew.py
     df = spark.createDataFrame(conversation(1, 10), schema=TRANSCRIPT_SCHEMA)
-    if impl == "salted":
-        out = salted_ordered_emit_batch(df, block=4, initial_idx=5).toPandas()
-    else:
-        out = ordered_emit_batch(df, impl=impl, initial_idx=5).toPandas()
+    out = ordered_emit_batch(df, impl=impl, initial_idx=5).toPandas()
     assert sorted(out["turn_idx"]) == [5, 6, 7, 8, 9, 10]
     assert sorted(out["emit_seq"]) == [1, 2, 3, 4, 5, 6]
 
