@@ -11,11 +11,13 @@ well-defined, so CEP is the natural consumer of the ordered stream
 
 This module is the engine-side matcher: pure numpy over the columnar runs
 that ``ordered_core.apply_batch`` emits — no per-row Python, no pandas.
-Both contiguity modes are incremental: strict carries the trailing (k-1)
-emitted turns across micro-batches (``match_strict``), skip-till-next
-carries a partial-match frontier — one open candidate per anchor —
-(``match_skip``); the batch operator in ``plans/cep.py`` computes the same
-semantics where the full table is available and serves as the oracle.
+Both contiguity modes are incremental, one matcher and one state shape
+each: strict carries the trailing (k-1) emitted turns across micro-batches
+(``match_strict``); skip-till-next carries a partial-match frontier — one
+open candidate per anchor, plus the quantified steps' open runs —
+(``match_skip``, for plain and quantified patterns alike). The batch
+operator in ``plans/cep.py`` computes the same semantics where the full
+table is available and serves as the oracle.
 
 Match semantics (pinned by tests/test_cep.py against a pure-Python oracle):
   - a match starts at every row where step 0 holds and steps 1..k-1 hold on
@@ -110,13 +112,13 @@ class Step:
         return " AND ".join(parts)
 
     def mask(self, cols: dict) -> np.ndarray:
-        n = len(cols["turn_idx"])
-        m = np.ones(n, dtype=bool)
+        m = None  # __post_init__ guarantees role or tool is set
         for col, v in (("role", self.role), ("tool", self.tool)):
             if v is None:
                 continue
             arr = np.asarray(cols[col], dtype=object)
-            m &= np.isin(arr, v) if isinstance(v, tuple) else arr == v
+            hit = np.isin(arr, v) if isinstance(v, tuple) else arr == v
+            m = hit if m is None else m & hit
         return m
 
 
@@ -254,206 +256,23 @@ def match_strict(
     return matches, new_carry
 
 
-def match_skip(
-    steps: tuple[Step, ...],
-    run: dict,
-    frontier: dict | None = None,
-    within_us: int | None = None,
-    within_turns: int | None = None,
-    guards: dict | None = None,
-) -> tuple[dict, dict]:
-    """Incremental skip-till-next-match (Flink CEP ``followedBy``) over one
-    in-order emitted run — the streaming counterpart of
-    ``plans.cep.match_pattern(mode="skip")`` (VERDICT r6 ask #2: a funnel
-    monitor is the canonical *streaming* CEP workload).
+INF_IDX = np.int64(2**62)  # "none": no pending guard, no hop (fits a LongType)
+_NONE = np.array([INF_IDX])  # ends hop/guard tables: past the end reads "none"
 
-    State is a per-key **partial-match frontier**: one entry per open
-    candidate ``(anchor_idx, anchor_ts_us, wait)`` where ``wait`` is the
-    next step (1-based) the candidate needs. Skip-till-next semantics make
-    a candidate's future deterministic given its wait step — the next hop
-    is always the NEAREST following matching row — so no per-candidate
-    intermediate rows need to be stored, and the emitted match is fully
-    identified by (anchor, end).
-
-    The per-run algorithm is the batch plan's shape in numpy: one
-    suffix-min "nearest following match position" table per step (and per
-    negative guard), then at most k-1 vectorized hop rounds over the
-    candidate arrays. No per-row Python.
-
-    ``guards`` (``plans.cep`` ``not_between`` analog): ``{segment_i: Step}``
-    — a candidate at step i dies when a guard row appears strictly between
-    its matched step-i row and its step-i+1 match (a row matching BOTH the
-    guard and step i+1 advances the candidate, exactly like the batch
-    plan's ``_ng >= _next`` rule). A candidate that stalls (no step match
-    in the rest of the run) dies if a guard row follows its position —
-    any future step match would be after that guard row.
-
-    Bounds / pruning:
-      - ``within_turns``: exact — a candidate is dropped once the newest
-        emitted turn_idx is ≥ anchor_idx + within_turns (turn_idx is
-        strictly increasing, so no future completion can satisfy the
-        bound).
-      - ``within_us``: completions are filtered exactly; open candidates
-        are additionally pruned once ``last_ts - anchor_ts > within_us``,
-        which assumes per-key event time is non-decreasing in turn order
-        (true of transcripts — ts IS the turn's event time; a
-        non-monotone key could in principle complete with a small
-        first→last span after a large intermediate ts, which this pruning
-        would miss).
-      - without either bound, open candidates live until the conversation
-        completes (the engine drops the frontier with the state) — fine
-        for conversation-scale keys; set a bound for unbounded ones.
-
-    Exactly-once across micro-batches: a match is emitted in the batch
-    that processes its END turn; turns are processed once, in order, so no
-    carry-window suppression is needed. Returns ``(matches, new_frontier)``
-    with the same matches columns as :func:`match_strict`.
-    """
-    k = len(steps)
-    if k < 2:
-        raise ValueError("a pattern needs at least 2 steps")
-    fr = frontier if frontier is not None else empty_frontier()
-    idx = np.asarray(run["turn_idx"], dtype=np.int64)
-    ts = np.asarray(run["ts_us"], dtype=np.int64)
-    n = len(idx)
-    empty = {
-        "start_idx": np.empty(0, np.int64),
-        "end_idx": np.empty(0, np.int64),
-        "ts_first_us": np.empty(0, np.int64),
-        "ts_last_us": np.empty(0, np.int64),
-    }
-    a_idx = np.asarray(fr["anchor_idx"], dtype=np.int64)
-    a_ts = np.asarray(fr["anchor_ts_us"], dtype=np.int64)
-    a_wait = np.asarray(fr["wait"], dtype=np.int64)
-    if n == 0:
-        return empty, fr
-    # gap guard (mirrors match_strict's contiguity check): emission is
-    # gap-free per key, so a jump means state re-creation after a TTL
-    # eviction — open candidates reference turns this incarnation never
-    # saw; drop them (re-matches on re-delivered turns are deduped at the
-    # sink by the match_end_idx watermark, same as strict)
-    if len(a_idx) and fr.get("next_expected") is not None and idx[0] != fr["next_expected"]:
-        a_idx, a_ts, a_wait = a_idx[:0], a_ts[:0], a_wait[:0]
-
-    sent = n  # sentinel position = "no following match in this run"
-    pos_range = np.arange(n, dtype=np.int64)
-    # NXT[i][p] = smallest run position q >= p where steps[i] matches
-    nxt = np.full((k, n + 1), sent, dtype=np.int64)
-    for i in range(1, k):
-        hit = np.where(steps[i].mask(run), pos_range, sent)
-        nxt[i, :n] = np.minimum.accumulate(hit[::-1])[::-1]
-    # NG[j][p] = same table for segment j's negative guard (sent = none,
-    # which can never kill since kill needs g < hp <= sent)
-    ng = np.full((k, n + 1), sent, dtype=np.int64)
-    for j, g in (guards or {}).items():
-        hit = np.where(g.mask(run), pos_range, sent)
-        ng[int(j), :n] = np.minimum.accumulate(hit[::-1])[::-1]
-
-    anchors = np.nonzero(steps[0].mask(run))[0]
-    c_aidx = np.concatenate([a_idx, idx[anchors]])
-    c_ats = np.concatenate([a_ts, ts[anchors]])
-    c_wait = np.concatenate([a_wait, np.ones(len(anchors), np.int64)])
-    # frontier entrants hop from "before the run": position -1
-    c_pos = np.concatenate([np.full(len(a_idx), -1, np.int64), anchors])
-
-    alive = np.ones(len(c_pos), dtype=bool)
-    open_ = np.ones(len(c_pos), dtype=bool)  # alive and not yet stalled/done
-    done = np.zeros(len(c_pos), dtype=bool)
-    for _ in range(k - 1):
-        act = np.nonzero(alive & open_ & ~done)[0]
-        if not len(act):
-            break
-        hp = nxt[c_wait[act], c_pos[act] + 1]
-        gp = ng[c_wait[act] - 1, c_pos[act] + 1]
-        killed = gp < hp  # guard strictly before the next step match
-        # (or before end-of-run for a stalled candidate: hp == sent)
-        stalled = ~killed & (hp == sent)
-        adv = ~killed & ~stalled
-        alive[act[killed]] = False
-        open_[act[stalled]] = False
-        ai = act[adv]
-        c_pos[ai] = hp[adv]
-        c_wait[ai] += 1
-        done[ai] = c_wait[ai] == k
-
-    comp = np.nonzero(alive & done)[0]
-    end_pos = c_pos[comp]
-    m_start, m_end = c_aidx[comp], idx[end_pos]
-    m_tsf, m_tsl = c_ats[comp], ts[end_pos]
-    keep = np.ones(len(comp), dtype=bool)
-    if within_us is not None:
-        keep &= m_tsl - m_tsf <= within_us
-    if within_turns is not None:
-        keep &= m_end - m_start <= within_turns
-    matches = {
-        "start_idx": m_start[keep],
-        "end_idx": m_end[keep],
-        "ts_first_us": m_tsf[keep],
-        "ts_last_us": m_tsl[keep],
-    }
-
-    still = alive & ~done  # stalled mid-chain — carry into the next run
-    if within_turns is not None:
-        still &= idx[-1] - c_aidx < within_turns
-    if within_us is not None:
-        still &= ts[-1] - c_ats <= within_us
-    new_frontier = {
-        "anchor_idx": c_aidx[still],
-        "anchor_ts_us": c_ats[still],
-        "wait": c_wait[still],
-        "next_expected": int(idx[-1]) + 1,
-    }
-    return matches, new_frontier
-
-
-def empty_frontier() -> dict:
-    return {
-        "anchor_idx": np.empty(0, np.int64),
-        "anchor_ts_us": np.empty(0, np.int64),
-        "wait": np.empty(0, np.int64),
-        "next_expected": None,
-    }
-
-
-def frontier_from_lists(anchor_idx, anchor_ts_us, wait, next_expected) -> dict:
-    """Rebuild a skip-mode frontier from state-schema lists — the ONE
-    deserializer shared by every engine's state layer (mirrors
-    carry_from_lists)."""
-    return {
-        "anchor_idx": np.asarray(list(anchor_idx or []), dtype="int64"),
-        "anchor_ts_us": np.asarray(list(anchor_ts_us or []), dtype="int64"),
-        "wait": np.asarray(list(wait or []), dtype="int64"),
-        "next_expected": None if next_expected is None else int(next_expected),
-    }
-
-
-def frontier_to_lists(fr: dict) -> tuple[list, list, list, int | None]:
-    return (
-        [int(x) for x in fr["anchor_idx"]],
-        [int(x) for x in fr["anchor_ts_us"]],
-        [int(x) for x in fr["wait"]],
-        None if fr["next_expected"] is None else int(fr["next_expected"]),
-    )
-
-
-INF_IDX = np.int64(2**62)  # "no pending guard" sentinel (fits a LongType)
+_CAND = ("anchor_idx", "anchor_ts_us", "wait", "cpos", "guard_seen")
+_OPEN = ("open_s", "open_s_ts", "open_e", "open_e_ts")
+SKIP_STATE_FIELDS = len(_CAND) + len(_OPEN) + 1  # + next_expected
+_MATCH_COLS = ("start_idx", "end_idx", "ts_first_us", "ts_last_us")
 
 
 def empty_frontier_q(n_quant: int) -> dict:
-    """Quantified-skip frontier: candidate arrays + per-quantified-step
-    open-run tracking (a predicate run still open at the batch boundary —
-    its maximality, hence qualification, is undecidable until a break row
-    or the conversation's completion flush)."""
+    """The skip frontier: candidate arrays + per-quantified-step open-run
+    tracking (a predicate run still open at the batch boundary — its
+    maximality, hence qualification, is undecidable until a break row or
+    the conversation's completion flush)."""
     return {
-        "anchor_idx": np.empty(0, np.int64),
-        "anchor_ts_us": np.empty(0, np.int64),
-        "wait": np.empty(0, np.int64),
-        "cpos": np.empty(0, np.int64),
-        "guard_seen": np.empty(0, np.int64),
-        "open_s": np.full(n_quant, -1, np.int64),
-        "open_s_ts": np.full(n_quant, -1, np.int64),
-        "open_e": np.full(n_quant, -1, np.int64),
-        "open_e_ts": np.full(n_quant, -1, np.int64),
+        **{c: np.empty(0, np.int64) for c in _CAND},
+        **{c: np.full(n_quant, -1, np.int64) for c in _OPEN},
         "next_expected": None,
     }
 
@@ -473,7 +292,39 @@ def _runs_of(mask: np.ndarray):
     return starts.astype(np.int64), ends.astype(np.int64)
 
 
-def match_skip_quant(
+def _closed_runs(st: Times, idx, ts, run, opn: dict, j: int, final: bool):
+    """The qualifying CLOSED runs of quantified step ``st`` as sorted,
+    _NONE-terminated (start, start_ts, end, end_ts) arrays: this batch's
+    predicate runs, joined with the run carried open in slot ``j`` of
+    ``opn``. A run that touches the batch end is stored back into ``opn``
+    instead, unless ``final`` (a run touching the conversation's last row
+    is maximal)."""
+    p0, p1 = _runs_of(st.step.mask(run).astype(bool))
+    cols = [idx[p0], ts[p0], idx[p1], ts[p1]]
+    carried = [int(opn[c][j]) for c in _OPEN]
+    for c in _OPEN:
+        opn[c][j] = -1
+    if carried[0] >= 0:
+        if len(p0) and p0[0] == 0:
+            # the carried run continues into this batch: it keeps its start
+            cols[0][0], cols[1][0] = carried[0], carried[1]
+        else:
+            # it closed at the previous batch boundary: its stored end row
+            # is the run end
+            cols = [np.concatenate([[v], a]) for v, a in zip(carried, cols)]
+    if len(p1) and p1[-1] == len(idx) - 1 and not final:
+        # run touches the batch end: maximality unknown — carry it
+        for c, a in zip(_OPEN, cols):
+            opn[c][j] = a[-1]
+        cols = [a[:-1] for a in cols]
+    ln = cols[2] - cols[0] + 1
+    ok = ln >= st.n_min
+    if st.n_max is not None:
+        ok &= ln <= st.n_max
+    return [np.concatenate((a[ok], _NONE)) for a in cols]
+
+
+def match_skip(
     steps: tuple,
     run: dict,
     frontier: dict | None = None,
@@ -482,20 +333,32 @@ def match_skip_quant(
     guards: dict | None = None,
     final: bool = False,
 ) -> tuple[dict, dict]:
-    """Incremental skip-till-next with QUANTIFIED steps — the streaming
-    counterpart of ``plans.cep._match_skip_quant`` (same maximal-run
-    semantics; parity-tested against it and a brute-force oracle).
+    """Incremental skip-till-next-match (Flink CEP ``followedBy``) over one
+    in-order emitted run — the streaming counterpart of
+    ``plans.cep.match_pattern(mode="skip")`` (same semantics, quantified
+    steps included; parity-tested against it and a brute-force oracle).
 
-    ``steps``: tuple of Step / Times (Times.step must be a Step — the
-    numpy matcher needs its structural mask). State beyond the plain-skip
-    frontier: per candidate, the last consumed position ``cpos`` (an open
-    run may have started after one candidate's cpos and before another's,
-    so the plain matcher's "hop from before the batch" trick does not
-    survive quantifiers) and ``guard_seen`` (the earliest pending guard row
-    after cpos for the awaited segment — guard kills must be DEFERRED to
-    hop time because an open run that eventually qualifies with
-    start < guard absolves the candidate); per quantified step, the open
-    run's start/end idx+ts.
+    ``steps``: a tuple of Step / Times (Times.step must be a Step — the
+    matcher needs its structural mask). A plain step hops to the NEAREST
+    following matching row; a quantified step to the nearest following
+    qualifying maximal run (see :class:`Times`), and the chain continues
+    from the run's end.
+
+    State is a per-key **partial-match frontier**: one entry per open
+    candidate — ``anchor_idx``/``anchor_ts_us``, ``wait`` (the next step it
+    needs), ``cpos`` (its last consumed turn: hop targets start strictly
+    after it) and ``guard_seen`` (the earliest guard row after cpos for the
+    awaited segment) — plus, per quantified step, the predicate run still
+    open at the batch end (``open_*``: start/end idx+ts). Skip-till-next
+    makes a candidate's future deterministic given (wait, cpos), so no
+    intermediate rows are stored and a match is identified by (anchor,
+    end).
+
+    The per-run algorithm is vectorized: per step a sorted hop table (the
+    step's matching rows, or its qualifying closed runs), then ONE pass over
+    the steps in order, advancing every candidate waiting on step i with a
+    single ``searchsorted`` into that table. No per-row or per-candidate
+    Python.
 
     A quantified step's run resolves (qualifies or not) when CLOSED — a
     non-matching row follows, or ``final=True`` (the conversation
@@ -503,228 +366,169 @@ def match_skip_quant(
     maximal by definition). Matches whose last step is quantified emit in
     the batch where that run closes — still exactly once.
 
-    Candidate advancement is a small per-candidate Python loop (bounded by
-    anchors per key per batch — conversation-scale, unlike the row-scale
-    work which stays vectorized in the run/mask tables).
+    ``guards`` (``plans.cep`` ``not_between`` analog): ``{segment_i: Step}``
+    — a candidate at step i dies when a guard row appears strictly between
+    its step-i match and its step-i+1 match (a row matching BOTH the guard
+    and step i+1 advances the candidate, exactly like the batch plan's
+    ``_ng >= _next`` rule). A candidate waiting on a PLAIN step dies in the
+    batch where the guard row appears: any later hop is after it. Waiting on
+    a QUANTIFIED step the kill is deferred (``guard_seen``): a run still
+    open may qualify with a start before the guard row and absolve it.
+
+    Bounds / pruning:
+      - ``within_turns``: exact — a candidate is dropped once no future
+        completion can end within ``anchor_idx + within_turns`` (turn_idx
+        is strictly increasing; a quantified last step can still end AT
+        the newest turn, when its run is open).
+      - ``within_us``: completions are filtered exactly; open candidates
+        are additionally pruned once ``last_ts - anchor_ts > within_us``,
+        which assumes per-key event time is non-decreasing in turn order
+        (true of transcripts — ts IS the turn's event time; a
+        non-monotone key could in principle complete with a small
+        first→last span after a large intermediate ts, which this pruning
+        would miss).
+      - without either bound, open candidates live until the conversation
+        completes (the engine drops the frontier with the state) — fine
+        for conversation-scale keys; set a bound for unbounded ones.
+
+    Exactly-once across micro-batches: a match is emitted in the batch
+    that processes (or, for a quantified last step, closes) its END turn;
+    turns are processed once, in order. Returns ``(matches,
+    new_frontier)`` with the same matches columns as :func:`match_strict`,
+    sorted by start.
     """
     k = len(steps)
-    norm = []
-    for s in steps:
-        if isinstance(s, Times):
-            if not isinstance(s.step, Step):
-                raise ValueError(
-                    "streaming quantified steps need structural Step "
-                    "predicates (Times over a raw (name, sql) pair is "
-                    "batch-only)"
-                )
-            norm.append(
-                {"mask": s.step.mask, "quant": True, "n_min": s.n_min,
-                 "n_max": s.n_max}
-            )
-        else:
-            norm.append({"mask": s.mask, "quant": False, "n_min": 1, "n_max": 1})
-    steps = norm
-    quant_ids = [i for i, s in enumerate(steps) if s["quant"]]
-    qof = {i: j for j, i in enumerate(quant_ids)}
-    fr = frontier if frontier is not None else empty_frontier_q(len(quant_ids))
+    if k < 2:
+        raise ValueError("a pattern needs at least 2 steps")
+    fr = frontier
+    if fr is None:
+        fr = empty_frontier_q(sum(isinstance(s, Times) for s in steps))
     idx = np.asarray(run["turn_idx"], np.int64)
     ts = np.asarray(run["ts_us"], np.int64)
     n = len(idx)
-    empty = {c: np.empty(0, np.int64) for c in
-             ("start_idx", "end_idx", "ts_first_us", "ts_last_us")}
-
-    c_aidx = np.asarray(fr["anchor_idx"], np.int64)
-    c_ats = np.asarray(fr["anchor_ts_us"], np.int64)
-    c_wait = np.asarray(fr["wait"], np.int64)
-    c_cpos = np.asarray(fr["cpos"], np.int64)
-    c_gseen = np.asarray(fr["guard_seen"], np.int64)
-    open_s = np.asarray(fr["open_s"], np.int64).copy()
-    open_s_ts = np.asarray(fr["open_s_ts"], np.int64).copy()
-    open_e = np.asarray(fr["open_e"], np.int64).copy()
-    open_e_ts = np.asarray(fr["open_e_ts"], np.int64).copy()
-
-    if n and fr.get("next_expected") is not None and idx[0] != fr["next_expected"]:
-        # gap = state re-creation after eviction: carried candidates and
-        # open runs reference turns this incarnation never saw
-        c_aidx = c_aidx[:0]; c_ats = c_ats[:0]; c_wait = c_wait[:0]
-        c_cpos = c_cpos[:0]; c_gseen = c_gseen[:0]
-        open_s[:] = -1; open_s_ts[:] = -1; open_e[:] = -1; open_e_ts[:] = -1
-
     if n == 0 and not final:
-        return empty, fr
+        return {c: np.empty(0, np.int64) for c in _MATCH_COLS}, fr
+    c_aidx, c_ats, c_wait, c_cpos, c_gseen = (
+        np.asarray(fr[c], np.int64) for c in _CAND
+    )
+    opn = {c: np.array(fr[c], np.int64) for c in _OPEN}
+    if n and fr.get("next_expected") is not None and idx[0] != fr["next_expected"]:
+        # gap guard (mirrors match_strict's contiguity check): emission is
+        # gap-free per key, so a jump means state re-creation after a TTL
+        # eviction — carried candidates and open runs reference turns this
+        # incarnation never saw; drop them (re-matches on re-delivered turns
+        # are deduped at the sink by the match_end_idx watermark)
+        c_aidx, c_ats, c_wait, c_cpos, c_gseen = (
+            a[:0] for a in (c_aidx, c_ats, c_wait, c_cpos, c_gseen)
+        )
+        for a in opn.values():
+            a[:] = -1
 
-    # ---- per-step hop tables over (carried open runs + this batch)
-    plain_hits = {}
-    q_runs = {}
-    for i, st in enumerate(steps):
-        m = st["mask"](run).astype(bool) if n else np.zeros(0, bool)
-        if not st["quant"]:
-            if i > 0:
-                plain_hits[i] = idx[m]
+    # per step: the sorted (start, start_ts, end, end_ts) a candidate can
+    # hop to — matching rows (start == end) or qualifying closed runs —
+    # each _NONE-terminated, so a searchsorted past the end reads "no hop"
+    tables, j = [], 0
+    for s in steps:
+        if isinstance(s, Times):
+            tables.append(_closed_runs(s, idx, ts, run, opn, j, final))
+            j += 1
+        else:
+            m = s.mask(run)
+            hit = [np.concatenate((idx[m], _NONE)), np.concatenate((ts[m], _NONE))]
+            tables.append(hit * 2)
+    ghits = {
+        int(seg): np.concatenate((idx[g.mask(run)], _NONE))
+        for seg, g in (guards or {}).items()
+    }
+
+    # new anchors: step 0's rows / closed qualifying runs (an open anchor
+    # run becomes a candidate when it closes)
+    a_s, a_sts, a_e = (a[:-1] for a in tables[0][:3])
+    c_aidx = np.concatenate([c_aidx, a_s])
+    c_ats = np.concatenate([c_ats, a_sts])
+    c_wait = np.concatenate([c_wait, np.ones(len(a_s), np.int64)])
+    c_cpos = np.concatenate([c_cpos, a_e])
+    c_gseen = np.concatenate([c_gseen, np.full(len(a_s), INF_IDX)])
+
+    # one pass in step order: a candidate only moves forward, so the ones
+    # that advance from step i are taken up again at step i + 1; wait == 0
+    # marks a killed one. Candidates stay in anchor order (the frontier,
+    # then this batch's anchors), so completions come out sorted by start.
+    comp = [np.empty(0, np.int64)] * 4
+    for i in range(1, k):
+        sel = np.flatnonzero(c_wait == i)
+        if not len(sel):
             continue
-        j = qof[i]
-        starts_p, ends_p = _runs_of(m)
-        rs, rsts, re_, rets = [], [], [], []
-        carried = open_s[j] >= 0
-        merged_first = bool(carried and n and m[0])
-        if carried and not merged_first:
-            # carried run closed at the previous batch boundary (or this is
-            # an empty final flush) — its stored end row is the run end
-            rs.append(int(open_s[j])); rsts.append(int(open_s_ts[j]))
-            re_.append(int(open_e[j])); rets.append(int(open_e_ts[j]))
-        carried_s = int(open_s[j]) if carried else -1
-        carried_s_ts = int(open_s_ts[j]) if carried else -1
-        open_s[j] = -1; open_s_ts[j] = -1; open_e[j] = -1; open_e_ts[j] = -1
-        for p0, p1 in zip(starts_p, ends_p):
-            if p0 == 0 and merged_first:
-                s_i, s_t = carried_s, carried_s_ts
-            else:
-                s_i, s_t = int(idx[p0]), int(ts[p0])
-            if p1 == n - 1 and not final:
-                # run touches the batch end: maximality unknown — carry it
-                open_s[j], open_s_ts[j] = s_i, s_t
-                open_e[j], open_e_ts[j] = int(idx[p1]), int(ts[p1])
-            else:
-                rs.append(s_i); rsts.append(s_t)
-                re_.append(int(idx[p1])); rets.append(int(ts[p1]))
-        arr = {
-            "s": np.asarray(rs, np.int64), "s_ts": np.asarray(rsts, np.int64),
-            "e": np.asarray(re_, np.int64), "e_ts": np.asarray(rets, np.int64),
-        }
-        ln = arr["e"] - arr["s"] + 1
-        ok = ln >= st["n_min"]
-        if st["n_max"] is not None:
-            ok &= ln <= st["n_max"]
-        q_runs[i] = {c: v[ok] for c, v in arr.items()}
+        hs, _, he, he_ts = tables[i]
+        cp = c_cpos[sel]
+        p = hs.searchsorted(cp, side="right")
+        hop = hs[p]
+        has = hop < INF_IDX
+        gs = c_gseen[sel]
+        if i - 1 in ghits:
+            gh = ghits[i - 1]
+            gs = np.minimum(gs, gh[gh.searchsorted(cp, side="right")])
+            c_gseen[sel] = gs
+        killed = gs < hop
+        if isinstance(steps[i], Times):
+            killed &= has  # defer: an open run may absolve it
+        c_wait[sel[killed]] = 0
+        adv = has & ~killed
+        a, pa = sel[adv], p[adv]
+        c_cpos[a] = he[pa]
+        c_wait[a] = i + 1
+        c_gseen[a] = INF_IDX
+        if i == k - 1:
+            comp = [c_aidx[a], he[pa], c_ats[a], he_ts[pa]]
 
-    guard_hits = {}
-    for seg, g in (guards or {}).items():
-        gm = g.mask(run).astype(bool) if n else np.zeros(0, bool)
-        guard_hits[int(seg)] = idx[gm]
+    m_start, m_end, m_tsf, m_tsl = comp
+    keep = np.ones(len(m_start), bool)
+    if within_us is not None:
+        keep &= m_tsl - m_tsf <= within_us
+    if within_turns is not None:
+        keep &= m_end - m_start <= within_turns
+    matches = {c: v[keep] for c, v in zip(_MATCH_COLS, comp)}
 
-    # ---- new anchors (a qualifying CLOSED run for a quantified step 0;
-    # an open anchor run materializes as a candidate when it closes)
-    if steps[0]["quant"]:
-        qa = q_runs[0]
-        n_aidx, n_ats, n_cpos = qa["s"], qa["s_ts"], qa["e"]
-    else:
-        m0 = steps[0]["mask"](run).astype(bool) if n else np.zeros(0, bool)
-        n_aidx = idx[m0]; n_ats = ts[m0]; n_cpos = n_aidx
-    c_aidx = np.concatenate([c_aidx, n_aidx])
-    c_ats = np.concatenate([c_ats, n_ats])
-    c_wait = np.concatenate([c_wait, np.ones(len(n_aidx), np.int64)])
-    c_cpos = np.concatenate([c_cpos, n_cpos])
-    c_gseen = np.concatenate([c_gseen, np.full(len(n_aidx), INF_IDX, np.int64)])
-
-    def fold_guards():
-        # earliest guard row AFTER each candidate's cpos in this batch,
-        # folded into the persisted minimum (kills resolve at hop time)
-        for a in range(len(c_aidx)):
-            seg = int(c_wait[a]) - 1
-            if seg in guard_hits and len(guard_hits[seg]):
-                gh = guard_hits[seg]
-                p = np.searchsorted(gh, c_cpos[a], side="right")
-                if p < len(gh) and gh[p] < c_gseen[a]:
-                    c_gseen[a] = gh[p]
-
-    matches = {c: [] for c in ("start_idx", "end_idx", "ts_first_us", "ts_last_us")}
-    done = np.zeros(len(c_aidx), bool)
-    alive = np.ones(len(c_aidx), bool)
-    for _ in range(k):
-        fold_guards()
-        progressed = False
-        for a in np.flatnonzero(alive & ~done):
-            i = int(c_wait[a])
-            st = steps[i]
-            if st["quant"]:
-                qr = q_runs[i]
-                p = np.searchsorted(qr["s"], c_cpos[a], side="right")
-                if p >= len(qr["s"]):
-                    continue  # stall (an open run may resolve next batch)
-                hop_s, hop_e = qr["s"][p], qr["e"][p]
-                hop_e_ts = qr["e_ts"][p]
-            else:
-                ph = plain_hits[i]
-                p = np.searchsorted(ph, c_cpos[a], side="right")
-                if p >= len(ph):
-                    continue
-                hop_s = hop_e = ph[p]
-                hop_e_ts = ts[np.searchsorted(idx, hop_s)]
-            if c_gseen[a] < hop_s:
-                alive[a] = False  # a guard row landed in the gap segment
-                continue
-            c_cpos[a] = hop_e
-            c_wait[a] = i + 1
-            c_gseen[a] = INF_IDX
-            progressed = True
-            if c_wait[a] == k:
-                done[a] = True
-                if (within_us is None or hop_e_ts - c_ats[a] <= within_us) and (
-                    within_turns is None or hop_e - c_aidx[a] <= within_turns
-                ):
-                    matches["start_idx"].append(int(c_aidx[a]))
-                    matches["end_idx"].append(int(hop_e))
-                    matches["ts_first_us"].append(int(c_ats[a]))
-                    matches["ts_last_us"].append(int(hop_e_ts))
-        if not progressed:
-            break
-
-    still = alive & ~done
-    if len(c_aidx) and n:
-        # <= (not <): a carried open run's end can BE idx[-1], so a future
-        # completion at exactly this distance is still possible
+    still = (c_wait > 0) & (c_wait < k)
+    if final:
+        still[:] = False  # completed conversation: nothing can complete later
+    elif n:
         if within_turns is not None:
-            still &= idx[-1] - c_aidx <= within_turns
+            slack = isinstance(steps[-1], Times)
+            still &= idx[-1] - c_aidx < within_turns + slack
         if within_us is not None:
             still &= ts[-1] - c_ats <= within_us
-    if final:
-        still &= False  # completed conversation: nothing can complete later
+    cand = (c_aidx, c_ats, c_wait, c_cpos, c_gseen)
     new_fr = {
-        "anchor_idx": c_aidx[still],
-        "anchor_ts_us": c_ats[still],
-        "wait": c_wait[still],
-        "cpos": c_cpos[still],
-        "guard_seen": c_gseen[still],
-        "open_s": open_s, "open_s_ts": open_s_ts,
-        "open_e": open_e, "open_e_ts": open_e_ts,
+        **{c: a[still] for c, a in zip(_CAND, cand)},
+        **opn,
         "next_expected": (int(idx[-1]) + 1) if n else fr.get("next_expected"),
     }
-    out = {c: np.asarray(v, np.int64) for c, v in matches.items()}
-    order = np.lexsort((out["end_idx"], out["start_idx"]))
-    return {c: v[order] for c, v in out.items()}, new_fr
+    return matches, new_fr
 
 
 def frontier_q_from_lists(
     anchor_idx, anchor_ts_us, wait, cpos, guard_seen,
     open_s, open_s_ts, open_e, open_e_ts, next_expected,
 ) -> dict:
+    """Rebuild a skip frontier from state-schema lists — the ONE
+    deserializer shared by every engine's state layer (mirrors
+    carry_from_lists)."""
+    lists = (anchor_idx, anchor_ts_us, wait, cpos, guard_seen,
+             open_s, open_s_ts, open_e, open_e_ts)
     return {
-        "anchor_idx": np.asarray(list(anchor_idx or []), dtype="int64"),
-        "anchor_ts_us": np.asarray(list(anchor_ts_us or []), dtype="int64"),
-        "wait": np.asarray(list(wait or []), dtype="int64"),
-        "cpos": np.asarray(list(cpos or []), dtype="int64"),
-        "guard_seen": np.asarray(list(guard_seen or []), dtype="int64"),
-        "open_s": np.asarray(list(open_s or []), dtype="int64"),
-        "open_s_ts": np.asarray(list(open_s_ts or []), dtype="int64"),
-        "open_e": np.asarray(list(open_e or []), dtype="int64"),
-        "open_e_ts": np.asarray(list(open_e_ts or []), dtype="int64"),
+        **{c: np.asarray(list(v or []), dtype="int64")
+           for c, v in zip(_CAND + _OPEN, lists)},
         "next_expected": None if next_expected is None else int(next_expected),
     }
 
 
 def frontier_q_to_lists(fr: dict) -> tuple:
     return (
-        [int(x) for x in fr["anchor_idx"]],
-        [int(x) for x in fr["anchor_ts_us"]],
-        [int(x) for x in fr["wait"]],
-        [int(x) for x in fr["cpos"]],
-        [int(x) for x in fr["guard_seen"]],
-        [int(x) for x in fr["open_s"]],
-        [int(x) for x in fr["open_s_ts"]],
-        [int(x) for x in fr["open_e"]],
-        [int(x) for x in fr["open_e_ts"]],
+        *([int(x) for x in fr[c]] for c in _CAND + _OPEN),
         None if fr["next_expected"] is None else int(fr["next_expected"]),
     )
+
 
 
 def carry_from_lists(idx, role, tool, ts_us) -> dict:
@@ -765,12 +569,13 @@ class StreamMatcher:
     engine owns WHERE the state lives (tuple fields, shard map entry);
     this object owns WHAT it means.
 
-    State shapes (each serializes to a fixed field count, n_state_fields):
-      - strict          → the (k-1)-turn carry (4 parallel lists)
-      - skip            → the partial-match frontier (3 int lists +
-                          next_expected; 4 fields)
-      - skip+quantified → the extended frontier (candidate cpos/guard_seen
-                          + per-quant-step open runs; 10 fields)
+    Two state shapes (each serializes to a fixed field count,
+    n_state_fields):
+      - strict → the (k-1)-turn carry (4 parallel lists)
+      - skip   → the partial-match frontier of :func:`match_skip`, the one
+                 skip matcher for plain and quantified patterns alike
+                 (5 candidate lists + 4 per-quantified-step open-run lists
+                 + next_expected; 10 fields)
     """
 
     steps: tuple
@@ -778,26 +583,15 @@ class StreamMatcher:
     within_us: int | None
     within_turns: int | None
     guards: dict  # {segment_i: Step}, skip mode only
-    quant: bool = False  # any Times step (skip mode only)
 
     @property
     def n_state_fields(self) -> int:
-        return 10 if self.quant else 4
+        return SKIP_STATE_FIELDS if self.mode == "skip" else 4
 
     def match(
         self, run: dict, state: dict | None, final: bool = False
     ) -> tuple[dict, dict]:
         if self.mode == "skip":
-            if self.quant:
-                return match_skip_quant(
-                    self.steps,
-                    run,
-                    state,
-                    self.within_us,
-                    self.within_turns,
-                    self.guards,
-                    final,
-                )
             return match_skip(
                 self.steps,
                 run,
@@ -805,30 +599,23 @@ class StreamMatcher:
                 self.within_us,
                 self.within_turns,
                 self.guards,
+                final,
             )
         return match_strict(self.steps, run, state, self.within_us)
 
     def empty_state(self) -> dict:
         if self.mode == "skip":
-            if self.quant:
-                return empty_frontier_q(
-                    sum(1 for s in self.steps if isinstance(s, Times))
-                )
-            return empty_frontier()
+            return empty_frontier_q(sum(isinstance(s, Times) for s in self.steps))
         return empty_carry()
 
     def state_to_lists(self, st: dict) -> tuple:
         if self.mode == "skip":
-            return frontier_q_to_lists(st) if self.quant else frontier_to_lists(st)
+            return frontier_q_to_lists(st)
         return carry_to_lists(st)
 
     def state_from_lists(self, *fields) -> dict:
         if self.mode == "skip":
-            return (
-                frontier_q_from_lists(*fields)
-                if self.quant
-                else frontier_from_lists(*fields)
-            )
+            return frontier_q_from_lists(*fields)
         return carry_from_lists(*fields)
 
 
@@ -878,10 +665,15 @@ def validate_pattern_knobs(pattern, mode, within_s, within_turns, not_between):
     checked by building its matcher; knobs without a pattern are refused."""
     if pattern is not None:
         stream_matcher(pattern, mode, within_s, within_turns, not_between)
-    elif mode != "strict" or within_turns is not None or not_between:
+    elif (
+        mode != "strict"
+        or within_s is not None
+        or within_turns is not None
+        or not_between
+    ):
         raise ValueError(
-            "pattern_mode/pattern_within_turns/pattern_not_between require "
-            "pattern"
+            "pattern_mode/pattern_within_s/pattern_within_turns/"
+            "pattern_not_between require pattern"
         )
 
 
@@ -902,8 +694,7 @@ def stream_matcher(
         raise ValueError("a pattern needs at least 2 steps")
     if mode not in ("strict", "skip"):
         raise ValueError(f"unknown pattern mode {mode!r} (strict | skip)")
-    quant = any(isinstance(s, Times) for s in steps)
-    if quant:
+    if any(isinstance(s, Times) for s in steps):
         for s in steps:
             if isinstance(s, Times) and not isinstance(s.step, Step):
                 raise ValueError(
@@ -914,7 +705,6 @@ def stream_matcher(
         if mode == "strict":
             steps = tuple(expand_strict_times(steps))
             k = len(steps)
-            quant = False
     if mode == "strict":
         if within_turns is not None:
             raise ValueError(
@@ -945,5 +735,4 @@ def stream_matcher(
         within_us=None if within_s is None else int(within_s) * 1_000_000,
         within_turns=None if within_turns is None else int(within_turns),
         guards=guards,
-        quant=quant,
     )

@@ -14,12 +14,13 @@ equi-join plans (whole-stage-codegen built-ins, no Python):
     i must hold on the *nearest* following turn after the matched step i-1
     row. Plan: per-step "nearest following match" columns via
     MIN(CASE WHEN step THEN order END) OVER (ROWS BETWEEN 1 FOLLOWING AND
-    UNBOUNDED FOLLOWING), then k-2 equi-joins on (key, matched idx) to hop
-    the chain — narrow (key, int, ts) rows only, no text. The window pass
-    is re-derived per join consumer; an A/B at 4M rows showed that beats
-    localCheckpoint-ing the projection (4.4 s vs 7.2 s warm — rebuilding
-    from cached input is cheaper than materializing 4M×7 rows), so the
-    plan deliberately recomputes.
+    UNBOUNDED FOLLOWING), then one equi-join on (key, matched idx) per
+    step after the anchor to hop the chain (plus one per quantified step —
+    ``_match_skip_quant``, the one skip plan) — narrow (key, int, ts) rows
+    only, no text. The window pass is re-derived per join consumer; an A/B
+    at 4M rows showed that beats localCheckpoint-ing the projection (4.4 s
+    vs 7.2 s warm — rebuilding from cached input is cheaper than
+    materializing 4M×7 rows), so the plan deliberately recomputes.
 
 Both modes support FlinkCEP-style ``within``: the first→last timestamp span
 bound, compared in exact epoch-micros (Spark ``unix_micros`` ≡ DuckDB
@@ -106,12 +107,13 @@ def match_pattern(
     ``notFollowedBy``: ``{i: step}`` demands NO row matching ``step``
     STRICTLY between matched step ``i`` and matched step ``i+1``. Plan
     cost: one extra nearest-following-match window column per guard, no
-    extra joins (the guard column rides the hop join already fetching
-    step i's row). Strict mode raises (consecutive turns have no
-    between).
+    extra joins (the guard column rides the join that already fetches step
+    i+1's nearest match at step i's continue position). Strict mode raises
+    (consecutive turns have no between).
 
     Output (strict): key, start_idx, end_idx, ts_first, ts_last, span_us.
-    Output (skip):   key, <name>_idx per step, ts_first, ts_last, span_us.
+    Output (skip):   key, <name>_idx per step (+ <name>_end_idx per
+                     quantified step), ts_first, ts_last, span_us.
     """
     pairs = _norm(steps)
     guards = _norm_guards(not_between, len(pairs))
@@ -130,11 +132,7 @@ def match_pattern(
         pairs = _norm(expand_strict_times(list(steps)))
         return _match_strict(df, pairs, within, key, order, ts)
     if mode == "skip":
-        if any(p["quant"] for p in pairs):
-            return _match_skip_quant(
-                df, pairs, within, within_turns, guards, key, order, ts
-            )
-        return _match_skip(
+        return _match_skip_quant(
             df, pairs, within, within_turns, guards, key, order, ts
         )
     raise ValueError(f"unknown mode {mode!r} (strict | skip)")
@@ -216,123 +214,34 @@ def _match_strict(df, pairs, within, key, order, ts) -> DataFrame:
     )
 
 
-def _match_skip(
-    df, pairs, within, within_turns, guards, key, order, ts
-) -> DataFrame:
-    k = len(pairs)
-    wf = (
-        Window.partitionBy(key)
-        .orderBy(order)
-        .rowsBetween(1, Window.unboundedFollowing)
-    )
-    # nearest-following-match index for every step — and for every negative
-    # guard — in one window pass (one shuffle, k + #guards aggregates over
-    # the same frame)
-    cols = {
-        f"_next_{i}": F.min(F.when(F.expr(p["sql"]), F.col(order))).over(wf)
-        for i, p in enumerate(pairs)
-        if i > 0
-    }
-    cols.update(
-        {
-            f"_ng_{i}": F.min(F.when(F.expr(sql), F.col(order))).over(wf)
-            for i, sql in guards.items()
-        }
-    )
-    base = df.withColumns(cols).select(
-        key, order, ts, F.expr(pairs[0]["sql"]).alias("_m0"),
-        *[f"_next_{i}" for i in range(1, k)],
-        *[f"_ng_{i}" for i in guards],
-    )
-
-    name0 = pairs[0]["name"]
-    anchor = base.filter(F.col("_m0") & F.col("_next_1").isNotNull())
-    if 0 in guards:
-        # notFollowedBy between anchor and step 1: the nearest following
-        # guard row (evaluated AT the anchor) must not fall strictly
-        # before the matched step-1 row
-        anchor = anchor.filter(
-            F.col("_ng_0").isNull() | (F.col("_ng_0") >= F.col("_next_1"))
-        )
-    cur = anchor.select(
-        key,
-        F.col(order).alias(f"{name0}_idx"),
-        F.col(ts).alias("ts_first"),
-        F.col("_next_1").alias(f"{pairs[1]['name']}_idx"),
-    )
-    # hop the chain: fetch each matched row's ts and ITS nearest-next for
-    # the following step — (key, idx) equi-joins over narrow rows
-    for i in range(1, k):
-        name_i = pairs[i]["name"]
-        sel = [F.col(key).alias("_jk"), F.col(order).alias("_ji"),
-               F.col(ts).alias("_jts")]
-        if i + 1 < k:
-            sel.append(F.col(f"_next_{i + 1}").alias("_jn"))
-            if i in guards:
-                sel.append(F.col(f"_ng_{i}").alias("_jg"))
-        right = base.select(*sel)
-        cur = cur.join(
-            right,
-            (F.col(key) == F.col("_jk"))
-            & (F.col(f"{name_i}_idx") == F.col("_ji")),
-            "inner",
-        ).drop("_jk", "_ji")
-        if i + 1 < k:
-            cur = cur.filter(F.col("_jn").isNotNull())
-            if i in guards:
-                # guard evaluated at step i's row: nearest following guard
-                # must not land strictly before the matched step i+1 row
-                cur = cur.filter(
-                    F.col("_jg").isNull() | (F.col("_jg") >= F.col("_jn"))
-                ).drop("_jg")
-            cur = (
-                cur.withColumnRenamed("_jn", f"{pairs[i + 1]['name']}_idx")
-                .drop("_jts")
-            )
-        else:
-            cur = cur.withColumnRenamed("_jts", "ts_last")
-    span = _micros(F.col("ts_last")) - _micros(F.col("ts_first"))
-    cur = cur.withColumn("span_us", span)
-    wus = _within_us(within)
-    if wus is not None:
-        cur = cur.filter(F.col("span_us") <= F.lit(wus))
-    if within_turns is not None:
-        first_idx = F.col(f"{pairs[0]['name']}_idx")
-        last_idx = F.col(f"{pairs[-1]['name']}_idx")
-        cur = cur.filter(last_idx - first_idx <= F.lit(int(within_turns)))
-    return cur.select(
-        key,
-        *[f"{p['name']}_idx" for p in pairs],
-        "ts_first",
-        "ts_last",
-        "span_us",
-    )
-
-
 def _match_skip_quant(
     df, pairs, within, within_turns, guards, key, order, ts
 ) -> DataFrame:
-    """Skip-till-next with quantified steps (cep_core.Times): a quantified
-    step consumes a MAXIMAL consecutive run of its predicate with length in
-    [n_min, n_max]; the chain continues from the run's END (greedy), so the
-    next step's nearest-following lookup starts strictly after the run.
+    """THE skip-till-next plan, for plain and quantified steps alike. A
+    plain step matches the nearest following row of its predicate; a
+    quantified step (cep_core.Times) consumes a MAXIMAL consecutive run of
+    its predicate with length in [n_min, n_max], and the chain continues
+    from the run's END (greedy), so the next step's nearest-following
+    lookup starts strictly after the run.
 
-    Plan shape (generalizes _match_skip; that plain-only path is kept
-    verbatim so existing pattern plans are untouched):
+    Plan shape:
       layer 1 — per quantified step, run detection over ONE (key, order)
         window pass: run start = pred AND NOT lag(pred); run end =
         nearest-following NON-pred row - 1 (order is gap-free per key, the
         M3 invariant) else the key's max order; qualifying = length bounds.
+        A plain-only pattern has no layer 1.
       layer 2 — per-step nearest-following-match columns over the SAME
         window frame (qualifying run STARTS for quantified steps, plain
         predicate rows otherwise) + negative-guard columns. Two projection
         layers because Spark cannot nest a window inside a window; both
         resolve over one hash exchange on the key.
-      hops — per step, a lookup join at the continue position (fetches the
-        nearest following match + the segment guard, both evaluated there)
-        and a fetch join at the matched position (ts + run end). Narrow
-        (key, int, ts) rows only, same as the plain path; a quantified step
-        costs one extra narrow join over a plain one.
+      hops — per step, a fetch join at the matched position: its ts, plus
+        the run end (quantified) or, for a plain step, the next step's
+        nearest match and the segment guard — a plain step's continue
+        position IS its matched row, so they ride the same join. After a
+        quantified step the continue position is the run end, so a lookup
+        join there fetches them: a quantified step costs one extra narrow
+        join over a plain one. Narrow (key, int, ts) rows only.
 
     Output: key, <name>_idx per step (+ <name>_end_idx for quantified
     steps — the consumed run's last row), ts_first, ts_last, span_us. For a
@@ -385,6 +294,17 @@ def _match_skip_quant(
         *[f"_qe_{i}" for i, p in enumerate(pairs) if p["quant"]],
     )
 
+    def step_after(i):
+        # evaluated AT step i's continue position: the nearest following
+        # match of step i+1 and the segment-i guard
+        cols = [F.col(f"_next_{i + 1}").alias("_jn")]
+        if i in guards:
+            cols.append(F.col(f"_ng_{i}").alias("_jg"))
+        return cols
+
+    def on_row(pos):
+        return (F.col(key) == F.col("_jk")) & (F.col(pos) == F.col("_ji"))
+
     name0 = pairs[0]["name"]
     anchor_cols = [
         F.col(key).alias(key),
@@ -397,36 +317,33 @@ def _match_skip_quant(
             F.col("_qe_0").alias("_cp"),
         ]
     else:
-        anchor_cols.append(F.col(order).alias("_cp"))
+        anchor_cols += step_after(0)
     cur = base.filter(F.col("_m0")).select(*anchor_cols)
 
     for i in range(1, k):
         p = pairs[i]
         name_i = p["name"]
-        # lookup at the continue position: nearest following match of step
-        # i (+ the segment i-1 guard), both evaluated AT that row
-        look_sel = [
-            F.col(key).alias("_jk"),
-            F.col(order).alias("_ji"),
-            F.col(f"_next_{i}").alias("_jn"),
-        ]
-        if (i - 1) in guards:
-            look_sel.append(F.col(f"_ng_{i - 1}").alias("_jg"))
-        cur = (
-            cur.join(
-                base.select(*look_sel),
-                (F.col(key) == F.col("_jk")) & (F.col("_cp") == F.col("_ji")),
+        if pairs[i - 1]["quant"]:
+            # lookup at the continue position (the previous run's end)
+            cur = cur.join(
+                base.select(
+                    F.col(key).alias("_jk"),
+                    F.col(order).alias("_ji"),
+                    *step_after(i - 1),
+                ),
+                on_row("_cp"),
                 "inner",
-            )
-            .drop("_jk", "_ji", "_cp")
-            .filter(F.col("_jn").isNotNull())
-        )
+            ).drop("_jk", "_ji", "_cp")
+        cur = cur.filter(F.col("_jn").isNotNull())
         if (i - 1) in guards:
+            # nearest following guard must not land strictly before the
+            # matched step-i row
             cur = cur.filter(
                 F.col("_jg").isNull() | (F.col("_jg") >= F.col("_jn"))
             ).drop("_jg")
         cur = cur.withColumnRenamed("_jn", f"{name_i}_idx")
-        # fetch the matched row: its ts (+ the consumed run's end)
+        # fetch the matched row: its ts, plus the consumed run's end
+        # (quantified) or what a plain step's row carries for step i+1
         fetch_sel = [
             F.col(key).alias("_jk"),
             F.col(order).alias("_ji"),
@@ -434,11 +351,10 @@ def _match_skip_quant(
         ]
         if p["quant"]:
             fetch_sel.append(F.col(f"_qe_{i}").alias("_je"))
+        elif i + 1 < k:
+            fetch_sel += step_after(i)
         cur = cur.join(
-            base.select(*fetch_sel),
-            (F.col(key) == F.col("_jk"))
-            & (F.col(f"{name_i}_idx") == F.col("_ji")),
-            "inner",
+            base.select(*fetch_sel), on_row(f"{name_i}_idx"), "inner"
         ).drop("_jk", "_ji")
         if p["quant"]:
             cur = cur.withColumn("_cp", F.col("_je")).withColumnRenamed(
@@ -452,20 +368,17 @@ def _match_skip_quant(
                         F.col(order).alias("_ji"),
                         F.col(ts).alias("ts_last"),
                     ),
-                    (F.col(key) == F.col("_jk"))
-                    & (F.col("_cp") == F.col("_ji")),
+                    on_row("_cp"),
                     "inner",
-                ).drop("_jk", "_ji")
+                ).drop("_jk", "_ji", "_cp")
             else:
                 cur = cur.drop("_jts")
         else:
-            cur = cur.withColumn("_cp", F.col(f"{name_i}_idx"))
             cur = (
                 cur.withColumnRenamed("_jts", "ts_last")
                 if i == k - 1
                 else cur.drop("_jts")
             )
-    cur = cur.drop("_cp")
 
     cur = cur.withColumn(
         "span_us", _micros(F.col("ts_last")) - _micros(F.col("ts_first"))

@@ -125,28 +125,17 @@ STATE_SCHEMA_CEP = T.StructType(
     ]
 )
 
-# STATE_SCHEMA + the skip-mode (followedBy) partial-match frontier: one
-# entry per open candidate — anchor turn/ts plus the next step it waits for
-# — and the expected next turn_idx (the gap guard). Distinct from
-# STATE_SCHEMA_CEP because the payload types differ (all-int arrays), so a
-# checkpoint written under one pattern mode refuses the other via the state
-# store's schema-compat check instead of silently mis-decoding.
-STATE_SCHEMA_CEP_SKIP = T.StructType(
-    list(STATE_SCHEMA.fields)
-    + [
-        T.StructField("cep_anchor_idx", T.ArrayType(T.LongType()), True),
-        T.StructField("cep_anchor_ts_us", T.ArrayType(T.LongType()), True),
-        T.StructField("cep_wait", T.ArrayType(T.LongType()), True),
-        T.StructField("cep_next_expected", T.LongType(), True),
-    ]
-)
-
-# STATE_SCHEMA + the QUANTIFIED skip frontier (r7): candidate arrays gain
-# cpos (last consumed turn — hop targets must start strictly after it) and
-# guard_seen (earliest pending guard row; kills defer to hop time), plus
-# per-quantified-step open-run tracking (start/end idx+ts of a predicate
-# run still open at the batch boundary). Distinct from STATE_SCHEMA_CEP_SKIP
-# so a checkpoint written under a plain pattern refuses a quantified one.
+# STATE_SCHEMA + the skip-mode (followedBy) partial-match frontier of
+# cep_core.match_skip, for plain and quantified patterns alike: per open
+# candidate the anchor turn/ts, the next step it waits for, cpos (its last
+# consumed turn — hop targets start strictly after it) and guard_seen (the
+# earliest pending guard row, for a wait on a quantified step); per
+# quantified step the start/end idx+ts of a predicate run still open at
+# the batch boundary; and the expected next turn_idx (the gap guard).
+# Distinct from STATE_SCHEMA_CEP because the payload types differ (all-int
+# arrays), so a checkpoint written under one pattern mode refuses the other
+# via the state store's schema-compat check instead of silently
+# mis-decoding.
 STATE_SCHEMA_CEP_SKIP_Q = T.StructType(
     list(STATE_SCHEMA.fields)
     + [

@@ -51,7 +51,6 @@ from ..operators import ordered_core as core
 from ..schemas import (
     STATE_SCHEMA,
     STATE_SCHEMA_CEP,
-    STATE_SCHEMA_CEP_SKIP,
     STATE_SCHEMA_CEP_SKIP_Q,
     STREAM_OUTPUT_SCHEMA,
     STREAM_OUTPUT_SCHEMA_CEP,
@@ -103,9 +102,10 @@ class OrderedStreamConfig:
     pattern: tuple | None = None
     pattern_within_s: int | None = None  # FlinkCEP within() on first→last ts
     # "strict" (Flink `next`) or "skip" (Flink `followedBy`): skip state is a
-    # partial-match FRONTIER (one open candidate per anchor) with its own
-    # state schema. Bound open candidates with pattern_within_s /
-    # pattern_within_turns (otherwise they live until completion).
+    # partial-match FRONTIER (one open candidate per anchor, plain and
+    # quantified patterns alike) with its own state schema. Bound open
+    # candidates with pattern_within_s / pattern_within_turns (otherwise
+    # they live until completion).
     pattern_mode: str = "strict"
     pattern_within_turns: int | None = None  # skip: max last_idx - first_idx
     pattern_not_between: dict | None = None  # skip: {segment_i: Step} guards
@@ -285,15 +285,11 @@ def ordered_stream(df: DataFrame, cfg: OrderedStreamConfig | None = None) -> Dat
     timeout = "ProcessingTimeTimeout" if cfg.status_heartbeat_ms else "NoTimeout"
     has_cep = cfg.pattern is not None
     if has_cep:
-        # per-mode state schema: the carry (strict), the frontier (skip),
-        # and the quantified frontier have different field sets, so a
-        # checkpoint written under one refuses the others via the
-        # state-store schema-compat check
-        m = cfg_matcher(cfg)
-        if m.mode == "skip":
-            state_schema = STATE_SCHEMA_CEP_SKIP_Q if m.quant else STATE_SCHEMA_CEP_SKIP
-        else:
-            state_schema = STATE_SCHEMA_CEP
+        # per-mode state schema: the carry (strict) and the skip frontier
+        # have different field sets, so a checkpoint written under one
+        # refuses the other via the state-store schema-compat check
+        skip = cfg.pattern_mode == "skip"
+        state_schema = STATE_SCHEMA_CEP_SKIP_Q if skip else STATE_SCHEMA_CEP
     else:
         state_schema = STATE_SCHEMA
     return df.groupBy("conv_id").applyInPandasWithState(

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
+from ..operators.cep_core import SKIP_STATE_FIELDS, Times
 from .ordered_stream import OrderedStreamConfig, ordered_stream
 
 
@@ -1135,7 +1136,9 @@ def _pattern_spec(
     different bound would silently change what counts as a match), so it is
     pinned too — as are the r7 skip-mode knobs (mode, within_turns,
     not_between guards): the skip frontier state is meaningless under a
-    different pattern algebra."""
+    different pattern algebra. A skip pattern also pins its frontier's
+    state field count (``frontier_fields``), which markers written before
+    the one skip frontier lack."""
     if pattern is None:
         return None
 
@@ -1149,13 +1152,11 @@ def _pattern_spec(
         # plain Step → 3-element entry (back-compat with pre-r7 markers);
         # quantified Times → 5 elements incl. the count bounds (a
         # quantified pattern must not resume its plain twin's checkpoint)
-        from ..operators.cep_core import Times
-
         if isinstance(s, Times):
             return [s.name, _val(s.step.role), _val(s.step.tool), s.n_min, s.n_max]
         return [s.name, _val(s.role), _val(s.tool)]
 
-    return {
+    spec = {
         "steps": [_step_entry(s) for s in pattern],
         "within_s": within_s,
         "mode": mode,
@@ -1166,6 +1167,26 @@ def _pattern_spec(
             else None
         ),
     }
+    if mode == "skip":
+        spec["frontier_fields"] = SKIP_STATE_FIELDS
+    return spec
+
+
+def _check_skip_frontier(checkpoint: str, spec: dict) -> None:
+    """A skip marker without ``frontier_fields`` predates the one skip
+    frontier. A quantified pattern's checkpoint already holds that frontier
+    (5-element steps in the marker); a plain one holds the retired 4-field
+    frontier, which no engine reads any more — refuse it at start rather
+    than mis-decode it mid-batch."""
+    if spec["mode"] != "skip" or "frontier_fields" in spec:
+        return
+    if not any(len(s) == 5 for s in spec["steps"]):
+        raise ValueError(
+            f"checkpoint {checkpoint!r} holds a plain skip-mode CEP frontier "
+            "in the retired 4-field format: cannot resume it. Start a fresh "
+            "checkpoint."
+        )
+    spec["frontier_fields"] = SKIP_STATE_FIELDS
 
 
 def _check_engine_marker(
@@ -1223,6 +1244,7 @@ def _check_engine_marker(
             prior["pattern"].setdefault("mode", "strict")
             prior["pattern"].setdefault("within_turns", None)
             prior["pattern"].setdefault("not_between", None)
+            _check_skip_frontier(checkpoint, prior["pattern"])
         if prior != current:
             raise ValueError(
                 f"checkpoint {checkpoint!r} was written by engine config "

@@ -9,6 +9,9 @@ within = FlinkCEP within() on the first→last ts span.
 
 from __future__ import annotations
 
+import os
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -22,6 +25,9 @@ from dataflow_ordered_processing_spark.operators.cep_core import (
 )
 from dataflow_ordered_processing_spark.plans.cep import match_pattern
 
+FUNNEL_PLAN_DUMP = os.path.join(
+    os.path.dirname(__file__), "../plans/r10/cep_funnel_before.txt"
+)
 ROLES = ["user", "assistant", "tool", "system"]
 TOOLS = [None, "search", "code"]
 
@@ -251,6 +257,29 @@ def test_strict_plan_is_single_exchange_no_join(spark):
     plan = match_pattern(df, STEPS3, mode="strict")._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan
     assert plan.count("Exchange hashpartitioning") == 1
+
+
+def _plan_counts(plan: str) -> list[int]:
+    # Join and Exchange matches (Exchange by the regex of perfbench/batch.py)
+    return [
+        len(re.findall(r"Join\b", plan)),
+        len(re.findall(r"\b(?:Exchange|BroadcastExchange)\b", plan)),
+    ]
+
+
+def test_skip_plan_no_larger_than_committed_dump(spark, sf_dir):
+    """The cep_funnel gate query (a plain skip pattern), once executed, has
+    no more Join or Exchange matches than the committed dump of the plain
+    skip plan it replaced: after a plain step the one skip plan adds no
+    lookup join."""
+    import __spark_entry__ as E
+
+    out = E._q_cep_funnel(spark, sf_dir)
+    assert out.collect()  # runs out's own query execution: its plan is final
+    got = _plan_counts(out._jdf.queryExecution().executedPlan().toString())
+    with open(FUNNEL_PLAN_DUMP) as f:
+        want = _plan_counts("".join(ln for ln in f if not ln.startswith("#")))
+    assert all(g <= w for g, w in zip(got, want)), (got, want)
 
 
 def test_match_pattern_within_turns(spark):

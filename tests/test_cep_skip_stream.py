@@ -2,7 +2,7 @@
 `followedBy`): the engine-integrated frontier matcher must find exactly the
 batch operator's matches (plans/cep.match_pattern(mode='skip') — the pinned
 oracle-exact semantics) across micro-batch boundaries, out-of-order arrival,
-duplicates, and all three engines — each match exactly once.
+duplicates, and both engines — each match exactly once.
 """
 
 from __future__ import annotations
@@ -15,9 +15,8 @@ import pytest
 
 from dataflow_ordered_processing_spark.operators.cep_core import (
     Step,
-    empty_frontier,
-    frontier_from_lists,
-    frontier_to_lists,
+    frontier_q_from_lists,
+    frontier_q_to_lists,
     match_skip,
     stream_matcher,
 )
@@ -154,7 +153,9 @@ def test_skip_stream_not_between_guard(spark, tmp_path):
 def test_skip_property_vs_bruteforce():
     """Randomized splits / bounds / guards vs a pure-Python brute-force
     oracle, with the frontier round-tripped through the state-list codec
-    every hop (exactly what the engines persist)."""
+    every hop (exactly what the engines persist). A candidate waiting on a
+    (plain) step whose segment guard row has already arrived is dead: it
+    must not stay in the returned frontier."""
 
     def brute(steps, rows, within_us, within_turns, guards):
         def m(s, r):
@@ -220,7 +221,7 @@ def test_skip_property_vs_bruteforce():
             else None
         )
         expect = brute(steps, rows, within_us, within_turns, guards)
-        fr, got, i = empty_frontier(), [], 0
+        fr, got, i = None, [], 0
         while i < len(rows):
             j = rng.randint(i + 1, len(rows))
             chunk = rows[i:j]
@@ -232,7 +233,12 @@ def test_skip_property_vs_bruteforce():
                 "ts_us": np.array([r[3] for r in chunk], dtype=np.int64),
             }
             m, fr = match_skip(steps, run, fr, within_us, within_turns, guards)
-            fr = frontier_from_lists(*frontier_to_lists(fr))
+            fr = frontier_q_from_lists(*frontier_q_to_lists(fr))
+            for w, cpos in zip(fr["wait"].tolist(), fr["cpos"].tolist()):
+                g = (guards or {}).get(w - 1)
+                assert g is None or not any(
+                    r[0] > cpos and r[1] == g.role for r in rows[:i]
+                ), f"trial {trial}: guarded candidate kept in {fr}"
             got.extend(
                 zip(
                     m["start_idx"].tolist(),
@@ -284,7 +290,7 @@ def test_skip_frontier_dropped_at_completion():
     state = _FakeGroupState()
     list(func(("conv-000001",), iter([full.iloc[:4]]), state))
     mid = state.get
-    assert len(mid) == 19 and len(mid[15]) > 0  # open anchors carried
+    assert len(mid) == 25 and len(mid[15]) > 0  # open anchors carried
     list(func(("conv-000001",), iter([full.iloc[4:]]), state))
     done = state.get
     assert list(done[15]) == [] and list(done[17]) == []  # frontier dropped
@@ -299,6 +305,8 @@ def test_config_validation():
         OrderedStreamConfig(pattern=STEPS, pattern_mode="greedy")
     with pytest.raises(ValueError, match="require pattern"):
         OrderedStreamConfig(pattern_mode="skip")
+    with pytest.raises(ValueError, match="require pattern"):
+        OrderedStreamConfig(pattern_within_s=5)
     with pytest.raises(ValueError, match="must be a.*Step"):
         stream_matcher(STEPS, "skip", not_between={0: "role = 'tool'"})
     with pytest.raises(ValueError, match="out of range"):
@@ -343,6 +351,48 @@ def test_marker_pins_mode(tmp_path):
             f,
         )
     _check_engine_marker(ckpt2, "classic", None, _pattern_spec(STEPS))
+
+
+@pytest.mark.parametrize("engine,n_shards", [("classic", None), ("sharded", 8)])
+def test_plain_skip_checkpoint_without_frontier_format_refused(
+    tmp_path, engine, n_shards
+):
+    """A checkpoint whose marker predates the one skip frontier (no
+    frontier_fields) and whose pattern is plain holds the retired 4-field
+    frontier: both engines refuse it at start, before any batch runs. A
+    quantified pattern's checkpoint of that age already holds the one
+    frontier and resumes."""
+    import json
+    import os
+
+    from dataflow_ordered_processing_spark.operators.cep_core import Times
+    from dataflow_ordered_processing_spark.streaming.sinks import (
+        _check_engine_marker,
+        _marked_ordered_stream,
+        _pattern_spec,
+    )
+
+    def old_checkpoint(name, spec):
+        ckpt = os.path.join(str(tmp_path), name)
+        os.makedirs(os.path.join(ckpt, "offsets"))
+        del spec["frontier_fields"]
+        with open(os.path.join(ckpt, "_ordered_engine.json"), "w") as f:
+            json.dump({"engine": engine, "n_shards": n_shards, "pattern": spec}, f)
+        return ckpt
+
+    ckpt = old_checkpoint("plain", _pattern_spec(STEPS, None, "skip", 6, GUARD))
+    cfg = OrderedStreamConfig(
+        pattern=STEPS,
+        pattern_mode="skip",
+        pattern_within_turns=6,
+        pattern_not_between=GUARD,
+    )
+    with pytest.raises(ValueError, match="4-field format: cannot resume"):
+        _marked_ordered_stream(None, ckpt, cfg, engine, n_shards)
+
+    quant = (STEPS[0], Times(Step("t", role="tool"), 2, None), STEPS[2])
+    ckpt = old_checkpoint("quant", _pattern_spec(quant, None, "skip"))
+    _check_engine_marker(ckpt, engine, n_shards, _pattern_spec(quant, None, "skip"))
 
 
 def test_pipeline_sink_lands_skip_matches(spark, tmp_path):

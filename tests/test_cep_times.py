@@ -245,7 +245,7 @@ def test_times_validation():
     # streaming Times is supported for structural Steps (r7 late addition);
     # the raw (name, sql) tuple form stays batch-only (no mask to evaluate)
     m = stream_matcher((Times(USER, 2), Step("a", role="assistant")), "skip")
-    assert m.quant
+    assert isinstance(m.steps[0], Times)
     with pytest.raises(ValueError, match="structural Step"):
         stream_matcher(
             (Times(("h", "flag"), 2), Step("a", role="assistant")), "skip"

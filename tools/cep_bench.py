@@ -14,8 +14,21 @@ scaling benches use (tools/scaling_bench.generate_input):
    matches every role cycle (~n/3 matches) — a worst-case match volume, so
    the reported overhead is an upper bound.
 
+3. Stream matcher alone (no Spark): ``stream_matcher(...).match`` over a
+   seeded corpus with i.i.d. roles (so same-role runs exist), each
+   conversation cut into fixed-size runs as a micro-batch delivers them,
+   with the state carried from run to run. Three skip patterns: plain
+   (u=user → s=tool/search → a=assistant, within 12 turns), guarded (the
+   same plus no tool/code between u and s) and quantified (u → 2+
+   consecutive tool turns → a). ``--matcher-ab`` runs one leg per (head,
+   pattern) in a fresh interpreter that imports the package from that
+   head, alternating the head order pair by pair, and records every leg's
+   wall time, match count and match checksum.
+
 Usage: python tools/cep_bench.py [--rows 4000000] [--convs 20000]
        [--cpus 32] [--reps 3] [--workdir /dev/shm/cepbench]
+       python tools/cep_bench.py --matcher-ab parent=<checkout> change=<repo>
+       [--pairs 10] [--out BENCH/ab_cep_skip.json]
 """
 
 from __future__ import annotations
@@ -69,6 +82,108 @@ def _stream_leg(
     return r
 
 
+MATCHER_PATTERNS = ("plain", "guarded", "quant")
+# 2000 conversations of 30-90 turns, delivered 8 turns per run
+MATCHER_CORPUS = {"n_convs": 2000, "turns": 60, "batch_turns": 8}
+
+
+def _matcher_runs(n_convs: int, turns: int, batch_turns: int, seed: int = 7):
+    """Per conversation, its (run, final) pieces in delivery order."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    roles = np.array(["user", "assistant", "tool"], object)
+    tools = np.array(["search", "code"], object)
+    out = []
+    for _ in range(n_convs):
+        n = int(rng.integers(turns // 2, turns * 3 // 2 + 1))
+        role = rng.choice(roles, n, p=[0.3, 0.4, 0.3])
+        conv = {
+            "turn_idx": np.arange(1, n + 1, dtype=np.int64),
+            "role": role,
+            "tool": np.where(role == "tool", rng.choice(tools, n), None),
+            "ts_us": np.cumsum(rng.integers(1, 6, n)).astype(np.int64) * 1_000_000,
+        }
+        cuts = list(range(0, n, batch_turns)) + [n]
+        out.append([
+            ({c: v[a:b] for c, v in conv.items()}, b == n)
+            for a, b in zip(cuts, cuts[1:])
+        ])
+    return out
+
+
+def _matcher_leg(package_root: str, pattern: str, reps: int) -> dict:
+    """Time one skip pattern's stream matcher over the corpus, importing the
+    package from ``package_root``."""
+    sys.path.insert(0, package_root)
+    from dataflow_ordered_processing_spark.operators.cep_core import (
+        Step,
+        Times,
+        stream_matcher,
+    )
+
+    u, a = Step("u", role="user"), Step("a", role="assistant")
+    mid = Step("s", role="tool", tool="search")
+    if pattern == "quant":
+        mid = Times(Step("t", role="tool"), 2, None)
+    guards = {0: Step("g", role="tool", tool="code")} if pattern == "guarded" else None
+    matcher = stream_matcher((u, mid, a), "skip", None, 12, guards)
+    convs = _matcher_runs(**MATCHER_CORPUS)
+    walls = []
+    for _ in range(reps):
+        found = []
+        t0 = time.perf_counter()
+        for runs in convs:
+            state = None
+            for run, final in runs:
+                m, state = matcher.match(run, state, final=final)
+                found.append(m)
+        walls.append(time.perf_counter() - t0)
+    pairs = sorted(
+        (int(s), int(e)) for m in found for s, e in zip(m["start_idx"], m["end_idx"])
+    )
+    return {
+        "wall_s": round(statistics.median(walls), 4),
+        "calls": sum(len(r) for r in convs),
+        "matches": len(pairs),
+        "checksum": hash(tuple(pairs)) & 0xFFFFFFFF,
+    }
+
+
+def _matcher_ab(args) -> dict:
+    heads = [h.split("=", 1) for h in args.matcher_ab]
+    legs = []
+    for rep in range(args.pairs):
+        for pattern in MATCHER_PATTERNS:
+            for name, root in heads if rep % 2 == 0 else heads[::-1]:
+                proc = subprocess.run(
+                    [
+                        sys.executable, os.path.abspath(__file__),
+                        "--matcher-leg", pattern, "--package-root", root,
+                        "--reps", str(args.reps),
+                    ],
+                    capture_output=True, text=True, check=True,
+                )
+                r = json.loads(proc.stdout.strip().splitlines()[-1])
+                legs.append({"variant": name, "rep": rep, "pattern": pattern, **r})
+                print(legs[-1], file=sys.stderr)
+    summary = {}
+    for pattern in MATCHER_PATTERNS:
+        for name, _ in heads:
+            mine = [l for l in legs if l["pattern"] == pattern and l["variant"] == name]
+            q1, med, q3 = statistics.quantiles([l["wall_s"] for l in mine], n=4)
+            summary[f"{pattern}/{name}"] = {
+                "median_s": round(med, 4),
+                "q1_s": round(q1, 4),
+                "q3_s": round(q3, 4),
+                "matches": sorted({l["matches"] for l in mine}),
+                "checksums": sorted({l["checksum"] for l in mine}),
+            }
+    config = {"pairs": args.pairs, "reps": args.reps, **MATCHER_CORPUS}
+    return {"cpus": os.cpu_count(), "config": config, "legs": legs,
+            "summary": summary}
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=4_000_000)
@@ -82,7 +197,24 @@ def main() -> int:
         help="run only the batch legs and merge them into an existing "
         "BENCH/cep.json (keeps its stream sections)",
     )
+    ap.add_argument("--matcher-ab", nargs="+", metavar="NAME=PATH",
+                    help="interleaved A/B of the stream matcher leg across heads")
+    ap.add_argument("--matcher-leg", choices=MATCHER_PATTERNS, help=argparse.SUPPRESS)
+    ap.add_argument("--package-root", default=REPO, help=argparse.SUPPRESS)
+    ap.add_argument("--pairs", type=int, default=10)
+    ap.add_argument("--out", default=None)
     args = ap.parse_args()
+
+    if args.matcher_leg:
+        print(json.dumps(_matcher_leg(args.package_root, args.matcher_leg, args.reps)))
+        return 0
+    if args.matcher_ab:
+        result = _matcher_ab(args)
+        if args.out:
+            with open(args.out, "w") as f:
+                json.dump(result, f, indent=1)
+        print(json.dumps(result["summary"], indent=1))
+        return 0
 
     from scaling_bench import generate_input
 
