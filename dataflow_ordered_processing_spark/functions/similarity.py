@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..locking import committed_dirs
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -768,19 +770,6 @@ def append_ivf_epoch(
             os.close(lock_fd)
 
 
-def _committed_index_epochs(corpus_root: str) -> list[str]:
-    """Committed (`_SUCCESS`-gated) epoch dirs — the index-side analog of
-    sinks.epoch_dirs visibility."""
-    import os
-
-    return [
-        os.path.join(corpus_root, d)
-        for d in sorted(os.listdir(corpus_root))
-        if d.startswith("epoch=")
-        and os.path.exists(os.path.join(corpus_root, d, "_SUCCESS"))
-    ]
-
-
 def compact_ivf_index(
     spark,
     path: str,
@@ -819,7 +808,7 @@ def compact_ivf_index(
         with open(os.path.join(gen_dir, "codebook.json")) as f:
             meta = json.load(f)
         corpus_root = os.path.join(gen_dir, "corpus")
-        epochs = _committed_index_epochs(corpus_root)
+        epochs = [p for _, p in committed_dirs(corpus_root, "epoch", key=str)]
         extra = [e for e in epochs if os.path.basename(e) != "epoch=base"]
         if not extra:
             return False  # already a single base — nothing to fold
@@ -885,7 +874,7 @@ def ivf_topk_indexed(
     probed_cells = sorted({int(r["cell"]) for r in probed_rows})
     probed = spark.createDataFrame(probed_rows, probed.schema)
     corpus_root = os.path.join(gen_dir, "corpus")
-    epochs = _committed_index_epochs(corpus_root)
+    epochs = [p for _, p in committed_dirs(corpus_root, "epoch", key=str)]
     if not epochs:
         raise FileNotFoundError(f"no committed index epochs under {corpus_root}")
     # explicit committed-epoch paths + basePath keep BOTH partition columns

@@ -1,5 +1,7 @@
-"""Advisory file locking shared by on-disk maintainers (sink epoch
-compaction, IVF index build/append/compact).
+"""On-disk commit protocol shared by the epoch sink, the hot-key channel
+and the IVF index: the committed-directory listing and advisory file
+locking for their maintainers (sink epoch compaction, IVF index
+build/append/compact).
 
 One implementation of the protocol both sites previously hand-coded
 (review r6d — the r5d ENOLCK fix had to be re-derived for the second
@@ -12,6 +14,32 @@ NFSv4; object stores need external coordination (README ops note).
 """
 
 from __future__ import annotations
+
+import os
+
+
+def committed_dirs(base: str, prefix: str, key=int) -> list[tuple]:
+    """Committed `<prefix>=<value>` subdirectories of `base` as
+    `[(key(value), path)]`, ascending; [] when `base` does not exist.
+
+    Committed == holds a `_SUCCESS` marker, the one visibility criterion
+    of every writer here: a crash mid-write leaves a dir without it, and
+    its rows must stay invisible until the overwrite completes (a
+    merge_on_key replay that saw them would anti-join them out of the
+    fresh batch and then overwrite the partial dir with only the rest).
+
+    Listed explicitly rather than read through a `<prefix>=*` glob: Spark
+    probes a literal glob for streaming-sink metadata and logs a WARN with
+    a full Java stack each time (FileStreamSink.hasMetadata)."""
+    if not os.path.isdir(base):
+        return []
+    out = []
+    for d in os.listdir(base):
+        name, sep, value = d.partition("=")
+        p = os.path.join(base, d)
+        if sep and name == prefix and os.path.exists(os.path.join(p, "_SUCCESS")):
+            out.append((key(value), p))
+    return sorted(out)
 
 
 def try_flock(lock_path: str, blocking: bool, what: str, advice: str):
@@ -29,7 +57,6 @@ def try_flock(lock_path: str, blocking: bool, what: str, advice: str):
     caveat otherwise.
     """
     import fcntl
-    import os
     import warnings
 
     fd = os.open(lock_path, os.O_CREAT | os.O_RDWR)

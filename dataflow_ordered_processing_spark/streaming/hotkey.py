@@ -42,6 +42,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..locking import committed_dirs
 from ..operators.ordered_batch import DEPTHS
 from ..operators.skew import salted_ordered_emit_batch
 from .sinks import epoch_dirs, read_raw
@@ -75,28 +76,9 @@ def _raw_state(raw_path: str, committed: list[str]) -> dict:
     }
 
 
-def _committed_pass_dirs(out_path: str) -> list[tuple[int, str]]:
-    """Committed ordering passes, ascending. Dir name = monotone PASS index
-    (decoupled from raw epoch ids: a --reset-hot-channel replay restarts
-    raw epochs at 0, so raw state must never name output dirs — the pass
-    meta records which raw state a pass covered instead)."""
-    if not os.path.isdir(out_path):
-        return []
-    out = []
-    for d in os.listdir(out_path):
-        p = os.path.join(out_path, d)
-        if (
-            d.startswith("pass=")
-            and os.path.isdir(p)
-            and os.path.exists(os.path.join(p, "_SUCCESS"))
-        ):
-            out.append((int(d.split("=", 1)[1]), p))
-    return sorted(out)
-
-
 def read_hot_ordered(spark: SparkSession, out_path: str) -> DataFrame | None:
     """All released hot-channel rows across committed passes."""
-    dirs = [p for _, p in _committed_pass_dirs(out_path)]
+    dirs = [p for _, p in committed_dirs(out_path, "pass")]
     if not dirs:
         return None
     return spark.read.option("basePath", out_path).parquet(*dirs).drop("pass")
@@ -113,7 +95,7 @@ def _write_meta(target: str, rows_new: int, rows_total: int, raw_state: dict) ->
 
 
 def _latest_meta(out_path: str) -> dict | None:
-    dirs = _committed_pass_dirs(out_path)
+    dirs = committed_dirs(out_path, "pass")
     if not dirs:
         return None
     meta = os.path.join(dirs[-1][1], "_hot_meta.json")
@@ -133,10 +115,13 @@ def order_hot_channel(
     if raw is None or not committed:
         return {"rows_total": 0, "rows_new": 0}
     raw_state = _raw_state(raw_path, committed)
-    passes = _committed_pass_dirs(out_path)
+    passes = committed_dirs(out_path, "pass")
     meta = _latest_meta(out_path)
     if meta is not None and all(meta.get(k) == v for k, v in raw_state.items()):
         return {"rows_total": int(meta["rows_total"]), "rows_new": 0}
+    # dir name = monotone PASS index, decoupled from raw epoch ids: a
+    # --reset-hot-channel replay restarts raw epochs at 0, so raw state
+    # must never name output dirs (the pass meta records what it covered)
     target = os.path.join(
         out_path, f"pass={passes[-1][0] + 1 if passes else 0}"
     )

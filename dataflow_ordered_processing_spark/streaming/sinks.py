@@ -15,6 +15,9 @@ dead-letter branch (FailedBigQueryInsertProcessor.java:38-49). Here:
         already exists is skipped on replay, so checkpoint recovery cannot
         double-write. The idempotency key of the data table is
         (conv_id, turn_idx) by construction (each turn emits exactly once).
+        tests/test_sink_fault_matrix.py crashes split_sink at every phase
+        boundary (DLQ, merge probe, epoch write, key-index delta and fold,
+        data fold, lost commit log) and replays the epoch as Spark does.
   - `ingest_ts` is stamped at sink time — the latency-metric input
     (reference README.md:145-184: TIMESTAMP_DIFF(ingest_ts, event_ts)).
 """
@@ -29,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.window import Window
 
+from ..locking import committed_dirs, try_flock
 from ..operators.cep_core import SKIP_STATE_FIELDS, Times
 from .ordered_stream import OrderedStreamConfig, ordered_stream
 
@@ -49,17 +53,16 @@ class SinkConfig:
     # the batch still lands. None disables validation (whole-epoch divert
     # on writer error remains as the outer fallback).
     validate: bool = True
-    max_text_bytes: int | None = None  # optional size constraint on data rows
     # Paranoid exactly-once (SURVEY §7 "MERGE path"): before writing, drop
     # incoming data rows whose (conv_id, turn_idx) already exists in the
     # sink — covers CROSS-epoch re-emission (e.g. post-completion duplicate
     # re-delivery under cleanup_on_complete=True), which epoch idempotency
     # alone cannot. Equivalent to Iceberg/Delta MERGE INTO ... WHEN NOT
-    # MATCHED THEN INSERT on the idempotency key. r4: O(batch) per epoch —
-    # the filter consults a COMPACT per-conversation high-watermark index
-    # (see _keyidx_* below), never the sink data; leave off when the
-    # operator keeps tombstones (the default), which already guarantees key
-    # uniqueness.
+    # MATCHED THEN INSERT on the idempotency key. O(#conversations) per
+    # epoch, never O(rows ever written): the filter consults a compact
+    # per-conversation high-watermark index (see _keyidx_* below), never
+    # the sink data; leave off when the operator keeps tombstones (the
+    # default), which already guarantees key uniqueness.
     merge_on_key: bool = False
     # Data-epoch compaction (VERDICT r4 "what's wrong" #2): one epoch=N dir
     # per micro-batch is ~43k dirs/day at a 2 s cadence, and every read
@@ -84,7 +87,7 @@ class SinkConfig:
     compact_status_keep_last: int | None = None
 
 
-def row_violation(cfg: SinkConfig, columns: list[str] | None = None) -> F.Column:
+def row_violation(columns: list[str] | None = None) -> F.Column:
     """First violated sink constraint per row (NULL = row is clean) — the
     row-level analog of a failed BigQuery insert. Pure codegen CASE WHEN; no
     Python in the validation path. ``columns`` (the batch's column list)
@@ -119,14 +122,6 @@ def row_violation(cfg: SinkConfig, columns: list[str] | None = None) -> F.Column
                     | F.col("match_end_idx").isNull()
                     | (F.col("match_end_idx") < F.col("match_start_idx"))
                 ),
-            )
-        )
-    if cfg.max_text_bytes is not None:
-        checks.append(
-            (
-                "oversize_text",
-                (F.col("row_type") == "data")
-                & (F.octet_length(F.col("text")) > cfg.max_text_bytes),
             )
         )
     err = F.lit(None).cast("string")
@@ -169,60 +164,44 @@ def _iceberg_epoch_committed(spark: SparkSession, table: str, epoch_id: int) -> 
 
 
 # ---------------------------------------------------------------------------
-# merge_on_key key index (r4): O(batch) per epoch instead of O(sink).
+# merge_on_key key index (r4): O(#conversations) per epoch instead of O(sink).
 #
 # The ordered operator emits each conversation's turns IN ORDER and
 # CONTIGUOUSLY (O7), so the full set of (conv_id, turn_idx) keys ever
 # written for a conversation is exactly {initial .. hi} — one BIGINT high
 # watermark per conversation summarizes it. The merge filter therefore
-# needs only a compact (conv_id, hi_turn) index:
+# needs only a compact (conv_id, hi_turn, hi_match) index:
 #
 #   <data_path>/_keyidx/epoch=N/    per-epoch delta: max turn_idx per conv
 #                                   actually written in epoch N
 #   <data_path>/_keyidx/compact=N/  periodic fold of compact+deltas up to
-#                                   epoch N, directory-partitioned by
-#                                   kbucket=pmod(xxhash64(conv_id), 64) so
-#                                   a merge read PRUNES to the batch's
-#                                   buckets (partition pruning, not a scan)
+#                                   epoch N
 #
-# Per-epoch merge cost: read ≤ (1 compact generation, pruned to the batch's
-# ≤64 buckets) + (≤ _KEYIDX_COMPACT_AFTER delta dirs) — size O(#live
-# conversations), NEVER O(rows ever written); test_round4_regressions
-# asserts the scan volume at epoch 30 equals epoch 3's. Every fold is a
-# MAX, which is idempotent and monotone, so every crash window is safe:
-# a compact written but deltas not yet deleted double-covers harmlessly; a
-# data epoch committed before its delta is caught up from that epoch's
-# rows alone (_keyidx_catchup); a legacy sink with no index bootstraps once
-# (one full read — the old per-epoch cost, paid a single time).
+# Per-epoch merge cost: read 1 compact generation + ≤ _KEYIDX_COMPACT_AFTER
+# delta dirs — size O(#live conversations), NEVER O(rows ever written);
+# test_round4_regressions asserts the scan volume at epoch 30 equals epoch
+# 3's. The index is not partitioned: a live batch touches hundreds of
+# conversations, which hash into nearly every bucket of any bucketing, so
+# pruning would skip nothing. Every fold is a MAX, which is idempotent and
+# monotone, so every crash window is safe: a compact written but deltas not
+# yet deleted double-covers harmlessly; a data epoch committed before its
+# delta is caught up from that epoch's rows alone (_keyidx_catchup); a
+# legacy sink with no index bootstraps once (one full read — the old
+# per-epoch cost, paid a single time).
 # ---------------------------------------------------------------------------
 
 _KEYIDX_DIR = "_keyidx"
-_KEYIDX_BUCKETS = 64
 _KEYIDX_COMPACT_AFTER = 8  # fold deltas once more than this many accumulate
-
-
-def _kbucket(col: F.Column) -> F.Column:
-    return F.pmod(F.xxhash64(col), F.lit(_KEYIDX_BUCKETS)).cast("int")
+# read with an EXPLICIT schema: a legacy all-empty compact generation
+# (written by partitionBy, which leaves only _SUCCESS) must not fail schema
+# inference; deltas predating r7 lack hi_match (read as NULL); generations
+# partitioned by the retired kbucket column gain it as a column nobody
+# selects; legacy int32 hi_turn widens under Spark 4's parquet read
+_KEYIDX_SCHEMA = "conv_id string, hi_turn long, hi_match long"
 
 
 def _keyidx_base(data_path: str) -> str:
     return os.path.join(data_path, _KEYIDX_DIR)
-
-
-def _committed_subdirs(base: str, prefix: str) -> list[tuple[int, str]]:
-    """[(n, path)] for committed (has _SUCCESS) `<prefix>=n` dirs, ascending."""
-    if not os.path.isdir(base):
-        return []
-    out = []
-    for d in os.listdir(base):
-        p = os.path.join(base, d)
-        if (
-            d.startswith(prefix + "=")
-            and os.path.isdir(p)
-            and os.path.exists(os.path.join(p, "_SUCCESS"))
-        ):
-            out.append((int(d.split("=", 1)[1]), p))
-    return sorted(out)
 
 
 def _write_keyidx_delta(
@@ -240,14 +219,9 @@ def _write_keyidx_delta(
     emission. Match ends are nondecreasing per conversation (runs close in
     order; plain-step ends are in-batch), so the MAX fold is a valid
     watermark. Skip-if-exists like the data epoch itself."""
-    target = os.path.join(_keyidx_base(data_path), f"epoch={epoch_id}")
-    if os.path.exists(os.path.join(target, "_SUCCESS")):
-        return
     # hi_turn/hi_match are pinned to BIGINT at write time: batches arrive
     # with int turn_idx (TRANSCRIPT_SCHEMA) in production but long in some
-    # test harnesses, and the compact generation is read back with an
-    # EXPLICIT schema — one canonical stored type keeps that read valid for
-    # every writer
+    # test harnesses; one canonical stored type for every writer
     idx = data_rows.groupBy("conv_id").agg(
         F.max(F.col("turn_idx").cast("long")).alias("hi_turn")
     )
@@ -258,12 +232,8 @@ def _write_keyidx_delta(
         idx = idx.join(midx, "conv_id", "full_outer")
     else:
         idx = idx.withColumn("hi_match", F.lit(None).cast("long"))
-    (
-        idx.withColumn("kbucket", _kbucket(F.col("conv_id")))
-        .coalesce(1)  # per-epoch deltas are tiny; one file keeps listings cheap
-        .write.mode("overwrite")
-        .parquet(target)
-    )
+    # per-epoch deltas are tiny; one file keeps listings cheap
+    _write_idempotent(idx.coalesce(1), _keyidx_base(data_path), epoch_id)
 
 
 def _keyidx_catchup(spark: SparkSession, data_path: str) -> None:
@@ -272,8 +242,8 @@ def _keyidx_catchup(spark: SparkSession, data_path: str) -> None:
     the index). Reads ONLY the missing epochs' data — in steady state this
     is a directory listing and nothing else."""
     base = _keyidx_base(data_path)
-    have = {n for n, _ in _committed_subdirs(base, "epoch")}
-    compacts = _committed_subdirs(base, "compact")
+    have = {n for n, _ in committed_dirs(base, "epoch")}
+    compacts = committed_dirs(base, "compact")
     folded_through = compacts[-1][0] if compacts else -1
     # iterate the VISIBLE data dirs (compact generations + unfolded epochs):
     # a compacted range whose deltas are missing (legacy sink bootstrap)
@@ -297,64 +267,26 @@ def _keyidx_catchup(spark: SparkSession, data_path: str) -> None:
         _write_keyidx_delta(rows, data_path, hi, matches)
 
 
-def _keyidx_raw(
-    spark: SparkSession, data_path: str, buckets: list[int] | None = None
-) -> DataFrame:
-    """The un-aggregated index scan: newest compact generation (partition-
-    PRUNED to `buckets` when given) unioned with all committed deltas.
-    Exposed un-merged so tests can assert the scan volume stays O(#convs)."""
+def _keyidx_raw(spark: SparkSession, data_path: str) -> DataFrame:
+    """The un-aggregated index scan: newest compact generation unioned with
+    all committed deltas. Exposed un-merged so tests can assert the scan
+    volume stays O(#convs)."""
     base = _keyidx_base(data_path)
-    parts: list[DataFrame] = []
-    compacts = _committed_subdirs(base, "compact")
-    if compacts:
-        _, cpath = compacts[-1]
-        # explicit schema: a legacy ALL-EMPTY compact generation (partitionBy
-        # on an empty DataFrame emits only _SUCCESS, no part files) must not
-        # fail schema inference and permanently brick the merge sink
-        # (ADVICE r4). New code never writes one (_keyidx_compact skips the
-        # fold when the merged index is empty), but old sinks may hold one.
-        # hi_turn is stored as BIGINT (pinned in _write_keyidx_delta /
-        # _keyidx_compact); legacy int32 generations widen under Spark 4's
-        # parquet type-widening read
-        cdf = (
-            spark.read.schema(
-                "conv_id string, hi_turn long, hi_match long, kbucket int"
-            )
-            .option("basePath", cpath)
-            .parquet(cpath)
-        )
-        if buckets is not None:
-            cdf = cdf.filter(F.col("kbucket").isin(buckets))
-        parts.append(
-            cdf.select(
-                "conv_id", "hi_turn", "hi_match", F.col("kbucket").cast("int")
-            )
-        )
-    deltas = [p for _, p in _committed_subdirs(base, "epoch")]
-    if deltas:
-        ddf = spark.read.parquet(*deltas)
-        if buckets is not None:
-            ddf = ddf.filter(F.col("kbucket").isin(buckets))
-        # casts normalize LEGACY deltas (int32 hi_turn pre-pinning; no
-        # hi_match column pre-r7) to the canonical shape
-        if "hi_match" not in ddf.columns:
-            ddf = ddf.withColumn("hi_match", F.lit(None).cast("long"))
-        parts.append(
-            ddf.select(
-                "conv_id",
-                F.col("hi_turn").cast("long").alias("hi_turn"),
-                F.col("hi_match").cast("long").alias("hi_match"),
-                "kbucket",
-            )
-        )
-    if not parts:
-        return spark.createDataFrame(
-            [], "conv_id string, hi_turn long, hi_match long, kbucket int"
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    compacts = committed_dirs(base, "compact")
+    deltas = [p for _, p in committed_dirs(base, "epoch")]
+    # the compact generation is read apart from the deltas: a legacy one is
+    # kbucket=-partitioned, and partition discovery over both layouts in
+    # one read would fail
+    groups = ([[compacts[-1][1]]] if compacts else []) + ([deltas] if deltas else [])
+    if not groups:
+        return spark.createDataFrame([], _KEYIDX_SCHEMA)
+    parts = [
+        spark.read.schema(_KEYIDX_SCHEMA)
+        .parquet(*paths)
+        .select("conv_id", "hi_turn", "hi_match")
+        for paths in groups
+    ]
+    return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
 
 def _keyidx_compact(spark: SparkSession, data_path: str) -> None:
@@ -365,64 +297,36 @@ def _keyidx_compact(spark: SparkSession, data_path: str) -> None:
     import shutil
 
     base = _keyidx_base(data_path)
-    deltas = _committed_subdirs(base, "epoch")
+    deltas = committed_dirs(base, "epoch")
     if len(deltas) <= _KEYIDX_COMPACT_AFTER:
         return
     gen = deltas[-1][0]
-    merged = (
-        _keyidx_raw(spark, data_path)
-        .groupBy("conv_id")
-        .agg(
-            F.max("hi_turn").alias("hi_turn"),
-            F.max("hi_match").alias("hi_match"),
-        )
-        .withColumn("kbucket", _kbucket(F.col("conv_id")))
-    )
-    if merged.isEmpty():
-        # an all-empty fold (e.g. a cold start where >8 epochs commit only
-        # status rows) must not write a compact generation: partitionBy on
-        # an empty DataFrame emits a dir with _SUCCESS but NO part files,
-        # which schema inference then chokes on forever (ADVICE r4). Leave
-        # the (empty, tiny) deltas in place; the first non-empty fold
-        # collects them.
-        return
-    target = os.path.join(base, f"compact={gen}")
-    merged.write.mode("overwrite").partitionBy("kbucket").parquet(target)
+    _keyidx_fold(_keyidx_raw(spark, data_path)).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(base, f"compact={gen}"))
     # delete folded inputs only after the new generation committed
-    for n, p in _committed_subdirs(base, "compact"):
+    for n, p in committed_dirs(base, "compact"):
         if n < gen:
             shutil.rmtree(p, ignore_errors=True)
     for _, p in deltas:
         shutil.rmtree(p, ignore_errors=True)
 
 
-def _keyidx_watermarks(
-    spark: SparkSession, data_path: str, rows: DataFrame
-) -> DataFrame:
-    """Per-conversation sink high watermarks for the conversations that can
-    possibly collide with ``rows`` (bucket-pruned compact index read). Runs
-    the idempotent index catchup/compact first. Build ONCE per epoch and
-    join against every row class (review r6d: the match dedupe used to
-    repeat the bucket collect + index aggregation per class)."""
+def _keyidx_fold(raw: DataFrame) -> DataFrame:
+    """MAX fold of index rows to one watermark row per conversation."""
+    return raw.groupBy("conv_id").agg(
+        F.max("hi_turn").alias("hi_turn"), F.max("hi_match").alias("hi_match")
+    )
+
+
+def _keyidx_watermarks(spark: SparkSession, data_path: str) -> DataFrame:
+    """Per-conversation sink high watermarks. Runs the idempotent index
+    catchup/compact first. Build ONCE per epoch and join against every row
+    class (review r6d: the match dedupe used to repeat the index
+    aggregation per class)."""
     _keyidx_catchup(spark, data_path)
     _keyidx_compact(spark, data_path)
-    # the batch's bucket set: ≤ _KEYIDX_BUCKETS small ints — bounded plan-
-    # build metadata (same class as the IVF codebook collect), lets the
-    # compact read prune to the buckets this batch can possibly collide with
-    buckets = [
-        r["b"]
-        for r in rows.select(_kbucket(F.col("conv_id")).alias("b"))
-        .distinct()
-        .collect()
-    ]
-    return (
-        _keyidx_raw(spark, data_path, buckets)
-        .groupBy("conv_id")
-        .agg(
-            F.max("hi_turn").alias("hi_turn"),
-            F.max("hi_match").alias("hi_match"),
-        )
-    )
+    return _keyidx_fold(_keyidx_raw(spark, data_path))
 
 
 def _fresh_above_watermark(
@@ -445,12 +349,23 @@ def _fresh_above_watermark(
     )
 
 
+def _drain(df: DataFrame) -> None:
+    """Run `df` to completion and write nothing — what the replay of an
+    already committed epoch must still do. On a streaming replay `df`
+    descends from the stateful operator, and Spark fails the batch
+    (STATE_STORE_COMMIT_VALIDATION_FAILED) unless every state store
+    partition runs and commits again: a replay that skipped the batch
+    would stop the stream from ever restarting."""
+    df.write.format("noop").mode("overwrite").save()
+
+
 def _write_idempotent(df: DataFrame, base: str, epoch_id: int) -> None:
-    """Skip-if-exists epoch write: replay of a committed epoch is a no-op.
-    (Parquet stand-in for Iceberg's (queryId, epochId) snapshot dedupe.)"""
+    """Skip-if-exists epoch write: replay of a committed epoch writes
+    nothing (and drains `df`, see _drain). (Parquet stand-in for Iceberg's
+    (queryId, epochId) snapshot dedupe.)"""
     target = _epoch_dir(base, epoch_id)
-    marker = os.path.join(target, "_SUCCESS")
-    if os.path.exists(marker):
+    if os.path.exists(os.path.join(target, "_SUCCESS")):
+        _drain(df)
         return
     df.write.mode("overwrite").parquet(target)
 
@@ -483,7 +398,7 @@ def split_sink(cfg: SinkConfig):
                 # operator's output is computed once even though two writes
                 # consume it.
                 persisted = unified.withColumn(
-                    "dlq_error", row_violation(cfg, batch_df.columns)
+                    "dlq_error", row_violation(batch_df.columns)
                 ).persist()
                 bad = persisted.filter(F.col("dlq_error").isNotNull())
                 if not bad.isEmpty():
@@ -500,14 +415,10 @@ def split_sink(cfg: SinkConfig):
                 if persisted is None:
                     persisted = unified.persist()
                     unified = persisted
-                data_rows = unified.filter(F.col("row_type") == "data")
-                # match conversations are always a subset of the batch's
-                # data conversations (a quantified match's close is
-                # triggered by a newly emitted break row, so the batch has
-                # data rows for the conv), so ONE watermark index serves
-                # both row classes
-                idx = _keyidx_watermarks(spark, cfg.data_path, data_rows)
-                fresh_data = _fresh_above_watermark(data_rows, idx, "turn_idx")
+                idx = _keyidx_watermarks(spark, cfg.data_path)
+                fresh_data = _fresh_above_watermark(
+                    unified.filter(F.col("row_type") == "data"), idx, "turn_idx"
+                )
                 if "match_start_idx" in batch_df.columns:
                     # match rows need the same cross-epoch dedupe (review
                     # r6c): under eager state cleanup, re-delivered turns
@@ -543,9 +454,9 @@ def split_sink(cfg: SinkConfig):
             try:
                 if cfg.iceberg_table:
                     spark = batch_df.sparkSession
-                    if not _iceberg_epoch_committed(
-                        spark, cfg.iceberg_table, epoch_id
-                    ):
+                    if _iceberg_epoch_committed(spark, cfg.iceberg_table, epoch_id):
+                        _drain(unified)
+                    else:
                         unified.writeTo(cfg.iceberg_table).option(
                             "snapshot-property.ordered.epoch", str(epoch_id)
                         ).append()
@@ -633,19 +544,13 @@ def split_sink(cfg: SinkConfig):
 def _sink_entries(base: str) -> list[tuple[int, int, int, str]]:
     """All committed data dirs as (level, lo, hi, path): epoch=N → (0, N, N),
     compact=L-lo-hi → (L, lo, hi). Sorted by (lo, level)."""
-    if not os.path.isdir(base):
-        return []
-    out: list[tuple[int, int, int, str]] = []
-    for d in os.listdir(base):
-        p = os.path.join(base, d)
-        if not (os.path.isdir(p) and os.path.exists(os.path.join(p, "_SUCCESS"))):
-            continue
-        if d.startswith("epoch="):
-            n = int(d.split("=", 1)[1])
-            out.append((0, n, n, p))
-        elif d.startswith("compact="):
-            lvl, lo, hi = (int(x) for x in d.split("=", 1)[1].split("-"))
-            out.append((lvl, lo, hi, p))
+    out = [(0, n, n, p) for n, p in committed_dirs(base, "epoch")]
+    out += [
+        (*rng, p)
+        for rng, p in committed_dirs(
+            base, "compact", key=lambda v: tuple(int(x) for x in v.split("-"))
+        )
+    ]
     return sorted(out, key=lambda e: (e[1], e[0]))
 
 
@@ -699,7 +604,7 @@ def sink_dirs(base: str) -> list[str]:
     """The COMMITTED, non-superseded data directories of an epoch sink in
     epoch order — compact generations plus un-folded epoch dirs. This is
     the read surface; epoch_dirs() below remains the level-0-only view
-    (raw side channels and the key-index catchup need exactly that)."""
+    (raw side channels need exactly that)."""
     return [p for _, _, _, p in _visible_entries(base)]
 
 
@@ -783,8 +688,6 @@ def compact_data_epochs(
     same scope as every marker file in this module)."""
     import shutil
     import time
-
-    from ..locking import try_flock
 
     os.makedirs(base, exist_ok=True)
     # non-blocking: contention means another compactor is active — skip
@@ -923,32 +826,10 @@ def compact_data_epochs(
 
 
 def epoch_dirs(base: str) -> list[str]:
-    """COMMITTED epoch directories under an epoch sink, in epoch order.
-
-    Committed == contains the `_SUCCESS` marker — the same criterion
-    `_write_idempotent` uses to decide an epoch needs no rewrite. Filtering
-    here matters for exactly-once: a crash mid-write of epoch N leaves a
-    partial directory without `_SUCCESS`; if reads saw those rows, a
-    merge_on_key replay would anti-join them out of the fresh batch and then
-    overwrite the partial epoch with only the remainder, permanently losing
-    the rows that had landed pre-crash. Uncommitted epochs must stay
-    invisible until their overwrite completes.
-
-    Enumerated explicitly rather than passing an `epoch=*` glob to
-    spark.read: Spark probes the literal glob string for streaming-sink
-    metadata and logs a WARN with a full Java stack each time
-    (FileStreamSink.hasMetadata) — harmless but it makes clean runs look
-    failed in bench logs."""
-    if not os.path.isdir(base):
-        return []
-    out = [
-        os.path.join(base, d)
-        for d in os.listdir(base)
-        if d.startswith("epoch=")
-        and os.path.isdir(os.path.join(base, d))
-        and os.path.exists(os.path.join(base, d, "_SUCCESS"))
-    ]
-    return sorted(out, key=lambda p: int(p.rsplit("=", 1)[1]))
+    """COMMITTED (`_SUCCESS`-marked) epoch directories under an epoch sink,
+    in epoch order — the same criterion `_write_idempotent` uses to decide
+    an epoch needs no rewrite (see locking.committed_dirs)."""
+    return [p for _, p in committed_dirs(base, "epoch")]
 
 
 def read_sink(spark: SparkSession, base: str, table: str = "data") -> DataFrame:
@@ -1114,14 +995,6 @@ def read_raw(spark: SparkSession, base: str) -> DataFrame | None:
     if not dirs:
         return None
     return spark.read.option("basePath", base).parquet(*dirs).drop("epoch")
-
-
-def console_stream(df: DataFrame, n: int = 20):
-    """Streaming console sink (the reference's StandardOutputConsumer
-    analog) — debugging aid."""
-    return df.writeStream.outputMode("append").format("console").option(
-        "numRows", n
-    ).start()
 
 
 def _pattern_spec(

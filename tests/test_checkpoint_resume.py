@@ -73,3 +73,55 @@ def test_checkpoint_kill_and_resume(spark, tmp_path, engine):
     assert progress, "listener captured no progress events"
     assert any(s["rows_total"] >= 0 for e in progress for s in e["stateOperators"])
     assert {e["event"] for e in events} >= {"started", "progress"}
+
+
+def _run_sink(spark, base, engine, merge, batches, lose_commit_after=None):
+    """Feed `batches` through the pipeline; after batch
+    `lose_commit_after`, stop, delete the newest commits/<n> (the process
+    died between the sink commit and Spark's commit log write) and restart,
+    so Spark re-runs epoch n into an already committed sink epoch. Returns
+    (data rows, status rows without their wall-clock stamp, replayed)."""
+    sink = SinkConfig(
+        data_path=os.path.join(base, "data"),
+        checkpoint=os.path.join(base, "ckpt"),
+        merge_on_key=merge,
+    )
+    st = StagedStream(spark, base)
+    q = start_ordered_pipeline(st.source(), sink, engine=engine, n_shards=8)
+    replayed = None
+    try:
+        for i, b in enumerate(batches):
+            st.push(b)
+            q.processAllAvailable()
+            if i == lose_commit_after:
+                q.stop()
+                q.awaitTermination(30)
+                commits = os.path.join(sink.checkpoint, "commits")
+                n = max(int(f) for f in os.listdir(commits) if f.isdigit())
+                for f in (str(n), f".{n}.crc"):  # the log entry and its checksum
+                    os.remove(os.path.join(commits, f))
+                q = start_ordered_pipeline(st.source(), sink, engine=engine, n_shards=8)
+                q.processAllAvailable()
+                replayed = n if os.path.exists(os.path.join(commits, str(n))) else None
+    finally:
+        q.stop()
+        q.awaitTermination(30)
+    data = read_sink(spark, sink.data_path).drop("ingest_ts").toPandas()
+    status = read_sink(spark, sink.data_path, table="status").drop("status_ts").toPandas()
+
+    def rows(df):
+        return sorted(map(tuple, df.astype(object).where(df.notna(), None).values.tolist()))
+
+    return rows(data), rows(status), replayed
+
+
+@pytest.mark.parametrize("engine,merge", [("classic", False), ("sharded", True)])
+def test_lost_commit_log_replays_exactly_once(spark, tmp_path, engine, merge):
+    """The re-run epoch is already committed, so the sink writes nothing —
+    but it must still run the batch: Spark fails a batch whose state
+    stores did not all commit, and the restart would fail for good."""
+    batches = scenario("random_permutation")
+    want = _run_sink(spark, str(tmp_path / "straight"), engine, merge, batches)
+    got = _run_sink(spark, str(tmp_path / "replayed"), engine, merge, batches, lose_commit_after=1)
+    assert got[2] is not None, "the restart did not re-run the uncommitted epoch"
+    assert got[:2] == want[:2]

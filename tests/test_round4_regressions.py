@@ -388,49 +388,6 @@ def test_keyidx_merge_scan_bounded_and_exact(spark, tmp_path):
     )
 
 
-def test_keyidx_compact_read_partition_prunes(spark, tmp_path):
-    """The compact generation is directory-partitioned by kbucket so a
-    merge consults only the batch's buckets: the physical plan of a
-    bucket-restricted index read must carry a kbucket PartitionFilter (true
-    partition PRUNING — files of other buckets are never opened), not a
-    post-scan row filter."""
-    path = os.path.join(str(tmp_path), "data")
-    cfg = sk.SinkConfig(data_path=path, validate=False, merge_on_key=True)
-    wb = sk.split_sink(cfg)
-    convs = [f"c{i:02d}" for i in range(32)]
-    for e in range(sk._KEYIDX_COMPACT_AFTER + 3):  # force a compaction
-        wb(_unified_batch(spark, convs, [e + 1]), e)
-    base = os.path.join(path, "_keyidx")
-    compacts = [d for d in os.listdir(base) if d.startswith("compact=")]
-    assert compacts, "compaction did not trigger"
-    # the compact generation is laid out as kbucket=<n> partition dirs
-    cdir = os.path.join(base, sorted(compacts)[-1])
-    assert any(d.startswith("kbucket=") for d in os.listdir(cdir))
-    pruned = sk._keyidx_raw(spark, path, buckets=[3])
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan
-    # the kbucket predicate must appear in the partition filters, i.e.
-    # BEFORE the data filters section of the scan node
-    pf = plan[plan.index("PartitionFilters"):]
-    assert "kbucket" in pf.split("DataFilters")[0]
-
-
-def test_keyidx_crash_window_catchup(spark, tmp_path):
-    """Data epoch committed but its index delta lost (crash between the two
-    writes): the next merge derives the delta from that epoch alone and the
-    duplicate is still dropped."""
-    import shutil
-
-    path = os.path.join(str(tmp_path), "data")
-    cfg = sk.SinkConfig(data_path=path, validate=False, merge_on_key=True)
-    wb = sk.split_sink(cfg)
-    wb(_unified_batch(spark, ["a"], [1, 2]), 0)
-    # simulate the crash window: delta for epoch 0 vanishes
-    shutil.rmtree(os.path.join(path, "_keyidx", "epoch=0"))
-    wb(_unified_batch(spark, ["a"], [1, 2, 3]), 1)  # replayed dups + fresh 3
-    assert _data_keys(spark, path) == [("a", 1), ("a", 2), ("a", 3)]
-
-
 # ---------------------------------------------------------------- R4-HK
 # Streaming hot-key routing (VERDICT r3 what's-missing #5): mega-keys
 # bypass keyed state into a raw side channel and get ordered by the

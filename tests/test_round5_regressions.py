@@ -1,9 +1,9 @@
 """Round-5 regression tests: ADVICE r4/r5 findings.
 
-  - _keyidx_compact must never write an all-empty compact generation
-    (partitionBy on an empty DataFrame emits only _SUCCESS; schema
-    inference on that generation then fails every later merge epoch).
-  - _keyidx_raw must survive a LEGACY all-empty compact generation.
+  - an all-empty key-index fold must leave an index that later deltas
+    still dedupe against exactly.
+  - _keyidx_raw must survive a LEGACY all-empty compact generation, and
+    a LEGACY kbucket=-partitioned index must keep deduping exactly.
   - the hot-channel no-op fingerprint must distinguish raw states whose
     file CONTENT differs even when total committed bytes collide.
   - --reset-hot-channel must not delete unreleased rows of conversations
@@ -22,8 +22,8 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dataflow_ordered_processing_spark.streaming.sinks import (  # noqa: E402
+    _KEYIDX_COMPACT_AFTER,
     _keyidx_base,
-    _keyidx_compact,
     _keyidx_raw,
     _write_keyidx_delta,
 )
@@ -51,33 +51,28 @@ def _turns_df(spark, rows):
     return spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
 
 
-def _empty_data(spark):
-    return _turns_df(spark, []).select("conv_id", "turn_idx")
+def test_keyidx_all_empty_fold_then_real_delta_dedupes(spark, tmp_path):
+    """More than _KEYIDX_COMPACT_AFTER status-only epochs (a cold start)
+    fold an all-empty key index; later data epochs still dedupe exactly
+    against it."""
+    from dataflow_ordered_processing_spark.streaming import sinks as sk
 
+    path = str(tmp_path / "data")
+    wb = sk.split_sink(sk.SinkConfig(data_path=path, validate=False, merge_on_key=True))
 
-def test_keyidx_all_empty_fold_writes_no_compact(spark, tmp_path):
-    """>_KEYIDX_COMPACT_AFTER all-empty deltas (cold start: only status
-    rows commit) must NOT produce a compact generation — and the index must
-    stay readable and correct once real data arrives."""
-    data_path = str(tmp_path / "data")
-    os.makedirs(data_path)
-    for epoch in range(10):
-        _write_keyidx_delta(_empty_data(spark), data_path, epoch)
-    _keyidx_compact(spark, data_path)
-    base = _keyidx_base(data_path)
-    assert not [d for d in os.listdir(base) if d.startswith("compact=")]
-    assert _keyidx_raw(spark, data_path).count() == 0
+    def batch(row_type, turns):
+        return spark.createDataFrame(
+            [("c1", t, row_type) for t in turns],
+            "conv_id string, turn_idx long, row_type string",
+        )
 
-    # real data arrives: the next fold collects everything, correctly
-    real = spark.createDataFrame(
-        [("c1", 7)], "conv_id string, turn_idx int"
-    )
-    _write_keyidx_delta(real, data_path, 10)
-    _keyidx_compact(spark, data_path)
-    compacts = [d for d in os.listdir(base) if d.startswith("compact=")]
-    assert compacts == ["compact=10"]
-    idx = _keyidx_raw(spark, data_path).collect()
-    assert [(r["conv_id"], r["hi_turn"]) for r in idx] == [("c1", 7)]
+    for epoch in range(_KEYIDX_COMPACT_AFTER + 2):
+        wb(batch("status", [None]), epoch)
+    assert [d for d in os.listdir(_keyidx_base(path)) if d.startswith("compact=")]
+    wb(batch("data", [1, 2]), 20)
+    wb(batch("data", [1, 2, 3]), 21)  # 1 and 2 re-delivered
+    got = sk.read_sink(spark, path, table="unified").filter("row_type = 'data'").collect()
+    assert sorted(r["turn_idx"] for r in got) == [1, 2, 3]
 
 
 def test_keyidx_raw_survives_legacy_empty_compact(spark, tmp_path):
@@ -94,6 +89,46 @@ def test_keyidx_raw_survives_legacy_empty_compact(spark, tmp_path):
     _write_keyidx_delta(real, data_path, 6)
     idx = _keyidx_raw(spark, data_path).collect()
     assert [(r["conv_id"], r["hi_turn"]) for r in idx] == [("c2", 3)]
+
+
+def test_keyidx_legacy_kbucket_layout_still_dedupes(spark, tmp_path):
+    """A key index in the earlier partitioned layout — a kbucket=
+    partitioned compact generation and deltas carrying a kbucket column —
+    still dedupes exactly, read as it is and after one more batch folds it
+    into an unpartitioned generation."""
+    from pyspark.sql import functions as F
+
+    from dataflow_ordered_processing_spark.streaming import sinks as sk
+
+    path = str(tmp_path / "data")
+    base = _keyidx_base(path)
+
+    def legacy(rows):
+        return spark.createDataFrame(
+            rows, "conv_id string, hi_turn long, hi_match long"
+        ).withColumn("kbucket", F.pmod(F.xxhash64("conv_id"), F.lit(64)).cast("int"))
+
+    legacy([("a", 2, None), ("b", 3, None)]).write.partitionBy("kbucket").parquet(
+        os.path.join(base, "compact=4")
+    )
+    for epoch in range(5, 5 + _KEYIDX_COMPACT_AFTER):  # c's watermark ends at 8
+        legacy([("c", epoch - 4, None)]).coalesce(1).write.parquet(
+            os.path.join(base, f"epoch={epoch}")
+        )
+    wb = sk.split_sink(sk.SinkConfig(data_path=path, validate=False, merge_on_key=True))
+
+    def batch(rows):
+        return spark.createDataFrame(
+            [(c, t, "data") for c, t in rows],
+            "conv_id string, turn_idx long, row_type string",
+        )
+
+    wb(batch([("a", 2), ("a", 3), ("b", 3), ("c", 8), ("c", 9)]), 13)
+    assert sorted(d for d in os.listdir(base) if d.startswith("compact=")) == ["compact=4"]
+    wb(batch([("a", 3), ("b", 4), ("c", 9)]), 14)  # folds the legacy index first
+    assert sorted(d for d in os.listdir(base) if d.startswith("compact=")) == ["compact=13"]
+    got = sk.read_sink(spark, path, table="unified").select("conv_id", "turn_idx").collect()
+    assert sorted(map(tuple, got)) == [("a", 3), ("b", 4), ("c", 9)]
 
 
 def test_hot_fingerprint_not_fooled_by_equal_totals(tmp_path):

@@ -590,6 +590,7 @@ def test_ivf_compact_folds_epochs_exactly_once(spark, sf_dir, tmp_path):
     import os
 
     from dataflow_ordered_processing_spark.functions import similarity as S
+    from dataflow_ordered_processing_spark.locking import committed_dirs
 
     embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = embs.filter(F.col("vec_id") < 3).select(
@@ -612,8 +613,8 @@ def test_ivf_compact_folds_epochs_exactly_once(spark, sf_dir, tmp_path):
     assert S._current_generation(idx) == 2
     gen2 = S._gen_dir(idx)
     # one committed base epoch, ~1 file per cell, no stray epochs
-    assert [os.path.basename(e) for e in S._committed_index_epochs(
-        os.path.join(gen2, "corpus"))] == ["epoch=base"]
+    assert [os.path.basename(p) for _, p in committed_dirs(
+        os.path.join(gen2, "corpus"), "epoch", key=str)] == ["epoch=base"]
     files_after = len(
         glob.glob(os.path.join(gen2, "corpus", "epoch=base", "cell=*", "*.parquet"))
     )

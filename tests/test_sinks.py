@@ -1,4 +1,5 @@
-"""Sink behaviors: DLQ on write failure, export formats, epoch idempotency."""
+"""Sink behaviors: DLQ on write failure, export formats, merge_on_key.
+Epoch idempotency under crashes: test_sink_fault_matrix.py."""
 
 import os
 
@@ -9,7 +10,6 @@ from dataflow_ordered_processing_spark.schemas import TRANSCRIPT_SCHEMA
 from dataflow_ordered_processing_spark.sources.scenarios import scenario
 from dataflow_ordered_processing_spark.streaming.sinks import (
     SinkConfig,
-    _write_idempotent,
     export_table,
     read_sink,
     split_sink,
@@ -18,17 +18,6 @@ from dataflow_ordered_processing_spark.streaming.sinks import (
 
 def _df(spark):
     return spark.createDataFrame(scenario("batch_in_order")[0], schema=TRANSCRIPT_SCHEMA)
-
-
-def test_epoch_write_is_idempotent(spark, tmp_path):
-    df = _df(spark)
-    base = str(tmp_path / "sink")
-    _write_idempotent(df, base, 7)
-    first = spark.read.parquet(os.path.join(base, "epoch=7")).count()
-    # replay of a committed epoch must be a no-op even with different data
-    _write_idempotent(df.limit(1), base, 7)
-    again = spark.read.parquet(os.path.join(base, "epoch=7")).count()
-    assert first == again == 3
 
 
 def test_dlq_on_sink_failure(spark, tmp_path):
