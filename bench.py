@@ -23,9 +23,9 @@ imported, to the JSON line: the end-to-end figure.
 `staging_spread_p99_s` is NOT emission latency: it is the p99 spread of
 ingest_ts over a run that replays pre-staged history as fast as triggers
 allow, so it measures staging cadence (run length / trigger count), not how
-long a live turn waits to be emitted. The real arrival-relative steady-state
-measurement is `tools/latency_bench.py` → `BENCH/latency.json`
-(p50 0.82 s / p99 2.31 s, drained).
+long a live turn waits to be emitted. The real arrival-relative measurement
+is perfbench's `live` workload (`emit_latency_p50_s`, `emit_latency_p99_s`):
+`python3 perfbench/run.py --workload live --seed 1 --seconds 30`.
 """
 
 from __future__ import annotations
@@ -153,9 +153,8 @@ def main() -> int:
         # p99 ingest_ts spread relative to run start. This replays STAGED
         # history, so the number is bounded by staging cadence (trigger
         # count × micro-batch time), not by per-turn wait — hence the
-        # honest name. For real in-order emission latency (arrival-relative,
-        # steady-state, drained) see tools/latency_bench.py →
-        # BENCH/latency.json: p50 0.82 s / p99 2.31 s.
+        # honest name. For real in-order emission latency (arrival-relative)
+        # see perfbench's `live` workload: emit_latency_p50_s / _p99_s.
         row = sunk.agg(
             F.expr(
                 "percentile_approx(unix_timestamp(ingest_ts), array(0.99D), 10000)"

@@ -288,7 +288,8 @@ def dedup_clusters(
     resolved with a driver-side union-find over the collected (bounded)
     edge list instead of the iterative rounds — near-dup graphs are tiny
     relative to their corpus, and for them the loop is pure fixed overhead.
-    0 disables the fast path (tools/cc_scale_bench.py does, to measure the
+    0 disables the fast path (test_functions.py's
+    test_dedup_clusters_long_chain_pointer_jumping does, to bound the
     distributed rounds).
 
     At 100 TB this is the standard Spark shape for the problem (min-id

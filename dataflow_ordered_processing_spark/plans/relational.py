@@ -39,7 +39,7 @@ def _sum_micros(col: F.Column, exact_decimal: bool) -> F.Column:
     9.2e18 micros, i.e. ~9.2e12 in display units per group — TPC-H-style
     line amounts (~1e5 → 1e11 micros) are safe to ~9e7 rows PER GROUP.
     Under Spark 4's default ANSI mode an overflow raises
-    ARITHMETIC_OVERFLOW (loud, verified in test_round4_regressions); a
+    ARITHMETIC_OVERFLOW (loud, verified in test_relational.py); a
     deployment that sets spark.sql.ansi.enabled=false instead WRAPS
     SILENTLY. Either way, a 100-TB run whose groups can exceed the bound
     (e.g. a Q1-style 4-group rollup over the whole fact table) should pass

@@ -179,9 +179,10 @@ def _iceberg_epoch_committed(spark: SparkSession, table: str, epoch_id: int) -> 
 #
 # Per-epoch merge cost: read 1 compact generation + ≤ _KEYIDX_COMPACT_AFTER
 # delta dirs — size O(#live conversations), NEVER O(rows ever written);
-# test_round4_regressions asserts the scan volume at epoch 30 equals epoch
-# 3's. The index is not partitioned: a live batch touches hundreds of
-# conversations, which hash into nearly every bucket of any bucketing, so
+# test_sinks.py's test_keyidx_merge_scan_bounded_and_exact asserts the scan
+# volume stays bounded while the sink grows 60x. The index is not
+# partitioned: a live batch touches hundreds of conversations, which hash
+# into nearly every bucket of any bucketing, so
 # pruning would skip nothing. Every fold is a MAX, which is idempotent and
 # monotone, so every crash window is safe: a compact written but deltas not
 # yet deleted double-covers harmlessly; a data epoch committed before its

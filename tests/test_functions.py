@@ -4,6 +4,8 @@ tables: dedup, similarity, text analysis, multimodal plumbing."""
 import numpy as np
 import pandas as pd
 import pytest
+from hypothesis import given, settings, strategies as st
+from pyspark.sql import functions as F
 
 from dataflow_ordered_processing_spark.functions import dedup, multimodal, similarity, text
 
@@ -224,10 +226,208 @@ def test_ivf_topk_recall_and_self_cells(embs):
     )
     assert len(inter) > 0
     # a centroid vector must be assigned to its own cell (cos = 1 with itself)
-    from pyspark.sql import functions as F
-
     cent_rows = embs.filter(F.col("vec_id") < 8).select("vec_id", "embedding").collect()
     cents = [(int(r["vec_id"]), list(r["embedding"])) for r in cent_rows]
     assigned = similarity.ivf_assign(embs.filter(F.col("vec_id") < 8), "embedding", cents)
     rows = assigned.toPandas()
     assert (rows["cell"] == rows["vec_id"]).all()
+
+
+def test_redact_counts_match_insertions(spark):
+    df = spark.createDataFrame(
+        [(1, "contact a@1.2.3.4.net or 5.6.7.8"), (2, "x@y.com a@1.2.3.4.net")],
+        ["doc_id", "text"],
+    )
+    got = text.redact_pii(df).toPandas().set_index("doc_id")
+    # doc 1: the email consumes 1.2.3.4 — only the standalone ip counts
+    assert got.loc[1, "n_email"] == 1 and got.loc[1, "n_ipv4"] == 1
+    assert got.loc[1, "redacted"].count("<IPV4>") == got.loc[1, "n_ipv4"]
+    # doc 2: both matches are emails; no <IPV4> token is ever inserted
+    assert got.loc[2, "n_email"] == 2 and got.loc[2, "n_ipv4"] == 0
+    assert "<IPV4>" not in got.loc[2, "redacted"]
+
+
+def test_lsh_degenerate_bucket_capped(spark):
+    """Adversarial corpus: 500 identical docs share every band key. Without
+    a cap the band self-join expands 500²/2 pairs in ONE bucket; with the
+    cap the bucket is dropped (the exact tier owns identical docs) and the
+    query completes with no quadratic expansion."""
+    docs = spark.range(500).select(
+        F.col("id").alias("doc_id"), F.lit("same text everywhere here now").alias("text")
+    )
+    capped = dedup.minhash_lsh_pairs(docs, max_bucket=64)
+    assert capped.count() == 0  # mega-bucket excluded from pair expansion
+    stats = dedup.lsh_bucket_stats(docs).collect()
+    assert stats[0]["n_docs"] == 500  # the audit query exposes the cluster
+    # the cheaper exact tier still catches the cluster
+    ex = dedup.dedup_exact(docs).collect()
+    assert len(ex) == 1 and ex[0]["n_copies"] == 500
+    # a cap above every bucket size is a no-op vs the uncapped default:
+    # the capped path itself is lossless on benign data
+    benign = spark.range(6).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("distinct words for doc number "), F.col("id").cast("string")).alias("text"),
+    )
+    assert (
+        dedup.minhash_lsh_pairs(benign, max_bucket=64).collect()
+        == dedup.minhash_lsh_pairs(benign).collect()
+    )
+
+
+def test_vocab_topk_counts_and_tiebreak(spark):
+    df = spark.createDataFrame([(1, "a b b c C"), (2, "b  a\t x")], ["doc_id", "text"])
+    got = [(r["token"], r["n"]) for r in text.vocab_topk(df, k=3).collect()]
+    # case-folded, whitespace-split; ties broken by token for a stable cut
+    assert got == [("b", 3), ("a", 2), ("c", 2)]
+
+
+def test_doc_length_stats_exact(spark):
+    df = spark.createDataFrame(
+        [(i, "x" * n) for i, n in enumerate([4, 8, 10, 100])], ["doc_id", "text"]
+    )
+    row = text.doc_length_stats(df).collect()[0]
+    assert row["n_docs"] == 4 and row["max_chars"] == 100
+    assert row["p50_chars"] == 9.0  # exact percentile, linear interpolation
+    assert row["mean_chars"] == 30.5
+
+
+def _pairs(spark, *ab):
+    return spark.createDataFrame(list(ab), "doc_a long, doc_b long")
+
+
+def _docs(spark, n):
+    return spark.range(n).selectExpr("id AS doc_id", "concat('doc ', id) AS text")
+
+
+def test_dedup_clusters_chain(spark):
+    """A~B~C~D chain → ONE cluster labelled by the minimum id; the isolated
+    doc labels itself."""
+    docs = _docs(spark, 6)
+    pairs = _pairs(spark, (1, 2), (2, 3), (3, 4))
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup.dedup_clusters(docs, pairs).collect()
+    }
+    assert got == {0: 0, 1: 1, 2: 1, 3: 1, 4: 1, 5: 5}
+
+
+def test_dedup_clusters_long_chain_pointer_jumping(spark):
+    """A 40-node chain through the distributed rounds (driver_max_edges=0)
+    converges in at most ceil(log2 40) + 1 = 7 rounds thanks to label
+    compression; min propagation alone would need ~40 rounds."""
+    n = 40
+    docs = _docs(spark, n)
+    pairs = _pairs(spark, *[(i, i + 1) for i in range(n - 1)])
+    stats = {}
+    got = dedup.dedup_clusters(
+        docs, pairs, max_iter=10, stats=stats, driver_max_edges=0
+    ).collect()
+    assert all(r["cluster_id"] == 0 for r in got)
+    assert stats["rounds"] <= 7, stats
+
+
+def test_dedup_clusters_multiple_components_and_empty(spark):
+    docs = _docs(spark, 8)
+    pairs = _pairs(spark, (0, 7), (5, 6), (6, 3))
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup.dedup_clusters(docs, pairs).collect()
+    }
+    assert got == {0: 0, 7: 0, 5: 3, 6: 3, 3: 3, 1: 1, 2: 2, 4: 4}
+    # no pairs at all → every doc is its own cluster
+    none = dedup.dedup_clusters(docs, _pairs(spark)).collect()
+    assert all(r["cluster_id"] == r["doc_id"] for r in none)
+
+
+def test_dedup_clusters_distributed_rounds_match_driver_path(spark):
+    """driver_max_edges=0 forces the iterative min-label rounds; on a small
+    graph (chain, star via a larger doc, isolated docs) they must return
+    exactly the driver union-find's labelling."""
+    docs = _docs(spark, 12)
+    pairs = _pairs(spark, (1, 2), (2, 3), (3, 4), (5, 9), (6, 9), (7, 10))
+
+    def labels(**kw):
+        return sorted(
+            (r["doc_id"], r["cluster_id"])
+            for r in dedup.dedup_clusters(docs, pairs, **kw).collect()
+        )
+
+    driver = labels()
+    assert labels(driver_max_edges=0) == driver
+    assert dict(driver)[4] == 1 and dict(driver)[9] == 5 and dict(driver)[11] == 11
+
+
+def test_dedup_keep_first_transitive_beats_one_round(spark):
+    """The motivating divergence: with pairs respecting the
+    doc_a < doc_b contract, a component {1,2,3} reachable only through a
+    shared larger doc — (1,3),(2,3) — has 2 never appearing as a doc_b, so
+    one-round single-link wrongly keeps both 1 and 2; transitive keeps only
+    the component minimum."""
+    docs = _docs(spark, 5)
+    pairs = _pairs(spark, (1, 2), (2, 3))
+    legacy = sorted(
+        r["doc_id"]
+        for r in dedup.dedup_keep_first(docs, pairs, transitive=False).collect()
+    )
+    exact = sorted(
+        r["doc_id"]
+        for r in dedup.dedup_keep_first(docs, pairs, transitive=True).collect()
+    )
+    assert exact == [0, 1, 4]
+    assert legacy == [0, 1, 4]  # star+chain coincide when every dup is a doc_b
+    # divergent fixture: component {1,2,3} via (1,3),(2,3) — 2 is never doc_b
+    pairs2 = _pairs(spark, (1, 3), (2, 3))
+    legacy2 = sorted(
+        r["doc_id"]
+        for r in dedup.dedup_keep_first(docs, pairs2, transitive=False).collect()
+    )
+    exact2 = sorted(
+        r["doc_id"]
+        for r in dedup.dedup_keep_first(docs, pairs2, transitive=True).collect()
+    )
+    assert legacy2 == [0, 1, 2, 4]  # one-round keeps BOTH 1 and 2
+    assert exact2 == [0, 1, 4]  # transitive keeps only the component min
+
+
+@given(
+    st.lists(
+        st.tuples(st.integers(0, 9), st.integers(0, 9)).filter(lambda p: p[0] != p[1]),
+        max_size=12,
+    )
+)
+@settings(max_examples=8, deadline=None)
+def test_dedup_clusters_matches_union_find(edges):
+    """Property: for ANY pair graph, the min-label fixpoint equals a plain
+    union-find's component minima (the reference implementation the Spark
+    operator must agree with). hypothesis can't take pytest fixtures, so
+    the session comes from get_spark's getOrCreate (same config as the
+    conftest fixture — reuses it when already up)."""
+    from dataflow_ordered_processing_spark.session import get_spark
+
+    spark = get_spark("pytest", master="local[4]", shuffle_partitions=4)
+
+    n = 10
+    parent = list(range(n))
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    expected = {v: find(v) for v in range(n)}
+
+    docs = spark.range(n).selectExpr("id AS doc_id")
+    pairs = spark.createDataFrame(
+        [(min(a, b), max(a, b)) for a, b in edges] or [(0, 0)],
+        "doc_a long, doc_b long",
+    ).filter("doc_a <> doc_b")
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in dedup.dedup_clusters(docs, pairs).collect()
+    }
+    assert got == expected

@@ -1,7 +1,8 @@
 """The benchmark harness under perfbench/ is frozen: it imports package
 internals (private names included) and calls the pipeline entrypoint by
-name. This guard fails fast, without Spark, when a refactor renames or
-drops any of them."""
+name. The scripts under tools/ do the same. This guard fails fast, without
+Spark, when a refactor renames or drops any of them, and when a script in
+tools/ is not named in README.md."""
 
 import ast
 import importlib
@@ -14,7 +15,11 @@ import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PERFBENCH = os.path.join(ROOT, "perfbench")
-LOCAL = {f[:-3] for f in os.listdir(PERFBENCH) if f.endswith(".py")} | {"__future__"}
+TOOLS = os.path.join(ROOT, "tools")
+
+
+def _scripts(directory: str) -> list:
+    return sorted(f for f in os.listdir(directory) if f.endswith(".py"))
 
 
 def _imported(module: str, name: str):
@@ -32,16 +37,18 @@ def _run_pipeline():
     return mod
 
 
-@pytest.mark.parametrize("fname", ["traced_stream.py", "batch.py", "warm_probe.py"])
-def test_perfbench_names_resolve(fname):
-    """Every `from X import Y` outside perfbench resolves, and so does every
-    attribute read off an imported module (`core.apply_batch`) or off the
-    pipeline entrypoint traced_stream loads as `rp`."""
-    with open(os.path.join(PERFBENCH, fname)) as f:
+def _assert_names_resolve(directory: str, fname: str):
+    """Every `from X import Y` outside `directory` resolves, and so does
+    every attribute read off an imported module (`core.apply_batch`) or off
+    the pipeline entrypoint traced_stream loads as `rp`. Imports of a
+    sibling script (`from scaling_bench import ...`, `from tools.x import
+    ...`) are local and skipped."""
+    local = {f[:-3] for f in _scripts(directory)} | {os.path.basename(directory), "__future__"}
+    with open(os.path.join(directory, fname)) as f:
         tree = ast.parse(f.read())
     bound = {"rp": _run_pipeline()}
     for node in ast.walk(tree):
-        if isinstance(node, ast.ImportFrom) and node.module.split(".")[0] not in LOCAL:
+        if isinstance(node, ast.ImportFrom) and node.module.split(".")[0] not in local:
             for a in node.names:
                 bound[a.asname or a.name] = _imported(node.module, a.name)
     for node in ast.walk(tree):
@@ -49,6 +56,19 @@ def test_perfbench_names_resolve(fname):
             mod = bound.get(node.value.id)
             if isinstance(mod, ModuleType):
                 assert hasattr(mod, node.attr), (fname, node.value.id, node.attr)
+
+
+@pytest.mark.parametrize("fname", ["traced_stream.py", "batch.py", "warm_probe.py"])
+def test_perfbench_names_resolve(fname):
+    _assert_names_resolve(PERFBENCH, fname)
+
+
+@pytest.mark.parametrize("fname", _scripts(TOOLS))
+def test_tool_names_resolve(fname):
+    _assert_names_resolve(TOOLS, fname)
+    with open(os.path.join(ROOT, "README.md")) as f:
+        named = f"tools/{fname}" in f.read()
+    assert named, f"README.md does not name tools/{fname}"
 
 
 def test_driver_replay_apply_batch_returns_arrays():

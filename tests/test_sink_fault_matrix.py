@@ -22,7 +22,10 @@ runs. Each case asserts that a reader at the crash point sees the sink as
 of the epoch before or after the crashed one, and that the finished
 sink (data, status and match rows of read_sink) and the DLQ equal the
 uninterrupted run's. The uninterrupted runs are checked against an
-independent oracle.
+independent oracle. No fault fires before epoch CRASH_FROM and
+split_sink's writer keeps no state across epochs, so each crash case
+starts from a copy of its uninterrupted run's data/ and dlq/ dirs after
+epoch CRASH_FROM - 1 (no sink file stores an absolute path).
 
 The input holds a cross-epoch re-delivery of data and of a match, poison
 rows of three kinds, and CEP match rows, one of them landing an epoch
@@ -191,10 +194,21 @@ def _state(spark, data, dlq):
     return out
 
 
-def _run(spark, root, merge, compaction, boundary=None, snapshots=False):
+def _copy_sink(src, dst):
+    for name in ("data", "dlq"):
+        if os.path.isdir(os.path.join(src, name)):
+            shutil.copytree(os.path.join(src, name), os.path.join(dst, name))
+
+
+def _run(spark, root, merge, compaction, boundary=None, snapshots=False, seed=None):
     """Run the sequence; returns (final state, per-epoch states or the
-    crash-point state, epoch the fault fired at)."""
+    crash-point state, epoch the fault fired at). An uninterrupted run
+    saves its dirs after epoch CRASH_FROM - 1 under root/seed; a run given
+    that `seed` starts from a copy of it at epoch CRASH_FROM."""
     data, dlq = os.path.join(root, "data"), os.path.join(root, "dlq")
+    first = CRASH_FROM if seed else 0
+    if seed:
+        _copy_sink(seed, root)
     cfg = sk.SinkConfig(
         data_path=data, dlq_path=dlq, merge_on_key=merge,
         compact_epochs_after=2 if compaction else None, compact_grace_seconds=0,
@@ -207,7 +221,7 @@ def _run(spark, root, merge, compaction, boundary=None, snapshots=False):
         if boundary:
             _install(mp, boundary, fault, data, dlq)
         writers = [sk.split_sink(replace(cfg, merge_on_key=False)), sk.split_sink(cfg)]
-        for e, rows in enumerate(BATCHES):
+        for e, rows in enumerate(BATCHES[first:], first):
             fault.epoch = e
             batch = spark.createDataFrame(
                 [{k: v for k, v in r.items() if k != "_dlq_error"} for r in rows],
@@ -224,6 +238,8 @@ def _run(spark, root, merge, compaction, boundary=None, snapshots=False):
                 write(batch, e)
             if snapshots:
                 seen.append(_state(spark, data, dlq))
+            if e == CRASH_FROM - 1 and not boundary:
+                _copy_sink(root, os.path.join(root, "seed"))
     if boundary:
         assert fault.fired_at is not None, f"{boundary} was never reached"
     return _state(spark, data, dlq), seen, fault.fired_at
@@ -231,15 +247,15 @@ def _run(spark, root, merge, compaction, boundary=None, snapshots=False):
 
 @pytest.fixture(scope="module")
 def reference(spark, tmp_path_factory):
-    """Uninterrupted runs per (merge, compaction), with the sink state after
-    every epoch."""
+    """Uninterrupted runs per (merge, compaction): the sink state after
+    every epoch and the dir their crash cases start from."""
     cache = {}
 
     def get(merge, compaction):
         if (merge, compaction) not in cache:
             root = str(tmp_path_factory.mktemp("ref"))
             final, per_epoch, _ = _run(spark, root, merge, compaction, snapshots=True)
-            cache[merge, compaction] = (final, per_epoch)
+            cache[merge, compaction] = (final, per_epoch, os.path.join(root, "seed"))
         return cache[merge, compaction]
 
     return get
@@ -273,7 +289,7 @@ def test_uninterrupted_run_matches_oracle(reference, merge, compaction):
     """Without merge_on_key every delivered row lands; with it, each data
     key and each match lands once (its first delivery). Poison rows go to
     the DLQ only."""
-    final, _ = reference(merge, compaction)
+    final, _, _ = reference(merge, compaction)
     delivered = [r for rows in BATCHES for r in rows if "_dlq_error" not in r]
     poison = [r["_dlq_error"] for rows in BATCHES for r in rows if "_dlq_error" in r]
     cols = {
@@ -293,8 +309,8 @@ def test_crash_and_replay_is_exactly_once(spark, tmp_path, reference, boundary, 
     """A reader at the crash point sees the sink as of the epoch before or
     after the crashed one; after the replay and the rest of the sequence
     the sink and the DLQ equal the uninterrupted run's."""
-    ref_final, ref_epochs = reference(merge, compaction)
-    final, (at_crash,), e = _run(spark, str(tmp_path), merge, compaction, boundary)
+    ref_final, ref_epochs, seed = reference(merge, compaction)
+    final, (at_crash,), e = _run(spark, str(tmp_path), merge, compaction, boundary, seed=seed)
     before = ref_epochs[e - 1]
     after = ref_epochs[e]
     for part in ("data", "status", "match", "dlq"):

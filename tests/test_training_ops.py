@@ -1,9 +1,13 @@
-"""Training-data preparation operators (late r7): sequence packing
-(concat-and-chunk assignment, distributed two-phase prefix sum) and the
-cross-document repeated-n-gram blocklist."""
+"""Training-data preparation operators: sequence packing (concat-and-chunk
+assignment, distributed two-phase prefix sum), the cross-document
+repeated-n-gram blocklist, and the curation steps training_mix composes
+(repetition score, hash split, decontamination, stratified sampling)."""
 
 from __future__ import annotations
-# ------------------------------------------------------- r7: packing + grams
+
+from pyspark.sql import functions as F
+
+
 def test_pack_sequences_matches_single_window(spark):
     """The distributed two-phase prefix sum must equal the naive global
     cumulative sum, for bucket sizes that split / don't split the data —
@@ -164,3 +168,149 @@ def test_pack_sequences_rejects_nonpositive_max_tokens(spark):
     docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     with pytest.raises(ValueError, match="max_tokens"):
         text.pack_sequences(docs, 0)
+
+
+def test_repetition_score(spark):
+    from dataflow_ordered_processing_spark.functions import text as T
+
+    docs = spark.createDataFrame(
+        [
+            (0, "spam spam spam spam spam spam"),     # one distinct 3-gram
+            (1, "all words here are fully distinct"), # no repeated 3-gram
+            (2, "hi"),                                # < 3 words → 0.0
+        ],
+        "doc_id long, text string",
+    )
+    got = {r["doc_id"]: r["rep_score"] for r in T.repetition_score(docs).collect()}
+    assert got[0] == round(1 - 1 / 4, 6)  # 4 shingles, 1 distinct
+    assert got[1] == 0.0
+    assert got[2] == 0.0
+
+
+def test_dataset_split_deterministic_and_complete(spark):
+    from dataflow_ordered_processing_spark.functions import text as T
+
+    docs = spark.range(2000).selectExpr("id AS doc_id")
+    a = {r["doc_id"]: r["split"] for r in T.dataset_split(docs).collect()}
+    b = {r["doc_id"]: r["split"] for r in T.dataset_split(docs).collect()}
+    assert a == b  # content-independent, rerun-stable
+    from collections import Counter
+
+    c = Counter(a.values())
+    assert set(c) == {"train", "val", "test"}
+    assert 0.85 < c["train"] / 2000 < 0.95  # ~90/5/5 hash split
+    # growing the corpus never migrates existing docs
+    grown = {r["doc_id"]: r["split"]
+             for r in T.dataset_split(spark.range(4000).selectExpr("id AS doc_id")).collect()}
+    assert all(grown[k] == v for k, v in a.items())
+
+
+def test_decontaminate_flags_overlap_only(spark):
+    from dataflow_ordered_processing_spark.functions import text as T
+
+    bench = spark.createDataFrame(
+        [(100, "the quick brown fox jumps over the lazy dog tonight")],
+        "doc_id long, text string",
+    )
+    docs = spark.createDataFrame(
+        [
+            (1, "prefix words the quick brown fox jumps over the lazy dog tonight suffix"),
+            (2, "entirely unrelated content with no overlap at all in any gram here"),
+        ],
+        "doc_id long, text string",
+    )
+    got = {r["doc_id"]: r["n_contaminated_grams"]
+           for r in T.decontaminate(docs, bench, shingle=8).collect()}
+    assert 1 in got and got[1] >= 1  # shares the benchmark 8-grams
+    assert 2 not in got              # clean doc not flagged
+
+
+def test_sample_stratified_rates_and_stability(spark, sf_dir):
+    """Per-stratum hash sampling: rate 1.0 keeps everything, 0.0 nothing;
+    membership is identical across re-runs AND under corpus growth (the
+    kept set of a subset equals the subset of the kept set — the property
+    a seeded-RNG sample cannot give)."""
+    from dataflow_ordered_processing_spark.functions import text
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    rates = {"src0": 1.0, "src1": 0.0}
+    kept = text.sample_stratified(docs, rates, default_rate=0.4)
+    n_src0 = docs.filter("source = 'src0'").count()
+    assert kept.filter("source = 'src0'").count() == n_src0
+    assert kept.filter("source = 'src1'").count() == 0
+    ids1 = {r["doc_id"] for r in kept.select("doc_id").collect()}
+    ids2 = {r["doc_id"] for r in text.sample_stratified(docs, rates, default_rate=0.4)
+            .select("doc_id").collect()}
+    assert ids1 == ids2  # re-run stable
+    sub = docs.filter(F.col("doc_id") % 3 == 0)
+    sub_kept = {r["doc_id"] for r in text.sample_stratified(sub, rates, default_rate=0.4)
+                .select("doc_id").collect()}
+    assert sub_kept == {i for i in ids1 if i % 3 == 0}  # growth stable
+
+
+def test_sample_stratified_threshold_rounds(spark):
+    """The keep threshold must round, not truncate — rate 0.3
+    is 299999.999… in float64; truncation silently drops bucket 299999."""
+    from dataflow_ordered_processing_spark.functions import text
+
+    docs = spark.createDataFrame(
+        [(i, "src0") for i in range(4000)], "doc_id long, source string"
+    )
+    kept = text.sample_stratified(docs, {"src0": 0.3})
+    bucket = text._md5_bucket(F.col("doc_id"), ":sample", 1_000_000)
+    expect = docs.filter(bucket < 300000)  # exact integer threshold
+    assert kept.count() == expect.count()
+    assert kept.exceptAll(expect).count() == 0
+
+
+def test_training_mix_matches_stagewise_composition(spark, sf_dir):
+    """training_mix's single-scan inline plan must return exactly what the
+    five standalone operators produce when chained by joins — the
+    composition is a plan-shape optimization, not a semantics change."""
+    from dataflow_ordered_processing_spark.functions import text
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    bench = docs.filter(F.col("doc_id") % 97 == 0)
+    got = text.training_mix(
+        docs, bench, lang="en", min_quality=0.3,
+        rates={"src0": 1.0, "src1": 0.5}, default_rate=0.2,
+    )
+    # stagewise reference: the standalone operators joined on doc_id
+    lang_ok = text.lang_id(docs).filter(F.col("lang_pred") == "en").select("doc_id")
+    q = text.quality_score(docs).filter(F.col("quality") >= 0.3).select(
+        "doc_id", "n_tokens", "quality"
+    )
+    flagged = text.decontaminate(docs, bench).select("doc_id")
+    surv = (
+        docs.select("doc_id", "source")
+        .join(lang_ok, "doc_id")
+        .join(q, "doc_id")
+        .join(flagged, "doc_id", "left_anti")
+    )
+    kept = text.sample_stratified(
+        surv, {"src0": 1.0, "src1": 0.5}, default_rate=0.2
+    )
+    want = kept.join(text.dataset_split(kept), "doc_id").select(
+        "doc_id", "source", "n_tokens", "quality", "split"
+    )
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
+    assert got.count() > 0
+
+
+def test_training_mix_plan_shape(spark, sf_dir):
+    """The 100-TB contract: exactly TWO corpus scans (inline features +
+    the contamination gram explode), the anti-join is broadcast, and no
+    sort-merge join anywhere."""
+    from dataflow_ordered_processing_spark.functions import text
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    bench = docs.filter(F.col("doc_id") % 97 == 0)
+    plan = text.training_mix(
+        docs, bench, lang="en", min_quality=0.3, rates={"src0": 1.0}
+    )._jdf.queryExecution().executedPlan().toString()
+    # scans: corpus (features) + corpus (doc grams) + bench (gram digest,
+    # itself a filtered corpus scan) = 3 parquet scans of the file, but
+    # only TWO full-corpus passes; no more than 3 scans total
+    assert plan.count("Scan parquet") <= 3, plan
+    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+    assert "SortMergeJoin" not in plan, plan

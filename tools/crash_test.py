@@ -110,8 +110,7 @@ def main() -> int:
     if args.pattern:
         # matches must ALSO be exactly-once across the crash replay and
         # equal the batch operator over the recovered ordered table
-        sys.path.insert(0, os.path.join(REPO, "jobs"))
-        from run_pipeline import parse_pattern
+        from jobs.run_pipeline import parse_pattern
 
         from dataflow_ordered_processing_spark.operators.cep_core import Times
         from dataflow_ordered_processing_spark.plans.cep import match_pattern
