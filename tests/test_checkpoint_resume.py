@@ -14,11 +14,7 @@ from dataflow_ordered_processing_spark.streaming import (
     BufferMetricsListener,
     start_ordered_pipeline,
 )
-from dataflow_ordered_processing_spark.streaming.sinks import (
-    SinkConfig,
-    _check_engine_marker,
-    read_sink,
-)
+from dataflow_ordered_processing_spark.streaming.sinks import SinkConfig, read_sink
 
 from streaming_utils import StagedStream
 
@@ -129,30 +125,3 @@ def test_lost_commit_log_replays_exactly_once(spark, tmp_path, engine, merge):
     got = _run_sink(spark, str(tmp_path / "replayed"), engine, merge, batches, lose_commit_after=1)
     assert got[2] is not None, "the restart did not re-run the uncommitted epoch"
     assert got[:2] == want[:2]
-
-
-def test_engine_marker_pins_n_shards(tmp_path):
-    ckpt = str(tmp_path / "ckpt")
-    _check_engine_marker(ckpt, "sharded", 256)
-    _check_engine_marker(ckpt, "sharded", 256)  # same config resumes fine
-    with pytest.raises(ValueError, match="n_shards"):
-        _check_engine_marker(ckpt, "sharded", 512)
-    with pytest.raises(ValueError):
-        _check_engine_marker(ckpt, "classic", None)
-
-
-def test_engine_marker_classic_ignores_shards(tmp_path):
-    # n_shards is irrelevant to the classic engine — must not trip the marker
-    ckpt = str(tmp_path / "ckpt")
-    _check_engine_marker(ckpt, "classic", 256)
-    _check_engine_marker(ckpt, "classic", 512)
-
-
-def test_marker_refuses_premarker_checkpoint(tmp_path):
-    """A checkpoint with committed state but no engine marker predates
-    config pinning — its n_shards is unknowable, so resume must refuse
-    instead of guessing (the default changed, silent re-keying risk)."""
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(os.path.join(ckpt, "offsets"))
-    with pytest.raises(ValueError, match="no.*marker|marker"):
-        _check_engine_marker(ckpt, "sharded", 256)

@@ -233,64 +233,6 @@ def test_ivf_topk_recall_and_self_cells(embs):
     assert (rows["cell"] == rows["vec_id"]).all()
 
 
-def test_redact_counts_match_insertions(spark):
-    df = spark.createDataFrame(
-        [(1, "contact a@1.2.3.4.net or 5.6.7.8"), (2, "x@y.com a@1.2.3.4.net")],
-        ["doc_id", "text"],
-    )
-    got = text.redact_pii(df).toPandas().set_index("doc_id")
-    # doc 1: the email consumes 1.2.3.4 — only the standalone ip counts
-    assert got.loc[1, "n_email"] == 1 and got.loc[1, "n_ipv4"] == 1
-    assert got.loc[1, "redacted"].count("<IPV4>") == got.loc[1, "n_ipv4"]
-    # doc 2: both matches are emails; no <IPV4> token is ever inserted
-    assert got.loc[2, "n_email"] == 2 and got.loc[2, "n_ipv4"] == 0
-    assert "<IPV4>" not in got.loc[2, "redacted"]
-
-
-def test_lsh_degenerate_bucket_capped(spark):
-    """Adversarial corpus: 500 identical docs share every band key. Without
-    a cap the band self-join expands 500²/2 pairs in ONE bucket; with the
-    cap the bucket is dropped (the exact tier owns identical docs) and the
-    query completes with no quadratic expansion."""
-    docs = spark.range(500).select(
-        F.col("id").alias("doc_id"), F.lit("same text everywhere here now").alias("text")
-    )
-    capped = dedup.minhash_lsh_pairs(docs, max_bucket=64)
-    assert capped.count() == 0  # mega-bucket excluded from pair expansion
-    stats = dedup.lsh_bucket_stats(docs).collect()
-    assert stats[0]["n_docs"] == 500  # the audit query exposes the cluster
-    # the cheaper exact tier still catches the cluster
-    ex = dedup.dedup_exact(docs).collect()
-    assert len(ex) == 1 and ex[0]["n_copies"] == 500
-    # a cap above every bucket size is a no-op vs the uncapped default:
-    # the capped path itself is lossless on benign data
-    benign = spark.range(6).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("distinct words for doc number "), F.col("id").cast("string")).alias("text"),
-    )
-    assert (
-        dedup.minhash_lsh_pairs(benign, max_bucket=64).collect()
-        == dedup.minhash_lsh_pairs(benign).collect()
-    )
-
-
-def test_vocab_topk_counts_and_tiebreak(spark):
-    df = spark.createDataFrame([(1, "a b b c C"), (2, "b  a\t x")], ["doc_id", "text"])
-    got = [(r["token"], r["n"]) for r in text.vocab_topk(df, k=3).collect()]
-    # case-folded, whitespace-split; ties broken by token for a stable cut
-    assert got == [("b", 3), ("a", 2), ("c", 2)]
-
-
-def test_doc_length_stats_exact(spark):
-    df = spark.createDataFrame(
-        [(i, "x" * n) for i, n in enumerate([4, 8, 10, 100])], ["doc_id", "text"]
-    )
-    row = text.doc_length_stats(df).collect()[0]
-    assert row["n_docs"] == 4 and row["max_chars"] == 100
-    assert row["p50_chars"] == 9.0  # exact percentile, linear interpolation
-    assert row["mean_chars"] == 30.5
-
-
 def _pairs(spark, *ab):
     return spark.createDataFrame(list(ab), "doc_a long, doc_b long")
 
@@ -431,3 +373,28 @@ def test_dedup_clusters_matches_union_find(edges):
         for r in dedup.dedup_clusters(docs, pairs).collect()
     }
     assert got == expected
+
+
+def test_ann_plan_shapes(spark, sf_dir):
+    """Plan pins for the reworked ANN paths: candidate generation must be a
+    BROADCAST equi-join on the bucket/cell key (never a cartesian product,
+    never a sort-merge join of the corpus), and the vectorized scorer must
+    appear as a single Arrow-batched python stage (ArrowEvalPython), not a
+    per-row codegen expression tree."""
+    embs = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    queries = embs.filter(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_embedding")
+    )
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    lsh = plan(similarity.lsh_topk(embs, queries, k=5, n_planes=4, n_tables=4))
+    assert "BroadcastHashJoin" in lsh
+    assert "CartesianProduct" not in lsh and "SortMergeJoin" not in lsh
+    assert "ArrowEvalPython" in lsh  # vectorized signatures + scorer
+
+    ivf = plan(similarity.ivf_topk(embs, queries, k=5, n_cells=8, n_probe=2))
+    assert "BroadcastHashJoin" in ivf
+    assert "CartesianProduct" not in ivf and "SortMergeJoin" not in ivf
+    assert "ArrowEvalPython" in ivf

@@ -254,37 +254,3 @@ def test_capped_drain_tombstone_ttl_counts_idle_firings(spark, tmp_path, engine)
     got = _data(spark, f"ttl_{engine}")
     assert list(got["turn_idx"]) == list(range(1, 11))
     assert list(got["emit_seq"]) == list(range(1, 11))
-
-
-def test_capped_drain_flushes_via_timer(spark, tmp_path):
-    # with max_emit_per_batch, the contiguous remainder
-    # must flush on processing-time timers even with NO further arrivals
-    cfg = OrderedStreamConfig(max_emit_per_batch=3, status_heartbeat_ms=300)
-    st_src = StagedStream(spark, str(tmp_path))
-    q = (
-        ordered_stream(st_src.source(), cfg)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("capflush")
-        .trigger(processingTime="300 milliseconds")
-        .start()
-    )
-
-    def n_data():
-        return spark.sql(
-            "SELECT count(*) c FROM capflush WHERE row_type='data'"
-        ).collect()[0]["c"]
-
-    try:
-        st_src.push(conversation(1, 10))  # one batch, cap 3 → 3 emitted now
-        deadline = time.time() + 120
-        while n_data() < 10 and time.time() < deadline:
-            time.sleep(0.5)
-        assert n_data() == 10, "capped remainder never flushed by the timer"
-        got = spark.sql(
-            "SELECT turn_idx, emit_seq FROM capflush WHERE row_type='data' ORDER BY turn_idx"
-        ).toPandas()
-        assert list(got["turn_idx"]) == list(range(1, 11))
-        assert list(got["emit_seq"]) == list(range(1, 11))
-    finally:
-        q.stop()

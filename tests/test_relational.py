@@ -1,55 +1,10 @@
-"""Relational plans over the TPC-H tables: broadcast join shapes, and
-integer-micro money sums that are addition-order free and, in decimal
-mode, survive int64 overflow."""
+"""Relational plans over the TPC-H tables: integer-micro money sums that,
+in decimal mode, survive int64 overflow."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from dataflow_ordered_processing_spark.plans import relational
 from dataflow_ordered_processing_spark.plans.relational import _micros, _sum_micros
-
-
-def test_relational_plan_shapes(spark, sf_dir):
-    """The join-planning contract at 100 TB: dimensions broadcast (no
-    sort-merge join anywhere), the date filter reaches the orders scan,
-    and top-k is TakeOrdered (no global sort)."""
-    plan = (
-        relational.revenue_by_nation(spark, sf_dir)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert plan.count("BroadcastHashJoin") == 4
-    assert "SortMergeJoin" not in plan
-    assert "GreaterThanOrEqual(o_orderdate" in plan  # predicate pushdown
-
-    topk = (
-        relational.top_brands_by_revenue(spark, sf_dir)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "TakeOrderedAndProject" in topk and "BroadcastHashJoin" in topk
-
-
-def test_pricing_summary_micros_deterministic(spark, sf_dir, tmp_path, monkeypatch):
-    """Integer-micro aggregation is addition-order independent: the same
-    query over a reshuffled input yields bit-identical sums."""
-    a = {
-        (r["l_returnflag"], r["l_linestatus"]): r["sum_charge_micros"]
-        for r in relational.pricing_summary(spark, sf_dir).collect()
-    }
-    d = str(tmp_path / "li13")
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").repartition(13).write.parquet(d)
-    orig = relational._t
-
-    def patched(spark_, sf, name):
-        if name == "lineitem":
-            return spark_.read.parquet(d)
-        return orig(spark_, sf, name)
-
-    monkeypatch.setattr(relational, "_t", patched)
-    b = {
-        (r["l_returnflag"], r["l_linestatus"]): r["sum_charge_micros"]
-        for r in relational.pricing_summary(spark, sf_dir).collect()
-    }
-    assert a == b
 
 
 def test_micros_sum_decimal_survives_int64_overflow(spark):

@@ -19,7 +19,7 @@ from streaming_utils import StagedStream
 @pytest.mark.parametrize("impl", ["sql", "pandas"])
 def test_initial_idx_discards_subinitial_rows(spark, impl):
     # rows below initial_idx are already-emitted history: discard as
-    # duplicates, never shift ranks (review finding #2); the salted plan is
+    # duplicates, never shift ranks; the salted plan is
     # held to the SQL one at initial_idx=3 in test_skew.py
     df = spark.createDataFrame(conversation(1, 10), schema=TRANSCRIPT_SCHEMA)
     out = ordered_emit_batch(df, impl=impl, initial_idx=5).toPandas()
@@ -38,7 +38,7 @@ def test_initial_idx_status_counts_subinitial_as_duplicates(spark):
 
 
 def test_capped_drain_flushes_via_timer(spark, tmp_path):
-    # review finding #1: with max_emit_per_batch, the contiguous remainder
+    # with max_emit_per_batch, the contiguous remainder
     # must flush on processing-time timers even with NO further arrivals
     cfg = OrderedStreamConfig(max_emit_per_batch=3, status_heartbeat_ms=300)
     st_src = StagedStream(spark, str(tmp_path))

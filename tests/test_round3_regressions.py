@@ -17,15 +17,20 @@ import os
 import pickle
 import time as _time
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from dataflow_ordered_processing_spark.functions import dedup, text
 from dataflow_ordered_processing_spark.operators import ordered_core as core
+from dataflow_ordered_processing_spark.plans import relational
 from dataflow_ordered_processing_spark.streaming import OrderedStreamConfig
 from dataflow_ordered_processing_spark.streaming.ordered_sharded import (
     _HB_AT,
     _TOMBS,
+    _conv_dumps,
+    _conv_to_tuple,
     make_sharded_func,
 )
 from dataflow_ordered_processing_spark.streaming.ordered_stream import (
@@ -35,6 +40,10 @@ from dataflow_ordered_processing_spark.streaming.ordered_stream import (
 from dataflow_ordered_processing_spark.streaming.sinks import (
     _check_engine_marker,
     epoch_dirs,
+)
+from dataflow_ordered_processing_spark.streaming.windows import (
+    _watermark_seconds,
+    start_first_match_join_pipeline,
 )
 
 from test_ordered_sharded import (  # reuse the fake-state harness
@@ -173,8 +182,6 @@ def test_epoch_dirs_skip_uncommitted(tmp_path):
 # ---------------------------------------------------------------- R3-4
 
 def test_redact_counts_match_insertions(spark):
-    from dataflow_ordered_processing_spark.functions import text
-
     df = spark.createDataFrame(
         [(1, "contact a@1.2.3.4.net or 5.6.7.8"), (2, "x@y.com a@1.2.3.4.net")],
         ["doc_id", "text"],
@@ -195,8 +202,6 @@ def test_lsh_degenerate_bucket_capped(spark):
     a cap the band self-join expands 500²/2 pairs in ONE bucket; with the
     cap the bucket is dropped (the exact tier owns identical docs) and the
     query completes with no quadratic expansion."""
-    from dataflow_ordered_processing_spark.functions import dedup
-
     docs = spark.range(500).select(
         F.col("id").alias("doc_id"), F.lit("same text everywhere here now").alias("text")
     )
@@ -207,9 +212,8 @@ def test_lsh_degenerate_bucket_capped(spark):
     # the cheaper exact tier still catches the cluster
     ex = dedup.dedup_exact(docs).collect()
     assert len(ex) == 1 and ex[0]["n_copies"] == 500
-    # a cap above every bucket size is a no-op vs the uncapped default —
-    # (r4: default flipped to None, so the cap is opt-in and this checks
-    # the capped path itself is lossless on benign data)
+    # a cap above every bucket size is a no-op vs the uncapped default:
+    # the capped path itself is lossless on benign data
     benign = spark.range(6).select(
         F.col("id").alias("doc_id"),
         F.concat(F.lit("distinct words for doc number "), F.col("id").cast("string")).alias("text"),
@@ -225,11 +229,6 @@ def test_lsh_degenerate_bucket_capped(spark):
 def test_first_match_watermark_guard():
     """Stream-stream join refuses unbounded-state watermarks on continuous
     streams; finite replays must say so explicitly."""
-    from dataflow_ordered_processing_spark.streaming.windows import (
-        _watermark_seconds,
-        start_first_match_join_pipeline,
-    )
-
     assert _watermark_seconds("10 minutes") == 600.0
     assert _watermark_seconds("2 days") == 172800.0
     with pytest.raises(ValueError, match="unbounded state"):
@@ -240,8 +239,6 @@ def test_first_match_watermark_guard():
 # ------------------------------------------------- new corpus-stats ops (r3)
 
 def test_vocab_topk_counts_and_tiebreak(spark):
-    from dataflow_ordered_processing_spark.functions import text
-
     df = spark.createDataFrame([(1, "a b b c C"), (2, "b  a\t x")], ["doc_id", "text"])
     got = [(r["token"], r["n"]) for r in text.vocab_topk(df, k=3).collect()]
     # case-folded, whitespace-split; ties broken by token for a stable cut
@@ -249,8 +246,6 @@ def test_vocab_topk_counts_and_tiebreak(spark):
 
 
 def test_doc_length_stats_exact(spark):
-    from dataflow_ordered_processing_spark.functions import text
-
     df = spark.createDataFrame(
         [(i, "x" * n) for i, n in enumerate([4, 8, 10, 100])], ["doc_id", "text"]
     )
@@ -268,10 +263,6 @@ def test_untouched_convs_not_repickled():
     entries byte-identical (the outer blob pickle then memcpys them —
     measured 13x cheaper per invocation at 10k pending convs / 100
     touched, the 100-TB sparse-touch regime)."""
-    from dataflow_ordered_processing_spark.streaming.ordered_sharded import (
-        _conv_dumps,
-    )
-    import numpy as np
 
     def pend(conv):
         buf = {
@@ -295,11 +286,6 @@ def test_untouched_convs_not_repickled():
 def test_legacy_tuple_state_blob_still_loads():
     """Checkpoints written before the pre-pickled format hold tuples —
     they must deserialize transparently (mixed dicts allowed)."""
-    import numpy as np
-    from dataflow_ordered_processing_spark.streaming.ordered_sharded import (
-        _conv_to_tuple,
-    )
-
     buf = {
         "turn_idx": np.array([2], dtype="int64"),
         "role": np.array(["user"], dtype=object),
@@ -333,8 +319,6 @@ def test_relational_plan_shapes(spark, sf_dir):
     """The join-planning contract at 100 TB: dimensions broadcast (no
     sort-merge join anywhere), the date filter reaches the orders scan,
     and top-k is TakeOrdered (no global sort)."""
-    from dataflow_ordered_processing_spark.plans import relational
-
     plan = (
         relational.revenue_by_nation(spark, sf_dir)
         ._jdf.queryExecution().executedPlan().toString()
@@ -350,42 +334,27 @@ def test_relational_plan_shapes(spark, sf_dir):
     assert "TakeOrderedAndProject" in topk and "BroadcastHashJoin" in topk
 
 
-def test_pricing_summary_micros_deterministic(spark, sf_dir):
+def test_pricing_summary_micros_deterministic(spark, sf_dir, tmp_path, monkeypatch):
     """Integer-micro aggregation is addition-order independent: the same
     query over a reshuffled input yields bit-identical sums."""
-    from dataflow_ordered_processing_spark.plans import relational
-
     a = {
         (r["l_returnflag"], r["l_linestatus"]): r["sum_charge_micros"]
         for r in relational.pricing_summary(spark, sf_dir).collect()
     }
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").repartition(13)
-    stage = str(spark._jvm.java.lang.System.getProperty("java.io.tmpdir"))
-    import tempfile
-
-    d = tempfile.mkdtemp(prefix="li13-")
-    li.write.mode("overwrite").parquet(d)
-
-    class _Spy:
-        pass
-
-    import dataflow_ordered_processing_spark.plans.relational as rel
-
-    orig = rel._t
+    d = str(tmp_path / "li13")
+    spark.read.parquet(f"{sf_dir}/lineitem.parquet").repartition(13).write.parquet(d)
+    orig = relational._t
 
     def patched(spark_, sf, name):
         if name == "lineitem":
             return spark_.read.parquet(d)
         return orig(spark_, sf, name)
 
-    rel._t = patched
-    try:
-        b = {
-            (r["l_returnflag"], r["l_linestatus"]): r["sum_charge_micros"]
-            for r in rel.pricing_summary(spark, sf_dir).collect()
-        }
-    finally:
-        rel._t = orig
+    monkeypatch.setattr(relational, "_t", patched)
+    b = {
+        (r["l_returnflag"], r["l_linestatus"]): r["sum_charge_micros"]
+        for r in relational.pricing_summary(spark, sf_dir).collect()
+    }
     assert a == b
 
 
@@ -411,8 +380,6 @@ def test_sweep_completion_honors_cleanup_on_complete():
     func = make_sharded_func(cfg)
     # pending buffer holds the full conversation incl. the end sentinel;
     # the sweep's drain completes it
-    import numpy as np
-
     buf = {
         "turn_idx": np.array([1, 2, 3], dtype="int64"),
         "role": np.array(["user", "assistant", core.END_ROLE], dtype=object),
@@ -420,10 +387,6 @@ def test_sweep_completion_honors_cleanup_on_complete():
         "tool": np.array([None] * 3, dtype=object),
         "ts_us": np.array([1, 2, 3], dtype="int64"),
     }
-    from dataflow_ordered_processing_spark.streaming.ordered_sharded import (
-        _conv_to_tuple,
-    )
-
     st0 = core.OrderedState(last_emitted=0, buffer=buf)
     st0.last_event_received = True
     state = _FakeState(_state_with({"cC": _conv_to_tuple(st0)}), timed_out=True)
@@ -446,21 +409,12 @@ def test_resurrected_conv_drops_stale_tombstone():
 
 
 def test_watermark_parser_lenient():
-    from dataflow_ordered_processing_spark.streaming.windows import (
-        _watermark_seconds,
-    )
-
     assert _watermark_seconds("1 hour 30 minutes") == 5400.0
     assert _watermark_seconds("interval 2 days") == 172800.0
     assert _watermark_seconds("complete gibberish here") is None  # fails open
 
 
 def test_watermark_parser_case_insensitive():
-    from dataflow_ordered_processing_spark.streaming.windows import (
-        _watermark_seconds,
-        start_first_match_join_pipeline,
-    )
-
     assert _watermark_seconds("24 HOURS") == 86400.0  # uppercase must parse
     assert _watermark_seconds("10 Minutes") == 600.0
     with pytest.raises(ValueError, match="unbounded state"):

@@ -1,8 +1,7 @@
 """Sink behaviors: DLQ on write failure, export formats, merge_on_key and
-its key index, epoch compaction and its visibility rules, the raw-channel
-guards. Epoch idempotency under crashes: test_sink_fault_matrix.py."""
+its key index, epoch compaction and its visibility rules. Epoch idempotency
+under crashes: test_sink_fault_matrix.py."""
 
-import datetime
 import fcntl
 import os
 import shutil
@@ -10,7 +9,6 @@ import tempfile
 from collections import Counter
 
 import pandas as pd
-import pyarrow.parquet as pq
 import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
@@ -270,19 +268,6 @@ def test_export_avro_overwrite_clears_stale_parts(spark, tmp_path):
     rows = sum(len(read_ocf(f)[1]) for f in files)
     assert rows == 3  # no stale rows from the 4-partition export
     assert not (set(files) & first) or len(files) < len(first)
-
-
-def test_epoch_dirs_skip_uncommitted(tmp_path):
-    base = str(tmp_path / "sink")
-    for e, committed in [(0, True), (1, False), (2, True)]:
-        d = os.path.join(base, f"epoch={e}")
-        os.makedirs(d)
-        with open(os.path.join(d, "part-0.parquet"), "w") as f:
-            f.write("x")
-        if committed:
-            open(os.path.join(d, "_SUCCESS"), "w").close()
-    got = [os.path.basename(p) for p in sk.epoch_dirs(base)]
-    assert got == ["epoch=0", "epoch=2"]  # partial epoch=1 invisible
 
 
 @given(st.data())
@@ -735,245 +720,3 @@ def test_visibility_partitions_epochs_exactly_once(tmp_path_factory, data):
         f"visible entries cover {sorted(covered)} != 0..{n_epochs - 1}; "
         f"entries={sk._sink_entries(base)}"
     )
-
-_UNIFIED_SCHEMA = (
-    "conv_id string, turn_idx long, row_type string, status_ts timestamp, "
-    "received_count long, result_count long"
-)
-
-
-def _data_row(conv, turn):
-    return (conv, turn, "data", None, None, None)
-
-
-def _status_row(conv, epoch):
-    ts = datetime.datetime(2026, 1, 1) + datetime.timedelta(seconds=epoch)
-    return (conv, None, "status", ts, epoch + 1, epoch + 1)
-
-
-def _n_persistent(spark):
-    return len(spark.sparkContext._jsc.getPersistentRDDs())
-
-
-def test_unpersist_on_writer_failure(spark, tmp_path, monkeypatch):
-    """When the epoch write fails, the persisted
-    micro-batch must still be unpersisted — a retrying runner otherwise
-    accumulates cached blocks across failures."""
-    path = os.path.join(str(tmp_path), "data")
-    dlq = os.path.join(str(tmp_path), "dlq")
-    cfg = sk.SinkConfig(data_path=path, dlq_path=dlq, validate=True)
-    wb = sk.split_sink(cfg)
-    real = sk._write_idempotent
-
-    def fail_data_writes(df, base, epoch_id):
-        if base == path:
-            raise OSError("disk full")
-        return real(df, base, epoch_id)
-
-    monkeypatch.setattr(sk, "_write_idempotent", fail_data_writes)
-    baseline = _n_persistent(spark)
-    batch = spark.createDataFrame([_data_row("c0", 1)], _UNIFIED_SCHEMA)
-    with pytest.raises(OSError, match="disk full"):
-        wb(batch, 0)
-    # the quarantine DLQ write happened, and no cached blocks leaked
-    assert os.path.isdir(os.path.join(dlq, "writer_error"))
-    assert _n_persistent(spark) == baseline
-
-
-def test_status_retention_at_compaction(spark, tmp_path):
-    """Folds prune status rows beyond the newest N per conv
-    among the rows the fold sees; data rows are untouched; the retained
-    window reads back exactly."""
-    path = os.path.join(str(tmp_path), "data")
-    wb = sk.split_sink(
-        sk.SinkConfig(
-            data_path=path,
-            validate=False,
-            compact_epochs_after=None,  # compact explicitly below
-        )
-    )
-    convs = ["a", "b"]
-    for e in range(8):
-        rows = [_data_row(c, e + 1) for c in convs] + [
-            _status_row(c, e) for c in convs
-        ]
-        wb(spark.createDataFrame(rows, _UNIFIED_SCHEMA), e)
-
-    before_status = (
-        sk.read_sink(spark, path, table="unified")
-        .filter(F.col("row_type") == "status")
-        .select("conv_id", "status_ts", "received_count")
-        .collect()
-    )
-    folds = sk.compact_data_epochs(
-        spark, path, fanout=4, grace_seconds=0, status_keep_last=2
-    )
-    assert folds == 1  # oldest 4 epochs folded; 4 level-0 epochs remain
-
-    unified = sk.read_sink(spark, path, table="unified")
-    # data rows: all 16 survive
-    assert unified.filter(F.col("row_type") == "data").count() == 16
-    status = unified.filter(F.col("row_type") == "status")
-    # per conv: newest 2 of the folded epochs 0-3, plus untouched 4-7
-    per_conv = {
-        r["conv_id"]: r["n"]
-        for r in status.groupBy("conv_id").agg(F.count("*").alias("n")).collect()
-    }
-    assert per_conv == {"a": 6, "b": 6}
-    kept = {
-        (r["conv_id"], r["received_count"]) for r in status.collect()
-    }
-    expect = {
-        (c, e + 1) for c in convs for e in (2, 3, 4, 5, 6, 7)
-    }  # epochs 0,1 pruned from the fold
-    assert kept == expect
-    # retained rows read back value-exact
-    before = {(r["conv_id"], r["received_count"]): r["status_ts"] for r in before_status}
-    for r in status.collect():
-        assert r["status_ts"] == before[(r["conv_id"], r["received_count"])]
-
-
-def test_compact_generation_clustered_by_key(spark, tmp_path):
-    """Compact generations are range-partitioned on conv_id
-    and sorted within partitions, so every parquet file is conv_id-sorted
-    and row groups carry tight min/max stats — the BigQuery-clustering
-    analog that lets per-key reads prune."""
-    path = os.path.join(str(tmp_path), "data")
-    wb = sk.split_sink(
-        sk.SinkConfig(data_path=path, validate=False, compact_epochs_after=None)
-    )
-    # interleave keys across epochs so an unordered fold would be unsorted
-    for e in range(5):
-        rows = [_data_row(f"conv{k:03d}", e + 1) for k in range(40)]
-        wb(spark.createDataFrame(rows, _UNIFIED_SCHEMA), e)
-    assert sk.compact_data_epochs(spark, path, fanout=4, grace_seconds=0) == 1
-    compact_dirs = [d for d in os.listdir(path) if d.startswith("compact=")]
-    assert len(compact_dirs) == 1
-    cdir = os.path.join(path, compact_dirs[0])
-    files = [f for f in os.listdir(cdir) if f.endswith(".parquet")]
-    assert files
-    for f in files:
-        pf = pq.ParquetFile(os.path.join(cdir, f))
-        vals = pf.read(columns=["conv_id"]).column("conv_id").to_pylist()
-        assert vals == sorted(vals)  # clustered: file is key-sorted
-        for rg in range(pf.metadata.num_row_groups):
-            col = pf.metadata.row_group(rg).column(0)
-            assert col.statistics is not None  # stats exist for pruning
-    # the fold still holds every row
-    assert sk.read_sink(spark, path, table="unified").count() == 200
-
-
-def test_compactor_refuses_raw_channel(spark, tmp_path):
-    """Compacting a raw passthrough channel would hide rows from
-    read_raw and then sweep the originals — the compactor must refuse, and
-    read_raw must fail loudly if compact= dirs ever appear under a raw
-    path (older-build damage)."""
-    raw = os.path.join(str(tmp_path), "hot_raw")
-    w = sk.raw_passthrough_sink(raw)
-    w(
-        spark.createDataFrame(
-            [("c0", 1, "user", "hi")], "conv_id string, turn_idx long, role string, text string"
-        ),
-        0,
-    )
-    with pytest.raises(ValueError, match="raw passthrough"):
-        sk.compact_data_epochs(spark, raw, fanout=2, grace_seconds=0)
-    assert sk.read_raw(spark, raw).count() == 1  # untouched
-    # simulated older-build damage: a committed compact dir under the raw path
-    dmg = os.path.join(raw, "compact=1-0-0")
-    os.makedirs(dmg)
-    open(os.path.join(dmg, "_SUCCESS"), "w").close()
-    with pytest.raises(RuntimeError, match="compacted by mistake"):
-        sk.read_raw(spark, raw)
-
-
-def test_unpersist_on_dlq_write_failure(spark, tmp_path, monkeypatch):
-    """A failing DLQ write (disk full) must not leak the persisted
-    micro-batch either: the unpersist scope starts before the first
-    persist(), ahead of the row-level DLQ split."""
-    path = os.path.join(str(tmp_path), "data")
-    dlq = os.path.join(str(tmp_path), "dlq")
-    cfg = sk.SinkConfig(data_path=path, dlq_path=dlq, validate=True)
-    wb = sk.split_sink(cfg)
-    real = sk._write_idempotent
-
-    def fail_dlq_writes(df, base, epoch_id):
-        if base == dlq:
-            raise OSError("dlq disk full")
-        return real(df, base, epoch_id)
-
-    monkeypatch.setattr(sk, "_write_idempotent", fail_dlq_writes)
-    baseline = _n_persistent(spark)
-    # one violating row (NULL conv_id) forces the row-level DLQ write
-    batch = spark.createDataFrame(
-        [_data_row("c0", 1), _data_row(None, 1)], _UNIFIED_SCHEMA
-    )
-    with pytest.raises(OSError, match="dlq disk full"):
-        wb(batch, 0)
-    assert _n_persistent(spark) == baseline
-
-
-def test_compactor_refuses_marked_raw_channel_even_with_row_type(spark, tmp_path):
-    """The schema sniff flips silently if a raw channel's schema
-    ever gains a row_type column — the _raw_channel marker written by
-    raw_passthrough_sink must refuse exactly, independent of schema."""
-    raw = os.path.join(str(tmp_path), "hot_raw")
-    w = sk.raw_passthrough_sink(raw)
-    # raw rows that HAPPEN to carry a row_type column (the heuristic's blind
-    # spot): the marker must still refuse compaction
-    w(
-        spark.createDataFrame(
-            [("c0", 1, "data")], "conv_id string, turn_idx long, row_type string"
-        ),
-        0,
-    )
-    assert os.path.exists(os.path.join(raw, "_raw_channel"))
-    with pytest.raises(ValueError, match="_raw_channel marker"):
-        sk.compact_data_epochs(spark, raw, fanout=2, grace_seconds=0)
-    assert sk.read_raw(spark, raw).count() == 1
-
-
-def test_unified_sniff_stateless_and_fresh(spark, tmp_path, monkeypatch):
-    """The raw-channel schema sniff is STATELESS (one local pyarrow footer
-    read per compact call, never a Spark job), so every layout change is
-    seen by the very next call: a memoized verdict replays stale on a sink
-    emptied in place and reused with a same-name epoch dir."""
-    path = os.path.join(str(tmp_path), "data")
-    wb = sk.split_sink(sk.SinkConfig(data_path=path))
-    wb(spark.createDataFrame([_data_row("c0", 1)], _UNIFIED_SCHEMA), 0)
-
-    # the sniff must not schedule Spark work: poison DataFrameReader for
-    # the guard's probe path by counting reads during a fold-less call
-    reads = {"n": 0}
-    real_sniff = sk._sniff_unified_layout
-
-    def counting_sniff(entries):
-        reads["n"] += 1
-        return real_sniff(entries)
-
-    monkeypatch.setattr(sk, "_sniff_unified_layout", counting_sniff)
-    sk.compact_data_epochs(spark, path, fanout=64, grace_seconds=0)
-    sk.compact_data_epochs(spark, path, fanout=64, grace_seconds=0)
-    assert reads["n"] == 2  # stateless: runs every call
-    monkeypatch.undo()
-
-    # sink EMPTIED IN PLACE and an OLD-BUILD raw writer (no _raw_channel
-    # marker) reuses the path with the SAME epoch dir name — the exact
-    # case every cached-verdict variant replayed a stale verdict on; the
-    # fresh sniff refuses
-    for d in os.listdir(path):
-        if d.startswith(("epoch=", "compact=")):
-            shutil.rmtree(os.path.join(path, d))
-    spark.createDataFrame(
-        [("c0", 1)], "conv_id string, turn_idx long"
-    ).write.parquet(os.path.join(path, "epoch=0"))
-    with pytest.raises(ValueError, match="no\\s+row_type"):
-        sk.compact_data_epochs(spark, path, fanout=64, grace_seconds=0)
-
-    # sink torn down entirely and recreated: same refusal
-    shutil.rmtree(path)
-    spark.createDataFrame(
-        [("c0", 1)], "conv_id string, turn_idx long"
-    ).write.parquet(os.path.join(path, "epoch=0"))
-    with pytest.raises(ValueError, match="no\\s+row_type"):
-        sk.compact_data_epochs(spark, path, fanout=64, grace_seconds=0)

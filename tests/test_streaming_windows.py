@@ -9,8 +9,6 @@ from dataflow_ordered_processing_spark.plans import analytics as A
 from dataflow_ordered_processing_spark.schemas import TRANSCRIPT_SCHEMA
 from dataflow_ordered_processing_spark.sources.scenarios import scenario
 from dataflow_ordered_processing_spark.streaming.windows import (
-    _watermark_seconds,
-    start_first_match_join_pipeline,
     stream_tumbling_tool_counts,
     stream_user_assistant_join,
 )
@@ -253,26 +251,3 @@ def test_first_match_pipeline_equals_batch_pairs(spark, tmp_path):
     )
     assert len(want) > 0
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
-
-
-def test_first_match_watermark_guard():
-    """Stream-stream join refuses unbounded-state watermarks on continuous
-    streams; finite replays must say so explicitly."""
-    assert _watermark_seconds("10 minutes") == 600.0
-    assert _watermark_seconds("2 days") == 172800.0
-    with pytest.raises(ValueError, match="unbounded state"):
-        # guard fires before the source is touched
-        start_first_match_join_pipeline(None, "x", "y", watermark="2 days")
-
-
-def test_watermark_parser_lenient():
-    assert _watermark_seconds("1 hour 30 minutes") == 5400.0
-    assert _watermark_seconds("interval 2 days") == 172800.0
-    assert _watermark_seconds("complete gibberish here") is None  # fails open
-
-
-def test_watermark_parser_case_insensitive():
-    assert _watermark_seconds("24 HOURS") == 86400.0  # uppercase must parse
-    assert _watermark_seconds("10 Minutes") == 600.0
-    with pytest.raises(ValueError, match="unbounded state"):
-        start_first_match_join_pipeline(None, "x", "y", watermark="24 HOURS")

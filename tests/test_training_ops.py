@@ -246,71 +246,3 @@ def test_sample_stratified_rates_and_stability(spark, sf_dir):
     sub_kept = {r["doc_id"] for r in text.sample_stratified(sub, rates, default_rate=0.4)
                 .select("doc_id").collect()}
     assert sub_kept == {i for i in ids1 if i % 3 == 0}  # growth stable
-
-
-def test_sample_stratified_threshold_rounds(spark):
-    """The keep threshold must round, not truncate — rate 0.3
-    is 299999.999… in float64; truncation silently drops bucket 299999."""
-    from dataflow_ordered_processing_spark.functions import text
-
-    docs = spark.createDataFrame(
-        [(i, "src0") for i in range(4000)], "doc_id long, source string"
-    )
-    kept = text.sample_stratified(docs, {"src0": 0.3})
-    bucket = text._md5_bucket(F.col("doc_id"), ":sample", 1_000_000)
-    expect = docs.filter(bucket < 300000)  # exact integer threshold
-    assert kept.count() == expect.count()
-    assert kept.exceptAll(expect).count() == 0
-
-
-def test_training_mix_matches_stagewise_composition(spark, sf_dir):
-    """training_mix's single-scan inline plan must return exactly what the
-    five standalone operators produce when chained by joins — the
-    composition is a plan-shape optimization, not a semantics change."""
-    from dataflow_ordered_processing_spark.functions import text
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    got = text.training_mix(
-        docs, bench, lang="en", min_quality=0.3,
-        rates={"src0": 1.0, "src1": 0.5}, default_rate=0.2,
-    )
-    # stagewise reference: the standalone operators joined on doc_id
-    lang_ok = text.lang_id(docs).filter(F.col("lang_pred") == "en").select("doc_id")
-    q = text.quality_score(docs).filter(F.col("quality") >= 0.3).select(
-        "doc_id", "n_tokens", "quality"
-    )
-    flagged = text.decontaminate(docs, bench).select("doc_id")
-    surv = (
-        docs.select("doc_id", "source")
-        .join(lang_ok, "doc_id")
-        .join(q, "doc_id")
-        .join(flagged, "doc_id", "left_anti")
-    )
-    kept = text.sample_stratified(
-        surv, {"src0": 1.0, "src1": 0.5}, default_rate=0.2
-    )
-    want = kept.join(text.dataset_split(kept), "doc_id").select(
-        "doc_id", "source", "n_tokens", "quality", "split"
-    )
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-    assert got.count() > 0
-
-
-def test_training_mix_plan_shape(spark, sf_dir):
-    """The 100-TB contract: exactly TWO corpus scans (inline features +
-    the contamination gram explode), the anti-join is broadcast, and no
-    sort-merge join anywhere."""
-    from dataflow_ordered_processing_spark.functions import text
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    plan = text.training_mix(
-        docs, bench, lang="en", min_quality=0.3, rates={"src0": 1.0}
-    )._jdf.queryExecution().executedPlan().toString()
-    # scans: corpus (features) + corpus (doc grams) + bench (gram digest,
-    # itself a filtered corpus scan) = 3 parquet scans of the file, but
-    # only TWO full-corpus passes; no more than 3 scans total
-    assert plan.count("Scan parquet") <= 3, plan
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
