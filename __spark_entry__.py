@@ -258,10 +258,11 @@ def _q_ordered_emit_salted(spark, sf_dir):
     return salted_ordered_emit_batch(_arrival_df(spark, sf_dir), block=64).select(*_ORDERED_COLS)
 
 
-def _q_ordered_stream(spark, sf_dir):
-    """The ACTUAL streaming operator (applyInPandasWithState) run to
-    completion with an availableNow trigger over the staged arrival,
-    returning the ordered data rows — same oracle as the batch path."""
+def _q_ordered_stream(spark, sf_dir, n_shards=None):
+    """The ACTUAL streaming operator (applyInPandasWithState keyed by hash
+    shard) run to completion with an availableNow trigger over the staged
+    arrival, returning the ordered data rows — same oracle as the batch
+    path. n_shards=None is the 8 × defaultParallelism default."""
     from dataflow_ordered_processing_spark.streaming import ordered_stream
     from dataflow_ordered_processing_spark.streaming.ordered_stream import split_output
     from dataflow_ordered_processing_spark.schemas import TRANSCRIPT_SCHEMA
@@ -269,9 +270,9 @@ def _q_ordered_stream(spark, sf_dir):
     stage = _stage_dir("ordered-src")
     _arrival_df(spark, sf_dir).write.mode("overwrite").parquet(stage)
     src = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(stage)
-    name = "ordered_stream_out"
+    name = f"ordered_stream_out_{n_shards or 'default'}"
     q = (
-        ordered_stream(src)
+        ordered_stream(src, n_shards=n_shards)
         .writeStream.outputMode("append")
         .format("memory")
         .queryName(name)
@@ -284,29 +285,9 @@ def _q_ordered_stream(spark, sf_dir):
 
 
 def _q_ordered_stream_sharded(spark, sf_dir):
-    """The sharded-state streaming engine (state keyed by hash shard, one
-    stateful invocation per shard per micro-batch — ~3x the classic
-    operator's throughput, see BENCH/BASELINE.md) run to completion over the
-    staged arrival; SAME exact oracle as every other ordering path."""
-    from dataflow_ordered_processing_spark.streaming import ordered_stream_sharded
-    from dataflow_ordered_processing_spark.streaming.ordered_stream import split_output
-    from dataflow_ordered_processing_spark.schemas import TRANSCRIPT_SCHEMA
-
-    stage = _stage_dir("ordered-sharded-src")
-    _arrival_df(spark, sf_dir).write.mode("overwrite").parquet(stage)
-    src = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(stage)
-    name = "ordered_sharded_out"
-    q = (
-        ordered_stream_sharded(src, n_shards=64)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    data, _ = split_output(spark.table(name))
-    return data.select(*_ORDERED_COLS)
+    """The streaming operator at a fixed 64 shards (more shards than the
+    default on a small host, so most shards hold few conversations)."""
+    return _q_ordered_stream(spark, sf_dir, n_shards=64)
 
 
 def _q_ordered_status(spark, sf_dir):
@@ -1206,8 +1187,8 @@ def _cep_funnel_rate_oracle() -> str:
 
 
 def _q_cep_stream(spark, sf_dir):
-    """CEP downstream of ordering in ONE streaming query: the classic
-    stateful engine orders the damaged out-of-order arrival AND matches the
+    """CEP downstream of ordering in ONE streaming query: the stateful
+    engine orders the damaged out-of-order arrival AND matches the
     strict pattern over its in-order emission (cfg.pattern; the (k-1)-turn
     carry stitches matches across micro-batch boundaries). Oracle = the
     same strict-lead SQL over the contiguous-prefix rows the stream can
@@ -1317,7 +1298,7 @@ _CEP_TIMES_ORACLE = _with_transcripts(
 
 
 def _q_cep_funnel_stream(spark, sf_dir):
-    """Skip-till-next CEP ON THE STREAM (r7): the classic stateful engine
+    """Skip-till-next CEP ON THE STREAM (r7): the stateful engine
     orders the damaged out-of-order arrival AND runs the funnel pattern
     (user → search → assistant, followedBy semantics, within bound) over
     its in-order emission in ONE streaming query — the partial-match
@@ -1363,7 +1344,7 @@ def _q_cep_funnel_stream(spark, sf_dir):
 def _q_cep_quant_stream(spark, sf_dir):
     """QUANTIFIED CEP on the stream (late r7): user → a maximal run of
     exactly 2 consecutive non-user turns (role IN (assistant, tool) — the
-    IN-set alphabet), matched by the classic engine over its in-order
+    IN-set alphabet), matched by the stateful engine over its in-order
     emission of the damaged arrival. The 24-file/8-per-trigger staging
     splits runs across micro-batch boundaries, so the open-run carry and
     the deferred (close-triggered) emission are genuinely driver-exercised.
@@ -1500,14 +1481,14 @@ def entry(spark: SparkSession) -> DataFrame:
 def _q_hotkey_routed(spark, sf_dir):
     """The hot-key routed pipeline END-TO-END (VERDICT r4 next-round #6):
     the busiest conversation is routed around the keyed streaming operator
-    into the raw side channel, everything else flows through the classic
+    into the raw side channel, everything else flows through the
     stateful engine into the epoch data sink, the side channel is ordered
     by the incremental salted batch pass, and the combined output is read
     back through read_pipeline_output (hot_ordered superseding the data
     sink). The combined rows must be indistinguishable from the unrouted
     pipeline — same _ORDERED_ORACLE as every other ordering path."""
     from dataflow_ordered_processing_spark.schemas import TRANSCRIPT_SCHEMA
-    from dataflow_ordered_processing_spark.streaming import build_ordered_stream
+    from dataflow_ordered_processing_spark.streaming import ordered_stream
     from dataflow_ordered_processing_spark.streaming.hotkey import (
         order_hot_channel,
         read_pipeline_output,
@@ -1542,7 +1523,7 @@ def _q_hotkey_routed(spark, sf_dir):
     )
     main = src.filter(F.col("conv_id").isNull() | (F.col("conv_id") != hot_conv))
     q = (
-        build_ordered_stream(main, None, engine="classic")
+        ordered_stream(main)
         .writeStream.outputMode("append")
         .foreachBatch(split_sink(SinkConfig(data_path=os.path.join(out, "data"))))
         .option("checkpointLocation", os.path.join(ckpt, "main"))

@@ -261,7 +261,9 @@ _NONE = np.array([INF_IDX])  # ends hop/guard tables: past the end reads "none"
 
 _CAND = ("anchor_idx", "anchor_ts_us", "wait", "cpos", "guard_seen")
 _OPEN = ("open_s", "open_s_ts", "open_e", "open_e_ts")
-SKIP_STATE_FIELDS = len(_CAND) + len(_OPEN) + 1  # + next_expected
+# the skip frontier's field count (+ next_expected), pinned in the
+# checkpoint marker as its format version (sinks._pattern_spec)
+SKIP_STATE_FIELDS = len(_CAND) + len(_OPEN) + 1
 _MATCH_COLS = ("start_idx", "end_idx", "ts_first_us", "ts_last_us")
 
 
@@ -507,75 +509,18 @@ def match_skip(
     return matches, new_fr
 
 
-def frontier_q_from_lists(
-    anchor_idx, anchor_ts_us, wait, cpos, guard_seen,
-    open_s, open_s_ts, open_e, open_e_ts, next_expected,
-) -> dict:
-    """Rebuild a skip frontier from state-schema lists — the ONE
-    deserializer shared by every engine's state layer (mirrors
-    carry_from_lists)."""
-    lists = (anchor_idx, anchor_ts_us, wait, cpos, guard_seen,
-             open_s, open_s_ts, open_e, open_e_ts)
-    return {
-        **{c: np.asarray(list(v or []), dtype="int64")
-           for c, v in zip(_CAND + _OPEN, lists)},
-        "next_expected": None if next_expected is None else int(next_expected),
-    }
-
-
-def frontier_q_to_lists(fr: dict) -> tuple:
-    return (
-        *([int(x) for x in fr[c]] for c in _CAND + _OPEN),
-        None if fr["next_expected"] is None else int(fr["next_expected"]),
-    )
-
-
-
-def carry_from_lists(idx, role, tool, ts_us) -> dict:
-    """Rebuild a carry dict from four (possibly-None) sequences — the ONE
-    deserializer shared by every engine's state layer."""
-    return {
-        "turn_idx": np.asarray(list(idx or []), dtype="int64"),
-        "role": np.asarray(list(role or []), dtype=object),
-        "tool": np.asarray(list(tool or []), dtype=object),
-        "ts_us": np.asarray(list(ts_us or []), dtype="int64"),
-    }
-
-
-def carry_to_lists(carry: dict) -> tuple[list, list, list, list]:
-    """Carry dict → four plain lists (state-schema friendly)."""
-    return (
-        [int(x) for x in carry["turn_idx"]],
-        list(carry["role"]),
-        list(carry["tool"]),
-        [int(x) for x in carry["ts_us"]],
-    )
-
-
-def empty_carry() -> dict:
-    return {
-        "turn_idx": np.empty(0, np.int64),
-        "role": np.empty(0, object),
-        "tool": np.empty(0, object),
-        "ts_us": np.empty(0, np.int64),
-    }
-
-
 @dataclass(frozen=True)
 class StreamMatcher:
-    """ONE mode dispatcher shared by both streaming engines (classic /
-    sharded), so the strict-vs-skip semantics, the per-mode state
-    codec, and the config validation can never drift between them. The
-    engine owns WHERE the state lives (tuple fields, shard map entry);
-    this object owns WHAT it means.
-
-    Two state shapes (each serializes to a fixed field count,
-    n_state_fields):
-      - strict → the (k-1)-turn carry (4 parallel lists)
+    """ONE mode dispatcher for the streaming engine, so the strict-vs-skip
+    semantics and the config validation live in one place. The engine owns
+    WHERE the state lives (the shard dict's CEP side map, pickled with the
+    shard); this object owns WHAT it means. Two state shapes, each a dict
+    of numpy arrays:
+      - strict → the (k-1)-turn carry of :func:`match_strict`
       - skip   → the partial-match frontier of :func:`match_skip`, the one
                  skip matcher for plain and quantified patterns alike
-                 (5 candidate lists + 4 per-quantified-step open-run lists
-                 + next_expected; 10 fields)
+                 (candidate arrays, per-quantified-step open runs and
+                 next_expected; SKIP_STATE_FIELDS)
     """
 
     steps: tuple
@@ -583,10 +528,6 @@ class StreamMatcher:
     within_us: int | None
     within_turns: int | None
     guards: dict  # {segment_i: Step}, skip mode only
-
-    @property
-    def n_state_fields(self) -> int:
-        return SKIP_STATE_FIELDS if self.mode == "skip" else 4
 
     def match(
         self, run: dict, state: dict | None, final: bool = False
@@ -602,21 +543,6 @@ class StreamMatcher:
                 final,
             )
         return match_strict(self.steps, run, state, self.within_us)
-
-    def empty_state(self) -> dict:
-        if self.mode == "skip":
-            return empty_frontier_q(sum(isinstance(s, Times) for s in self.steps))
-        return empty_carry()
-
-    def state_to_lists(self, st: dict) -> tuple:
-        if self.mode == "skip":
-            return frontier_q_to_lists(st)
-        return carry_to_lists(st)
-
-    def state_from_lists(self, *fields) -> dict:
-        if self.mode == "skip":
-            return frontier_q_from_lists(*fields)
-        return carry_from_lists(*fields)
 
 
 def expand_strict_times(steps) -> list:
@@ -660,7 +586,7 @@ def expand_strict_times(steps) -> list:
 
 
 def validate_pattern_knobs(pattern, mode, within_s, within_turns, not_between):
-    """THE shared config-time validation for every engine config
+    """THE config-time validation of the streaming config
     (OrderedStreamConfig.__post_init__): a pattern's knobs are
     checked by building its matcher; knobs without a pattern are refused."""
     if pattern is not None:

@@ -22,10 +22,10 @@ OrderBookProcessingPipelineTest.java:91-195):
       every batch.
 
 ``transition`` wraps ``apply_batch`` with every per-conversation policy
-decision of the streaming engines (arrival vs heartbeat timer, status,
+decision of the streaming engine (arrival vs heartbeat timer, status,
 TTL eviction, completion cleanup vs tombstone, CEP carry, timer re-arm);
-the classic and sharded engines are adapters around it that differ only in
-where the state lives.
+streaming/ordered_sharded.py only maps its disposition onto the shard's
+state dict.
 
 Everything is vectorized: one numpy sort + one contiguity scan per
 (key, batch) — no per-row Python (input_hint requirement).
@@ -134,7 +134,7 @@ class OrderedState:
 
 def counters(state: OrderedState) -> tuple:
     """The cursor and counters, in field order (last_emitted … chars): the
-    common prefix of both engines' state encodings."""
+    common prefix of a conversation entry and its tombstone."""
     return (
         state.last_emitted,
         state.received_count,

@@ -70,12 +70,9 @@ STREAM_OUTPUT_SCHEMA = T.StructType(
     ]
 )
 
-# CEP variants (streaming/ordered_stream.py cfg.pattern): the unified output
-# grows a third row_type 'match' with its own columns, and the state grows
-# the (k-1)-row carry of the last emitted turns so strict-contiguity matches
-# spanning micro-batch boundaries are found exactly once. SEPARATE schemas,
-# used only when a pattern is configured — existing checkpoints (and the
-# state-store schema-compat check) never see them.
+# CEP variant (streaming/ordered_stream.py cfg.pattern): the unified output
+# grows a third row_type 'match' with its own columns. A SEPARATE schema,
+# used only when a pattern is configured — pattern-less outputs never see it.
 _MATCH_FIELDS = [
     T.StructField("match_start_idx", T.LongType(), True),
     T.StructField("match_end_idx", T.LongType(), True),
@@ -86,70 +83,6 @@ _MATCH_FIELDS = [
 
 STREAM_OUTPUT_SCHEMA_CEP = T.StructType(
     list(STREAM_OUTPUT_SCHEMA.fields) + _MATCH_FIELDS
-)
-
-# applyInPandasWithState state struct: cursor + counters + columnar buffer of
-# pending (out-of-sequence) rows. The buffer is parallel arrays (not an array
-# of structs) so the pandas side can go straight to numpy without object
-# boxing. ts stored as int64 epoch-micros (timezone-proof).
-STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("last_emitted", T.LongType(), False),
-        T.StructField("received_count", T.LongType(), False),
-        T.StructField("result_count", T.LongType(), False),
-        T.StructField("duplicate_count", T.LongType(), False),
-        T.StructField("last_event_received", T.BooleanType(), False),
-        T.StructField("n_user", T.LongType(), False),
-        T.StructField("n_assistant", T.LongType(), False),
-        T.StructField("n_tool", T.LongType(), False),
-        T.StructField("chars", T.LongType(), False),
-        T.StructField("buf_turn_idx", T.ArrayType(T.LongType()), True),
-        T.StructField("buf_role", T.ArrayType(T.StringType()), True),
-        T.StructField("buf_text", T.ArrayType(T.StringType()), True),
-        T.StructField("buf_tool", T.ArrayType(T.StringType()), True),
-        T.StructField("buf_ts_us", T.ArrayType(T.LongType()), True),
-        # timer firings since the last arrival (drives idle-state eviction)
-        T.StructField("idle_heartbeats", T.LongType(), False),
-    ]
-)
-
-# STATE_SCHEMA + the CEP carry: the trailing (k-1) emitted turns, columnar
-# like the buffer. Only used when cfg.pattern is set (see note above).
-STATE_SCHEMA_CEP = T.StructType(
-    list(STATE_SCHEMA.fields)
-    + [
-        T.StructField("cep_turn_idx", T.ArrayType(T.LongType()), True),
-        T.StructField("cep_role", T.ArrayType(T.StringType()), True),
-        T.StructField("cep_tool", T.ArrayType(T.StringType()), True),
-        T.StructField("cep_ts_us", T.ArrayType(T.LongType()), True),
-    ]
-)
-
-# STATE_SCHEMA + the skip-mode (followedBy) partial-match frontier of
-# cep_core.match_skip, for plain and quantified patterns alike: per open
-# candidate the anchor turn/ts, the next step it waits for, cpos (its last
-# consumed turn — hop targets start strictly after it) and guard_seen (the
-# earliest pending guard row, for a wait on a quantified step); per
-# quantified step the start/end idx+ts of a predicate run still open at
-# the batch boundary; and the expected next turn_idx (the gap guard).
-# Distinct from STATE_SCHEMA_CEP because the payload types differ (all-int
-# arrays), so a checkpoint written under one pattern mode refuses the other
-# via the state store's schema-compat check instead of silently
-# mis-decoding.
-STATE_SCHEMA_CEP_SKIP_Q = T.StructType(
-    list(STATE_SCHEMA.fields)
-    + [
-        T.StructField("cep_anchor_idx", T.ArrayType(T.LongType()), True),
-        T.StructField("cep_anchor_ts_us", T.ArrayType(T.LongType()), True),
-        T.StructField("cep_wait", T.ArrayType(T.LongType()), True),
-        T.StructField("cep_cpos", T.ArrayType(T.LongType()), True),
-        T.StructField("cep_guard_seen", T.ArrayType(T.LongType()), True),
-        T.StructField("cep_open_s", T.ArrayType(T.LongType()), True),
-        T.StructField("cep_open_s_ts", T.ArrayType(T.LongType()), True),
-        T.StructField("cep_open_e", T.ArrayType(T.LongType()), True),
-        T.StructField("cep_open_e_ts", T.ArrayType(T.LongType()), True),
-        T.StructField("cep_next_expected", T.LongType(), True),
-    ]
 )
 
 SINK_SCHEMA = T.StructType(

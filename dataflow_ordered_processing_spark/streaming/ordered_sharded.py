@@ -1,42 +1,41 @@
-"""Sharded-state variant of the streaming ordered processor.
+"""The ordered stream: applyInPandasWithState keyed by hash shard.
 
-The classic operator (ordered_stream.py) keys applyInPandasWithState by
-conv_id: correct, but its throughput ceiling is the PER-GROUP invocation
-overhead — state Row marshalling, JVM↔Python chatter, and one output frame
-per key per micro-batch (~3.4 ms/group measured in round 1, while the actual
-numpy state-machine work is ~0.05 ms). This variant keys state by
-``shard = pmod(xxhash64(conv_id), n_shards)`` and keeps a DICTIONARY of
-per-conversation states inside one pickled binary state value:
+State is keyed by ``shard = pmod(xxhash64(conv_id), n_shards)``, and each
+shard's state is ONE pickled dictionary of per-conversation states:
 
-  - ONE stateful-group invocation per shard per micro-batch, amortizing the
-    invocation overhead over every active conversation in the shard;
-  - the inner loop runs the SAME per-conversation step as the classic
-    operator (ordered_core.transition), so emitted rows, statuses,
-    duplicate handling, capped drain, TTL eviction, cleanup and timer
-    re-arm decisions are made in one place (tests assert row-level
-    equality between the engines); this module only maps the step's
+  - one stateful-group invocation per shard per micro-batch, which
+    amortizes the per-group cost (state Row marshalling, JVM↔Python
+    chatter, one output frame per group) over every active conversation
+    in the shard; keying state by conv_id instead paid that cost per
+    conversation (~3.4 ms/group against ~0.05 ms of numpy work) and fell
+    behind on a live feed over 10k stalled conversations
+    (BENCH/engine_sweep_r12.json);
+  - the inner loop runs ``ordered_core.transition`` per conversation, which
+    decides emitted rows, statuses, duplicate handling, capped drain, TTL
+    eviction, cleanup and timer re-arm; this module only maps the step's
     disposition onto the shard dict;
+  - the CEP carry (strict) or frontier (skip) of each conversation is a
+    dict of numpy arrays kept in the ``_CEP`` side map and pickled with
+    the shard;
   - output frames are built once per shard from concatenated numpy columns
-    (the builder shared with the classic operator), not once per
-    conversation.
+    (``ordered_stream._Output``), not once per conversation.
 
-Trade-off (why both variants exist): the shard state blob is rewritten
-every micro-batch. Since round 3, per-conversation entries inside the dict
-are stored ADAPTIVELY: pre-pickled bytes when a batch touches a minority
-of the shard's conversations (untouched bytes then memcpy through the
-outer pickle — 11-13× cheaper per invocation at 10k pending convs / 100
-touched, the 10^12-turn sparse-touch shape), plain tuples when a batch
-touches the majority (dense replays — the nested dumps framing would cost
-~10%, measured by interleaved A/B at 4M rows). Mixed dicts load entry by
-entry. The remaining cost is O(total state bytes) memcpy per batch; a
-shard where gigabytes of buffers sit idle for hours still favors the
-classic per-key operator whose untouched keys cost literally nothing.
-n_shards should track total cores across the cluster (shards are the
-parallelism unit here — at 1000 executors give it 8-32k shards).
-``start_ordered_pipeline(n_shards=None)`` defaults to
-8 × defaultParallelism and pins the choice in a checkpoint marker (resuming
-with a different n_shards would silently re-key conversations to different
-shards, stranding their state — the marker fails fast instead).
+Cost: the shard blob is rewritten every micro-batch. Per-conversation
+entries inside the dict are stored ADAPTIVELY: pre-pickled bytes when a
+batch touches a minority of the shard's conversations (untouched bytes
+then memcpy through the outer pickle — 11-13× cheaper per invocation at
+10k pending convs / 100 touched, the sparse-touch shape), plain tuples
+when a batch touches the majority (dense replays — the nested dumps
+framing would cost ~10%, measured by interleaved A/B at 4M rows). Mixed
+dicts load entry by entry. What remains is O(total state bytes) memcpy
+per batch, so a shard where gigabytes of buffers sit idle for hours pays
+for them every batch: raise n_shards to split them. n_shards should track
+total cores across the cluster (shards are the parallelism unit — at 1000
+executors give it 8-32k shards). ``start_ordered_pipeline(n_shards=None)``
+defaults to 8 × defaultParallelism and pins the choice in a checkpoint
+marker (resuming with a different n_shards would silently re-key
+conversations to different shards, stranding their state — the marker
+fails fast instead).
 
 State growth: COMPLETED conversations (the TOMBSTONE disposition) shrink
 to a compact 9-int tombstone in a side map (``_TOMBS``) — the blob grows by
@@ -51,9 +50,9 @@ store's kept keys — set a TTL on long-running streams, or
 ``cleanup_on_complete=True`` to skip tombstones entirely and lean on the
 sink's merge_on_key for post-completion duplicates.
 
-Reference semantics: same contract as ordered_stream.py
-(OrderedEventProcessor / OrderBookProcessingPipeline.java:107-120 dual
-output; docs/pipeline-design.md ordering rules).
+Reference semantics: OrderedEventProcessor
+(OrderBookProcessingPipeline.java:107-120 dual output;
+docs/pipeline-design.md ordering rules); see ordered_stream.py.
 """
 
 from __future__ import annotations
@@ -187,8 +186,8 @@ def make_sharded_func(cfg: OrderedStreamConfig):
                 for c in ("conv_id", "turn_idx", "role", "text", "tool")
             }
             cols["ts_us"] = core.ts_to_us(batch["ts"]).to_numpy()
-            # NULL conv_ids factorize to -1: their own group, like the
-            # classic engine's NULL key (the sink routes it to the DLQ)
+            # NULL conv_ids factorize to -1: their own group (the sink
+            # routes it to the DLQ)
             codes, _ = pd.factorize(cols["conv_id"], sort=True)
             order = np.argsort(codes, kind="stable")
             cuts = np.flatnonzero(np.diff(codes[order])) + 1
@@ -221,8 +220,7 @@ def make_sharded_func(cfg: OrderedStreamConfig):
                 states[cid] = enc(st)
             # A busy shard's ProcessingTimeTimeout never fires (any arrival
             # reschedules it), which would starve idle co-sharded keys of
-            # heartbeats/TTL — the classic engine's PER-KEY timers have no
-            # such coupling. Restore the cadence: if a heartbeat interval
+            # heartbeats/TTL. Restore the cadence: if a heartbeat interval
             # elapsed since the last sweep, sweep the non-arriving keys now.
             if cfg.status_heartbeat_ms:
                 hb_at = states.get(_HB_AT)
@@ -253,13 +251,14 @@ def make_sharded_func(cfg: OrderedStreamConfig):
     return func
 
 
-def ordered_stream_sharded(
+def ordered_stream(
     df: DataFrame, cfg: OrderedStreamConfig | None = None, n_shards: int | None = None
 ) -> DataFrame:
-    """Sharded-state ordered processor: same unified data+status output as
-    ordered_stream (STREAM_OUTPUT_SCHEMA), state keyed by hash shard.
-    n_shards=None resolves through streaming.resolve_n_shards (the single
-    default definition)."""
+    """Apply the ordered processor to a (streaming or batch) transcripts
+    DataFrame. Returns the unified data+status(+match) stream
+    (STREAM_OUTPUT_SCHEMA, or STREAM_OUTPUT_SCHEMA_CEP with cfg.pattern),
+    state keyed by hash shard. n_shards=None resolves through
+    streaming.resolve_n_shards (the single default definition)."""
     from . import resolve_n_shards
 
     n_shards = resolve_n_shards(df, n_shards)

@@ -1,45 +1,37 @@
-"""The streaming ordered processor — applyInPandasWithState over conv_id.
+"""The ordered stream's contract: its config, its output rows and how they split.
 
 This is the Spark-native reimplementation of Beam's OrderedEventProcessor as
 used by the reference pipeline (OrderBookProducer.java:59-76, semantics from
-docs/pipeline-design.md and OrderBookProcessingPipelineTest.java:91-195):
+docs/pipeline-design.md and OrderBookProcessingPipelineTest.java:91-195).
+The engine that runs it is ``ordered_sharded.ordered_stream`` (exported as
+``streaming.ordered_stream``); this module holds what does not depend on
+where the state lives:
 
-  - groupBy("conv_id") hash-partitions the stream so each conversation's
-    state lives on exactly one partition (the GroupByKey the reference's
-    keyed state implies).
-  - Per key, state holds the last-emitted cursor, counters, and a sorted
-    columnar buffer of pending out-of-sequence turns (STATE_SCHEMA).
-  - Each micro-batch (or heartbeat timer firing) runs one
-    ordered_core.transition step: it appends the rows to the buffer,
-    drains the maximal contiguous run (ordered_core.apply_batch — all
-    vectorized), and decides the status, the CEP carry, TTL eviction,
-    completion cleanup vs tombstone, and the timer re-arm. This module
-    only decodes the STATE_SCHEMA* tuple and maps the step's disposition
-    onto state.update / state.remove; the sharded engine
-    (ordered_sharded.py) runs the same step per conversation.
-  - The same operator emits both ordered data rows and
-    OrderedProcessingStatus rows, discriminated by `row_type` — the
-    reference's dual-output (results + statuses,
-    OrderBookProcessingPipeline.java:107-120) — through the frame builder
-    (``_Output``) both engines share.
-  - A processing-time timeout emits heartbeat statuses for idle keys with
-    buffered gaps (the reference's timer-driven status,
-    OrderBookProcessingPipelineTest.java:214-215).
-  - When a key's final event was seen and its buffer is empty, state is
-    removed (cleanup on lastContractMessage,
-    OrderBookEventExaminer.java:46-49) or kept as a tombstone.
+  - ``OrderedStreamConfig``: the knobs of each per-conversation step
+    (``ordered_core.transition``): status cadence, capped drain, TTL
+    eviction, completion cleanup vs tombstone, and the CEP pattern.
+  - ``cfg_matcher``: the config's pattern knobs as one
+    ``cep_core.StreamMatcher``.
+  - ``_Output``: the frame builder. One operator emits ordered data rows,
+    OrderedProcessingStatus rows and CEP match rows, discriminated by
+    ``row_type`` — the reference's dual output (results + statuses,
+    OrderBookProcessingPipeline.java:107-120) in one schema.
+  - ``split_output`` / ``split_output_cep``: the unified stream back into
+    its channels with their natural schemas, inside ``foreachBatch``.
 
-At 100 TB: state is per-key O(pending gap), not O(history); the only shuffle
-is the hash exchange on conv_id; the Python boundary is Arrow-batched and
-every per-row operation is numpy. Mega-key skew is handled by the two-phase
-salted variant in operators/skew.py.
+Heartbeat statuses for idle keys with buffered gaps follow the reference's
+timer-driven status (OrderBookProcessingPipelineTest.java:214-215); state
+of a key whose final event was seen and whose buffer is empty is removed
+(cleanup on lastContractMessage, OrderBookEventExaminer.java:46-49) or
+kept as a tombstone. Mega-key skew is handled by the two-phase salted
+variant in operators/skew.py.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 from datetime import datetime, timezone
-from typing import Any, Iterator
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -48,13 +40,7 @@ from pyspark.sql import types as T
 
 from ..operators import cep_core
 from ..operators import ordered_core as core
-from ..schemas import (
-    STATE_SCHEMA,
-    STATE_SCHEMA_CEP,
-    STATE_SCHEMA_CEP_SKIP_Q,
-    STREAM_OUTPUT_SCHEMA,
-    STREAM_OUTPUT_SCHEMA_CEP,
-)
+from ..schemas import STREAM_OUTPUT_SCHEMA, STREAM_OUTPUT_SCHEMA_CEP
 
 _DEPTH_COLS = ["n_user_cum", "n_assistant_cum", "n_tool_cum", "chars_cum"]
 _DATA_COLS = ["turn_idx", "role", "text", "tool", "ts", "emit_seq", *_DEPTH_COLS]
@@ -97,13 +83,13 @@ class OrderedStreamConfig:
     # carry rides in the state and is dropped at completion). Under
     # cleanup_on_complete=True or a TTL eviction re-delivered turns re-emit
     # AND re-match; SinkConfig.merge_on_key dedupes both. Matches surface as
-    # row_type='match' rows; output/state use the *_CEP schema variants, so
-    # a checkpoint refuses a pattern change via the schema-compat check.
+    # row_type='match' rows in STREAM_OUTPUT_SCHEMA_CEP; the checkpoint's
+    # engine marker (sinks._pattern_spec) refuses a pattern change.
     pattern: tuple | None = None
     pattern_within_s: int | None = None  # FlinkCEP within() on first→last ts
     # "strict" (Flink `next`) or "skip" (Flink `followedBy`): skip state is a
     # partial-match FRONTIER (one open candidate per anchor, plain and
-    # quantified patterns alike) with its own state schema. Bound open
+    # quantified patterns alike) instead of a carry. Bound open
     # candidates with pattern_within_s / pattern_within_turns (otherwise
     # they live until completion).
     pattern_mode: str = "strict"
@@ -119,24 +105,6 @@ class OrderedStreamConfig:
             self.pattern_within_turns,
             self.pattern_not_between,
         )
-
-
-def _state_to_tuple(st: core.OrderedState) -> tuple:
-    # field order MUST match schemas.STATE_SCHEMA
-    return (
-        *core.counters(st),
-        *(core._col(st.buffer, c).tolist() for c in core.BUF_COLS),
-        st.idle_heartbeats,
-    )
-
-
-def _state_from_tuple(t: tuple) -> core.OrderedState:
-    buf = {
-        c: np.asarray(list(v or []), dtype=core._EMPTY_BUFFER[c].dtype)
-        for c, v in zip(core.BUF_COLS, t[9:14])
-    }
-    idle = t[14] if len(t) > 14 and t[14] is not None else 0
-    return core.OrderedState(*t[:9], idle_heartbeats=idle, buffer=buf)
 
 
 def _null(dtype: T.DataType, n: int):
@@ -158,8 +126,7 @@ def _frame(schema: T.StructType, n: int, cols: dict) -> pd.DataFrame:
 
 class _Output:
     """Output rows of one engine invocation, collected per conversation and
-    built into output frames once (data, matches, statuses). ONE builder for
-    both engines, so the row layout cannot drift."""
+    built into output frames once (data, matches, statuses)."""
 
     def __init__(self, has_cep: bool):
         self.schema = STREAM_OUTPUT_SCHEMA_CEP if has_cep else STREAM_OUTPUT_SCHEMA
@@ -221,8 +188,7 @@ class _Output:
 
 
 def cfg_matcher(cfg: "OrderedStreamConfig") -> cep_core.StreamMatcher | None:
-    """The config's pattern knobs → ONE StreamMatcher (shared with the
-    sharded engine so mode dispatch can't drift)."""
+    """The config's pattern knobs → ONE StreamMatcher."""
     if cfg.pattern is None:
         return None
     return cep_core.stream_matcher(
@@ -231,73 +197,6 @@ def cfg_matcher(cfg: "OrderedStreamConfig") -> cep_core.StreamMatcher | None:
         cfg.pattern_within_s,
         cfg.pattern_within_turns,
         cfg.pattern_not_between,
-    )
-
-
-def make_ordered_func(cfg: OrderedStreamConfig):
-    """Build the (key, pdf_iter, state) function for applyInPandasWithState:
-    decode the key's STATE_SCHEMA* tuple, run ordered_core.transition, and
-    map its disposition onto state.update / state.remove."""
-
-    matcher = cfg_matcher(cfg)
-    has_cep = matcher is not None
-
-    def func(key: tuple, pdfs: Iterator[pd.DataFrame], state: Any) -> Iterator[pd.DataFrame]:
-        conv_id = key[0]
-        carry = None
-        if state.exists:
-            t = tuple(state.get)
-            st = _state_from_tuple(t)
-            # CEP state fields start at position 15 (after idle_heartbeats)
-            # and span matcher.n_state_fields; absent/None → no carry
-            if has_cep and len(t) > 15 and t[15] is not None:
-                carry = matcher.state_from_lists(*t[15:15 + matcher.n_state_fields])
-        else:
-            st = core.OrderedState(last_emitted=cfg.initial_turn_idx - 1)
-        batch = None
-        if not state.hasTimedOut:
-            frames = list(pdfs)
-            batch = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
-        tr = core.transition(conv_id, st, carry, batch, cfg, matcher)
-        action, rearm_ms = tr.disposition
-        if action == core.REMOVE:
-            state.remove()
-        else:
-            t_new = _state_to_tuple(st)
-            if has_cep:
-                c = tr.carry if tr.carry is not None else matcher.empty_state()
-                t_new += tuple(matcher.state_to_lists(c))
-            state.update(t_new)
-            if rearm_ms:
-                state.setTimeoutDuration(rearm_ms)
-        out = _Output(has_cep)
-        out.add(conv_id, tr)
-        yield from out.frames()
-
-    return func
-
-
-def ordered_stream(df: DataFrame, cfg: OrderedStreamConfig | None = None) -> DataFrame:
-    """Apply the ordered processor to a (streaming or batch) transcripts
-    DataFrame. Returns the unified data+status stream (STREAM_OUTPUT_SCHEMA).
-    """
-    cfg = cfg or OrderedStreamConfig()
-    timeout = "ProcessingTimeTimeout" if cfg.status_heartbeat_ms else "NoTimeout"
-    has_cep = cfg.pattern is not None
-    if has_cep:
-        # per-mode state schema: the carry (strict) and the skip frontier
-        # have different field sets, so a checkpoint written under one
-        # refuses the other via the state-store schema-compat check
-        skip = cfg.pattern_mode == "skip"
-        state_schema = STATE_SCHEMA_CEP_SKIP_Q if skip else STATE_SCHEMA_CEP
-    else:
-        state_schema = STATE_SCHEMA
-    return df.groupBy("conv_id").applyInPandasWithState(
-        make_ordered_func(cfg),
-        outputStructType=STREAM_OUTPUT_SCHEMA_CEP if has_cep else STREAM_OUTPUT_SCHEMA,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=timeout,
     )
 
 

@@ -34,7 +34,8 @@ from pyspark.sql.window import Window
 
 from ..locking import committed_dirs, try_flock
 from ..operators.cep_core import SKIP_STATE_FIELDS, Times
-from .ordered_stream import OrderedStreamConfig, ordered_stream
+from .ordered_sharded import ordered_stream
+from .ordered_stream import OrderedStreamConfig
 
 
 @dataclass(frozen=True)
@@ -1069,22 +1070,22 @@ def _check_engine_marker(
     n_shards: int | None,
     pattern_spec: dict | None = None,
 ) -> None:
-    """Pin (engine, n_shards) to the checkpoint on first start; fail fast on
-    mismatch at resume. n_shards is baked into the sharded engine's state
-    key (pmod(xxhash64(conv_id), n_shards)) — resuming with a different
-    value silently re-keys conversations to different shards, stranding
-    their state (cursor, dedup counters, pending buffer): already-emitted
-    turns would re-emit with fresh emit_seq and buffered turns would drop.
-    Same for switching engines (state schemas are incompatible). A marker
-    file next to the checkpoint makes the mismatch an error, not data loss.
-    (Local-fs marker: on HDFS/S3 checkpoints, pin via job config instead.)"""
+    """Pin (engine, n_shards, pattern) to the checkpoint on first start;
+    fail fast on mismatch at resume. n_shards is baked into the state key
+    (pmod(xxhash64(conv_id), n_shards)) — resuming with a different value
+    silently re-keys conversations to different shards, stranding their
+    state (cursor, dedup counters, pending buffer): already-emitted turns
+    would re-emit with fresh emit_seq and buffered turns would drop. A
+    marker file next to the checkpoint makes the mismatch an error, not
+    data loss. (Local-fs marker: on HDFS/S3 checkpoints, pin via job
+    config instead.)"""
     path = checkpoint.removeprefix("file:")
     if not os.path.isdir(path):  # first start — checkpoint not created yet
         os.makedirs(path, exist_ok=True)
     marker = os.path.join(path, "_ordered_engine.json")
     current = {
         "engine": engine,
-        "n_shards": n_shards if engine == "sharded" else None,
+        "n_shards": n_shards,
         "pattern": pattern_spec,
     }
     if not os.path.exists(marker) and os.path.isdir(os.path.join(path, "offsets")):
@@ -1105,6 +1106,12 @@ def _check_engine_marker(
 
         with open(marker) as f:
             prior = json.load(f)
+        if prior.get("engine") == "classic":
+            raise ValueError(
+                f"checkpoint {checkpoint!r} was written by the classic "
+                "per-conv_id engine, which was removed: its state cannot be "
+                "read by the shard-keyed engine. Start a fresh checkpoint."
+            )
         # pre-CEP markers carry no "pattern" key; they pinned pattern-less
         # configs, so normalize rather than refusing every old checkpoint.
         # Ditto the short-lived list form (steps only, no within) — upgrade
@@ -1122,8 +1129,8 @@ def _check_engine_marker(
         if prior != current:
             raise ValueError(
                 f"checkpoint {checkpoint!r} was written by engine config "
-                f"{prior}, cannot resume with {current}: the sharded state "
-                "key depends on n_shards, so a mismatch strands per-"
+                f"{prior}, cannot resume with {current}: the state key "
+                "depends on n_shards, so a mismatch strands per-"
                 "conversation state and breaks exactly-once. Use the prior "
                 "config or start a fresh checkpoint."
             )
@@ -1138,22 +1145,19 @@ def _marked_ordered_stream(
     source: DataFrame,
     checkpoint: str | None,
     cfg: OrderedStreamConfig | None = None,
-    engine: str | None = None,
     n_shards: int | None = None,
 ) -> DataFrame:
-    """Resolve the engine (None → streaming.DEFAULT_ENGINE) and its shard
-    count, pin both and the pattern in the checkpoint marker, and build the
-    unified ordered stream — the one wiring every pipeline entrypoint uses."""
-    from . import DEFAULT_ENGINE, build_ordered_stream, resolve_n_shards
+    """Resolve the shard count, pin it and the pattern in the checkpoint
+    marker, and build the unified ordered stream — the one wiring every
+    pipeline entrypoint uses."""
+    from . import resolve_n_shards
 
-    engine = engine or DEFAULT_ENGINE
-    if engine == "sharded":
-        n_shards = resolve_n_shards(source, n_shards)
+    n_shards = resolve_n_shards(source, n_shards)
     if checkpoint:
         c = cfg or OrderedStreamConfig()
         _check_engine_marker(
             checkpoint,
-            engine,
+            "sharded",
             n_shards,
             _pattern_spec(
                 c.pattern,
@@ -1163,28 +1167,24 @@ def _marked_ordered_stream(
                 c.pattern_not_between,
             ),
         )
-    return build_ordered_stream(source, cfg, engine=engine, n_shards=n_shards)
+    return ordered_stream(source, cfg, n_shards=n_shards)
 
 
 def start_ordered_pipeline(
     source: DataFrame,
     sink: SinkConfig,
     stream_cfg: OrderedStreamConfig | None = None,
-    engine: str | None = None,
     n_shards: int | None = None,
 ) -> StreamingQuery:
     """Wire source → ordered processor → dual sink; return the running query.
 
     ``source`` is a streaming DataFrame with TRANSCRIPT_SCHEMA (e.g.
     readStream over an Iceberg/parquet directory of arrival batches).
-    ``engine=None`` means streaming.DEFAULT_ENGINE; 'sharded' is the
-    shard-keyed state variant (same output, ~3× throughput; see
-    ordered_sharded.py), 'classic' keys state per conv_id.
     ``n_shards=None`` resolves to 8 × defaultParallelism — the measured
     sweet spot (~8 shards per core, BENCH/BASELINE.md shard sweep); the
     choice is pinned in a checkpoint marker and validated on resume.
     """
-    unified = _marked_ordered_stream(source, sink.checkpoint, stream_cfg, engine, n_shards)
+    unified = _marked_ordered_stream(source, sink.checkpoint, stream_cfg, n_shards)
     writer = (
         unified.writeStream.outputMode("append")
         .foreachBatch(split_sink(sink))

@@ -276,8 +276,6 @@ def parse_not_between(spec: str) -> dict:
 
 
 def main() -> int:
-    from dataflow_ordered_processing_spark.streaming import DEFAULT_ENGINE
-
     ap = argparse.ArgumentParser()
     ap.add_argument("--source", required=True, help="directory of arrival parquet files")
     ap.add_argument("--out", required=True, help="output base dir (data/, status/, dlq/)")
@@ -302,13 +300,6 @@ def main() -> int:
     )
     ap.add_argument("--master", default=None, help="override master (tests/bench only)")
     ap.add_argument(
-        "--hdfs-state-store",
-        action="store_true",
-        help="use the default HDFS-backed (in-heap) state store instead of "
-        "RocksDB (RocksDB is the default: off-heap state avoids the "
-        "HDFS store's per-version in-heap maps and scales better)",
-    )
-    ap.add_argument(
         "--shuffle-partitions",
         type=int,
         default=None,
@@ -328,14 +319,9 @@ def main() -> int:
         help="split the bounded input into multiple micro-batches (enables "
         "sustained-throughput measurement over steady-state batches)",
     )
-    ap.add_argument(
-        "--engine",
-        choices=["classic", "sharded"],
-        default=DEFAULT_ENGINE,
-        help="classic = state per conv_id (applyInPandasWithState per key); "
-        "sharded = state per hash shard, one invocation per shard per batch "
-        "(amortizes per-group overhead across conversations)",
-    )
+    # the shard-keyed engine is the only one; the option stays so existing
+    # `--engine sharded` command lines keep working
+    ap.add_argument("--engine", choices=["sharded"], default="sharded", help=argparse.SUPPRESS)
     ap.add_argument(
         "--export",
         choices=["avro", "json", "parquet"],
@@ -348,7 +334,7 @@ def main() -> int:
         "--n-shards",
         type=int,
         default=None,
-        help="shard count for --engine sharded; default 8 x defaultParallelism "
+        help="state shard count; default 8 x defaultParallelism "
         "(measured sweet spot). PINNED to the checkpoint on first start: "
         "n_shards is baked into the state key, so resuming an existing "
         "checkpoint with a different value is refused (it would strand "
@@ -426,7 +412,7 @@ def main() -> int:
         "rows (read back with read_sink(..., table='matches')). Comma-"
         "separated steps 'name=role' or 'name=role/tool' or 'name=/tool', "
         "e.g. 'u=user,a=assistant,c=tool/code'. The pattern is pinned in "
-        "the checkpoint engine marker (the state schema depends on it)",
+        "the checkpoint engine marker (the CEP state depends on it)",
     )
     ap.add_argument(
         "--pattern-within-s",
@@ -509,11 +495,12 @@ def main() -> int:
     spark = get_spark(
         "ordered-pipeline", master=args.master, shuffle_partitions=args.shuffle_partitions
     )
-    if not args.hdfs_state_store:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
+    # RocksDB: off-heap state, no per-version in-heap maps; no worse than
+    # the HDFS-backed store on live p50/p99 (BENCH/engine_sweep_r12.json)
+    spark.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
     spark.streams.addListener(
         BufferMetricsListener(os.path.join(args.out, "metrics.jsonl"))
     )
@@ -598,7 +585,7 @@ def main() -> int:
             F.col("conv_id").isNull() | ~F.col("conv_id").isin(hot_list)
         )
 
-    unified = _marked_ordered_stream(src, args.checkpoint, cfg, args.engine, args.n_shards)
+    unified = _marked_ordered_stream(src, args.checkpoint, cfg, args.n_shards)
     writer = (
         unified.writeStream.outputMode("append")
         .foreachBatch(split_sink(sink))

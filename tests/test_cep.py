@@ -20,7 +20,6 @@ from hypothesis import strategies as st
 
 from dataflow_ordered_processing_spark.operators.cep_core import (
     Step,
-    empty_carry,
     match_strict,
 )
 from dataflow_ordered_processing_spark.plans.cep import match_pattern
@@ -131,7 +130,7 @@ def test_match_strict_chunked_equals_reference(raw, cuts, within, steps):
     rows = _mk_rows(raw)
     expect = ref_strict(rows, steps, within)
     bounds = sorted({c for c in cuts if c < len(rows)} | {0, len(rows)})
-    carry = empty_carry()
+    carry = None
     got = []
     for lo, hi in zip(bounds, bounds[1:]):
         m, carry = match_strict(steps, _to_cols(rows[lo:hi]), carry, within)
@@ -143,14 +142,14 @@ def test_match_strict_never_matches_across_gap():
     rows = _mk_rows([("user", None, 1), ("assistant", None, 1),
                      ("tool", "code", 1)])
     rows[2]["turn_idx"] = 5  # gap: 1,2,5
-    m, _ = match_strict(STEPS3, _to_cols(rows), empty_carry())
+    m, _ = match_strict(STEPS3, _to_cols(rows))
     assert len(m["start_idx"]) == 0
 
 
 def test_match_strict_carry_spans_batches():
     rows = _mk_rows([("user", None, 1), ("assistant", None, 1),
                      ("tool", "code", 1)])
-    m1, carry = match_strict(STEPS3, _to_cols(rows[:2]), empty_carry())
+    m1, carry = match_strict(STEPS3, _to_cols(rows[:2]))
     assert len(m1["start_idx"]) == 0
     m2, _ = match_strict(STEPS3, _to_cols(rows[2:]), carry)
     assert m2["start_idx"].tolist() == [1] and m2["end_idx"].tolist() == [3]

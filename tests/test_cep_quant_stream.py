@@ -8,6 +8,7 @@ the conversation's completion proves it maximal.
 
 from __future__ import annotations
 
+import pickle
 import random
 
 import numpy as np
@@ -17,8 +18,6 @@ import pytest
 from dataflow_ordered_processing_spark.operators.cep_core import (
     Step,
     Times,
-    frontier_q_from_lists,
-    frontier_q_to_lists,
     match_skip,
 )
 from dataflow_ordered_processing_spark.plans.cep import match_pattern
@@ -95,7 +94,7 @@ def _stream_got(spark, tmp_path, batches, cfg, **run_kw):
         q.stop()
 
 
-def test_quant_stream_equals_batch_classic(spark, tmp_path):
+def test_quant_stream_equals_batch(spark, tmp_path):
     full = _random_convs(3)
     b1 = full[full.turn_idx % 2 == 0]
     b2 = pd.concat([full[full.turn_idx % 2 == 1], full.head(6)], ignore_index=True)
@@ -116,7 +115,7 @@ def test_quant_stream_equals_batch_sharded(spark, tmp_path):
         pattern=STEPS, pattern_mode="skip", pattern_within_turns=9
     )
     got = _stream_got(
-        spark, tmp_path, [b1, b2, b3], cfg, engine="sharded", n_shards=4
+        spark, tmp_path, [b1, b2, b3], cfg, n_shards=4
     )
     expect = _batch_expected(spark, full, within_turns=9)
     assert got == expect and len(got) > 0
@@ -174,8 +173,8 @@ def test_quant_final_flush_closes_open_run(spark, tmp_path):
 
 def test_quant_property_vs_bruteforce():
     """Randomized roles/tools, quantifier bounds, guards, within bounds,
-    arbitrary micro-batch splits, frontier round-tripped through the state
-    codec every hop, completion flush on the last chunk."""
+    arbitrary micro-batch splits, frontier round-tripped through pickle
+    every hop, completion flush on the last chunk."""
 
     def brute(steps, rows, within_us, within_turns, guards):
         def ism(st, p):
@@ -302,7 +301,7 @@ def test_quant_property_vs_bruteforce():
                 steps, rn, fr, within_us, within_turns, guards,
                 final=(i == len(rows)),
             )
-            fr = frontier_q_from_lists(*frontier_q_to_lists(fr))
+            fr = pickle.loads(pickle.dumps(fr))
             got.extend(zip(mm["start_idx"].tolist(), mm["end_idx"].tolist()))
         assert sorted(got) == expect, (
             f"trial {trial}: {steps} guards={guards} "
@@ -322,42 +321,23 @@ def test_quant_state_schema_and_marker(tmp_path):
     plain = (Step("t", role="tool"), Step("u", role="user"))
     quant = (Times(Step("t", role="tool"), 2, None), Step("u", role="user"))
     ckpt = os.path.join(str(tmp_path), "ckpt")
-    _check_engine_marker(ckpt, "classic", None, _pattern_spec(quant, None, "skip"))
-    _check_engine_marker(ckpt, "classic", None, _pattern_spec(quant, None, "skip"))
+    _check_engine_marker(ckpt, "sharded", 8, _pattern_spec(quant, None, "skip"))
+    _check_engine_marker(ckpt, "sharded", 8, _pattern_spec(quant, None, "skip"))
     with pytest.raises(ValueError, match="cannot resume"):
         _check_engine_marker(
-            ckpt, "classic", None, _pattern_spec(plain, None, "skip")
+            ckpt, "sharded", 8, _pattern_spec(plain, None, "skip")
         )
     with pytest.raises(ValueError, match="cannot resume"):
         _check_engine_marker(
             ckpt,
-            "classic",
-            None,
+            "sharded",
+            8,
             _pattern_spec(
                 (Times(Step("t", role="tool"), 3, None), Step("u", role="user")),
                 None,
                 "skip",
             ),
         )
-
-
-def test_quant_classic_state_tuple_has_q_fields():
-    from test_cep_stream import _FakeGroupState
-
-    from dataflow_ordered_processing_spark.streaming.ordered_stream import (
-        make_ordered_func,
-    )
-
-    full = _random_convs(11, n_convs=1, max_turns=14)
-    cfg = OrderedStreamConfig(pattern=STEPS, pattern_mode="skip")
-    func = make_ordered_func(cfg)
-    state = _FakeGroupState()
-    list(func(("q000",), iter([full.iloc[:8]]), state))
-    assert len(state.get) == 25  # 15 base + 10 quant-frontier fields
-    list(func(("q000",), iter([full.iloc[8:]]), state))
-    done = state.get
-    # completion dropped candidates and open runs
-    assert list(done[15]) == [] and all(v == -1 for v in done[20])
 
 
 def test_quant_validation_and_strict_expansion():
@@ -443,13 +423,13 @@ def test_in_set_marker_roundtrip(tmp_path):
     )
     ckpt = os.path.join(str(tmp_path), "ckpt")
     spec = _pattern_spec(steps, None, "skip")
-    _check_engine_marker(ckpt, "classic", None, spec)
-    _check_engine_marker(ckpt, "classic", None, _pattern_spec(steps, None, "skip"))
+    _check_engine_marker(ckpt, "sharded", 8, spec)
+    _check_engine_marker(ckpt, "sharded", 8, _pattern_spec(steps, None, "skip"))
     with pytest.raises(ValueError, match="cannot resume"):
         _check_engine_marker(
             ckpt,
-            "classic",
-            None,
+            "sharded",
+            8,
             _pattern_spec(
                 (Times(Step("b", role=("tool", "assistant")), 2, None),
                  Step("u", role="user")),

@@ -2,11 +2,12 @@
 `followedBy`): the engine-integrated frontier matcher must find exactly the
 batch operator's matches (plans/cep.match_pattern(mode='skip') — the pinned
 oracle-exact semantics) across micro-batch boundaries, out-of-order arrival,
-duplicates, and both engines — each match exactly once.
+and duplicates — each match exactly once.
 """
 
 from __future__ import annotations
 
+import pickle
 import random
 
 import numpy as np
@@ -15,8 +16,6 @@ import pytest
 
 from dataflow_ordered_processing_spark.operators.cep_core import (
     Step,
-    frontier_q_from_lists,
-    frontier_q_to_lists,
     match_skip,
     stream_matcher,
 )
@@ -109,7 +108,7 @@ def test_skip_sharded_equals_batch(spark, tmp_path):
     full, batches = _damaged_batches()
     cfg = OrderedStreamConfig(pattern=STEPS, pattern_mode="skip")
     got = _stream_matches(
-        spark, tmp_path, batches, cfg, engine="sharded", n_shards=4
+        spark, tmp_path, batches, cfg, n_shards=4
     )
     _assert_equal(got, _batch_expected(spark, full))
 
@@ -152,8 +151,8 @@ def test_skip_stream_not_between_guard(spark, tmp_path):
 
 def test_skip_property_vs_bruteforce():
     """Randomized splits / bounds / guards vs a pure-Python brute-force
-    oracle, with the frontier round-tripped through the state-list codec
-    every hop (exactly what the engines persist). A candidate waiting on a
+    oracle, with the frontier round-tripped through pickle every hop
+    (exactly what the engine persists). A candidate waiting on a
     (plain) step whose segment guard row has already arrived is dead: it
     must not stay in the returned frontier."""
 
@@ -233,7 +232,7 @@ def test_skip_property_vs_bruteforce():
                 "ts_us": np.array([r[3] for r in chunk], dtype=np.int64),
             }
             m, fr = match_skip(steps, run, fr, within_us, within_turns, guards)
-            fr = frontier_q_from_lists(*frontier_q_to_lists(fr))
+            fr = pickle.loads(pickle.dumps(fr))
             for w, cpos in zip(fr["wait"].tolist(), fr["cpos"].tolist()):
                 g = (guards or {}).get(w - 1)
                 assert g is None or not any(
@@ -280,20 +279,20 @@ def test_skip_frontier_dropped_at_completion():
     candidates (they can never complete — the sentinel ends the scope)."""
     from test_cep_stream import _FakeGroupState
 
-    from dataflow_ordered_processing_spark.streaming.ordered_stream import (
-        make_ordered_func,
+    from dataflow_ordered_processing_spark.streaming.ordered_sharded import (
+        _CEP,
+        make_sharded_func,
     )
 
     full = scenarios.conversation(1, 6)
     cfg = OrderedStreamConfig(pattern=STEPS, pattern_mode="skip")
-    func = make_ordered_func(cfg)
+    func = make_sharded_func(cfg)
     state = _FakeGroupState()
-    list(func(("conv-000001",), iter([full.iloc[:4]]), state))
-    mid = state.get
-    assert len(mid) == 25 and len(mid[15]) > 0  # open anchors carried
-    list(func(("conv-000001",), iter([full.iloc[4:]]), state))
-    done = state.get
-    assert list(done[15]) == [] and list(done[17]) == []  # frontier dropped
+    list(func((0,), iter([full.iloc[:4]]), state))
+    fr = pickle.loads(state.get[0])[_CEP]["conv-000001"]
+    assert len(fr["anchor_idx"]) > 0  # open anchors carried
+    list(func((0,), iter([full.iloc[4:]]), state))
+    assert _CEP not in pickle.loads(state.get[0])  # frontier dropped
 
 
 def test_config_validation():
@@ -325,13 +324,13 @@ def test_marker_pins_mode(tmp_path):
 
     ckpt = os.path.join(str(tmp_path), "ckpt")
     spec_skip = _pattern_spec(STEPS, None, "skip", 6, GUARD)
-    _check_engine_marker(ckpt, "classic", None, spec_skip)
-    _check_engine_marker(ckpt, "classic", None, spec_skip)  # same: fine
+    _check_engine_marker(ckpt, "sharded", 8, spec_skip)
+    _check_engine_marker(ckpt, "sharded", 8, spec_skip)  # same: fine
     with pytest.raises(ValueError, match="cannot resume"):
-        _check_engine_marker(ckpt, "classic", None, _pattern_spec(STEPS))
+        _check_engine_marker(ckpt, "sharded", 8, _pattern_spec(STEPS))
     with pytest.raises(ValueError, match="cannot resume"):
         _check_engine_marker(
-            ckpt, "classic", None, _pattern_spec(STEPS, None, "skip", 9, GUARD)
+            ckpt, "sharded", 8, _pattern_spec(STEPS, None, "skip", 9, GUARD)
         )
     # pre-r7 strict marker (no mode keys) still resumes strict configs
     import json
@@ -341,8 +340,8 @@ def test_marker_pins_mode(tmp_path):
     with open(os.path.join(ckpt2, "_ordered_engine.json"), "w") as f:
         json.dump(
             {
-                "engine": "classic",
-                "n_shards": None,
+                "engine": "sharded",
+                "n_shards": 8,
                 "pattern": {
                     "steps": [[s.name, s.role, s.tool] for s in STEPS],
                     "within_s": None,
@@ -350,16 +349,13 @@ def test_marker_pins_mode(tmp_path):
             },
             f,
         )
-    _check_engine_marker(ckpt2, "classic", None, _pattern_spec(STEPS))
+    _check_engine_marker(ckpt2, "sharded", 8, _pattern_spec(STEPS))
 
 
-@pytest.mark.parametrize("engine,n_shards", [("classic", None), ("sharded", 8)])
-def test_plain_skip_checkpoint_without_frontier_format_refused(
-    tmp_path, engine, n_shards
-):
+def test_plain_skip_checkpoint_without_frontier_format_refused(tmp_path):
     """A checkpoint whose marker predates the one skip frontier (no
     frontier_fields) and whose pattern is plain holds the retired 4-field
-    frontier: both engines refuse it at start, before any batch runs. A
+    frontier: it is refused at start, before any batch runs. A
     quantified pattern's checkpoint of that age already holds the one
     frontier and resumes."""
     import json
@@ -377,7 +373,7 @@ def test_plain_skip_checkpoint_without_frontier_format_refused(
         os.makedirs(os.path.join(ckpt, "offsets"))
         del spec["frontier_fields"]
         with open(os.path.join(ckpt, "_ordered_engine.json"), "w") as f:
-            json.dump({"engine": engine, "n_shards": n_shards, "pattern": spec}, f)
+            json.dump({"engine": "sharded", "n_shards": 8, "pattern": spec}, f)
         return ckpt
 
     ckpt = old_checkpoint("plain", _pattern_spec(STEPS, None, "skip", 6, GUARD))
@@ -388,11 +384,11 @@ def test_plain_skip_checkpoint_without_frontier_format_refused(
         pattern_not_between=GUARD,
     )
     with pytest.raises(ValueError, match="4-field format: cannot resume"):
-        _marked_ordered_stream(None, ckpt, cfg, engine, n_shards)
+        _marked_ordered_stream(None, ckpt, cfg, 8)
 
     quant = (STEPS[0], Times(Step("t", role="tool"), 2, None), STEPS[2])
     ckpt = old_checkpoint("quant", _pattern_spec(quant, None, "skip"))
-    _check_engine_marker(ckpt, engine, n_shards, _pattern_spec(quant, None, "skip"))
+    _check_engine_marker(ckpt, "sharded", 8, _pattern_spec(quant, None, "skip"))
 
 
 def test_pipeline_sink_lands_skip_matches(spark, tmp_path):

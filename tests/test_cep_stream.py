@@ -136,46 +136,6 @@ def test_plain_stream_unchanged_without_pattern(spark, tmp_path):
     assert "match_start_idx" not in cols
 
 
-def test_sharded_stream_matches_equal_batch(spark, tmp_path):
-    """The sharded engine's matcher (carry in the shard dict's _CEP side
-    map) finds exactly the batch matches too — same two-batch out-of-order
-    arrival as the classic test, state keyed by shard instead of conv."""
-    full = pd.concat(
-        [scenarios.conversation(c, 13) for c in range(4)], ignore_index=True
-    )
-    b1 = full[full.turn_idx % 2 == 0]
-    b2 = pd.concat([full[full.turn_idx % 2 == 1], full.head(5)], ignore_index=True)
-    cfg = OrderedStreamConfig(pattern=STEPS)
-    q, name, _ = run_to_memory(
-        spark, str(tmp_path), [b1, b2], cfg=cfg, engine="sharded", n_shards=4
-    )
-    try:
-        _, _, matches = split_output_cep(spark.table(name))
-        got = matches.orderBy("conv_id", "start_idx").toPandas()
-    finally:
-        q.stop()
-    expect = _batch_expected(spark, full)
-    pd.testing.assert_frame_equal(
-        got.reset_index(drop=True),
-        expect.astype({"start_idx": "int64", "end_idx": "int64"}).reset_index(
-            drop=True
-        ),
-    )
-    assert len(got) > 0
-
-
-def test_sharded_plain_stream_unchanged_without_pattern(spark, tmp_path):
-    full = scenarios.conversation(1, 5)
-    q, name, _ = run_to_memory(
-        spark, str(tmp_path), [full], cfg=None, engine="sharded", n_shards=2
-    )
-    try:
-        cols = spark.table(name).columns
-    finally:
-        q.stop()
-    assert "match_start_idx" not in cols
-
-
 def test_pipeline_sink_lands_match_rows(spark, tmp_path):
     """End-to-end: a pattern-configured pipeline lands match rows in the
     unified epoch sink (row_type='match'); read_sink(..., 'matches') reads
@@ -235,14 +195,14 @@ def test_pipeline_marker_pins_pattern(spark, tmp_path):
     )
 
     ckpt = os.path.join(str(tmp_path), "ckpt")
-    _check_engine_marker(ckpt, "classic", None, _pattern_spec(STEPS))
+    _check_engine_marker(ckpt, "sharded", 8, _pattern_spec(STEPS))
     # same pattern: fine
-    _check_engine_marker(ckpt, "classic", None, _pattern_spec(STEPS))
+    _check_engine_marker(ckpt, "sharded", 8, _pattern_spec(STEPS))
     with _pytest.raises(ValueError, match="cannot resume"):
-        _check_engine_marker(ckpt, "classic", None, None)
+        _check_engine_marker(ckpt, "sharded", 8, None)
     with _pytest.raises(ValueError, match="cannot resume"):
         _check_engine_marker(
-            ckpt, "classic", None, _pattern_spec(STEPS[:2])
+            ckpt, "sharded", 8, _pattern_spec(STEPS[:2])
         )
     # pre-CEP marker (no "pattern" key) still resumes pattern-less configs
     import json
@@ -250,8 +210,8 @@ def test_pipeline_marker_pins_pattern(spark, tmp_path):
     ckpt2 = os.path.join(str(tmp_path), "ckpt2")
     os.makedirs(ckpt2)
     with open(os.path.join(ckpt2, "_ordered_engine.json"), "w") as f:
-        json.dump({"engine": "classic", "n_shards": None}, f)
-    _check_engine_marker(ckpt2, "classic", None, None)
+        json.dump({"engine": "sharded", "n_shards": 8}, f)
+    _check_engine_marker(ckpt2, "sharded", 8, None)
 
 
 def test_parse_pattern_cli():
@@ -294,26 +254,6 @@ class _FakeGroupState:
 
     def setTimeoutDuration(self, ms):
         pass
-
-
-def test_classic_carry_dropped_at_completion():
-    """A completed conversation's tombstone must not retain the CEP carry
-    (review r6c): the saved state tuple's carry fields are empty."""
-    from dataflow_ordered_processing_spark.streaming.ordered_stream import (
-        make_ordered_func,
-    )
-
-    full = scenarios.conversation(1, 6)  # ends with the system sentinel
-    cfg = OrderedStreamConfig(pattern=STEPS)
-    func = make_ordered_func(cfg)
-    state = _FakeGroupState()
-    list(func(("conv-000001",), iter([full.iloc[:4]]), state))
-    mid = state.get
-    assert len(mid) == 19 and len(mid[15]) == 2  # carry = last k-1 = 2 turns
-    list(func(("conv-000001",), iter([full.iloc[4:]]), state))
-    done = state.get
-    assert done[4] is True or done[4] == 1  # last_event_received
-    assert list(done[15]) == [] and list(done[16]) == []  # carry dropped
 
 
 def test_sharded_carry_dropped_at_completion():
@@ -383,12 +323,12 @@ def test_marker_pins_within_bound(tmp_path):
     )
 
     ckpt = os.path.join(str(tmp_path), "ckpt")
-    _check_engine_marker(ckpt, "classic", None, _pattern_spec(STEPS, 60))
-    _check_engine_marker(ckpt, "classic", None, _pattern_spec(STEPS, 60))
+    _check_engine_marker(ckpt, "sharded", 8, _pattern_spec(STEPS, 60))
+    _check_engine_marker(ckpt, "sharded", 8, _pattern_spec(STEPS, 60))
     with pytest.raises(ValueError, match="cannot resume"):
-        _check_engine_marker(ckpt, "classic", None, _pattern_spec(STEPS, 3600))
+        _check_engine_marker(ckpt, "sharded", 8, _pattern_spec(STEPS, 3600))
     with pytest.raises(ValueError, match="cannot resume"):
-        _check_engine_marker(ckpt, "classic", None, _pattern_spec(STEPS))
+        _check_engine_marker(ckpt, "sharded", 8, _pattern_spec(STEPS))
 
 
 def test_parse_pattern_rejects_single_step_and_injection():
@@ -411,21 +351,21 @@ def test_parse_pattern_rejects_single_step_and_injection():
 def test_timer_drain_completion_honors_cleanup_on_complete():
     """A conversation finished by a timer-driven capped drain must be
     eagerly removed under cleanup_on_complete=True, like the arrival path
-    and the sharded sweep (review r6d)."""
-    from dataflow_ordered_processing_spark.streaming.ordered_stream import (
-        make_ordered_func,
+    (review r6d): its shard holds nothing else, so the shard state goes."""
+    from dataflow_ordered_processing_spark.streaming.ordered_sharded import (
+        make_sharded_func,
     )
 
     full = scenarios.conversation(1, 6)
     cfg = OrderedStreamConfig(
         cleanup_on_complete=True, max_emit_per_batch=4, status_heartbeat_ms=100
     )
-    func = make_ordered_func(cfg)
+    func = make_sharded_func(cfg)
     state = _FakeGroupState()
-    list(func(("conv-000001",), iter([full]), state))  # caps at 4 emitted
+    list(func((0,), iter([full]), state))  # caps at 4 emitted
     assert state.exists and not state.removed
     state.hasTimedOut = True
-    out = list(func(("conv-000001",), iter([]), state))  # drains 5..6 → complete
+    out = list(func((0,), iter([]), state))  # drains 5..6 → complete
     assert state.removed
     assert sum(len(f) for f in out if (f["row_type"] == "data").any()) == 2
 
@@ -445,8 +385,8 @@ def test_marker_normalizes_list_form_pattern():
     spec = _pattern_spec(STEPS)  # {"steps": [...], "within_s": None}
     with open(os.path.join(ckpt, "_ordered_engine.json"), "w") as f:
         json.dump(
-            {"engine": "classic", "n_shards": None, "pattern": spec["steps"]}, f
+            {"engine": "sharded", "n_shards": 8, "pattern": spec["steps"]}, f
         )
-    _check_engine_marker(ckpt, "classic", None, spec)  # list form upgrades
+    _check_engine_marker(ckpt, "sharded", 8, spec)  # list form upgrades
     with pytest.raises(ValueError, match="cannot resume"):
-        _check_engine_marker(ckpt, "classic", None, _pattern_spec(STEPS, 60))
+        _check_engine_marker(ckpt, "sharded", 8, _pattern_spec(STEPS, 60))

@@ -11,7 +11,11 @@ from dataflow_ordered_processing_spark.operators.ordered_batch import (
     ordered_status_batch,
 )
 from dataflow_ordered_processing_spark.schemas import TRANSCRIPT_SCHEMA
-from dataflow_ordered_processing_spark.sources.scenarios import scenario, serial_oracle
+from dataflow_ordered_processing_spark.sources.scenarios import (
+    conversation,
+    scenario,
+    serial_oracle,
+)
 from dataflow_ordered_processing_spark.sources.transcripts import (
     TRANSCRIPTS_SQL,
     derive_transcripts,
@@ -225,3 +229,24 @@ def test_per_event_status_null_last_emitted_before_first_emit(spark):
     )
     final = ordered_status_batch(df.drop("arrival_seq")).collect()[0]
     assert last["last_emitted"] is None and final["last_emitted"] is None
+
+
+@pytest.mark.parametrize("impl", ["sql", "pandas"])
+def test_initial_idx_discards_subinitial_rows(spark, impl):
+    # rows below initial_idx are already-emitted history: discard as
+    # duplicates, never shift ranks; the salted plan is
+    # held to the SQL one at initial_idx=3 in test_skew.py
+    df = spark.createDataFrame(conversation(1, 10), schema=TRANSCRIPT_SCHEMA)
+    out = ordered_emit_batch(df, impl=impl, initial_idx=5).toPandas()
+    assert sorted(out["turn_idx"]) == [5, 6, 7, 8, 9, 10]
+    assert sorted(out["emit_seq"]) == [1, 2, 3, 4, 5, 6]
+
+
+def test_initial_idx_status_counts_subinitial_as_duplicates(spark):
+    df = spark.createDataFrame(conversation(1, 10), schema=TRANSCRIPT_SCHEMA)
+    row = ordered_status_batch(df, initial_idx=5).collect()[0].asDict()
+    assert row["result_count"] == 6
+    assert row["duplicate_count"] == 4  # turns 1-4 are sub-initial history
+    assert row["buffered_count"] == 0
+    assert row["received_count"] == 10
+    assert row["last_emitted"] == 10

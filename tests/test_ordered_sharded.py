@@ -1,11 +1,17 @@
-"""Sharded-state streaming engine: row-level parity with the classic
-per-key operator across the scenario suite (same data rows, same statuses,
-same duplicate/TTL/capped-drain semantics)."""
+"""The shard-keyed streaming engine: data rows equal the serial oracle and
+final statuses equal the batch status plan across the scenario suite;
+duplicate, TTL, capped-drain, tombstone and shard-blob semantics."""
 
 import pandas as pd
 import pytest
 
-from dataflow_ordered_processing_spark.sources.scenarios import scenario, serial_oracle
+from dataflow_ordered_processing_spark.operators.ordered_batch import ordered_status_batch
+from dataflow_ordered_processing_spark.schemas import TRANSCRIPT_SCHEMA
+from dataflow_ordered_processing_spark.sources.scenarios import (
+    conversation,
+    scenario,
+    serial_oracle,
+)
 from dataflow_ordered_processing_spark.streaming import OrderedStreamConfig
 
 from streaming_utils import run_to_memory
@@ -40,7 +46,7 @@ def _rows(spark, name, row_type, sort_cols):
 )
 def test_sharded_matches_serial_oracle(spark, tmp_path, scen):
     batches = scenario(scen)
-    q, name, _ = run_to_memory(spark, str(tmp_path), batches, engine="sharded")
+    q, name, _ = run_to_memory(spark, str(tmp_path), batches)
     try:
         got = _rows(spark, name, "data", ["conv_id", "turn_idx"])[CMP]
         want = (
@@ -55,28 +61,43 @@ def test_sharded_matches_serial_oracle(spark, tmp_path, scen):
         q.stop()
 
 
-def test_sharded_statuses_match_classic(spark, tmp_path):
-    """Status rows (the per-batch snapshots) must be identical between the
-    two engines, batch for batch."""
+def _final_statuses(pdf):
+    """One normalized tuple per conversation (nulls → None, ints → int)."""
+    return sorted(
+        tuple(None if pd.isna(v) else v if isinstance(v, str) else int(v) for v in row)
+        for row in pdf[STATUS_CMP].itertuples(index=False, name=None)
+    )
+
+
+def test_sharded_statuses_match_batch(spark, tmp_path):
+    """The last status row per conversation equals ordered_status_batch over
+    the same arrivals, so status rows keep a reference that shares no code
+    with the engine: gaps, re-delivered duplicates and completion included."""
     batches = scenario("multi_conversation")
-    qa, na, _ = run_to_memory(spark, str(tmp_path) + "/a", batches, engine="classic")
-    qb, nb, _ = run_to_memory(spark, str(tmp_path) + "/b", batches, engine="sharded")
+    gapped = conversation(20, 6)
+    batches.append(pd.concat(
+        [gapped[gapped.turn_idx != 3], batches[0].head(3)], ignore_index=True
+    ))
+    batches.append(pd.concat([gapped.head(2), batches[1].head(2)], ignore_index=True))
+    q, name, _ = run_to_memory(spark, str(tmp_path), batches)
     try:
-        key = ["conv_id", "received_count"]
-        a = _rows(spark, na, "status", key)[STATUS_CMP]
-        b = _rows(spark, nb, "status", key)[STATUS_CMP]
-        assert len(a) > 0
-        pd.testing.assert_frame_equal(a, b)
+        st = _rows(spark, name, "status", ["conv_id", "received_count"])
     finally:
-        qa.stop()
-        qb.stop()
+        q.stop()
+    got = st.groupby("conv_id", as_index=False).tail(1)
+    arrivals = spark.createDataFrame(pd.concat(batches, ignore_index=True), TRANSCRIPT_SCHEMA)
+    want = ordered_status_batch(arrivals).toPandas()
+    assert len(got) == 9
+    assert _final_statuses(got) == _final_statuses(want)
+    # the references really cover a gap and re-delivered duplicates
+    assert want["buffered_count"].max() > 0 and want["duplicate_count"].sum() > 0
 
 
 def test_sharded_duplicate_counts(spark, tmp_path):
     # default tombstone config: post-completion re-delivery is discarded and
-    # counted (with cleanup_on_complete=True it would re-emit, like classic)
+    # counted (with cleanup_on_complete=True it would re-emit)
     batches = scenario("duplicates")
-    q, name, _ = run_to_memory(spark, str(tmp_path), batches, engine="sharded")
+    q, name, _ = run_to_memory(spark, str(tmp_path), batches)
     try:
         st = _rows(spark, name, "status", ["received_count"])
         last = st.iloc[-1]
@@ -89,14 +110,13 @@ def test_sharded_duplicate_counts(spark, tmp_path):
 
 def test_sharded_capped_drain(spark, tmp_path):
     """O9: max_emit_per_batch caps each batch's drain; the remainder emits on
-    subsequent arrivals (same contract as the classic engine)."""
+    subsequent arrivals."""
     batches = scenario("reverse_order")  # 3,2,1 → full drain on 3rd arrival
     q, name, _ = run_to_memory(
         spark,
         str(tmp_path),
         batches,
         cfg=OrderedStreamConfig(max_emit_per_batch=2),
-        engine="sharded",
     )
     try:
         data = _rows(spark, name, "data", ["emit_seq"])
@@ -112,8 +132,6 @@ def test_sharded_capped_drain(spark, tmp_path):
 # -------- review-regression tests (round-2 code review findings 1, 2, 3, 4)
 import pickle
 import time as _time
-
-import numpy as np
 
 from dataflow_ordered_processing_spark.operators import ordered_core as core
 from dataflow_ordered_processing_spark.streaming.ordered_sharded import (
@@ -199,7 +217,7 @@ def test_ttl_eviction_never_drops_capped_drain_remainder():
 
 def test_busy_shard_still_heartbeats_idle_keys():
     """Finding 2: arrivals for key B must not starve co-sharded idle key A of
-    heartbeat statuses/TTL (per-key timer semantics of the classic engine)."""
+    heartbeat statuses/TTL (each key keeps its own heartbeat cadence)."""
     cfg = OrderedStreamConfig(status_heartbeat_ms=50, emit_status_every_batch=False)
     func = make_sharded_func(cfg)
     # A idle with a gap (buffered turn 2); last sweep long ago
@@ -229,7 +247,7 @@ def _shard_batch_rows(conv_turns):
 
 def test_null_conv_id_is_its_own_group():
     """A NULL conv_id sharing a shard with real keys is ordered as its own
-    group (as the classic engine's NULL key is), so the sink can route its
+    group, so the sink can route its
     rows to the DLQ instead of the shard failing."""
     func = make_sharded_func(OrderedStreamConfig())
     state = _FakeState()

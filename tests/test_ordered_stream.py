@@ -12,11 +12,7 @@ from dataflow_ordered_processing_spark.sources.scenarios import (
     scenario,
     serial_oracle,
 )
-from dataflow_ordered_processing_spark.streaming import (
-    OrderedStreamConfig,
-    build_ordered_stream,
-    ordered_stream,
-)
+from dataflow_ordered_processing_spark.streaming import OrderedStreamConfig, ordered_stream
 
 from streaming_utils import StagedStream, run_to_memory
 
@@ -223,11 +219,10 @@ def test_idle_state_eviction(spark, tmp_path):
         q.stop()
 
 
-@pytest.mark.parametrize("engine", ["classic", "sharded"])
-def test_capped_drain_tombstone_ttl_counts_idle_firings(spark, tmp_path, engine):
+def test_capped_drain_tombstone_ttl_counts_idle_firings(spark, tmp_path):
     """A conversation completed by a timer-driven capped drain is evicted on
     exactly the evict_idle_after_heartbeats-th timer firing after its last
-    arrival: the drain firings count toward the TTL, in both engines."""
+    arrival: the drain firings count toward the TTL."""
     # 10 turns, cap 3: batch 0 (the arrival) emits 3, firings 1-3 drain the
     # rest and complete it, firings 4-5 age the tombstone, firing 6 evicts.
     # A 1 ms heartbeat has expired by every next batch (they run back to
@@ -237,8 +232,8 @@ def test_capped_drain_tombstone_ttl_counts_idle_firings(spark, tmp_path, engine)
     )
     st_src = StagedStream(spark, str(tmp_path))
     st_src.push(conversation(1, 10))
-    stream = build_ordered_stream(st_src.source(), cfg, engine=engine, n_shards=2)
-    q = stream.writeStream.format("memory").queryName(f"ttl_{engine}").start()
+    stream = ordered_stream(st_src.source(), cfg, n_shards=2)
+    q = stream.writeStream.format("memory").queryName("ttl_capped").start()
 
     def state_rows():
         return {p["batchId"]: p["stateOperators"][0]["numRowsTotal"] for p in q.recentProgress}
@@ -251,6 +246,40 @@ def test_capped_drain_tombstone_ttl_counts_idle_firings(spark, tmp_path, engine)
         q.stop()
     rows = state_rows()
     assert [rows.get(b) for b in range(7)] == [1] * 6 + [0], rows
-    got = _data(spark, f"ttl_{engine}")
+    got = _data(spark, "ttl_capped")
     assert list(got["turn_idx"]) == list(range(1, 11))
     assert list(got["emit_seq"]) == list(range(1, 11))
+
+
+def test_capped_drain_flushes_via_timer(spark, tmp_path):
+    # with max_emit_per_batch, the contiguous remainder
+    # must flush on processing-time timers even with NO further arrivals
+    cfg = OrderedStreamConfig(max_emit_per_batch=3, status_heartbeat_ms=300)
+    st_src = StagedStream(spark, str(tmp_path))
+    q = (
+        ordered_stream(st_src.source(), cfg)
+        .writeStream.outputMode("append")
+        .format("memory")
+        .queryName("capflush")
+        .trigger(processingTime="300 milliseconds")
+        .start()
+    )
+
+    def n_data():
+        return spark.sql(
+            "SELECT count(*) c FROM capflush WHERE row_type='data'"
+        ).collect()[0]["c"]
+
+    try:
+        st_src.push(conversation(1, 10))  # one batch, cap 3 → 3 emitted now
+        deadline = time.time() + 120
+        while n_data() < 10 and time.time() < deadline:
+            time.sleep(0.5)
+        assert n_data() == 10, "capped remainder never flushed by the timer"
+        got = spark.sql(
+            "SELECT turn_idx, emit_seq FROM capflush WHERE row_type='data' ORDER BY turn_idx"
+        ).toPandas()
+        assert list(got["turn_idx"]) == list(range(1, 11))
+        assert list(got["emit_seq"]) == list(range(1, 11))
+    finally:
+        q.stop()

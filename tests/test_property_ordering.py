@@ -166,7 +166,7 @@ def test_sharded_func_multi_conv_matches_serial_oracle(plans, rng):
 )
 @settings(max_examples=100, deadline=None)
 def test_transition_any_arrival_plan_matches_serial_oracle(plan, cap, timers):
-    """ordered_core.transition, the step both streaming engines run: any
+    """ordered_core.transition, the step the streaming engine runs: any
     permutation/batching/duplication, any max_emit cap, with heartbeat
     firings between batches, drains to exactly the serial oracle; statuses
     track the counters; an open conversation is always kept and re-armed."""

@@ -1,6 +1,6 @@
 """Round-3 review findings pinned as regression tests:
 
-  R3-1  resuming a checkpoint with a different engine/n_shards must fail
+  R3-1  resuming a checkpoint with a different n_shards must fail
         fast (n_shards is baked into the sharded state key — a silent
         mismatch strands state and breaks exactly-once).
   R3-2  completed conversations become compact tombstones: excluded from
@@ -33,10 +33,6 @@ from dataflow_ordered_processing_spark.streaming.ordered_sharded import (
     _conv_to_tuple,
     make_sharded_func,
 )
-from dataflow_ordered_processing_spark.streaming.ordered_stream import (
-    _state_to_tuple,
-    make_ordered_func,
-)
 from dataflow_ordered_processing_spark.streaming.sinks import (
     _check_engine_marker,
     epoch_dirs,
@@ -62,15 +58,6 @@ def test_engine_marker_pins_n_shards(tmp_path):
     _check_engine_marker(ckpt, "sharded", 256)  # same config resumes fine
     with pytest.raises(ValueError, match="n_shards"):
         _check_engine_marker(ckpt, "sharded", 512)
-    with pytest.raises(ValueError):
-        _check_engine_marker(ckpt, "classic", None)
-
-
-def test_engine_marker_classic_ignores_shards(tmp_path):
-    # n_shards is irrelevant to the classic engine — must not trip the marker
-    ckpt = str(tmp_path / "ckpt")
-    _check_engine_marker(ckpt, "classic", 256)
-    _check_engine_marker(ckpt, "classic", 512)
 
 
 # ---------------------------------------------------------------- R3-2
@@ -135,33 +122,27 @@ def test_late_duplicate_after_completion_counted():
     assert tomb[3] == 1  # duplicate_count
 
 
-def test_classic_tombstone_stops_heartbeating():
-    """Classic engine: a completed key must not re-arm its timer (no TTL) and
-    a timer firing on a completed key must emit no status."""
-    cfg = OrderedStreamConfig(status_heartbeat_ms=50)
-    func = make_ordered_func(cfg)
-
+def test_tombstone_shard_stops_heartbeating():
+    """A shard holding only a completed conversation must not re-arm its
+    timer (no TTL), and a timer firing on it must emit no status."""
     timer_set = []
 
-    class _KeyState(_FakeState):
+    class _TimedState(_FakeState):
         def setTimeoutDuration(self, ms):
             timer_set.append(ms)
 
-    st = core.OrderedState(last_emitted=3, last_event_received=True,
-                           received_count=3, result_count=3)
-    state = _KeyState(blob=None)
-    state._v = tuple(_state_to_tuple(st))
+    state = _TimedState(_completed_conv().get[0])
+    func = make_sharded_func(OrderedStreamConfig(status_heartbeat_ms=50))
 
     # duplicate arrival to a tombstone: status still emitted (arrival path),
     # timer NOT re-armed (frozen state, nothing will ever change)
-    batch = _shard_batch_rows([("cX", 2)])
-    frames = list(func(("cX",), iter([batch]), state))
+    frames = list(func((0,), iter([_shard_batch_rows([("cX", 2)])]), state))
     assert any((f["row_type"] == "status").any() for f in frames)
     assert timer_set == []
 
     # timer firing on a tombstone: silent (no status row, no data)
     state.hasTimedOut = True
-    assert list(func(("cX",), iter([]), state)) == []
+    assert list(func((0,), iter([]), state)) == []
 
 
 # ---------------------------------------------------------------- R3-3

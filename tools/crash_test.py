@@ -20,15 +20,12 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from dataflow_ordered_processing_spark.streaming import DEFAULT_ENGINE  # noqa: E402
-
 
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=200_000)
     ap.add_argument("--convs", type=int, default=2_000)
     ap.add_argument("--kill-after", type=float, default=25.0)
-    ap.add_argument("--engine", choices=["classic", "sharded"], default=DEFAULT_ENGINE)
     ap.add_argument("--n-shards", type=int, default=256)
     ap.add_argument(
         "--merge-on-key", action="store_true",
@@ -60,7 +57,6 @@ def main() -> int:
         "--available-now",
         "--max-files-per-trigger", "4",
         "--master", "local[8]",
-        "--engine", args.engine,
         "--n-shards", str(args.n_shards),
     ]
     if args.merge_on_key:

@@ -6,10 +6,9 @@ rows serialize into one task, so throughput caps at one core's state-machine
 rate no matter how many executors exist. This tool MEASURES that SLA at a
 ≥1M-row single conversation and the escape hatch:
 
-  leg "classic"   streaming pipeline, classic engine — the serialized rate
-  leg "sharded"   streaming pipeline, sharded engine — same property (the
-                  key lands in one shard), included to show sharding does
-                  not dodge per-key serialization
+  leg "sharded"   streaming pipeline — the serialized rate (the key lands
+                  in one shard: sharding does not dodge per-key
+                  serialization)
   leg "routed"    --hot-keys routing: the key bypasses keyed state into the
                   raw side channel and is ordered by the DISTRIBUTED
                   two-phase salted batch plan (operators/skew.py)
@@ -88,8 +87,7 @@ def main() -> int:
 
     legs = {}
     for tag, extra in [
-        ("classic", ["--engine", "classic"]),
-        ("sharded", ["--engine", "sharded", "--n-shards", "256"]),
+        ("sharded", ["--n-shards", "256"]),
         ("routed", ["--hot-keys", "conv-000000"]),
     ]:
         res = run_leg(src, args.cpus, workdir, tag, extra)
@@ -122,9 +120,9 @@ def main() -> int:
         "legs": legs,
         "sla_statement": (
             "a single mega-conversation serializes into one keyed-state "
-            "task in BOTH streaming engines (throughput = the classic/"
-            "sharded legs); --hot-keys routing restores distributed "
-            "ordering via the salted batch plan (the routed leg)"
+            "task (throughput = the sharded leg); --hot-keys routing "
+            "restores distributed ordering via the salted batch plan "
+            "(the routed leg)"
         ),
     }
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)

@@ -5,7 +5,7 @@ plus efficiency = (T_4N / T_N) / 4.
 
 Each leg is a fresh `spark-submit`-equivalent subprocess (own JVM, fresh
 checkpoint) running jobs/run_pipeline.py — the same entrypoint a cluster
-would submit. Results → BENCH/scaling.json (+ printed table).
+would submit. Results → BENCH/scaling_sharded_<N>_<4N>.json (+ printed table).
 
 Usage: python tools/scaling_bench.py [--rows 2000000] [--convs 20000]
        [--n 8] [--4n 32] [--legs 2]
@@ -81,10 +81,6 @@ def generate_input(out_dir: str, rows: int, convs: int, cpus: int = 32, files: i
     return n
 
 
-ROCKSDB = True  # default: RocksDB state store (disable with --hdfs-state-store)
-
-
-ENGINE = "classic"
 N_SHARDS = 256
 # micro-batch sizing: files are the unit of source parallelism under
 # maxFilesPerTrigger — keep files_per_trigger >= the widest leg's cores or
@@ -120,16 +116,13 @@ def run_leg(src: str, cpus: int, workdir: str, n_shards: int | None = None) -> d
             # long-lived workers.
             "--master",
             f"local[{cpus}]",
-            "--engine",
-            ENGINE,
             # logical shard count FIXED across legs by default (production
             # streaming keeps its key space stable while executors scale);
             # the autotune scaling variant overrides it per leg to test
             # whether a pinned count flatters narrow legs (VERDICT r6 #4)
             "--n-shards",
             str(n_shards if n_shards is not None else N_SHARDS),
-        ]
-        + ([] if ROCKSDB else ["--hdfs-state-store"]),
+        ],
         capture_output=True,
         text=True,
         env=env,
@@ -153,15 +146,11 @@ def main() -> int:
     ap.add_argument("--n", type=int, default=8)
     ap.add_argument("--four-n", type=int, default=32)
     ap.add_argument("--workdir", default=None)
-    ap.add_argument("--hdfs-state-store", action="store_true")
-    ap.add_argument("--engine", choices=["classic", "sharded"], default="classic")
     ap.add_argument("--n-shards", type=int, default=256)
     ap.add_argument("--files", type=int, default=64, help="input file count (source split units)")
     ap.add_argument("--files-per-trigger", type=int, default=8)
     args = ap.parse_args()
-    global ROCKSDB, ENGINE, N_SHARDS, FILES_PER_TRIGGER
-    ROCKSDB = not args.hdfs_state_store
-    ENGINE = args.engine
+    global N_SHARDS, FILES_PER_TRIGGER
     N_SHARDS = args.n_shards
     FILES_PER_TRIGGER = args.files_per_trigger
 
@@ -198,9 +187,8 @@ def main() -> int:
         "legs": legs,
     }
     os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-    tag = "" if args.engine == "classic" else f"{args.engine}_"
     with open(
-        os.path.join(REPO, "BENCH", f"scaling_{tag}{args.n}_{args.four_n}.json"), "w"
+        os.path.join(REPO, "BENCH", f"scaling_sharded_{args.n}_{args.four_n}.json"), "w"
     ) as f:
         json.dump(result, f, indent=2)
     print(json.dumps(result))
