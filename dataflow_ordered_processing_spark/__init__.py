@@ -26,3 +26,10 @@ __version__ = "0.1.0"
 INITIAL_TURN_IDX = 1  # reference: OrderBookEventExaminer.java:33-37 (seq starts at 1)
 END_ROLE = "system"
 END_TEXT = "__end__"  # lastContractMessage analog (marketdata.proto:39-41)
+
+# Every worker-side import of our UDFs passes through this module, so a
+# reused Python worker stops re-reading pyspark.zip and the spark-core jar
+# on each task from its second task on (see zipimport_cache).
+from .zipimport_cache import install as _install_zipimport_cache  # noqa: E402
+
+_install_zipimport_cache()

@@ -4,7 +4,8 @@ per-partition lineage and buffer metrics for resumable restarts").
 Two layers:
   1. BufferMetricsListener — a StreamingQueryListener appending one JSON line
      per micro-batch progress event: rows/sec, state-store rows (= keys with
-     open buffers), per-epoch watermark, sink description. This is the
+     open buffers) and the stateful stage's commit/update/removal times and
+     provider metrics, per-epoch watermark, sink description. This is the
      engine-level analog of the reference's Dataflow job metrics.
   2. The status table itself (OrderedProcessingStatus rows) carries the
      per-KEY buffer depth/gap bounds — queryable lineage of every
@@ -42,6 +43,12 @@ class BufferMetricsListener(StreamingQueryListener):
                 "rows_updated": s.numRowsUpdated,
                 "rows_removed": s.numRowsRemoved,
                 "memory_bytes": s.memoryUsedBytes,
+                "commit_ms": s.commitTimeMs,
+                "updates_ms": s.allUpdatesTimeMs,
+                "removals_ms": s.allRemovalsTimeMs,
+                "num_shuffle_partitions": s.numShufflePartitions,
+                # the provider's own metrics (RocksDB: commit, flush and sync latencies)
+                "custom_metrics": dict(s.customMetrics or {}),
             }
             for s in (p.stateOperators or [])
         ]

@@ -76,6 +76,11 @@ def test_checkpoint_kill_and_resume(spark, tmp_path):
     progress = [e for e in events if e["event"] == "progress"]
     assert progress, "listener captured no progress events"
     assert any(s["rows_total"] >= 0 for e in progress for s in e["stateOperators"])
+    stateful_keys = {"commit_ms", "updates_ms", "removals_ms", "num_shuffle_partitions",
+                     "custom_metrics"}
+    ops = [s for e in progress for s in e["stateOperators"]]
+    assert ops and all(stateful_keys <= s.keys() for s in ops)
+    assert any(s["custom_metrics"] for s in ops)
     assert {e["event"] for e in events} >= {"started", "progress"}
 
 

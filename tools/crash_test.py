@@ -1,9 +1,13 @@
 """Kill -9 resilience: start the pipeline as a subprocess, SIGKILL it
-mid-stream, restart from the same checkpoint, and verify the sink is
-exactly-once and oracle-equal (north_rule: resumable from checkpoint).
+mid-stream once Spark's commit log holds micro-batch --kill-at-commit,
+restart from the same checkpoint, and verify the sink is exactly-once and
+oracle-equal (north_rule: resumable from checkpoint).
 
 Usage: python tools/crash_test.py [--rows 200000] [--convs 2000]
-Prints one JSON line with the verdict.
+       [--kill-at-commit 2]
+Prints one JSON line with the verdict. Exits non-zero if the first run
+finishes, or the commit has not appeared after KILL_TIMEOUT_S, before the
+kill.
 """
 
 from __future__ import annotations
@@ -18,6 +22,7 @@ import tempfile
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+KILL_TIMEOUT_S = 600.0
 sys.path.insert(0, REPO)
 
 
@@ -25,7 +30,11 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=200_000)
     ap.add_argument("--convs", type=int, default=2_000)
-    ap.add_argument("--kill-after", type=float, default=25.0)
+    ap.add_argument(
+        "--kill-at-commit", type=int, default=2,
+        help="SIGKILL once <checkpoint>/commits/<k> exists, so the crash "
+        "always falls after committed epochs",
+    )
     ap.add_argument("--n-shards", type=int, default=256)
     ap.add_argument(
         "--merge-on-key", action="store_true",
@@ -64,13 +73,21 @@ def main() -> int:
     if args.pattern:
         cmd += ["--pattern", args.pattern, "--pattern-mode", args.pattern_mode]
 
-    # leg 1: SIGKILL mid-run (no cleanup, no shutdown hooks)
-    proc = subprocess.Popen(cmd, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL)
-    time.sleep(args.kill_after)
+    # leg 1: SIGKILL mid-run (no cleanup, no shutdown hooks) right after
+    # Spark commits micro-batch k
+    proc = subprocess.Popen(cmd, stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
+    commit = os.path.join(ckpt, "commits", str(args.kill_at_commit))
+    deadline = time.monotonic() + KILL_TIMEOUT_S
+    while not os.path.exists(commit) and proc.poll() is None and time.monotonic() < deadline:
+        time.sleep(0.05)
     crashed = proc.poll() is None
-    if crashed:
-        proc.send_signal(signal.SIGKILL)
-        proc.wait()
+    proc.send_signal(signal.SIGKILL)
+    proc.wait()
+    if not crashed or not os.path.exists(commit):
+        why = "finished" if not crashed else f"ran {KILL_TIMEOUT_S:g} s"
+        print(f"crash_test: the first run {why} before {commit} appeared; "
+              "nothing was killed across committed epochs", file=sys.stderr)
+        return 2
     # count committed EPOCH IDS through the compaction-aware view (review
     # r5 #5: with default-on compaction, counting raw epoch= dirs
     # under-reports once folds begin — a compact=L-lo-hi dir covers
@@ -166,7 +183,7 @@ def main() -> int:
         )
     print(json.dumps(verdict))
     spark.stop()
-    return 0 if verdict["exactly_once"] and crashed else 1
+    return 0 if verdict["exactly_once"] else 1
 
 
 if __name__ == "__main__":
