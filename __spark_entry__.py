@@ -1488,7 +1488,7 @@ def _q_hotkey_routed(spark, sf_dir):
     sink). The combined rows must be indistinguishable from the unrouted
     pipeline — same _ORDERED_ORACLE as every other ordering path."""
     from dataflow_ordered_processing_spark.schemas import TRANSCRIPT_SCHEMA
-    from dataflow_ordered_processing_spark.streaming import ordered_stream
+    from dataflow_ordered_processing_spark.streaming import start_ordered_pipeline
     from dataflow_ordered_processing_spark.streaming.hotkey import (
         order_hot_channel,
         read_pipeline_output,
@@ -1496,7 +1496,6 @@ def _q_hotkey_routed(spark, sf_dir):
     from dataflow_ordered_processing_spark.streaming.sinks import (
         SinkConfig,
         raw_passthrough_sink,
-        split_sink,
     )
 
     stage = _stage_dir("hotkey-src")
@@ -1522,14 +1521,10 @@ def _q_hotkey_routed(spark, sf_dir):
         .start()
     )
     main = src.filter(F.col("conv_id").isNull() | (F.col("conv_id") != hot_conv))
-    q = (
-        ordered_stream(main)
-        .writeStream.outputMode("append")
-        .foreachBatch(split_sink(SinkConfig(data_path=os.path.join(out, "data"))))
-        .option("checkpointLocation", os.path.join(ckpt, "main"))
-        .trigger(availableNow=True)
-        .start()
+    sink = SinkConfig(
+        data_path=os.path.join(out, "data"), checkpoint=os.path.join(ckpt, "main")
     )
+    q = start_ordered_pipeline(main, sink, availableNow=True)
     q.awaitTermination()
     hot_q.awaitTermination()
     order_hot_channel(

@@ -1,7 +1,8 @@
 """SparkSession factory tuned for this engine.
 
 local[N] in tests/bench; the same settings are what we'd submit with
-spark-submit on a real cluster (AQE, Arrow, UTC, sane shuffle partitions).
+spark-submit on a real cluster (AQE, Arrow, UTC, sane shuffle partitions,
+and RocksDB as the state store of every stream, tests and benchmarks too).
 
 Two opt-ins, both off by default: SPARK_GRAFT_SCRATCH routes scratch to a
 fast local path, and SPARK_GRAFT_WARM=1 makes ``get_spark`` run the one
@@ -19,6 +20,11 @@ from pyspark.sql import SparkSession
 
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 _PKG_NAME = os.path.basename(_PKG_DIR)
+# off-heap state, no worse than the HDFS-backed store on live p50/p99
+# (BENCH/engine_sweep_r12.json); a checkpoint's offset log pins its store
+STATE_STORE_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
 
 
 def package_zip() -> str:
@@ -147,6 +153,7 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
         .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "false")
+        .config("spark.sql.streaming.stateStore.providerClass", STATE_STORE_PROVIDER)
     )
     if scratch:
         b = b.config("spark.local.dir", os.path.join(scratch, "local"))

@@ -98,6 +98,9 @@ class OrderedStreamConfig:
 
     def __post_init__(self) -> None:
         # fail at config time, not mid-stream
+        if self.evict_idle_after_heartbeats is not None and not self.status_heartbeat_ms:
+            # without a heartbeat no timer fires, so the TTL never evicts
+            raise ValueError("evict_idle_after_heartbeats requires status_heartbeat_ms")
         cep_core.validate_pattern_knobs(
             self.pattern,
             self.pattern_mode,

@@ -47,7 +47,6 @@ class SinkConfig:
     dlq_path: str | None = None
     checkpoint: str | None = None
     iceberg_table: str | None = None  # e.g. "cat.db.ordered_turns" when jars present
-    trigger_seconds: float | None = None  # None → availableNow semantics via caller
     # Row-level dead-letter (FailedBigQueryInsertProcessor.java:38-49 is
     # per-failed-insert, not per-batch): rows violating the sink contract
     # are diverted to the DLQ with a dlq_error reason; the healthy rest of
@@ -1148,8 +1147,8 @@ def _marked_ordered_stream(
     n_shards: int | None = None,
 ) -> DataFrame:
     """Resolve the shard count, pin it and the pattern in the checkpoint
-    marker, and build the unified ordered stream — the one wiring every
-    pipeline entrypoint uses."""
+    marker, and build the unified ordered stream that
+    start_ordered_pipeline writes."""
     from . import resolve_n_shards
 
     n_shards = resolve_n_shards(source, n_shards)
@@ -1175,14 +1174,18 @@ def start_ordered_pipeline(
     sink: SinkConfig,
     stream_cfg: OrderedStreamConfig | None = None,
     n_shards: int | None = None,
+    **trigger,
 ) -> StreamingQuery:
-    """Wire source → ordered processor → dual sink; return the running query.
+    """Wire source → ordered processor → dual sink; return the running query
+    (every entrypoint starts its stream here).
 
     ``source`` is a streaming DataFrame with TRANSCRIPT_SCHEMA (e.g.
     readStream over an Iceberg/parquet directory of arrival batches).
     ``n_shards=None`` resolves to 8 × defaultParallelism — the measured
     sweet spot (~8 shards per core, BENCH/BASELINE.md shard sweep); the
     choice is pinned in a checkpoint marker and validated on resume.
+    ``trigger`` goes to ``DataStreamWriter.trigger`` (``availableNow=True``,
+    ``processingTime="2 seconds"``); none runs Spark's default trigger.
     """
     unified = _marked_ordered_stream(source, sink.checkpoint, stream_cfg, n_shards)
     writer = (
@@ -1192,6 +1195,6 @@ def start_ordered_pipeline(
     )
     if sink.checkpoint:
         writer = writer.option("checkpointLocation", sink.checkpoint)
-    if sink.trigger_seconds:
-        writer = writer.trigger(processingTime=f"{sink.trigger_seconds} seconds")
+    if trigger:
+        writer = writer.trigger(**trigger)
     return writer.start()

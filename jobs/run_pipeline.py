@@ -458,6 +458,8 @@ def main() -> int:
     # CEP pattern: parse + conflict-check BEFORE the JVM spins up (and
     # before any checkpoint marker is written) so a bad invocation fails in
     # milliseconds with a clean error
+    if args.auto_hot_keys and not args.hot_key_threshold:
+        ap.error("--auto-hot-keys requires --hot-key-threshold")
     pattern = parse_pattern(args.pattern) if args.pattern else None
     not_between = (
         parse_not_between(args.pattern_not_between)
@@ -482,27 +484,13 @@ def main() -> int:
     from dataflow_ordered_processing_spark.streaming import (
         BufferMetricsListener,
         OrderedStreamConfig,
+        start_ordered_pipeline,
     )
     from dataflow_ordered_processing_spark.streaming.sinks import (
         SinkConfig,
-        _marked_ordered_stream,
         export_table,
         raw_passthrough_sink,
         read_sink,
-        split_sink,
-    )
-
-    spark = get_spark(
-        "ordered-pipeline", master=args.master, shuffle_partitions=args.shuffle_partitions
-    )
-    # RocksDB: off-heap state, no per-version in-heap maps; no worse than
-    # the HDFS-backed store on live p50/p99 (BENCH/engine_sweep_r12.json)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    spark.streams.addListener(
-        BufferMetricsListener(os.path.join(args.out, "metrics.jsonl"))
     )
 
     cfg = OrderedStreamConfig(
@@ -522,6 +510,12 @@ def main() -> int:
         compact_status_keep_last=args.status_keep_last,
     )
 
+    spark = get_spark(
+        "ordered-pipeline", master=args.master, shuffle_partitions=args.shuffle_partitions
+    )
+    spark.streams.addListener(
+        BufferMetricsListener(os.path.join(args.out, "metrics.jsonl"))
+    )
     if not args.no_warmup:
         _warmup(spark)
 
@@ -543,8 +537,6 @@ def main() -> int:
     # channel must clear) — review finding r4c
     reset = args.reset_hot_channel
     if args.auto_hot_keys:
-        if not args.hot_key_threshold:
-            ap.error("--auto-hot-keys requires --hot-key-threshold")
         marker = os.path.join(args.checkpoint + "-hot", "_hot_keys.json")
         prior: set = set()
         if os.path.exists(marker):
@@ -585,20 +577,15 @@ def main() -> int:
             F.col("conv_id").isNull() | ~F.col("conv_id").isin(hot_list)
         )
 
-    unified = _marked_ordered_stream(src, args.checkpoint, cfg, args.n_shards)
-    writer = (
-        unified.writeStream.outputMode("append")
-        .foreachBatch(split_sink(sink))
-        .option("checkpointLocation", sink.checkpoint)
-        .queryName("ordered-transcripts")
-    )
     if args.available_now:
-        writer = writer.trigger(availableNow=True)
+        trigger = {"availableNow": True}
     elif args.trigger_s:
-        writer = writer.trigger(processingTime=f"{args.trigger_s} seconds")
+        trigger = {"processingTime": f"{args.trigger_s} seconds"}
+    else:
+        trigger = {}
 
     t0 = time.time()
-    q = writer.start()
+    q = start_ordered_pipeline(src, sink, cfg, args.n_shards, **trigger)
     if args.run_seconds:
         q.awaitTermination(args.run_seconds)
         q.stop()

@@ -306,6 +306,8 @@ def test_config_validation():
         OrderedStreamConfig(pattern_mode="skip")
     with pytest.raises(ValueError, match="require pattern"):
         OrderedStreamConfig(pattern_within_s=5)
+    with pytest.raises(ValueError, match="requires status_heartbeat_ms"):
+        OrderedStreamConfig(evict_idle_after_heartbeats=3)
     with pytest.raises(ValueError, match="must be a.*Step"):
         stream_matcher(STEPS, "skip", not_between={0: "role = 'tool'"})
     with pytest.raises(ValueError, match="out of range"):

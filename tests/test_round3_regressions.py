@@ -1,8 +1,5 @@
 """Round-3 review findings pinned as regression tests:
 
-  R3-1  resuming a checkpoint with a different n_shards must fail
-        fast (n_shards is baked into the sharded state key — a silent
-        mismatch strands state and breaks exactly-once).
   R3-2  completed conversations become compact tombstones: excluded from
         heartbeat sweeps (no frozen-counter status spam), aged out silently
         under the TTL, late duplicates still discarded AND counted.
@@ -33,10 +30,7 @@ from dataflow_ordered_processing_spark.streaming.ordered_sharded import (
     _conv_to_tuple,
     make_sharded_func,
 )
-from dataflow_ordered_processing_spark.streaming.sinks import (
-    _check_engine_marker,
-    epoch_dirs,
-)
+from dataflow_ordered_processing_spark.streaming.sinks import epoch_dirs
 from dataflow_ordered_processing_spark.streaming.windows import (
     _watermark_seconds,
     start_first_match_join_pipeline,
@@ -48,16 +42,6 @@ from test_ordered_sharded import (  # reuse the fake-state harness
     _shard_batch_rows,
     _state_with,
 )
-
-
-# ---------------------------------------------------------------- R3-1
-
-def test_engine_marker_pins_n_shards(tmp_path):
-    ckpt = str(tmp_path / "ckpt")
-    _check_engine_marker(ckpt, "sharded", 256)
-    _check_engine_marker(ckpt, "sharded", 256)  # same config resumes fine
-    with pytest.raises(ValueError, match="n_shards"):
-        _check_engine_marker(ckpt, "sharded", 512)
 
 
 # ---------------------------------------------------------------- R3-2
@@ -340,16 +324,6 @@ def test_pricing_summary_micros_deterministic(spark, sf_dir, tmp_path, monkeypat
 
 
 # --------------------------------------- review round-2 findings (r3b)
-
-def test_marker_refuses_premarker_checkpoint(tmp_path):
-    """A checkpoint with committed state but no engine marker predates
-    config pinning — its n_shards is unknowable, so resume must refuse
-    instead of guessing (the default changed, silent re-keying risk)."""
-    ckpt = str(tmp_path / "ckpt")
-    os.makedirs(os.path.join(ckpt, "offsets"))
-    with pytest.raises(ValueError, match="no.*marker|marker"):
-        _check_engine_marker(ckpt, "sharded", 256)
-
 
 def test_sweep_completion_honors_cleanup_on_complete():
     """A capped drain finishing a conversation during a heartbeat sweep
