@@ -1016,7 +1016,8 @@ def _q_cep_strict(spark, sf_dir):
 
 def _q_cep_funnel(spark, sf_dir):
     """Skip-till-next funnel with a within bound (plans/cep.match_pattern
-    skip): nearest-following-match window columns + (key, idx) join hops."""
+    skip): cep_core.match_skip once per conversation over conv_id-sorted
+    partitions — one hash exchange on the key, zero joins."""
     from dataflow_ordered_processing_spark.plans.cep import match_pattern
 
     return match_pattern(
@@ -1244,9 +1245,9 @@ def _q_cep_times(spark, sf_dir):
     """Quantified CEP (cep_core.Times — Flink times(n)/oneOrMore analog,
     r7): a MAXIMAL run of >=3 consecutive flagged turns followed
     (skip-till-next) by a user turn, completing within 12 turns of the run
-    start. Plan: run detection (lag + nearest-following-break) and hop
-    tables in one (conv_id, turn_idx) window pass, then narrow equi-join
-    hops — plans/cep._match_skip_quant."""
+    start. Plan: the flag evaluated in Spark, then the stream's
+    cep_core.match_skip (maximal runs included) once per conversation over
+    conv_id-sorted partitions — plans/cep._match_skip."""
     from dataflow_ordered_processing_spark.operators.cep_core import Times
     from dataflow_ordered_processing_spark.plans.cep import match_pattern
 

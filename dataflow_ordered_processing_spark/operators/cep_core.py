@@ -15,9 +15,10 @@ Both contiguity modes are incremental, one matcher and one state shape
 each: strict carries the trailing (k-1) emitted turns across micro-batches
 (``match_strict``); skip-till-next carries a partial-match frontier — one
 open candidate per anchor, plus the quantified steps' open runs —
-(``match_skip``, for plain and quantified patterns alike). The batch
-operator in ``plans/cep.py`` computes the same semantics where the full
-table is available and serves as the oracle.
+(``match_skip``, for plain and quantified patterns alike). Batch skip
+mode (``plans/cep.py``) runs the same ``match_skip`` once per whole
+conversation; only batch strict mode has its own plan (k-1 LEADs). The
+oracles are the pure-Python brute-force matchers in the tests and DuckDB.
 
 Match semantics (pinned by tests/test_cep.py against a pure-Python oracle):
   - a match starts at every row where step 0 holds and steps 1..k-1 hold on
@@ -142,12 +143,12 @@ class Times:
     ordered table's invariant, the same assumption strict mode's
     ``end == start + k - 1`` guard makes).
 
-    ``step`` is a Step or a raw ``(name, sql)`` pair (the batch operator's
-    tuple form — quantified predicates often aren't structural role/tool
-    equalities).
+    ``step`` is a Step, a ColumnStep or a raw ``(name, sql)`` pair (the
+    batch operator's tuple form — quantified predicates often aren't
+    structural role/tool equalities).
     """
 
-    step: object  # Step | (name, sql)
+    step: object  # Step | ColumnStep | (name, sql)
     n_min: int = 1
     n_max: int | None = None
 
@@ -156,17 +157,19 @@ class Times:
             raise ValueError("times: n_min must be >= 1")
         if self.n_max is not None and self.n_max < self.n_min:
             raise ValueError("times: n_max must be >= n_min")
-        if not isinstance(self.step, Step) and not (
+        if not isinstance(self.step, (Step, ColumnStep)) and not (
             isinstance(self.step, (tuple, list)) and len(self.step) == 2
         ):
             raise ValueError(
-                "times: step must be a Step or a (name, sql) pair"
+                "times: step must be a Step, a ColumnStep or a (name, sql) pair"
             )
 
     @property
     def name(self) -> str:
         return (
-            self.step.name if isinstance(self.step, Step) else str(self.step[0])
+            str(self.step[0])
+            if isinstance(self.step, (tuple, list))
+            else self.step.name
         )
 
     @property
@@ -174,6 +177,19 @@ class Times:
         return (
             self.step.sql if isinstance(self.step, Step) else str(self.step[1])
         )
+
+
+@dataclass(frozen=True)
+class ColumnStep:
+    """A step whose predicate is already evaluated: ``mask(run)`` reads the
+    boolean column ``col`` of the run. The batch operator evaluates each
+    SQL step predicate in Spark and matches over these columns."""
+
+    name: str
+    col: str
+
+    def mask(self, cols: dict) -> np.ndarray:
+        return np.asarray(cols[self.col], bool)
 
 
 def one_or_more(step: Step) -> Times:
@@ -265,6 +281,7 @@ _OPEN = ("open_s", "open_s_ts", "open_e", "open_e_ts")
 # checkpoint marker as its format version (sinks._pattern_spec)
 SKIP_STATE_FIELDS = len(_CAND) + len(_OPEN) + 1
 _MATCH_COLS = ("start_idx", "end_idx", "ts_first_us", "ts_last_us")
+_TRAIL_COLS = ("step_idx", "step_end_idx")  # match_skip only: (n, k) arrays
 
 
 def empty_frontier_q(n_quant: int) -> dict:
@@ -336,15 +353,16 @@ def match_skip(
     final: bool = False,
 ) -> tuple[dict, dict]:
     """Incremental skip-till-next-match (Flink CEP ``followedBy``) over one
-    in-order emitted run — the streaming counterpart of
-    ``plans.cep.match_pattern(mode="skip")`` (same semantics, quantified
-    steps included; parity-tested against it and a brute-force oracle).
+    in-order emitted run — THE skip matcher: the stream calls it per
+    emitted run with the frontier carried, and
+    ``plans.cep.match_pattern(mode="skip")`` calls it once per whole
+    conversation with ``final=True``. Tested against brute-force oracles.
 
-    ``steps``: a tuple of Step / Times (Times.step must be a Step — the
-    matcher needs its structural mask). A plain step hops to the NEAREST
-    following matching row; a quantified step to the nearest following
-    qualifying maximal run (see :class:`Times`), and the chain continues
-    from the run's end.
+    ``steps``: a tuple of Step / ColumnStep / Times (Times.step must be a
+    Step or ColumnStep — the matcher needs its mask). A plain step hops to
+    the NEAREST following matching row; a quantified step to the nearest
+    following qualifying maximal run (see :class:`Times`), and the chain
+    continues from the run's end.
 
     State is a per-key **partial-match frontier**: one entry per open
     candidate — ``anchor_idx``/``anchor_ts_us``, ``wait`` (the next step it
@@ -371,11 +389,11 @@ def match_skip(
     ``guards`` (``plans.cep`` ``not_between`` analog): ``{segment_i: Step}``
     — a candidate at step i dies when a guard row appears strictly between
     its step-i match and its step-i+1 match (a row matching BOTH the guard
-    and step i+1 advances the candidate, exactly like the batch plan's
-    ``_ng >= _next`` rule). A candidate waiting on a PLAIN step dies in the
-    batch where the guard row appears: any later hop is after it. Waiting on
-    a QUANTIFIED step the kill is deferred (``guard_seen``): a run still
-    open may qualify with a start before the guard row and absolve it.
+    and step i+1 advances the candidate). A candidate waiting on a PLAIN
+    step dies in the batch where the guard row appears: any later hop is
+    after it. Waiting on a QUANTIFIED step the kill is deferred
+    (``guard_seen``): a run still open may qualify with a start before the
+    guard row and absolve it.
 
     Bounds / pruning:
       - ``within_turns``: exact — a candidate is dropped once no future
@@ -397,7 +415,12 @@ def match_skip(
     that processes (or, for a quantified last step, closes) its END turn;
     turns are processed once, in order. Returns ``(matches,
     new_frontier)`` with the same matches columns as :func:`match_strict`,
-    sorted by start.
+    sorted by start, plus ``step_idx`` / ``step_end_idx``: (matches, k)
+    arrays of each step's matched turn (a quantified step's run start) and
+    its last consumed turn (the run end; the same turn for a plain step).
+    They are kept in arrays local to the call, not in the frontier, so they
+    are known only for candidates anchored in this call: a step matched in
+    an earlier call reads -1.
     """
     k = len(steps)
     if k < 2:
@@ -409,7 +432,10 @@ def match_skip(
     ts = np.asarray(run["ts_us"], np.int64)
     n = len(idx)
     if n == 0 and not final:
-        return {c: np.empty(0, np.int64) for c in _MATCH_COLS}, fr
+        return {
+            **{c: np.empty(0, np.int64) for c in _MATCH_COLS},
+            **{c: np.empty((0, k), np.int64) for c in _TRAIL_COLS},
+        }, fr
     c_aidx, c_ats, c_wait, c_cpos, c_gseen = (
         np.asarray(fr[c], np.int64) for c in _CAND
     )
@@ -446,6 +472,10 @@ def match_skip(
     # new anchors: step 0's rows / closed qualifying runs (an open anchor
     # run becomes a candidate when it closes)
     a_s, a_sts, a_e = (a[:-1] for a in tables[0][:3])
+    # each candidate's matched (start, end) per step, for this call only
+    t_s = np.full((len(c_aidx) + len(a_s), k), -1, np.int64)
+    t_e = t_s.copy()
+    t_s[len(c_aidx):, 0], t_e[len(c_aidx):, 0] = a_s, a_e
     c_aidx = np.concatenate([c_aidx, a_s])
     c_ats = np.concatenate([c_ats, a_sts])
     c_wait = np.concatenate([c_wait, np.ones(len(a_s), np.int64)])
@@ -456,7 +486,7 @@ def match_skip(
     # that advance from step i are taken up again at step i + 1; wait == 0
     # marks a killed one. Candidates stay in anchor order (the frontier,
     # then this batch's anchors), so completions come out sorted by start.
-    comp = [np.empty(0, np.int64)] * 4
+    comp = [np.empty(0, np.int64)] * 4 + [np.empty((0, k), np.int64)] * 2
     for i in range(1, k):
         sel = np.flatnonzero(c_wait == i)
         if not len(sel):
@@ -480,16 +510,17 @@ def match_skip(
         c_cpos[a] = he[pa]
         c_wait[a] = i + 1
         c_gseen[a] = INF_IDX
+        t_s[a, i], t_e[a, i] = hs[pa], he[pa]
         if i == k - 1:
-            comp = [c_aidx[a], he[pa], c_ats[a], he_ts[pa]]
+            comp = [c_aidx[a], he[pa], c_ats[a], he_ts[pa], t_s[a], t_e[a]]
 
-    m_start, m_end, m_tsf, m_tsl = comp
+    m_start, m_end, m_tsf, m_tsl = comp[:4]
     keep = np.ones(len(m_start), bool)
     if within_us is not None:
         keep &= m_tsl - m_tsf <= within_us
     if within_turns is not None:
         keep &= m_end - m_start <= within_turns
-    matches = {c: v[keep] for c, v in zip(_MATCH_COLS, comp)}
+    matches = {c: v[keep] for c, v in zip(_MATCH_COLS + _TRAIL_COLS, comp)}
 
     still = (c_wait > 0) & (c_wait < k)
     if final:

@@ -3,24 +3,23 @@
 The north rule calls this engine a "structured-streaming / CEP engine"; the
 reference's ordered output is exactly the substrate row-pattern queries need
 (a per-key gap-free sequence). Spark has no MATCH_RECOGNIZE, so this module
-re-expresses the two workhorse pattern classes as pure window-function /
-equi-join plans (whole-stage-codegen built-ins, no Python):
+runs the two workhorse pattern classes:
 
   - ``mode="strict"`` — strict contiguity (Flink CEP ``next`` /
     MATCH_RECOGNIZE default): step i must hold on the i-th *consecutive*
     turn after the anchor. Plan: k-1 LEADs over (key ORDER BY order) — ONE
-    hash exchange on the key, zero joins.
+    hash exchange on the key, zero joins, no Python.
   - ``mode="skip"`` — skip-till-next-match (Flink CEP ``followedBy``): step
     i must hold on the *nearest* following turn after the matched step i-1
-    row. Plan: per-step "nearest following match" columns via
-    MIN(CASE WHEN step THEN order END) OVER (ROWS BETWEEN 1 FOLLOWING AND
-    UNBOUNDED FOLLOWING), then one equi-join on (key, matched idx) per
-    step after the anchor to hop the chain (plus one per quantified step —
-    ``_match_skip_quant``, the one skip plan) — narrow (key, int, ts) rows
-    only, no text. The window pass is re-derived per join consumer; an A/B
-    at 4M rows showed that beats localCheckpoint-ing the projection (4.4 s
-    vs 7.2 s warm — rebuilding from cached input is cheaper than
-    materializing 4M×7 rows), so the plan deliberately recomputes.
+    row. The stream's skip matcher (``cep_core.match_skip``) runs once per
+    conversation (``_match_skip``): predicates evaluated in Spark, ONE hash
+    exchange on the key, a sort within partitions and a ``mapInPandas``,
+    zero joins. It replaced a plan of nearest-following-match windows and
+    one equi-join hop per step, which took about 3x as long at 4M rows on
+    4 cores, and whose ROWS BETWEEN 1 FOLLOWING AND UNBOUNDED FOLLOWING
+    frames cost time quadratic in a conversation's length
+    (BENCH/cep_one_matcher_r15.json). Strict mode keeps its LEADs: a
+    prototype measured strict patterns slower through the matcher.
 
 Both modes support FlinkCEP-style ``within``: the first→last timestamp span
 bound, compared in exact epoch-micros (Spark ``unix_micros`` ≡ DuckDB
@@ -28,16 +27,27 @@ bound, compared in exact epoch-micros (Spark ``unix_micros`` ≡ DuckDB
 
 Overlap policy is ALL matches (SQL:2016 ``AFTER MATCH SKIP TO NEXT ROW``):
 every anchor row that completes a chain reports one match. This keeps the
-operator a pure per-row expression — deterministic, oracle-exact, and free
-of the sequential scan a SKIP PAST LAST ROW policy would force.
+result deterministic and oracle-exact, free of the sequential scan a SKIP
+PAST LAST ROW policy would force.
 """
 
 from __future__ import annotations
 
+import functools
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
-from ..operators.cep_core import Step, Times, expand_strict_times
+from ..operators.cep_core import (
+    ColumnStep,
+    Step,
+    Times,
+    expand_strict_times,
+    match_skip,
+)
 
 
 def _norm(steps) -> list[dict]:
@@ -47,31 +57,17 @@ def _norm(steps) -> list[dict]:
     or raw (name, sql) tuples."""
     out = []
     for s in steps:
-        if isinstance(s, Times):
-            out.append(
-                {
-                    "name": s.name,
-                    "sql": s.sql,
-                    "quant": True,
-                    "n_min": s.n_min,
-                    "n_max": s.n_max,
-                }
-            )
-        elif isinstance(s, Step):
-            out.append(
-                {"name": s.name, "sql": s.sql, "quant": False, "n_min": 1, "n_max": 1}
-            )
-        else:
-            name, sql = s
-            out.append(
-                {
-                    "name": str(name),
-                    "sql": str(sql),
-                    "quant": False,
-                    "n_min": 1,
-                    "n_max": 1,
-                }
-            )
+        quant = isinstance(s, Times)
+        name, sql = (s.name, s.sql) if quant or isinstance(s, Step) else map(str, s)
+        out.append(
+            {
+                "name": name,
+                "sql": sql,
+                "quant": quant,
+                "n_min": s.n_min if quant else 1,
+                "n_max": s.n_max if quant else 1,
+            }
+        )
     if len(out) < 2:
         raise ValueError("a pattern needs at least 2 steps")
     if len({p["name"] for p in out}) != len(out):
@@ -106,9 +102,7 @@ def match_pattern(
     ``not_between`` (skip mode): negative guards — Flink CEP
     ``notFollowedBy``: ``{i: step}`` demands NO row matching ``step``
     STRICTLY between matched step ``i`` and matched step ``i+1``. Plan
-    cost: one extra nearest-following-match window column per guard, no
-    extra joins (the guard column rides the join that already fetches step
-    i+1's nearest match at step i's continue position). Strict mode raises
+    cost: one more predicate column into the matcher. Strict mode raises
     (consecutive turns have no between).
 
     Output (strict): key, start_idx, end_idx, ts_first, ts_last, span_us.
@@ -132,9 +126,7 @@ def match_pattern(
         pairs = _norm(expand_strict_times(list(steps)))
         return _match_strict(df, pairs, within, key, order, ts)
     if mode == "skip":
-        return _match_skip_quant(
-            df, pairs, within, within_turns, guards, key, order, ts
-        )
+        return _match_skip(df, pairs, within, within_turns, guards, key, order, ts)
     raise ValueError(f"unknown mode {mode!r} (strict | skip)")
 
 
@@ -214,189 +206,123 @@ def _match_strict(df, pairs, within, key, order, ts) -> DataFrame:
     )
 
 
-def _match_skip_quant(
-    df, pairs, within, within_turns, guards, key, order, ts
-) -> DataFrame:
-    """THE skip-till-next plan, for plain and quantified steps alike. A
-    plain step matches the nearest following row of its predicate; a
-    quantified step (cep_core.Times) consumes a MAXIMAL consecutive run of
-    its predicate with length in [n_min, n_max], and the chain continues
-    from the run's END (greedy), so the next step's nearest-following
-    lookup starts strictly after the run.
+def _match_skip(df, pairs, within, within_turns, guards, key, order, ts):
+    """THE skip-till-next operator, for plain and quantified steps alike:
+    the stream's matcher (cep_core.match_skip; maximal-run semantics in
+    cep_core.Times) run once per whole conversation.
 
-    Plan shape:
-      layer 1 — per quantified step, run detection over ONE (key, order)
-        window pass: run start = pred AND NOT lag(pred); run end =
-        nearest-following NON-pred row - 1 (order is gap-free per key, the
-        M3 invariant) else the key's max order; qualifying = length bounds.
-        A plain-only pattern has no layer 1.
-      layer 2 — per-step nearest-following-match columns over the SAME
-        window frame (qualifying run STARTS for quantified steps, plain
-        predicate rows otherwise) + negative-guard columns. Two projection
-        layers because Spark cannot nest a window inside a window; both
-        resolve over one hash exchange on the key.
-      hops — per step, a fetch join at the matched position: its ts, plus
-        the run end (quantified) or, for a plain step, the next step's
-        nearest match and the segment guard — a plain step's continue
-        position IS its matched row, so they ride the same join. After a
-        quantified step the continue position is the run end, so a lookup
-        join there fetches them: a quantified step costs one extra narrow
-        join over a plain one. Narrow (key, int, ts) rows only.
+    Each step predicate and guard is evaluated once in Spark, NULL read as
+    false. The narrow (key, order, ts micros, predicates) frame is hash
+    partitioned on the key and sorted within partitions, so a
+    conversation's rows arrive contiguous and in order; ``_match_by_key``
+    cuts them at key changes. Order and ts must be non-NULL, as in the
+    ordered table.
 
     Output: key, <name>_idx per step (+ <name>_end_idx for quantified
     steps — the consumed run's last row), ts_first, ts_last, span_us. For a
     quantified last step ts_last/span are measured at the run END (the
     match's true last row).
     """
-    k = len(pairs)
-    w = Window.partitionBy(key).orderBy(order)
-    wf = w.rowsBetween(1, Window.unboundedFollowing)
-    wall = Window.partitionBy(key)
-
-    layer1 = {}
+    preds = {f"_p{i}": p["sql"] for i, p in enumerate(pairs)}
+    preds.update({f"_g{j}": g for j, g in guards.items()})
+    steps = []
     for i, p in enumerate(pairs):
-        if not p["quant"]:
-            continue
-        # NULL predicate (e.g. tool = 'x' on a NULL-tool row) means "not a
-        # run member" — coalesce to FALSE so the row both fails membership
-        # AND counts as a run break (bare ~NULL is NULL, which when() would
-        # skip, silently extending runs across such rows)
-        pred = F.coalesce(F.expr(p["sql"]), F.lit(False))
-        is_start = pred & ~F.coalesce(F.lag(pred).over(w), F.lit(False))
-        next_break = F.min(F.when(~pred, F.col(order))).over(wf)
-        run_end = F.coalesce(
-            next_break - F.lit(1), F.max(F.col(order)).over(wall)
+        s = ColumnStep(p["name"], f"_p{i}")
+        steps.append(Times(s, p["n_min"], p["n_max"]) if p["quant"] else s)
+    match = functools.partial(
+        match_skip,
+        tuple(steps),
+        within_us=_within_us(within),
+        within_turns=within_turns,
+        guards={j: ColumnStep(f"_g{j}", f"_g{j}") for j in guards},
+        final=True,
+    )
+    # (output column, match_skip trail, step position)
+    idx_cols = []
+    for i, p in enumerate(pairs):
+        idx_cols.append((f"{p['name']}_idx", "step_idx", i))
+        if p["quant"]:
+            idx_cols.append((f"{p['name']}_end_idx", "step_end_idx", i))
+    schema = StructType(
+        [
+            df.schema[key],
+            # the anchor's idx IS an order value: as nullable as order
+            StructField(idx_cols[0][0], LongType(), df.schema[order].nullable),
+            *[StructField(c, LongType()) for c, _, _ in idx_cols[1:]],
+            StructField("ts_first_us", LongType()),
+            StructField("ts_last_us", LongType()),
+        ]
+    )
+    out = (
+        df.select(
+            key,
+            F.col(order).cast("long").alias("turn_idx"),
+            _micros(F.col(ts)).alias("ts_us"),
+            *[
+                F.coalesce(F.expr(sql), F.lit(False)).alias(c)
+                for c, sql in preds.items()
+            ],
         )
-        run_len = run_end - F.col(order) + F.lit(1)
-        q = is_start & (run_len >= F.lit(int(p["n_min"])))
-        if p["n_max"] is not None:
-            q = q & (run_len <= F.lit(int(p["n_max"])))
-        layer1[f"_qs_{i}"] = q
-        layer1[f"_qe_{i}"] = run_end
-    base1 = df.withColumns(layer1)
-
-    layer2 = {}
-    for i, p in enumerate(pairs):
-        hit = F.col(f"_qs_{i}") if p["quant"] else F.expr(p["sql"])
-        if i == 0:
-            layer2["_m0"] = hit
-        else:
-            layer2[f"_next_{i}"] = F.min(F.when(hit, F.col(order))).over(wf)
-    for j, gsql in guards.items():
-        layer2[f"_ng_{j}"] = F.min(F.when(F.expr(gsql), F.col(order))).over(wf)
-    base = base1.withColumns(layer2).select(
+        .repartition(key)
+        .sortWithinPartitions(key, "turn_idx")
+        .mapInPandas(
+            lambda it: _match_by_key(it, key, match, idx_cols), schema
+        )
+    )
+    idx_type, ts_type = df.schema[order].dataType, df.schema[ts].dataType
+    return out.select(
         key,
-        order,
-        ts,
-        "_m0",
-        *[f"_next_{i}" for i in range(1, k)],
-        *[f"_ng_{j}" for j in guards],
-        *[f"_qe_{i}" for i, p in enumerate(pairs) if p["quant"]],
+        *[F.col(c).cast(idx_type) for c, _, _ in idx_cols],
+        F.timestamp_micros("ts_first_us").cast(ts_type).alias("ts_first"),
+        F.timestamp_micros("ts_last_us").cast(ts_type).alias("ts_last"),
+        (F.col("ts_last_us") - F.col("ts_first_us")).alias("span_us"),
     )
 
-    def step_after(i):
-        # evaluated AT step i's continue position: the nearest following
-        # match of step i+1 and the segment-i guard
-        cols = [F.col(f"_next_{i + 1}").alias("_jn")]
-        if i in guards:
-            cols.append(F.col(f"_ng_{i}").alias("_jg"))
-        return cols
 
-    def on_row(pos):
-        return (F.col(key) == F.col("_jk")) & (F.col(pos) == F.col("_ji"))
+def _match_by_key(batches, key, match, idx_cols):
+    """mapInPandas body over rows sorted by (key, turn_idx): match each
+    key's rows whole. A batch's last key may continue in the next batch, so
+    its rows are held until a later key (or the partition's end) shows the
+    key complete — a conversation longer than one Arrow batch is still
+    matched in one call."""
+    held = []
+    for pdf in batches:
+        keys = pdf[key].to_numpy()
+        if not len(keys):
+            continue
+        cuts = np.flatnonzero(keys[1:] != keys[:-1])
+        tail = int(cuts[-1]) + 1 if len(cuts) else 0
+        if not tail and held and held[-1][key].iat[-1] == keys[0]:
+            held.append(pdf)
+            continue
+        done = pd.concat([*held, pdf.iloc[:tail]]) if held else pdf.iloc[:tail]
+        held = [pdf.iloc[tail:]]
+        if len(done):
+            yield from _match_keys(done, key, match, idx_cols)
+    if held:
+        yield from _match_keys(pd.concat(held), key, match, idx_cols)
 
-    name0 = pairs[0]["name"]
-    anchor_cols = [
-        F.col(key).alias(key),
-        F.col(order).alias(f"{name0}_idx"),
-        F.col(ts).alias("ts_first"),
-    ]
-    if pairs[0]["quant"]:
-        anchor_cols += [
-            F.col("_qe_0").alias(f"{name0}_end_idx"),
-            F.col("_qe_0").alias("_cp"),
-        ]
-    else:
-        anchor_cols += step_after(0)
-    cur = base.filter(F.col("_m0")).select(*anchor_cols)
 
-    for i in range(1, k):
-        p = pairs[i]
-        name_i = p["name"]
-        if pairs[i - 1]["quant"]:
-            # lookup at the continue position (the previous run's end)
-            cur = cur.join(
-                base.select(
-                    F.col(key).alias("_jk"),
-                    F.col(order).alias("_ji"),
-                    *step_after(i - 1),
-                ),
-                on_row("_cp"),
-                "inner",
-            ).drop("_jk", "_ji", "_cp")
-        cur = cur.filter(F.col("_jn").isNotNull())
-        if (i - 1) in guards:
-            # nearest following guard must not land strictly before the
-            # matched step-i row
-            cur = cur.filter(
-                F.col("_jg").isNull() | (F.col("_jg") >= F.col("_jn"))
-            ).drop("_jg")
-        cur = cur.withColumnRenamed("_jn", f"{name_i}_idx")
-        # fetch the matched row: its ts, plus the consumed run's end
-        # (quantified) or what a plain step's row carries for step i+1
-        fetch_sel = [
-            F.col(key).alias("_jk"),
-            F.col(order).alias("_ji"),
-            F.col(ts).alias("_jts"),
-        ]
-        if p["quant"]:
-            fetch_sel.append(F.col(f"_qe_{i}").alias("_je"))
-        elif i + 1 < k:
-            fetch_sel += step_after(i)
-        cur = cur.join(
-            base.select(*fetch_sel), on_row(f"{name_i}_idx"), "inner"
-        ).drop("_jk", "_ji")
-        if p["quant"]:
-            cur = cur.withColumn("_cp", F.col("_je")).withColumnRenamed(
-                "_je", f"{name_i}_end_idx"
-            )
-            if i == k - 1:
-                # ts_last belongs to the run's END row, not its start
-                cur = cur.drop("_jts").join(
-                    base.select(
-                        F.col(key).alias("_jk"),
-                        F.col(order).alias("_ji"),
-                        F.col(ts).alias("ts_last"),
-                    ),
-                    on_row("_cp"),
-                    "inner",
-                ).drop("_jk", "_ji", "_cp")
-            else:
-                cur = cur.drop("_jts")
-        else:
-            cur = (
-                cur.withColumnRenamed("_jts", "ts_last")
-                if i == k - 1
-                else cur.drop("_jts")
-            )
-
-    cur = cur.withColumn(
-        "span_us", _micros(F.col("ts_last")) - _micros(F.col("ts_first"))
+def _match_keys(pdf, key, match, idx_cols):
+    """One match call per key of ``pdf`` (whole keys, sorted); yields the
+    matches as one frame, or nothing."""
+    keys = pdf[key].to_numpy()
+    run = {c: pdf[c].to_numpy() for c in pdf.columns if c != key}
+    cuts = [0, *(np.flatnonzero(keys[1:] != keys[:-1]) + 1), len(keys)]
+    owner, found = [], []
+    for a, b in zip(cuts, cuts[1:]):
+        m, _ = match({c: v[a:b] for c, v in run.items()})
+        if len(m["start_idx"]):
+            owner.append(np.repeat(keys[a:a + 1], len(m["start_idx"])))
+            found.append(m)
+    if not found:
+        return
+    m = {c: np.concatenate([f[c] for f in found]) for c in found[0]}
+    yield pd.DataFrame(
+        {
+            key: np.concatenate(owner),
+            **{c: m[trail][:, i] for c, trail, i in idx_cols},
+            "ts_first_us": m["ts_first_us"],
+            "ts_last_us": m["ts_last_us"],
+        }
     )
-    wus = _within_us(within)
-    if wus is not None:
-        cur = cur.filter(F.col("span_us") <= F.lit(wus))
-    if within_turns is not None:
-        last = pairs[-1]
-        last_idx = F.col(
-            f"{last['name']}_end_idx" if last["quant"] else f"{last['name']}_idx"
-        )
-        cur = cur.filter(
-            last_idx - F.col(f"{name0}_idx") <= F.lit(int(within_turns))
-        )
-    out_cols = [key]
-    for p in pairs:
-        out_cols.append(f"{p['name']}_idx")
-        if p["quant"]:
-            out_cols.append(f"{p['name']}_end_idx")
-    return cur.select(*out_cols, "ts_first", "ts_last", "span_us")

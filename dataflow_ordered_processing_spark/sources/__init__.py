@@ -1,5 +1,5 @@
 from .transcripts import TRANSCRIPTS_SQL, derive_transcripts, load_table, shuffled_arrival
-from .scenarios import scenario, SCENARIOS, write_microbatches
+from .scenarios import scenario, SCENARIOS
 
 __all__ = [
     "TRANSCRIPTS_SQL",
@@ -8,5 +8,4 @@ __all__ = [
     "shuffled_arrival",
     "scenario",
     "SCENARIOS",
-    "write_microbatches",
 ]

@@ -14,7 +14,6 @@ wall-clock, no unordered iteration.
 from __future__ import annotations
 
 import hashlib
-import os
 from datetime import datetime, timedelta
 
 import numpy as np
@@ -194,15 +193,3 @@ def serial_oracle(batches: list[pd.DataFrame]) -> pd.DataFrame:
         if out
         else allrows.head(0).assign(emit_seq=pd.Series(dtype="int64"))
     )
-
-
-def write_microbatches(batches: list[pd.DataFrame], directory: str) -> list[str]:
-    """Stage arrival batches as parquet files batch-000N.parquet — appending
-    them between processAllAvailable() calls is our TestStream equivalent."""
-    os.makedirs(directory, exist_ok=True)
-    paths = []
-    for i, b in enumerate(batches):
-        p = os.path.join(directory, f"batch-{i:04d}.parquet")
-        b.to_parquet(p, index=False)
-        paths.append(p)
-    return paths

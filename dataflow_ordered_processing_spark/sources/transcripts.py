@@ -68,12 +68,6 @@ def derive_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(TRANSCRIPTS_SQL)
 
 
-def oracle_with_transcripts(body: str) -> str:
-    """Wrap an oracle query body with the shared transcripts CTE (DuckDB runs
-    the identical derivation over its pre-registered ``events`` view)."""
-    return f"WITH transcripts AS ({TRANSCRIPTS_SQL}) {body}"
-
-
 def shuffled_arrival(df: DataFrame, seed: int = 42) -> DataFrame:
     """A deterministic arrival permutation of a transcripts table — models the
     out-of-order delivery the reference's TestStream scripts

@@ -25,7 +25,7 @@ from dataflow_ordered_processing_spark.operators.cep_core import (
 from dataflow_ordered_processing_spark.plans.cep import match_pattern
 
 FUNNEL_PLAN_DUMP = os.path.join(
-    os.path.dirname(__file__), "../plans/r10/cep_funnel_before.txt"
+    os.path.dirname(__file__), "../plans/r12/cep_funnel_after.txt"
 )
 ROLES = ["user", "assistant", "tool", "system"]
 TOOLS = [None, "search", "code"]
@@ -78,10 +78,11 @@ def ref_skip(rows, steps, within_us=None):
 
 
 def _holds(step: Step, row: dict) -> bool:
-    if step.role is not None and row["role"] != step.role:
-        return False
-    if step.tool is not None and row["tool"] != step.tool:
-        return False
+    for col, v in (("role", step.role), ("tool", step.tool)):
+        if v is not None and not (
+            row[col] in v if isinstance(v, tuple) else row[col] == v
+        ):
+            return False
     return True
 
 
@@ -268,17 +269,25 @@ def _plan_counts(plan: str) -> list[int]:
 
 def test_skip_plan_no_larger_than_committed_dump(spark, sf_dir):
     """The cep_funnel gate query (a plain skip pattern), once executed, has
-    no more Join or Exchange matches than the committed dump of the plain
-    skip plan it replaced: after a plain step the one skip plan adds no
-    lookup join."""
+    no more Join or Exchange matches than the committed dump of the skip
+    plan, and the skip operator itself adds no join and exactly one hash
+    exchange, on the key (the transcripts derivation brings its own, on
+    user_id)."""
     import __spark_entry__ as E
 
     out = E._q_cep_funnel(spark, sf_dir)
     assert out.collect()  # runs out's own query execution: its plan is final
-    got = _plan_counts(out._jdf.queryExecution().executedPlan().toString())
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    got = _plan_counts(plan)
     with open(FUNNEL_PLAN_DUMP) as f:
         want = _plan_counts("".join(ln for ln in f if not ln.startswith("#")))
     assert all(g <= w for g, w in zip(got, want)), (got, want)
+    final = plan.split("== Initial Plan ==")[0]
+    assert got[0] == 0, plan
+    assert re.findall(r"Exchange hashpartitioning\((\w+)", final) == [
+        "conv_id",
+        "user_id",
+    ], final
 
 
 def test_match_pattern_within_turns(spark):

@@ -1,13 +1,14 @@
 """Streaming quantified CEP (Times steps on cfg.pattern, skip mode): the
 incremental frontier matcher with maximal-run quantifiers must agree with
-the batch plan (plans/cep._match_skip_quant) on completed conversations,
-across micro-batch boundaries, out-of-order arrival, and duplicates — and
-must HOLD a run that touches the last delivered turn until a break row or
-the conversation's completion proves it maximal.
+the brute-force oracle (test_cep_times._brute_quant) on completed
+conversations, across micro-batch boundaries, out-of-order arrival, and
+duplicates — and must HOLD a run that touches the last delivered turn until
+a break row or the conversation's completion proves it maximal.
 """
 
 from __future__ import annotations
 
+import functools
 import pickle
 import random
 
@@ -20,13 +21,14 @@ from dataflow_ordered_processing_spark.operators.cep_core import (
     Times,
     match_skip,
 )
-from dataflow_ordered_processing_spark.plans.cep import match_pattern
 from dataflow_ordered_processing_spark.streaming.ordered_stream import (
     OrderedStreamConfig,
     split_output_cep,
 )
 
 from streaming_utils import run_to_memory
+from test_cep import _holds
+from test_cep_times import _brute_quant, _brute_quant_rows
 
 ROLES = ["user", "assistant", "tool"]
 TOOLS = [None, "search", "code"]
@@ -62,22 +64,24 @@ def _random_convs(seed, n_convs=5, max_turns=35, sentinel=True):
 STEPS = (Times(Step("t", role="tool"), 2, None), Step("u", role="user"))
 
 
-def _batch_expected(spark, full, steps=STEPS, **kw):
-    m = match_pattern(spark.createDataFrame(full), list(steps), mode="skip", **kw)
-    last = steps[-1]
-    end_col = (
-        f"{last.name}_end_idx" if isinstance(last, Times) else f"{last.name}_idx"
-    )
-    first = steps[0]
+def _oracle_expected(full, steps=STEPS, within_turns=None):
+    """The brute-force oracle (test_cep_times._brute_quant) projected to
+    the streaming match-row shape (first step's idx, last step's last
+    idx)."""
     return sorted(
-        m.selectExpr(
-            "conv_id",
-            f"CAST({first.name}_idx AS BIGINT) AS s",
-            f"CAST({end_col} AS BIGINT) AS e",
-        )
-        .toPandas()
-        .itertuples(index=False, name=None)
+        (r[0], r[1], r[-1])
+        for r in _brute_quant(full, _pairs(steps), within_turns=within_turns)
     )
+
+
+def _pairs(steps):
+    """Steps as the brute-force oracle's (pred_fn, quant, n_min, n_max)."""
+    return [
+        (functools.partial(_holds, s.step), True, s.n_min, s.n_max)
+        if isinstance(s, Times)
+        else (functools.partial(_holds, s), False, 1, 1)
+        for s in steps
+    ]
 
 
 def _stream_got(spark, tmp_path, batches, cfg, **run_kw):
@@ -100,7 +104,7 @@ def test_quant_stream_equals_batch(spark, tmp_path):
     b2 = pd.concat([full[full.turn_idx % 2 == 1], full.head(6)], ignore_index=True)
     cfg = OrderedStreamConfig(pattern=STEPS, pattern_mode="skip")
     got = _stream_got(spark, tmp_path, [b1, b2], cfg)
-    expect = _batch_expected(spark, full)
+    expect = _oracle_expected(full)
     assert got == expect and len(got) > 0
     # quantified runs genuinely longer than the minimum occur
     assert any(e - s >= 2 for _, s, e in got)
@@ -117,7 +121,7 @@ def test_quant_stream_equals_batch_sharded(spark, tmp_path):
     got = _stream_got(
         spark, tmp_path, [b1, b2, b3], cfg, n_shards=4
     )
-    expect = _batch_expected(spark, full, within_turns=9)
+    expect = _oracle_expected(full, within_turns=9)
     assert got == expect and len(got) > 0
 
 
@@ -144,7 +148,7 @@ def test_quant_open_run_holds_until_proven_maximal(spark, tmp_path):
     # batch 1 = turns 1..4 (tool run 2-4 touches the batch end → open);
     # batch 2 = turns 5..6 (user breaks the run, sentinel completes)
     got = _stream_got(spark, tmp_path, [full.iloc[:4], full.iloc[4:]], cfg)
-    expect = _batch_expected(spark, full, steps=steps)
+    expect = _oracle_expected(full, steps=steps)
     assert got == expect == [("h000", 1, 4)]
 
 
@@ -168,91 +172,13 @@ def test_quant_final_flush_closes_open_run(spark, tmp_path):
     steps = (Step("u", role="user"), Times(Step("t", role="tool"), 2, None))
     cfg = OrderedStreamConfig(pattern=steps, pattern_mode="skip")
     got = _stream_got(spark, tmp_path, [full], cfg)
-    assert got == _batch_expected(spark, full, steps=steps) == [("f000", 1, 3)]
+    assert got == _oracle_expected(full, steps=steps) == [("f000", 1, 3)]
 
 
 def test_quant_property_vs_bruteforce():
     """Randomized roles/tools, quantifier bounds, guards, within bounds,
     arbitrary micro-batch splits, frontier round-tripped through pickle
     every hop, completion flush on the last chunk."""
-
-    def brute(steps, rows, within_us, within_turns, guards):
-        def ism(st, p):
-            s = st.step if isinstance(st, Times) else st
-            r = rows[p]
-            return (s.role is None or r[1] == s.role) and (
-                s.tool is None or r[2] == s.tool
-            )
-
-        n = len(rows)
-
-        def bounds(st):
-            return (st.n_min, st.n_max) if isinstance(st, Times) else (1, 1)
-
-        def is_q(st):
-            return isinstance(st, Times)
-
-        def run_end(p0, st):
-            e = p0
-            while e + 1 < n and ism(st, e + 1):
-                e += 1
-            return e
-
-        def is_start(p0, st):
-            return ism(st, p0) and (p0 == 0 or not ism(st, p0 - 1))
-
-        out = []
-        first = steps[0]
-        for a in range(n):
-            if is_q(first):
-                if not is_start(a, first):
-                    continue
-                e = run_end(a, first)
-                ln = e - a + 1
-                n_min, n_max = bounds(first)
-                if ln < n_min or (n_max is not None and ln > n_max):
-                    continue
-                cpos = e
-            else:
-                if not ism(first, a):
-                    continue
-                cpos = a
-            ok = True
-            for si in range(1, len(steps)):
-                st = steps[si]
-                n_min, n_max = bounds(st)
-                hit = None
-                for q in range(cpos + 1, n):
-                    if is_q(st):
-                        if is_start(q, st):
-                            e = run_end(q, st)
-                            ln = e - q + 1
-                            if ln >= n_min and (n_max is None or ln <= n_max):
-                                hit = (q, e)
-                                break
-                    elif ism(st, q):
-                        hit = (q, q)
-                        break
-                if hit is None:
-                    ok = False
-                    break
-                if guards and (si - 1) in guards and any(
-                    (guards[si - 1].role is None or rows[q][1] == guards[si - 1].role)
-                    and (guards[si - 1].tool is None or rows[q][2] == guards[si - 1].tool)
-                    for q in range(cpos + 1, hit[0])
-                ):
-                    ok = False
-                    break
-                cpos = hit[1]
-            if not ok:
-                continue
-            st_row, en_row = rows[a], rows[cpos]
-            if within_us is not None and en_row[3] - st_row[3] > within_us:
-                continue
-            if within_turns is not None and en_row[0] - st_row[0] > within_turns:
-                continue
-            out.append((st_row[0], en_row[0]))
-        return sorted(out)
 
     rng = random.Random(41)
     for trial in range(250):
@@ -283,7 +209,16 @@ def test_quant_property_vs_bruteforce():
                 seg: Step("g", role=rng.choice(ROLES))
                 for seg in rng.sample(range(k - 1), rng.randint(1, k - 1))
             }
-        expect = brute(steps, rows, within_us, within_turns, guards)
+        expect = sorted(
+            (m[0], m[-1])
+            for m in _brute_quant_rows(
+                [dict(zip(("turn_idx", "role", "tool", "ts_us"), r)) for r in rows],
+                _pairs(steps),
+                within_us,
+                within_turns,
+                {g: functools.partial(_holds, st) for g, st in (guards or {}).items()},
+            )
+        )
         if n == 0:
             continue
         fr, got, i = None, [], 0
@@ -392,7 +327,7 @@ def test_in_set_step_sql_mask_and_validation():
 
 def test_in_set_quantified_run_stream_equals_batch(spark, tmp_path):
     """'2+ consecutive NON-USER turns then a user turn' — the IN-set
-    alphabet quantifiers naturally want; streaming == batch."""
+    alphabet quantifiers naturally want; streaming == the oracle."""
     steps = (
         Times(Step("b", role=("assistant", "tool")), 2, None),
         Step("u", role="user"),
@@ -402,7 +337,7 @@ def test_in_set_quantified_run_stream_equals_batch(spark, tmp_path):
     b2 = pd.concat([full[full.turn_idx % 2 == 1], full.head(5)], ignore_index=True)
     cfg = OrderedStreamConfig(pattern=steps, pattern_mode="skip")
     got = _stream_got(spark, tmp_path, [b1, b2], cfg)
-    expect = _batch_expected(spark, full, steps=steps)
+    expect = _oracle_expected(full, steps=steps)
     assert got == expect and len(got) > 0
     assert any(e - s >= 2 for _, s, e in got)
 
@@ -483,7 +418,7 @@ def test_quant_with_capped_drain(spark, tmp_path):
     try:
         src.push(shuffled)
         _, _, matches_df = split_output_cep(spark.table(name))
-        expect = _batch_expected(spark, full)
+        expect = _oracle_expected(full)
         deadline = time.time() + 90
         while time.time() < deadline:
             if matches_df.count() >= len(expect):

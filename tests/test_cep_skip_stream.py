@@ -1,12 +1,13 @@
 """Streaming skip-till-next CEP (cfg.pattern_mode='skip', Flink
 `followedBy`): the engine-integrated frontier matcher must find exactly the
-batch operator's matches (plans/cep.match_pattern(mode='skip') — the pinned
-oracle-exact semantics) across micro-batch boundaries, out-of-order arrival,
-and duplicates — each match exactly once.
+pure-Python brute-force oracle's matches (test_cep.ref_skip) across
+micro-batch boundaries, out-of-order arrival, and duplicates — each match
+exactly once.
 """
 
 from __future__ import annotations
 
+import functools
 import pickle
 import random
 
@@ -16,10 +17,10 @@ import pytest
 
 from dataflow_ordered_processing_spark.operators.cep_core import (
     Step,
+    Times,
     match_skip,
     stream_matcher,
 )
-from dataflow_ordered_processing_spark.plans.cep import match_pattern
 from dataflow_ordered_processing_spark.sources import scenarios
 from dataflow_ordered_processing_spark.streaming.ordered_stream import (
     OrderedStreamConfig,
@@ -27,6 +28,8 @@ from dataflow_ordered_processing_spark.streaming.ordered_stream import (
 )
 
 from streaming_utils import run_to_memory
+from test_cep import _holds, ref_skip, ref_skip_guarded
+from test_cep_times import _brute_quant_rows
 
 # a real funnel: user → a search tool call somewhere later → an assistant
 # turn somewhere after that (skip mode — strict would almost never match)
@@ -38,29 +41,29 @@ STEPS = (
 GUARD = {0: Step("g", role="tool", tool="code")}
 
 
-def _batch_expected(spark, full, within=None, within_turns=None, guards=None):
-    """The batch skip plan projected to the streaming match-row shape
-    (start = anchor step, end = final step)."""
-    df = spark.createDataFrame(full)
-    m = match_pattern(
-        df,
-        STEPS,
-        mode="skip",
-        within=within,
-        within_turns=within_turns,
-        not_between=guards,
-    )
-    return (
-        m.selectExpr(
-            "conv_id",
-            "CAST(u_idx AS BIGINT) AS start_idx",
-            "CAST(a_idx AS BIGINT) AS end_idx",
-            "ts_first",
-            "ts_last",
-            "span_us",
+def _oracle_expected(full, within=None, within_turns=None, guards=None):
+    """The brute-force oracle (test_cep.ref_skip / ref_skip_guarded)
+    projected to the streaming match-row shape (start = anchor step,
+    end = final step)."""
+    out = []
+    for cid, g in full.groupby("conv_id", sort=True):
+        g = g.sort_values("turn_idx")
+        ts = dict(zip(g["turn_idx"].tolist(), g["ts"]))
+        rows = g.to_dict("records")
+        chains = (
+            ref_skip_guarded(rows, STEPS, guards) if guards else ref_skip(rows, STEPS)
         )
-        .orderBy("conv_id", "start_idx", "end_idx")
-        .toPandas()
+        for chain in chains:
+            s, e = chain[0], chain[-1]
+            span = (ts[e] - ts[s]) // pd.Timedelta(microseconds=1)
+            if within is not None and span > within * 1_000_000:
+                continue
+            if within_turns is not None and e - s > within_turns:
+                continue
+            out.append((cid, s, e, ts[s], ts[e], span))
+    cols = ["conv_id", "start_idx", "end_idx", "ts_first", "ts_last", "span_us"]
+    return pd.DataFrame(out, columns=cols).astype(
+        {"start_idx": "int64", "end_idx": "int64", "span_us": "int64"}
     )
 
 
@@ -97,7 +100,7 @@ def test_skip_stream_equals_batch_across_boundaries(spark, tmp_path):
     full, batches = _damaged_batches()
     cfg = OrderedStreamConfig(pattern=STEPS, pattern_mode="skip")
     got = _stream_matches(spark, tmp_path, batches, cfg)
-    expect = _batch_expected(spark, full)
+    expect = _oracle_expected(full)
     assert len(expect) > 0
     _assert_equal(got, expect)
     # skip matches genuinely span non-consecutive turns somewhere
@@ -110,7 +113,7 @@ def test_skip_sharded_equals_batch(spark, tmp_path):
     got = _stream_matches(
         spark, tmp_path, batches, cfg, n_shards=4
     )
-    _assert_equal(got, _batch_expected(spark, full))
+    _assert_equal(got, _oracle_expected(full))
 
 
 def test_skip_stream_within_seconds(spark, tmp_path):
@@ -119,8 +122,8 @@ def test_skip_stream_within_seconds(spark, tmp_path):
         pattern=STEPS, pattern_mode="skip", pattern_within_s=200
     )
     got = _stream_matches(spark, tmp_path, batches, cfg)
-    expect = _batch_expected(spark, full, within=200)
-    unbounded = _batch_expected(spark, full)
+    expect = _oracle_expected(full, within=200)
+    unbounded = _oracle_expected(full)
     assert 0 < len(expect) < len(unbounded)  # the bound actually cuts
     _assert_equal(got, expect)
 
@@ -131,8 +134,8 @@ def test_skip_stream_within_turns(spark, tmp_path):
         pattern=STEPS, pattern_mode="skip", pattern_within_turns=6
     )
     got = _stream_matches(spark, tmp_path, batches, cfg)
-    expect = _batch_expected(spark, full, within_turns=6)
-    unbounded = _batch_expected(spark, full)
+    expect = _oracle_expected(full, within_turns=6)
+    unbounded = _oracle_expected(full)
     assert 0 < len(expect) < len(unbounded)
     _assert_equal(got, expect)
 
@@ -143,8 +146,8 @@ def test_skip_stream_not_between_guard(spark, tmp_path):
         pattern=STEPS, pattern_mode="skip", pattern_not_between=GUARD
     )
     got = _stream_matches(spark, tmp_path, batches, cfg)
-    expect = _batch_expected(spark, full, guards=GUARD)
-    unguarded = _batch_expected(spark, full)
+    expect = _oracle_expected(full, guards=GUARD)
+    unguarded = _oracle_expected(full)
     assert 0 < len(expect) < len(unguarded)  # the guard actually kills some
     _assert_equal(got, expect)
 
@@ -155,41 +158,6 @@ def test_skip_property_vs_bruteforce():
     (exactly what the engine persists). A candidate waiting on a
     (plain) step whose segment guard row has already arrived is dead: it
     must not stay in the returned frontier."""
-
-    def brute(steps, rows, within_us, within_turns, guards):
-        def m(s, r):
-            return (s.role is None or r[1] == s.role) and (
-                s.tool is None or r[2] == s.tool
-            )
-
-        out = []
-        for a in range(len(rows)):
-            if not m(steps[0], rows[a]):
-                continue
-            pos, ok = a, True
-            for i in range(1, len(steps)):
-                nxt = next(
-                    (q for q in range(pos + 1, len(rows)) if m(steps[i], rows[q])),
-                    None,
-                )
-                if nxt is None:
-                    ok = False
-                    break
-                if guards and (i - 1) in guards and any(
-                    m(guards[i - 1], rows[q]) for q in range(pos + 1, nxt)
-                ):
-                    ok = False
-                    break
-                pos = nxt
-            if not ok:
-                continue
-            st, en = rows[a], rows[pos]
-            if within_us is not None and en[3] - st[3] > within_us:
-                continue
-            if within_turns is not None and en[0] - st[0] > within_turns:
-                continue
-            out.append((st[0], en[0], st[3], en[3]))
-        return sorted(out)
 
     rng = random.Random(7)
     roles = ["user", "assistant", "tool"]
@@ -219,7 +187,17 @@ def test_skip_property_vs_bruteforce():
             if rng.random() < 0.5
             else None
         )
-        expect = brute(steps, rows, within_us, within_turns, guards)
+        ts = {r[0]: r[3] for r in rows}
+        expect = sorted(
+            (m[0], m[-1], ts[m[0]], ts[m[-1]])
+            for m in _brute_quant_rows(
+                [dict(zip(("turn_idx", "role", "tool", "ts_us"), r)) for r in rows],
+                [(functools.partial(_holds, st), False, 1, 1) for st in steps],
+                within_us,
+                within_turns,
+                {g: functools.partial(_holds, st) for g, st in (guards or {}).items()},
+            )
+        )
         fr, got, i = None, [], 0
         while i < len(rows):
             j = rng.randint(i + 1, len(rows))
@@ -247,6 +225,29 @@ def test_skip_property_vs_bruteforce():
                 )
             )
         assert sorted(got) == expect, f"trial {trial}: {steps} {guards}"
+
+
+def test_skip_step_trail_only_for_candidates_anchored_in_the_call():
+    """match_skip reports each step's matched turn (and a quantified step's
+    run end) for candidates anchored in the call; a step matched in an
+    earlier call reads -1, because the frontier does not carry it."""
+
+    def run(lo, roles):
+        n = len(roles)
+        return {
+            "turn_idx": np.arange(lo, lo + n, dtype=np.int64),
+            "role": np.array(roles, dtype=object),
+            "tool": np.array([None] * n, dtype=object),
+            "ts_us": np.arange(lo, lo + n, dtype=np.int64),
+        }
+
+    steps = (Step("u", role="user"), Times(Step("t", role="tool"), 1, None))
+    m, fr = match_skip(steps, run(1, ["user", "tool"]))
+    assert m["step_idx"].shape == (0, 2)
+    m, _ = match_skip(steps, run(3, ["user", "tool", "tool"]), fr, final=True)
+    assert m["start_idx"].tolist() == [1, 3]
+    assert m["step_idx"].tolist() == [[-1, 2], [3, 4]]
+    assert m["step_end_idx"].tolist() == [[-1, 2], [3, 5]]
 
 
 def test_skip_gap_guard_drops_stale_candidates():
@@ -395,7 +396,7 @@ def test_plain_skip_checkpoint_without_frontier_format_refused(tmp_path):
 
 def test_pipeline_sink_lands_skip_matches(spark, tmp_path):
     """End-to-end: a skip-pattern pipeline lands match rows in the unified
-    epoch sink and the batch operator agrees."""
+    epoch sink and the brute-force oracle agrees."""
     import os
 
     from dataflow_ordered_processing_spark.streaming import (
@@ -428,7 +429,7 @@ def test_pipeline_sink_lands_skip_matches(spark, tmp_path):
         .orderBy("conv_id", "start_idx", "end_idx")
         .toPandas()
     )
-    expect = _batch_expected(spark, full)
+    expect = _oracle_expected(full)
     assert len(got) == len(expect) > 0
     assert got["start_idx"].tolist() == expect["start_idx"].tolist()
     assert got["end_idx"].tolist() == expect["end_idx"].tolist()
@@ -486,6 +487,6 @@ def test_skip_matches_deduped_under_merge_on_key(spark, tmp_path):
     data = read_sink(spark, sink.data_path).toPandas()
     assert not data.duplicated(subset=["conv_id", "turn_idx"]).any()
     matches = read_sink(spark, sink.data_path, table="matches").toPandas()
-    expect = _batch_expected(spark, full)
+    expect = _oracle_expected(full)
     assert len(matches) == len(expect) > 0
     assert not matches.duplicated(subset=["conv_id", "start_idx", "end_idx"]).any()

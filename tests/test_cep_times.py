@@ -40,78 +40,94 @@ def _corpus(rng, n_convs=6, max_turns=40):
     return pd.DataFrame(rows)
 
 
+def _brute_quant_rows(rows, pairs, within_us=None, within_turns=None, guards=None):
+    """Oracle over one conversation: ``rows`` are dicts in turn order with
+    turn_idx and ts_us; pairs = [(pred_fn, quant, n_min, n_max)], guards =
+    {segment: pred_fn}. Maximal-run semantics, skip-till-next hops from the
+    run END. One tuple per match: each step's matched turn_idx, followed by
+    its run's last turn_idx for a quantified step."""
+    out = []
+    n = len(rows)
+
+    def run_end(p0, pred):
+        e = p0
+        while e + 1 < n and pred(rows[e + 1]):
+            e += 1
+        return e
+
+    def is_run_start(p0, pred):
+        return pred(rows[p0]) and (p0 == 0 or not pred(rows[p0 - 1]))
+
+    first = pairs[0]
+    for a in range(n):
+        if first[1]:  # quantified anchor
+            if not is_run_start(a, first[0]):
+                continue
+            e = run_end(a, first[0])
+            ln = e - a + 1
+            if ln < first[2] or (first[3] is not None and ln > first[3]):
+                continue
+            cpos, positions = e, [(a, e)]
+        else:
+            if not first[0](rows[a]):
+                continue
+            cpos, positions = a, [(a, a)]
+        ok = True
+        for si in range(1, len(pairs)):
+            pred, quant, n_min, n_max = pairs[si]
+            hit = None
+            for q in range(cpos + 1, n):
+                if quant:
+                    if is_run_start(q, pred):
+                        e = run_end(q, pred)
+                        ln = e - q + 1
+                        if ln >= n_min and (n_max is None or ln <= n_max):
+                            hit = (q, e)
+                            break
+                elif pred(rows[q]):
+                    hit = (q, q)
+                    break
+            if hit is None:
+                ok = False
+                break
+            if guards and (si - 1) in guards and any(
+                guards[si - 1](rows[q]) for q in range(cpos + 1, hit[0])
+            ):
+                ok = False
+                break
+            positions.append(hit)
+            cpos = hit[1]
+        if not ok:
+            continue
+        first_row, last_row = rows[positions[0][0]], rows[positions[-1][1]]
+        if within_us is not None and last_row["ts_us"] - first_row["ts_us"] > within_us:
+            continue
+        if (
+            within_turns is not None
+            and last_row["turn_idx"] - first_row["turn_idx"] > within_turns
+        ):
+            continue
+        vals = []
+        for si2, (p0, p1) in enumerate(positions):
+            vals.append(int(rows[p0]["turn_idx"]))
+            if pairs[si2][1]:
+                vals.append(int(rows[p1]["turn_idx"]))
+        out.append(tuple(vals))
+    return out
+
+
 def _brute_quant(df, pairs, within_us=None, within_turns=None, guards=None):
-    """Oracle: pairs = [(pred_fn, quant, n_min, n_max)], maximal-run
-    semantics, skip-till-next hops from the run END."""
+    """_brute_quant_rows per conversation of ``df`` (conv_id, turn_idx,
+    ts, predicate columns); sorted (conv_id, *turn_idx values) tuples."""
     out = []
     for conv, g in df.groupby("conv_id", sort=True):
-        g = g.sort_values("turn_idx").reset_index(drop=True)
-        n = len(g)
-
-        def run_end(p0, pred):
-            e = p0
-            while e + 1 < n and pred(g.iloc[e + 1]):
-                e += 1
-            return e
-
-        def is_run_start(p0, pred):
-            return pred(g.iloc[p0]) and (p0 == 0 or not pred(g.iloc[p0 - 1]))
-
-        first = pairs[0]
-        for a in range(n):
-            if first[1]:  # quantified anchor
-                if not is_run_start(a, first[0]):
-                    continue
-                e = run_end(a, first[0])
-                ln = e - a + 1
-                if ln < first[2] or (first[3] is not None and ln > first[3]):
-                    continue
-                cpos, positions = e, [(a, e)]
-            else:
-                if not first[0](g.iloc[a]):
-                    continue
-                cpos, positions = a, [(a, a)]
-            ok = True
-            for si in range(1, len(pairs)):
-                pred, quant, n_min, n_max = pairs[si]
-                hit = None
-                for q in range(cpos + 1, n):
-                    if quant:
-                        if is_run_start(q, pred):
-                            e = run_end(q, pred)
-                            ln = e - q + 1
-                            if ln >= n_min and (n_max is None or ln <= n_max):
-                                hit = (q, e)
-                                break
-                    elif pred(g.iloc[q]):
-                        hit = (q, q)
-                        break
-                if hit is None:
-                    ok = False
-                    break
-                if guards and (si - 1) in guards and any(
-                    guards[si - 1](g.iloc[q]) for q in range(cpos + 1, hit[0])
-                ):
-                    ok = False
-                    break
-                positions.append(hit)
-                cpos = hit[1]
-            if not ok:
-                continue
-            t0 = g.iloc[positions[0][0]]["ts"]
-            t1 = g.iloc[positions[-1][1]]["ts"]
-            if within_us is not None and (t1 - t0).value // 1000 > within_us:
-                continue
-            first_i = int(g.iloc[positions[0][0]]["turn_idx"])
-            last_i = int(g.iloc[positions[-1][1]]["turn_idx"])
-            if within_turns is not None and last_i - first_i > within_turns:
-                continue
-            vals = []
-            for si2, (p0, p1) in enumerate(positions):
-                vals.append(int(g.iloc[p0]["turn_idx"]))
-                if pairs[si2][1]:
-                    vals.append(int(g.iloc[p1]["turn_idx"]))
-            out.append((conv, *vals))
+        g = g.sort_values("turn_idx")
+        g = g.assign(ts_us=g["ts"].astype("datetime64[us]").astype("int64"))
+        rows = g.to_dict("records")
+        out += [
+            (conv, *m)
+            for m in _brute_quant_rows(rows, pairs, within_us, within_turns, guards)
+        ]
     return sorted(out)
 
 
@@ -190,6 +206,43 @@ def test_three_quant_steps_with_guard_and_bounds(spark):
     assert len(got) > 0
 
 
+def test_conversation_spanning_arrow_batches(spark):
+    """Batch skip mode matches a conversation whole when its rows span many
+    Arrow batches (16 records each here): a quantified pattern with a guard
+    against the brute-force oracle, every output column compared."""
+    rng = random.Random(31)
+    df = _corpus(rng, n_convs=8, max_turns=150).astype({"turn_idx": "int32"})
+    assert df.groupby("conv_id").size().max() > 3 * 16
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "16")
+    try:
+        m = match_pattern(
+            spark.createDataFrame(df),
+            [Times(FLAG, 2, None), USER, one_or_more(("f2", "NOT flag"))],
+            mode="skip",
+            within_turns=30,
+            not_between={1: ("g", "role = 'tool'")},
+        ).toPandas()
+    finally:
+        spark.conf.set(conf, old)
+    assert m.dtypes["h_idx"] == "int32" and m.dtypes["span_us"] == "int64"
+    got = sorted(m.itertuples(index=False, name=None))
+    pairs = [
+        (lambda r: bool(r["flag"]), True, 2, None),
+        (lambda r: r["role"] == "user", False, 1, 1),
+        (lambda r: not r["flag"], True, 1, None),
+    ]
+    ts = df.set_index(["conv_id", "turn_idx"])["ts"]
+    expect = []
+    for r in _brute_quant(
+        df, pairs, within_turns=30, guards={1: lambda r: r["role"] == "tool"}
+    ):
+        t0, t1 = ts[(r[0], r[1])], ts[(r[0], r[-1])]
+        expect.append((*r, t0, t1, (t1 - t0) // pd.Timedelta(microseconds=1)))
+    assert got == expect and len(got) > 0
+
+
 def test_times_null_predicate_breaks_runs(spark):
     """A NULL predicate row (tool = 'x' where tool IS NULL) must BREAK a
     run, not silently extend it — three-valued logic regression guard."""
@@ -259,10 +312,8 @@ def test_strict_open_ended_times_raises(spark):
 
 
 def test_quant_plan_shape(spark):
-    """The quantified skip plan's run-detection windows must ride the SAME
-    key exchange as the hop tables (no extra shuffle per quantifier), and
-    the hop joins must stay narrow equi-joins — no Cartesian, no
-    sort-merge-join explosion beyond the per-step hops."""
+    """The quantified skip plan finds runs inside the matcher: no
+    Cartesian product, and every shuffle is keyed hash partitioning."""
     df = spark.createDataFrame(_corpus(random.Random(2)))
     plan = (
         match_pattern(df, [Times(FLAG, 3, None), USER], mode="skip")
@@ -271,9 +322,8 @@ def test_quant_plan_shape(spark):
         .toString()
     )
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
-    # window passes hash-partition by the key; hop joins may broadcast their
-    # narrow side (good) or re-key — every shuffle exchange must be keyed
-    # hash partitioning (no all-to-all / range repartition)
+    # every shuffle exchange must be keyed hash partitioning (no
+    # all-to-all / range repartition)
     import re
 
     for m in re.finditer(r"(?<!Broadcast)Exchange (\w+)", plan):

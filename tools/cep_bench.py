@@ -4,8 +4,10 @@ Two questions, measured on the same deterministic skewed corpus the
 scaling benches use (tools/scaling_bench.generate_input):
 
 1. Batch row-pattern throughput: plans/cep.match_pattern strict and skip
-   over N rows — the window-function plans' rows/sec (input cached so the
-   measurement is the operator, not the parquet scan — the r4 lesson).
+   over N rows (input cached so the measurement is the operator, not the
+   parquet scan — the r4 lesson). ``skip_grouped`` is the rejected
+   alternative to the skip driver: the same match_skip call once per
+   ``groupBy("conv_id").applyInPandas`` group.
 
 2. Streaming matcher overhead: the full sharded pipeline (run_pipeline
    subprocess, fresh JVM per leg) with and without --pattern, INTERLEAVED
@@ -27,6 +29,7 @@ scaling benches use (tools/scaling_bench.generate_input):
 
 Usage: python tools/cep_bench.py [--rows 4000000] [--convs 20000]
        [--cpus 32] [--reps 3] [--workdir /dev/shm/cepbench]
+       [--batch-only [--out <file>]]
        python tools/cep_bench.py --matcher-ab parent=<checkout> change=<repo>
        [--pairs 10] [--out BENCH/ab_cep_skip.json]
 """
@@ -184,6 +187,41 @@ def _matcher_ab(args) -> dict:
             "summary": summary}
 
 
+def _grouped_skip(df, steps, within_s):
+    """Skip mode through groupBy(conv_id).applyInPandas: one match_skip
+    call per group, predicates evaluated in Spark as plans/cep does."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from dataflow_ordered_processing_spark.operators.cep_core import (
+        ColumnStep,
+        match_skip,
+    )
+
+    csteps = tuple(ColumnStep(s.name, f"_p{i}") for i, s in enumerate(steps))
+    narrow = df.select(
+        "conv_id",
+        F.col("turn_idx").cast("long").alias("turn_idx"),
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
+        *[
+            F.coalesce(F.expr(s.sql), F.lit(False)).alias(f"_p{i}")
+            for i, s in enumerate(steps)
+        ],
+    )
+
+    def per_conv(pdf):
+        pdf = pdf.sort_values("turn_idx")
+        run = {c: pdf[c].to_numpy() for c in pdf.columns}
+        m, _ = match_skip(csteps, run, within_us=within_s * 10**6, final=True)
+        n = len(m["start_idx"])
+        return pd.DataFrame({"conv_id": run["conv_id"][:1].repeat(n),
+                             "start_idx": m["start_idx"], "end_idx": m["end_idx"]})
+
+    return narrow.groupBy("conv_id").applyInPandas(
+        per_conv, "conv_id string, start_idx long, end_idx long"
+    )
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rows", type=int, default=4_000_000)
@@ -246,7 +284,7 @@ def main() -> int:
         Step("a", role="assistant"),
     ]
     # quantified (r7): a maximal run of >=3 "flagged" turns then a user
-    # turn — run detection + hop joins (_match_skip_quant). The flag is a
+    # turn — runs found by match_skip per conversation. The flag is a
     # deterministic md5 predicate (geometric run lengths; the corpus role
     # column cycles, so same-role runs can't exercise a quantifier).
     from __spark_entry__ import _CEP_TIMES_FLAG  # the gate's exact flag
@@ -258,6 +296,7 @@ def main() -> int:
     for name, plan in (
         ("strict", lambda: match_pattern(df, strict_steps, mode="strict")),
         ("skip", lambda: match_pattern(df, skip_steps, mode="skip", within=100_000)),
+        ("skip_grouped", lambda: _grouped_skip(df, skip_steps, 100_000)),
         (
             "skip_times",
             lambda: match_pattern(
@@ -281,7 +320,7 @@ def main() -> int:
     spark.stop()
 
     if args.batch_only:
-        path = os.path.join(REPO, "BENCH", "cep.json")
+        path = args.out or os.path.join(REPO, "BENCH", "cep.json")
         result = {}
         if os.path.exists(path):
             with open(path) as f:
