@@ -108,8 +108,9 @@ def _conv_loads(v) -> tuple:
     shard dict: the outer per-batch pickle then memcpys untouched
     conversations' bytes instead of re-walking their numpy/object graphs —
     the dominant cost when many conversations sit pending but only a few
-    receive arrivals in a batch. Tuples are accepted too (legacy blobs from
-    pre-round-3 checkpoints deserialize transparently)."""
+    receive arrivals in a batch. A batch that touches the majority of a
+    shard's conversations stores plain tuples instead (the dense-batch
+    encoding, see make_sharded_func), so both forms load."""
     return pickle.loads(v) if isinstance(v, bytes) else v
 
 

@@ -24,6 +24,7 @@ dead-letter branch (FailedBigQueryInsertProcessor.java:38-49). Here:
 
 from __future__ import annotations
 
+import json
 import os
 from dataclasses import dataclass
 
@@ -44,15 +45,14 @@ class SinkConfig:
     # discriminator); read the status table back with
     # read_sink(..., table="status")
     data_path: str
+    # Row-level dead-letter (FailedBigQueryInsertProcessor.java:38-49 is
+    # per-failed-insert, not per-batch): with a DLQ, rows violating the sink
+    # contract are diverted to it with a dlq_error reason and the healthy
+    # rest of the batch still lands; a writer error quarantines the whole
+    # epoch there. None validates nothing.
     dlq_path: str | None = None
     checkpoint: str | None = None
     iceberg_table: str | None = None  # e.g. "cat.db.ordered_turns" when jars present
-    # Row-level dead-letter (FailedBigQueryInsertProcessor.java:38-49 is
-    # per-failed-insert, not per-batch): rows violating the sink contract
-    # are diverted to the DLQ with a dlq_error reason; the healthy rest of
-    # the batch still lands. None disables validation (whole-epoch divert
-    # on writer error remains as the outer fallback).
-    validate: bool = True
     # Paranoid exactly-once (SURVEY §7 "MERGE path"): before writing, drop
     # incoming data rows whose (conv_id, turn_idx) already exists in the
     # sink — covers CROSS-epoch re-emission (e.g. post-completion duplicate
@@ -62,7 +62,8 @@ class SinkConfig:
     # epoch, never O(rows ever written): the filter consults a compact
     # per-conversation high-watermark index (see _keyidx_* below), never
     # the sink data; leave off when the operator keeps tombstones (the
-    # default), which already guarantees key uniqueness.
+    # default), which already guarantees key uniqueness. Parquet sinks only:
+    # refused together with iceberg_table, which keeps no key index.
     merge_on_key: bool = False
     # Data-epoch compaction (VERDICT r4 "what's wrong" #2): one epoch=N dir
     # per micro-batch is ~43k dirs/day at a 2 s cadence, and every read
@@ -85,6 +86,13 @@ class SinkConfig:
     # each fold sees (data rows are never pruned). None keeps every status
     # row — today's behavior and what the status_history oracle assumes.
     compact_status_keep_last: int | None = None
+
+    def __post_init__(self):
+        if self.merge_on_key and self.iceberg_table:
+            raise ValueError(
+                "merge_on_key dedupes the parquet epoch sink through its key "
+                "index; an iceberg_table sink has no key index"
+            )
 
 
 def row_violation(columns: list[str] | None = None) -> F.Column:
@@ -186,18 +194,15 @@ def _iceberg_epoch_committed(spark: SparkSession, table: str, epoch_id: int) -> 
 # pruning would skip nothing. Every fold is a MAX, which is idempotent and
 # monotone, so every crash window is safe: a compact written but deltas not
 # yet deleted double-covers harmlessly; a data epoch committed before its
-# delta is caught up from that epoch's rows alone (_keyidx_catchup); a
-# legacy sink with no index bootstraps once (one full read — the old
-# per-epoch cost, paid a single time).
+# delta is caught up from that epoch's rows alone (_keyidx_catchup), and so
+# is a sink whose stream ran without merge_on_key (one full read, paid
+# once when the flag is switched on).
 # ---------------------------------------------------------------------------
 
 _KEYIDX_DIR = "_keyidx"
 _KEYIDX_COMPACT_AFTER = 8  # fold deltas once more than this many accumulate
-# read with an EXPLICIT schema: a legacy all-empty compact generation
-# (written by partitionBy, which leaves only _SUCCESS) must not fail schema
-# inference; deltas predating r7 lack hi_match (read as NULL); generations
-# partitioned by the retired kbucket column gain it as a column nobody
-# selects; legacy int32 hi_turn widens under Spark 4's parquet read
+# the schema every index writer produces; reads pass it explicitly, so
+# planning a scan skips Spark's schema inference over the files' footers
 _KEYIDX_SCHEMA = "conv_id string, hi_turn long, hi_match long"
 
 
@@ -239,18 +244,18 @@ def _write_keyidx_delta(
 
 def _keyidx_catchup(spark: SparkSession, data_path: str) -> None:
     """Derive index deltas for committed data epochs that lack one (crash
-    between the data write and the delta write, or a legacy sink predating
-    the index). Reads ONLY the missing epochs' data — in steady state this
-    is a directory listing and nothing else."""
+    between the data write and the delta write, or epochs a stream wrote
+    without merge_on_key). Reads ONLY the missing epochs' data — in steady
+    state this is a directory listing and nothing else."""
     base = _keyidx_base(data_path)
     have = {n for n, _ in committed_dirs(base, "epoch")}
     compacts = committed_dirs(base, "compact")
     folded_through = compacts[-1][0] if compacts else -1
     # iterate the VISIBLE data dirs (compact generations + unfolded epochs):
-    # a compacted range whose deltas are missing (legacy sink bootstrap)
-    # derives ONE delta named for the range's hi — the MAX fold is
-    # partition-insensitive, so deriving over a whole range is exactly as
-    # correct as per-epoch
+    # a compacted range whose deltas are missing (merge_on_key switched on
+    # over an existing sink) derives ONE delta named for the range's hi —
+    # the MAX fold is partition-insensitive, so deriving over a whole range
+    # is exactly as correct as per-epoch
     for _, _lo, hi, path in _visible_entries(data_path):
         if hi in have or hi <= folded_through:
             continue
@@ -269,25 +274,15 @@ def _keyidx_catchup(spark: SparkSession, data_path: str) -> None:
 
 
 def _keyidx_raw(spark: SparkSession, data_path: str) -> DataFrame:
-    """The un-aggregated index scan: newest compact generation unioned with
-    all committed deltas. Exposed un-merged so tests can assert the scan
-    volume stays O(#convs)."""
+    """The un-aggregated index scan: newest compact generation and all
+    committed deltas in one read. Exposed un-merged so tests can assert the
+    scan volume stays O(#convs)."""
     base = _keyidx_base(data_path)
     compacts = committed_dirs(base, "compact")
-    deltas = [p for _, p in committed_dirs(base, "epoch")]
-    # the compact generation is read apart from the deltas: a legacy one is
-    # kbucket=-partitioned, and partition discovery over both layouts in
-    # one read would fail
-    groups = ([[compacts[-1][1]]] if compacts else []) + ([deltas] if deltas else [])
-    if not groups:
+    paths = [p for _, p in compacts[-1:] + committed_dirs(base, "epoch")]
+    if not paths:
         return spark.createDataFrame([], _KEYIDX_SCHEMA)
-    parts = [
-        spark.read.schema(_KEYIDX_SCHEMA)
-        .parquet(*paths)
-        .select("conv_id", "hi_turn", "hi_match")
-        for paths in groups
-    ]
-    return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
+    return spark.read.schema(_KEYIDX_SCHEMA).parquet(*paths)
 
 
 def _keyidx_compact(spark: SparkSession, data_path: str) -> None:
@@ -341,8 +336,8 @@ def _fresh_above_watermark(
     legitimately emit one epoch after its end turn's data row (the run
     closes at the next batch's break row), so the data watermark would drop
     it (review r7a). Match ends are nondecreasing per conversation, so
-    hi_match is a valid dedup line; a NULL hi_match (no matches committed
-    yet, or a pre-r7 index generation) keeps the row."""
+    hi_match is a valid dedup line; a NULL hi_match (no match committed
+    yet) keeps the row."""
     return (
         rows.join(idx, "conv_id", "left")
         .filter(F.col(wm_col).isNull() | (F.col(idx_col) > F.col(wm_col)))
@@ -393,7 +388,7 @@ def split_sink(cfg: SinkConfig):
         # fix started the scope after the DLQ/merge steps, so a failing DLQ
         # write still leaked cached blocks on every stream retry).
         try:
-            if cfg.validate and cfg.dlq_path and "row_type" in batch_df.columns:
+            if cfg.dlq_path and "row_type" in batch_df.columns:
                 # Row-level DLQ: divert only the violating rows, keep the
                 # rest. The micro-batch is persisted so the stateful
                 # operator's output is computed once even though two writes
@@ -407,8 +402,7 @@ def split_sink(cfg: SinkConfig):
                 unified = persisted.filter(F.col("dlq_error").isNull()).drop(
                     "dlq_error"
                 )
-            merged = cfg.merge_on_key and not cfg.iceberg_table
-            if merged and os.path.exists(cfg.data_path):
+            if cfg.merge_on_key and os.path.exists(cfg.data_path):
                 # O(batch) per epoch: consult the compact high-watermark
                 # index, never the sink data (r3 VERDICT: the old full-sink
                 # anti-join made every epoch cost O(rows ever written))
@@ -483,7 +477,7 @@ def split_sink(cfg: SinkConfig):
             # persist scope: the delta write consumes `unified`, whose
             # lineage must not recompute the stateful operator.
             if not cfg.iceberg_table:
-                if merged:
+                if cfg.merge_on_key:
                     # index delta AFTER the data commit: a crash in between
                     # is healed by _keyidx_catchup on the replay
                     _write_keyidx_delta(
@@ -502,7 +496,7 @@ def split_sink(cfg: SinkConfig):
                     )
                 if cfg.compact_epochs_after:
                     # AFTER the delta write: every folded epoch therefore has
-                    # its index delta (or predates the index), so the fold
+                    # its index delta (or was written unmerged), so the fold
                     # never hides an epoch the catchup still needs to read.
                     # (The DLQ keeps plain epoch dirs — rare, small, and an
                     # audit trail where per-batch provenance is the point.)
@@ -627,31 +621,7 @@ def _dir_bytes(paths: list[str]) -> int:
     return total
 
 
-def _sniff_unified_layout(entries: list) -> bool:
-    """True iff the first committed dir holding a parquet file carries the
-    unified `row_type` schema; True when no parquet file exists yet
-    (nothing a fold could mis-handle).
-
-    STATELESS on purpose. The sniff originally ran `spark.read.parquet`
-    per compact_data_epochs call — a scheduled Spark job per 2 s
-    micro-batch — so r6 memoized the verdict, first in a per-process
-    inode-keyed dict (defeatable by inode recycling after the dir is
-    recreated — review r6d), then as an on-disk marker (stale if the sink
-    is emptied IN PLACE and an older-build raw writer reuses the path,
-    since the recreated epoch dir can reuse the witnessed name — review
-    r6e). Every cached variant re-opens a replay-stale-verdict hole;
-    reading ONE parquet footer with pyarrow is a few driver-local
-    milliseconds, cheap enough to pay on every call, and a fresh verdict
-    cannot be stale."""
-    import glob
-
-    import pyarrow.parquet as _papq
-
-    for e in entries:
-        part_files = sorted(glob.glob(os.path.join(e[3], "*.parquet")))
-        if part_files:
-            return "row_type" in _papq.ParquetFile(part_files[0]).schema_arrow.names
-    return True
+_RAW_CHANNEL = "_raw_channel"  # marks a raw_passthrough_sink base dir
 
 
 def compact_data_epochs(
@@ -709,27 +679,14 @@ def compact_data_epochs(
         # Refuse raw passthrough channels (ADVICE r5): read_raw sees only
         # epoch= dirs, so compacting one folds rows into dirs it cannot see
         # and the grace sweep then deletes the originals — silent hot-channel
-        # data loss. Two guards (review r6): the EXACT one is the
-        # `_raw_channel` marker raw_passthrough_sink writes — it holds even
-        # if a raw schema ever gains a row_type column. The schema sniff is
-        # the fallback for channels written by older builds; it runs on
-        # EVERY call — a pyarrow footer read is driver-local milliseconds
-        # (see _sniff_unified_layout for why no cached variant survived
-        # review), so the 2 s foreachBatch cadence pays nothing material.
-        if os.path.exists(os.path.join(base, "_raw_channel")):
+        # data loss. raw_passthrough_sink marks every channel before its
+        # first epoch, whatever the rows' schema.
+        if os.path.exists(os.path.join(base, _RAW_CHANNEL)):
             raise ValueError(
                 f"{base!r} is a raw passthrough channel (_raw_channel "
                 "marker) — compacting it would hide rows from read_raw and "
                 "then delete them. Raw channels are ordered+drained by the "
                 "hot-key pass (streaming/hotkey.py), never compacted."
-            )
-        if not _sniff_unified_layout(_sink_entries(base)):
-            raise ValueError(
-                f"{base!r} looks like a raw passthrough channel (no "
-                "row_type column) — compacting it would hide rows from "
-                "read_raw and then delete them. Raw channels are "
-                "ordered+drained by the hot-key pass "
-                "(streaming/hotkey.py), never compacted."
             )
         while True:
             entries = _sink_entries(base)
@@ -955,42 +912,34 @@ def raw_passthrough_sink(base: str):
     accumulated raw rows are ordered later by the distributed two-phase
     salted BATCH plan (operators/skew.py), which spreads one key across
     the cluster. Same _SUCCESS-gated epoch commit protocol as the data
-    sink, so replays are no-ops."""
+    sink, so replays are no-ops. The channel is marked ``_raw_channel``
+    before its first epoch, and compact_data_epochs refuses a marked dir."""
+    os.makedirs(base, exist_ok=True)
+    with open(os.path.join(base, _RAW_CHANNEL), "w") as f:
+        f.write("raw passthrough channel — never compact\n")
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
-        # Declare the channel type ONCE so compact_data_epochs can refuse
-        # this layout exactly instead of heuristically (review r6: the
-        # schema sniff alone would flip silently if a raw schema ever
-        # gained a row_type column).
-        os.makedirs(base, exist_ok=True)
-        marker = os.path.join(base, "_raw_channel")
-        if not os.path.exists(marker):
-            with open(marker, "w") as f:
-                f.write("raw passthrough channel — never compact\n")
         _write_idempotent(batch_df, base, epoch_id)
 
     return write
 
 
 def read_raw(spark: SparkSession, base: str) -> DataFrame | None:
-    """Read a raw_passthrough_sink back (committed epochs only); None if
-    nothing has been committed.
+    """Read a raw_passthrough_sink back (committed ``epoch=`` dirs only);
+    None if nothing has been committed.
 
-    Raw channels must NEVER be compacted (ADVICE r5): this reader sees only
-    level-0 ``epoch=`` dirs, so rows folded into ``compact=`` generations
-    would silently vanish from the hot channel and the compactor's grace
-    sweep would then delete the originals. Fail loudly instead of losing
-    data if a compactor was pointed here by mistake."""
+    Raw channels must never be compacted: this reader sees only ``epoch=``
+    dirs, so rows folded into ``compact=`` generations would vanish from the
+    hot channel and the compactor's grace sweep would then delete the
+    originals. Fail loudly instead if ``compact=`` dirs appear here."""
     if os.path.isdir(base) and any(
         d.startswith("compact=") for d in os.listdir(base)
     ):
         raise RuntimeError(
             f"raw passthrough channel {base!r} contains compact= generations "
-            "— it was compacted by mistake (compact_data_epochs refuses raw "
-            "layouts; an older build may not have). read_raw only reads "
-            "epoch= dirs, so proceeding would silently drop the folded rows. "
-            "Recover the rows from the compact= dirs before resetting the "
-            "channel."
+            "— it was compacted by mistake. read_raw only reads epoch= dirs, "
+            "so proceeding would silently drop the folded rows. Recover the "
+            "rows from the compact= dirs before resetting the channel."
         )
     dirs = epoch_dirs(base)
     if not dirs:
@@ -1011,8 +960,8 @@ def _pattern_spec(
     pinned too — as are the r7 skip-mode knobs (mode, within_turns,
     not_between guards): the skip frontier state is meaningless under a
     different pattern algebra. A skip pattern also pins its frontier's
-    state field count (``frontier_fields``), which markers written before
-    the one skip frontier lack."""
+    state field count (``frontier_fields``), so a checkpoint written under
+    another frontier layout is refused at start."""
     if pattern is None:
         return None
 
@@ -1023,9 +972,9 @@ def _pattern_spec(
         return list(v) if isinstance(v, tuple) else v
 
     def _step_entry(s):
-        # plain Step → 3-element entry (back-compat with pre-r7 markers);
-        # quantified Times → 5 elements incl. the count bounds (a
-        # quantified pattern must not resume its plain twin's checkpoint)
+        # plain Step → 3-element entry; quantified Times → 5 elements incl.
+        # the count bounds (a quantified pattern must not resume its plain
+        # twin's checkpoint)
         if isinstance(s, Times):
             return [s.name, _val(s.step.role), _val(s.step.tool), s.n_min, s.n_max]
         return [s.name, _val(s.role), _val(s.tool)]
@@ -1044,23 +993,6 @@ def _pattern_spec(
     if mode == "skip":
         spec["frontier_fields"] = SKIP_STATE_FIELDS
     return spec
-
-
-def _check_skip_frontier(checkpoint: str, spec: dict) -> None:
-    """A skip marker without ``frontier_fields`` predates the one skip
-    frontier. A quantified pattern's checkpoint already holds that frontier
-    (5-element steps in the marker); a plain one holds the retired 4-field
-    frontier, which no engine reads any more — refuse it at start rather
-    than mis-decode it mid-batch."""
-    if spec["mode"] != "skip" or "frontier_fields" in spec:
-        return
-    if not any(len(s) == 5 for s in spec["steps"]):
-        raise ValueError(
-            f"checkpoint {checkpoint!r} holds a plain skip-mode CEP frontier "
-            "in the retired 4-field format: cannot resume it. Start a fresh "
-            "checkpoint."
-        )
-    spec["frontier_fields"] = SKIP_STATE_FIELDS
 
 
 def _check_engine_marker(
@@ -1101,30 +1033,8 @@ def _check_engine_marker(
             "checkpoint — guessing would silently re-key state."
         )
     if os.path.exists(marker):
-        import json
-
         with open(marker) as f:
             prior = json.load(f)
-        if prior.get("engine") == "classic":
-            raise ValueError(
-                f"checkpoint {checkpoint!r} was written by the classic "
-                "per-conv_id engine, which was removed: its state cannot be "
-                "read by the shard-keyed engine. Start a fresh checkpoint."
-            )
-        # pre-CEP markers carry no "pattern" key; they pinned pattern-less
-        # configs, so normalize rather than refusing every old checkpoint.
-        # Ditto the short-lived list form (steps only, no within) — upgrade
-        # it to the dict form instead of refusing an identical pattern.
-        prior.setdefault("pattern", None)
-        if isinstance(prior["pattern"], list):
-            prior["pattern"] = {"steps": prior["pattern"], "within_s": None}
-        if isinstance(prior["pattern"], dict):
-            # pre-r7 markers pinned strict-only patterns without the
-            # skip-mode keys — normalize so identical configs still resume
-            prior["pattern"].setdefault("mode", "strict")
-            prior["pattern"].setdefault("within_turns", None)
-            prior["pattern"].setdefault("not_between", None)
-            _check_skip_frontier(checkpoint, prior["pattern"])
         if prior != current:
             raise ValueError(
                 f"checkpoint {checkpoint!r} was written by engine config "
@@ -1134,8 +1044,6 @@ def _check_engine_marker(
                 "config or start a fresh checkpoint."
             )
     else:
-        import json
-
         with open(marker, "w") as f:
             json.dump(current, f)
 

@@ -6,6 +6,7 @@ advanceProcessingTime script them in Beam."""
 
 from __future__ import annotations
 
+import importlib.util
 import os
 import uuid
 
@@ -25,6 +26,18 @@ ARROW_SCHEMA = pa.schema(
         ("ts", pa.timestamp("us")),
     ]
 )
+
+
+def run_pipeline_module():
+    """jobs/run_pipeline.py loaded by absolute path, so tests that call its
+    parsers pass from any working directory."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    spec = importlib.util.spec_from_file_location(
+        "run_pipeline", os.path.join(repo, "jobs", "run_pipeline.py")
+    )
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
 
 class StagedStream:

@@ -26,7 +26,7 @@ from dataflow_ordered_processing_spark.streaming.ordered_stream import (
     split_output_cep,
 )
 
-from streaming_utils import run_to_memory
+from streaming_utils import run_pipeline_module, run_to_memory
 from test_cep import _holds
 from test_cep_times import _brute_quant, _brute_quant_rows
 
@@ -292,11 +292,7 @@ def test_quant_validation_and_strict_expansion():
 
 
 def test_quant_cli_parse():
-    import sys
-
-    sys.path.insert(0, "jobs")
-    from run_pipeline import parse_pattern
-
+    parse_pattern = run_pipeline_module().parse_pattern
     steps = parse_pattern("t=tool*3+,u=user,s=tool/search*2-4,x=assistant*2")
     assert isinstance(steps[0], Times) and steps[0].n_min == 3 and steps[0].n_max is None
     assert isinstance(steps[1], Step)
@@ -375,11 +371,7 @@ def test_in_set_marker_roundtrip(tmp_path):
 
 
 def test_in_set_cli_parse():
-    import sys
-
-    sys.path.insert(0, "jobs")
-    from run_pipeline import parse_pattern
-
+    parse_pattern = run_pipeline_module().parse_pattern
     steps = parse_pattern("b=assistant|tool*2+,u=user")
     assert isinstance(steps[0], Times)
     assert steps[0].step.role == ("assistant", "tool")

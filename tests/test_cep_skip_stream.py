@@ -27,7 +27,7 @@ from dataflow_ordered_processing_spark.streaming.ordered_stream import (
     split_output_cep,
 )
 
-from streaming_utils import run_to_memory
+from streaming_utils import run_pipeline_module, run_to_memory
 from test_cep import _holds, ref_skip, ref_skip_guarded
 from test_cep_times import _brute_quant_rows
 
@@ -335,63 +335,6 @@ def test_marker_pins_mode(tmp_path):
         _check_engine_marker(
             ckpt, "sharded", 8, _pattern_spec(STEPS, None, "skip", 9, GUARD)
         )
-    # pre-r7 strict marker (no mode keys) still resumes strict configs
-    import json
-
-    ckpt2 = os.path.join(str(tmp_path), "ckpt2")
-    os.makedirs(ckpt2)
-    with open(os.path.join(ckpt2, "_ordered_engine.json"), "w") as f:
-        json.dump(
-            {
-                "engine": "sharded",
-                "n_shards": 8,
-                "pattern": {
-                    "steps": [[s.name, s.role, s.tool] for s in STEPS],
-                    "within_s": None,
-                },
-            },
-            f,
-        )
-    _check_engine_marker(ckpt2, "sharded", 8, _pattern_spec(STEPS))
-
-
-def test_plain_skip_checkpoint_without_frontier_format_refused(tmp_path):
-    """A checkpoint whose marker predates the one skip frontier (no
-    frontier_fields) and whose pattern is plain holds the retired 4-field
-    frontier: it is refused at start, before any batch runs. A
-    quantified pattern's checkpoint of that age already holds the one
-    frontier and resumes."""
-    import json
-    import os
-
-    from dataflow_ordered_processing_spark.operators.cep_core import Times
-    from dataflow_ordered_processing_spark.streaming.sinks import (
-        _check_engine_marker,
-        _marked_ordered_stream,
-        _pattern_spec,
-    )
-
-    def old_checkpoint(name, spec):
-        ckpt = os.path.join(str(tmp_path), name)
-        os.makedirs(os.path.join(ckpt, "offsets"))
-        del spec["frontier_fields"]
-        with open(os.path.join(ckpt, "_ordered_engine.json"), "w") as f:
-            json.dump({"engine": "sharded", "n_shards": 8, "pattern": spec}, f)
-        return ckpt
-
-    ckpt = old_checkpoint("plain", _pattern_spec(STEPS, None, "skip", 6, GUARD))
-    cfg = OrderedStreamConfig(
-        pattern=STEPS,
-        pattern_mode="skip",
-        pattern_within_turns=6,
-        pattern_not_between=GUARD,
-    )
-    with pytest.raises(ValueError, match="4-field format: cannot resume"):
-        _marked_ordered_stream(None, ckpt, cfg, 8)
-
-    quant = (STEPS[0], Times(Step("t", role="tool"), 2, None), STEPS[2])
-    ckpt = old_checkpoint("quant", _pattern_spec(quant, None, "skip"))
-    _check_engine_marker(ckpt, "sharded", 8, _pattern_spec(quant, None, "skip"))
 
 
 def test_pipeline_sink_lands_skip_matches(spark, tmp_path):
@@ -436,11 +379,7 @@ def test_pipeline_sink_lands_skip_matches(spark, tmp_path):
 
 
 def test_parse_not_between_cli():
-    import sys
-
-    sys.path.insert(0, "jobs")
-    from run_pipeline import parse_not_between
-
+    parse_not_between = run_pipeline_module().parse_not_between
     g = parse_not_between("0:g=tool/code,1:h=user")
     assert g[0].role == "tool" and g[0].tool == "code"
     assert g[1].role == "user" and g[1].tool is None

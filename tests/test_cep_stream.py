@@ -16,7 +16,7 @@ from dataflow_ordered_processing_spark.streaming.ordered_stream import (
     split_output_cep,
 )
 
-from streaming_utils import run_to_memory
+from streaming_utils import run_pipeline_module, run_to_memory
 
 STEPS = (
     Step("u", role="user"),
@@ -204,22 +204,10 @@ def test_pipeline_marker_pins_pattern(spark, tmp_path):
         _check_engine_marker(
             ckpt, "sharded", 8, _pattern_spec(STEPS[:2])
         )
-    # pre-CEP marker (no "pattern" key) still resumes pattern-less configs
-    import json
-
-    ckpt2 = os.path.join(str(tmp_path), "ckpt2")
-    os.makedirs(ckpt2)
-    with open(os.path.join(ckpt2, "_ordered_engine.json"), "w") as f:
-        json.dump({"engine": "sharded", "n_shards": 8}, f)
-    _check_engine_marker(ckpt2, "sharded", 8, None)
 
 
 def test_parse_pattern_cli():
-    import sys
-
-    sys.path.insert(0, "jobs")
-    from run_pipeline import parse_pattern
-
+    parse_pattern = run_pipeline_module().parse_pattern
     steps = parse_pattern("u=user,a=assistant,c=tool/code,s=/search")
     assert [s.name for s in steps] == ["u", "a", "c", "s"]
     assert steps[2].role == "tool" and steps[2].tool == "code"
@@ -332,11 +320,7 @@ def test_marker_pins_within_bound(tmp_path):
 
 
 def test_parse_pattern_rejects_single_step_and_injection():
-    import sys
-
-    sys.path.insert(0, "jobs")
-    from run_pipeline import parse_pattern
-
+    parse_pattern = run_pipeline_module().parse_pattern
     with pytest.raises(ValueError, match="at least 2"):
         parse_pattern("u=user")
     # non-identifier values are rejected outright (review r6d: escaping
@@ -368,25 +352,3 @@ def test_timer_drain_completion_honors_cleanup_on_complete():
     out = list(func((0,), iter([]), state))  # drains 5..6 → complete
     assert state.removed
     assert sum(len(f) for f in out if (f["row_type"] == "data").any()) == 2
-
-
-def test_marker_normalizes_list_form_pattern():
-    import json
-    import os
-    import tempfile
-
-    from dataflow_ordered_processing_spark.streaming.sinks import (
-        _check_engine_marker,
-        _pattern_spec,
-    )
-
-    ckpt = os.path.join(tempfile.mkdtemp(prefix="cep-marker-"), "ckpt")
-    os.makedirs(ckpt)
-    spec = _pattern_spec(STEPS)  # {"steps": [...], "within_s": None}
-    with open(os.path.join(ckpt, "_ordered_engine.json"), "w") as f:
-        json.dump(
-            {"engine": "sharded", "n_shards": 8, "pattern": spec["steps"]}, f
-        )
-    _check_engine_marker(ckpt, "sharded", 8, spec)  # list form upgrades
-    with pytest.raises(ValueError, match="cannot resume"):
-        _check_engine_marker(ckpt, "sharded", 8, _pattern_spec(STEPS, 60))

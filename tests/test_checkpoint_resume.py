@@ -199,9 +199,12 @@ def test_marker_refuses_classic_resumes_sharded(spark, tmp_path):
     """A checkpoint of the removed per-conv_id engine is refused at start;
     one the shard-keyed engine wrote before it became the only engine
     resumes, with and without a CEP pattern."""
-    ckpt = _old_checkpoint(str(tmp_path), "classic", '{"engine": "classic", "n_shards": null}')
-    with pytest.raises(ValueError, match="classic per-conv_id engine, which was removed"):
+    classic = '{"engine": "classic", "n_shards": null}'
+    ckpt = _old_checkpoint(str(tmp_path), "classic", classic)
+    with pytest.raises(ValueError, match="cannot resume"):
         _marked_ordered_stream(None, ckpt, None, 8)
+    with open(os.path.join(ckpt, "_ordered_engine.json")) as f:
+        assert f.read() == classic  # refused, not rewritten
 
     src = StagedStream(spark, str(tmp_path)).source()
     pattern = (Step("u", role="user"), Step("a", role="assistant"), Step("c", role="tool"))
@@ -212,6 +215,38 @@ def test_marker_refuses_classic_resumes_sharded(spark, tmp_path):
         assert ("match_start_idx" in unified.columns) == (cfg is not None)
         with open(os.path.join(ckpt, "_ordered_engine.json")) as f:
             assert f.read() == _PARENT_MARKERS[name]  # resumed, not rewritten
+
+
+_STRICT = (Step("u", role="user"), Step("a", role="assistant"))
+_STRICT_STEPS = [["u", "user", None], ["a", "assistant", None]]
+_SKIP = OrderedStreamConfig(pattern=_STRICT, pattern_mode="skip")
+_SKIP_SPEC = {"steps": _STRICT_STEPS, "within_s": None, "mode": "skip",
+              "within_turns": None, "not_between": None}
+
+
+@pytest.mark.parametrize(
+    "prior,cfg",
+    [
+        ({"engine": "sharded", "n_shards": 8}, None),
+        ({"engine": "sharded", "n_shards": 8, "pattern": _STRICT_STEPS},
+         OrderedStreamConfig(pattern=_STRICT)),
+        ({"engine": "sharded", "n_shards": 8,
+          "pattern": {"steps": _STRICT_STEPS, "within_s": None}},
+         OrderedStreamConfig(pattern=_STRICT)),
+        ({"engine": "sharded", "n_shards": 8, "pattern": _SKIP_SPEC}, _SKIP),
+    ],
+    ids=["no_pattern_key", "list_pattern", "no_mode_keys", "skip_no_frontier_fields"],
+)
+def test_marker_refuses_other_formats(tmp_path, prior, cfg):
+    """A marker in any form this build does not write is refused with the
+    one mismatch error at start, before any batch runs, and stays as it
+    was."""
+    marker = json.dumps(prior)
+    ckpt = _old_checkpoint(str(tmp_path), "ckpt", marker)
+    with pytest.raises(ValueError, match="cannot resume"):
+        _marked_ordered_stream(None, ckpt, cfg, 8)
+    with open(os.path.join(ckpt, "_ordered_engine.json")) as f:
+        assert f.read() == marker
 
 
 def test_engine_marker_pins_n_shards(tmp_path):

@@ -307,8 +307,7 @@ def test_read_pipeline_output_supersedes_per_turn(spark, tmp_path):
             "row_type string",
         )
 
-    wb = sk.split_sink(sk.SinkConfig(data_path=os.path.join(out, "data"),
-                                     validate=False))
+    wb = sk.split_sink(sk.SinkConfig(data_path=os.path.join(out, "data")))
     wb(full_batch("h", [1, 2, 4, 5], 0), 0)
     wb(full_batch("c", [1], 1), 1)
     got = sorted(

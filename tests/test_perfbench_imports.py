@@ -6,12 +6,13 @@ tools/ is not named in README.md."""
 
 import ast
 import importlib
-import importlib.util
 import os
 from types import ModuleType
 
 import numpy as np
 import pytest
+
+from streaming_utils import run_pipeline_module
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PERFBENCH = os.path.join(ROOT, "perfbench")
@@ -28,15 +29,6 @@ def _imported(module: str, name: str):
     return getattr(mod, name) if hasattr(mod, name) else importlib.import_module(f"{module}.{name}")
 
 
-def _run_pipeline():
-    spec = importlib.util.spec_from_file_location(
-        "run_pipeline", os.path.join(ROOT, "jobs", "run_pipeline.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
 def _assert_names_resolve(directory: str, fname: str):
     """Every `from X import Y` outside `directory` resolves, and so does
     every attribute read off an imported module (`core.apply_batch`) or off
@@ -46,7 +38,7 @@ def _assert_names_resolve(directory: str, fname: str):
     local = {f[:-3] for f in _scripts(directory)} | {os.path.basename(directory), "__future__"}
     with open(os.path.join(directory, fname)) as f:
         tree = ast.parse(f.read())
-    bound = {"rp": _run_pipeline()}
+    bound = {"rp": run_pipeline_module()}
     for node in ast.walk(tree):
         if isinstance(node, ast.ImportFrom) and node.module.split(".")[0] not in local:
             for a in node.names:

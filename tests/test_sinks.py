@@ -1,7 +1,9 @@
 """Sink behaviors: DLQ on write failure, export formats, merge_on_key and
-its key index, epoch compaction and its visibility rules. Epoch idempotency
-under crashes: test_sink_fault_matrix.py."""
+its key index, epoch compaction and its visibility rules, status retention
+and key clustering at compaction, raw-channel refusal, unpersist on failed
+writes. Epoch idempotency under crashes: test_sink_fault_matrix.py."""
 
+import datetime
 import fcntl
 import os
 import shutil
@@ -9,6 +11,7 @@ import tempfile
 from collections import Counter
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
@@ -206,6 +209,15 @@ def test_iceberg_sink_contract(spark, tmp_path, monkeypatch):
     assert len(calls) == 2 and calls[1][3] == {"snapshot-property.ordered.epoch": "4"}
 
 
+def test_merge_on_key_refused_with_iceberg_table():
+    """merge_on_key dedupes through the parquet sink's key index, which an
+    Iceberg sink does not keep: the pair is refused at configuration time
+    instead of silently appending undeduped rows."""
+    with pytest.raises(ValueError, match="merge_on_key"):
+        SinkConfig(data_path="d", iceberg_table="cat.db.t", merge_on_key=True)
+    assert SinkConfig(data_path="d", iceberg_table="cat.db.t").iceberg_table
+
+
 def test_iceberg_epoch_committed_reads_snapshot_summaries():
     """_iceberg_epoch_committed issues a pushed-down LIMIT-1 probe against
     the table's .snapshots metadata (never a full collect): present epoch →
@@ -280,7 +292,7 @@ def test_keyidx_merge_property(data):
     path = tempfile.mkdtemp(prefix="keyidx-prop-") + "/data"
     try:
         wb = sk.split_sink(
-            sk.SinkConfig(data_path=path, validate=False, merge_on_key=True)
+            sk.SinkConfig(data_path=path, merge_on_key=True)
         )
         convs = ["a", "b", "c"]
         next_turn = {c: 1 for c in convs}
@@ -341,7 +353,7 @@ def test_keyidx_merge_scan_bounded_and_exact(spark, tmp_path):
     O(#convs × compaction window) while the sink grows 60×; duplicates are
     still dropped exactly."""
     path = os.path.join(str(tmp_path), "data")
-    cfg = sk.SinkConfig(data_path=path, validate=False, merge_on_key=True)
+    cfg = sk.SinkConfig(data_path=path, merge_on_key=True)
     wb = sk.split_sink(cfg)
     convs = [f"c{i:02d}" for i in range(10)]
     scans = {}
@@ -377,11 +389,11 @@ def test_keyidx_bootstraps_legacy_sink(spark, tmp_path):
     index on first merged epoch via a one-time catch-up; cross-epoch dups
     against the legacy rows are dropped."""
     path = os.path.join(str(tmp_path), "data")
-    plain = sk.split_sink(sk.SinkConfig(data_path=path, validate=False))
+    plain = sk.split_sink(sk.SinkConfig(data_path=path))
     plain(_unified_batch(spark, ["a", "b"], [1, 2]), 0)
     assert not os.path.isdir(os.path.join(path, "_keyidx"))
     merged = sk.split_sink(
-        sk.SinkConfig(data_path=path, validate=False, merge_on_key=True)
+        sk.SinkConfig(data_path=path, merge_on_key=True)
     )
     merged(_unified_batch(spark, ["a", "b"], [2, 3]), 1)  # 2 is a dup
     assert _data_keys(spark, path) == [
@@ -394,7 +406,7 @@ def test_keyidx_all_empty_fold_then_real_delta_dedupes(spark, tmp_path):
     fold an all-empty key index; later data epochs still dedupe exactly
     against it."""
     path = str(tmp_path / "data")
-    wb = sk.split_sink(sk.SinkConfig(data_path=path, validate=False, merge_on_key=True))
+    wb = sk.split_sink(sk.SinkConfig(data_path=path, merge_on_key=True))
 
     def batch(row_type, turns):
         return spark.createDataFrame(
@@ -411,64 +423,12 @@ def test_keyidx_all_empty_fold_then_real_delta_dedupes(spark, tmp_path):
     assert sorted(r["turn_idx"] for r in got) == [1, 2, 3]
 
 
-def test_keyidx_raw_survives_legacy_empty_compact(spark, tmp_path):
-    """A legacy sink may already hold an all-empty compact generation
-    (written before the skip guard): the explicit-schema read must return
-    it as empty instead of failing parquet schema inference forever."""
-    data_path = str(tmp_path / "data")
-    legacy = os.path.join(sk._keyidx_base(data_path), "compact=5")
-    os.makedirs(legacy)
-    open(os.path.join(legacy, "_SUCCESS"), "w").close()
-    assert sk._keyidx_raw(spark, data_path).count() == 0
-    # and deltas written after the legacy empty generation are still seen
-    real = spark.createDataFrame([("c2", 3)], "conv_id string, turn_idx int")
-    sk._write_keyidx_delta(real, data_path, 6)
-    idx = sk._keyidx_raw(spark, data_path).collect()
-    assert [(r["conv_id"], r["hi_turn"]) for r in idx] == [("c2", 3)]
-
-
-def test_keyidx_legacy_kbucket_layout_still_dedupes(spark, tmp_path):
-    """A key index in the earlier partitioned layout — a kbucket=
-    partitioned compact generation and deltas carrying a kbucket column —
-    still dedupes exactly, read as it is and after one more batch folds it
-    into an unpartitioned generation."""
-    path = str(tmp_path / "data")
-    base = sk._keyidx_base(path)
-
-    def legacy(rows):
-        return spark.createDataFrame(
-            rows, "conv_id string, hi_turn long, hi_match long"
-        ).withColumn("kbucket", F.pmod(F.xxhash64("conv_id"), F.lit(64)).cast("int"))
-
-    legacy([("a", 2, None), ("b", 3, None)]).write.partitionBy("kbucket").parquet(
-        os.path.join(base, "compact=4")
-    )
-    for epoch in range(5, 5 + sk._KEYIDX_COMPACT_AFTER):  # c's watermark ends at 8
-        legacy([("c", epoch - 4, None)]).coalesce(1).write.parquet(
-            os.path.join(base, f"epoch={epoch}")
-        )
-    wb = sk.split_sink(sk.SinkConfig(data_path=path, validate=False, merge_on_key=True))
-
-    def batch(rows):
-        return spark.createDataFrame(
-            [(c, t, "data") for c, t in rows],
-            "conv_id string, turn_idx long, row_type string",
-        )
-
-    wb(batch([("a", 2), ("a", 3), ("b", 3), ("c", 8), ("c", 9)]), 13)
-    assert sorted(d for d in os.listdir(base) if d.startswith("compact=")) == ["compact=4"]
-    wb(batch([("a", 3), ("b", 4), ("c", 9)]), 14)  # folds the legacy index first
-    assert sorted(d for d in os.listdir(base) if d.startswith("compact=")) == ["compact=13"]
-    got = sk.read_sink(spark, path, table="unified").select("conv_id", "turn_idx").collect()
-    assert sorted(map(tuple, got)) == [("a", 3), ("b", 4), ("c", 9)]
-
-
 def test_epoch_compaction_bounds_dirs_and_preserves_rows(spark, tmp_path):
     """30 epochs with fanout 4: visible dir count stays O(fanout × levels)
     instead of 30, and read_sink returns exactly the same rows as the
     uncompacted layout would."""
     path = os.path.join(str(tmp_path), "data")
-    cfg = sk.SinkConfig(data_path=path, validate=False, compact_epochs_after=4)
+    cfg = sk.SinkConfig(data_path=path, compact_epochs_after=4)
     wb = sk.split_sink(cfg)
     for e in range(30):
         wb(
@@ -497,7 +457,7 @@ def test_epoch_compaction_crash_window_no_double_read(spark, tmp_path):
     # grace 0: superseded dirs are swept immediately, so the replay
     # re-creation below exercises a REAL post-deletion window
     cfg = sk.SinkConfig(
-        data_path=path, validate=False, compact_epochs_after=4,
+        data_path=path, compact_epochs_after=4,
         compact_grace_seconds=0,
     )
     wb = sk.split_sink(cfg)
@@ -533,7 +493,7 @@ def test_merge_on_key_exact_across_compaction(spark, tmp_path):
     path = os.path.join(str(tmp_path), "data")
     # phase 1: merge OFF, small fanout → ranges fold with no index deltas
     wb_off = sk.split_sink(
-        sk.SinkConfig(data_path=path, validate=False, compact_epochs_after=3)
+        sk.SinkConfig(data_path=path, compact_epochs_after=3)
     )
     convs = ["a", "b"]
     for e in range(8):
@@ -547,7 +507,7 @@ def test_merge_on_key_exact_across_compaction(spark, tmp_path):
     # phase 2: merge ON — bootstrap must read COMPACTED ranges for the index
     wb_on = sk.split_sink(
         sk.SinkConfig(
-            data_path=path, validate=False, merge_on_key=True, compact_epochs_after=3
+            data_path=path, merge_on_key=True, compact_epochs_after=3
         )
     )
     # full replay of old turns at a new epoch id + one fresh turn
@@ -571,7 +531,7 @@ def test_compaction_grace_defers_input_deletion(spark, tmp_path):
     while staying INVISIBLE to new listings; grace 0 sweeps them."""
     path = os.path.join(str(tmp_path), "data")
     wb = sk.split_sink(
-        sk.SinkConfig(data_path=path, validate=False, compact_epochs_after=4)
+        sk.SinkConfig(data_path=path, compact_epochs_after=4)
     )  # default grace: 300 s
     for e in range(6):
         wb(
@@ -599,7 +559,7 @@ def test_compaction_failure_does_not_quarantine_committed_rows(spark, tmp_path, 
     dlq = os.path.join(str(tmp_path), "dlq")
     wb = sk.split_sink(
         sk.SinkConfig(
-            data_path=path, dlq_path=dlq, validate=False, compact_epochs_after=4
+            data_path=path, dlq_path=dlq, compact_epochs_after=4
         )
     )
 
@@ -636,7 +596,7 @@ def test_multilevel_sweep_and_lock(spark, tmp_path):
     Also: a fresh _compact.lock makes a second compactor a no-op."""
     path = os.path.join(str(tmp_path), "data")
     wb = sk.split_sink(
-        sk.SinkConfig(data_path=path, validate=False, compact_epochs_after=None)
+        sk.SinkConfig(data_path=path, compact_epochs_after=None)
     )
     for e in range(11):
         wb(
@@ -720,3 +680,199 @@ def test_visibility_partitions_epochs_exactly_once(tmp_path_factory, data):
         f"visible entries cover {sorted(covered)} != 0..{n_epochs - 1}; "
         f"entries={sk._sink_entries(base)}"
     )
+
+
+_UNIFIED_SCHEMA = (
+    "conv_id string, turn_idx long, row_type string, status_ts timestamp, "
+    "received_count long, result_count long"
+)
+
+
+def _data_row(conv, turn):
+    return (conv, turn, "data", None, None, None)
+
+
+def _status_row(conv, epoch):
+    ts = datetime.datetime(2026, 1, 1) + datetime.timedelta(seconds=epoch)
+    return (conv, None, "status", ts, epoch + 1, epoch + 1)
+
+
+def _n_persistent(spark):
+    return len(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def test_unpersist_on_writer_failure(spark, tmp_path, monkeypatch):
+    """When the epoch write fails, the persisted
+    micro-batch must still be unpersisted — a retrying runner otherwise
+    accumulates cached blocks across failures."""
+    path = os.path.join(str(tmp_path), "data")
+    dlq = os.path.join(str(tmp_path), "dlq")
+    cfg = sk.SinkConfig(data_path=path, dlq_path=dlq)
+    wb = sk.split_sink(cfg)
+    real = sk._write_idempotent
+
+    def fail_data_writes(df, base, epoch_id):
+        if base == path:
+            raise OSError("disk full")
+        return real(df, base, epoch_id)
+
+    monkeypatch.setattr(sk, "_write_idempotent", fail_data_writes)
+    baseline = _n_persistent(spark)
+    batch = spark.createDataFrame([_data_row("c0", 1)], _UNIFIED_SCHEMA)
+    with pytest.raises(OSError, match="disk full"):
+        wb(batch, 0)
+    # the quarantine DLQ write happened, and no cached blocks leaked
+    assert os.path.isdir(os.path.join(dlq, "writer_error"))
+    assert _n_persistent(spark) == baseline
+
+
+def test_status_retention_at_compaction(spark, tmp_path):
+    """Folds prune status rows beyond the newest N per conv
+    among the rows the fold sees; data rows are untouched; the retained
+    window reads back exactly."""
+    path = os.path.join(str(tmp_path), "data")
+    wb = sk.split_sink(
+        sk.SinkConfig(
+            data_path=path,
+            compact_epochs_after=None,  # compact explicitly below
+        )
+    )
+    convs = ["a", "b"]
+    for e in range(8):
+        rows = [_data_row(c, e + 1) for c in convs] + [
+            _status_row(c, e) for c in convs
+        ]
+        wb(spark.createDataFrame(rows, _UNIFIED_SCHEMA), e)
+
+    before_status = (
+        sk.read_sink(spark, path, table="unified")
+        .filter(F.col("row_type") == "status")
+        .select("conv_id", "status_ts", "received_count")
+        .collect()
+    )
+    folds = sk.compact_data_epochs(
+        spark, path, fanout=4, grace_seconds=0, status_keep_last=2
+    )
+    assert folds == 1  # oldest 4 epochs folded; 4 level-0 epochs remain
+
+    unified = sk.read_sink(spark, path, table="unified")
+    # data rows: all 16 survive
+    assert unified.filter(F.col("row_type") == "data").count() == 16
+    status = unified.filter(F.col("row_type") == "status")
+    # per conv: newest 2 of the folded epochs 0-3, plus untouched 4-7
+    per_conv = {
+        r["conv_id"]: r["n"]
+        for r in status.groupBy("conv_id").agg(F.count("*").alias("n")).collect()
+    }
+    assert per_conv == {"a": 6, "b": 6}
+    kept = {
+        (r["conv_id"], r["received_count"]) for r in status.collect()
+    }
+    expect = {
+        (c, e + 1) for c in convs for e in (2, 3, 4, 5, 6, 7)
+    }  # epochs 0,1 pruned from the fold
+    assert kept == expect
+    # retained rows read back value-exact
+    before = {(r["conv_id"], r["received_count"]): r["status_ts"] for r in before_status}
+    for r in status.collect():
+        assert r["status_ts"] == before[(r["conv_id"], r["received_count"])]
+
+
+def test_compact_generation_clustered_by_key(spark, tmp_path):
+    """Compact generations are range-partitioned on conv_id
+    and sorted within partitions, so every parquet file is conv_id-sorted
+    and row groups carry tight min/max stats — the BigQuery-clustering
+    analog that lets per-key reads prune."""
+    path = os.path.join(str(tmp_path), "data")
+    wb = sk.split_sink(
+        sk.SinkConfig(data_path=path, compact_epochs_after=None)
+    )
+    # interleave keys across epochs so an unordered fold would be unsorted
+    for e in range(5):
+        rows = [_data_row(f"conv{k:03d}", e + 1) for k in range(40)]
+        wb(spark.createDataFrame(rows, _UNIFIED_SCHEMA), e)
+    assert sk.compact_data_epochs(spark, path, fanout=4, grace_seconds=0) == 1
+    compact_dirs = [d for d in os.listdir(path) if d.startswith("compact=")]
+    assert len(compact_dirs) == 1
+    cdir = os.path.join(path, compact_dirs[0])
+    files = [f for f in os.listdir(cdir) if f.endswith(".parquet")]
+    assert files
+    for f in files:
+        pf = pq.ParquetFile(os.path.join(cdir, f))
+        vals = pf.read(columns=["conv_id"]).column("conv_id").to_pylist()
+        assert vals == sorted(vals)  # clustered: file is key-sorted
+        for rg in range(pf.metadata.num_row_groups):
+            col = pf.metadata.row_group(rg).column(0)
+            assert col.statistics is not None  # stats exist for pruning
+    # the fold still holds every row
+    assert sk.read_sink(spark, path, table="unified").count() == 200
+
+
+def test_compactor_refuses_raw_channel(spark, tmp_path):
+    """Compacting a raw passthrough channel would hide rows from
+    read_raw and then sweep the originals — the compactor must refuse, and
+    read_raw must fail loudly if compact= dirs ever appear under a raw
+    path."""
+    raw = os.path.join(str(tmp_path), "hot_raw")
+    w = sk.raw_passthrough_sink(raw)
+    w(
+        spark.createDataFrame(
+            [("c0", 1, "user", "hi")], "conv_id string, turn_idx long, role string, text string"
+        ),
+        0,
+    )
+    with pytest.raises(ValueError, match="raw passthrough"):
+        sk.compact_data_epochs(spark, raw, fanout=2, grace_seconds=0)
+    assert sk.read_raw(spark, raw).count() == 1  # untouched
+    # a committed compact dir under the raw path (a compactor run on it)
+    dmg = os.path.join(raw, "compact=1-0-0")
+    os.makedirs(dmg)
+    open(os.path.join(dmg, "_SUCCESS"), "w").close()
+    with pytest.raises(RuntimeError, match="compacted by mistake"):
+        sk.read_raw(spark, raw)
+
+
+def test_unpersist_on_dlq_write_failure(spark, tmp_path, monkeypatch):
+    """A failing DLQ write (disk full) must not leak the persisted
+    micro-batch either: the unpersist scope starts before the first
+    persist(), ahead of the row-level DLQ split."""
+    path = os.path.join(str(tmp_path), "data")
+    dlq = os.path.join(str(tmp_path), "dlq")
+    cfg = sk.SinkConfig(data_path=path, dlq_path=dlq)
+    wb = sk.split_sink(cfg)
+    real = sk._write_idempotent
+
+    def fail_dlq_writes(df, base, epoch_id):
+        if base == dlq:
+            raise OSError("dlq disk full")
+        return real(df, base, epoch_id)
+
+    monkeypatch.setattr(sk, "_write_idempotent", fail_dlq_writes)
+    baseline = _n_persistent(spark)
+    # one violating row (NULL conv_id) forces the row-level DLQ write
+    batch = spark.createDataFrame(
+        [_data_row("c0", 1), _data_row(None, 1)], _UNIFIED_SCHEMA
+    )
+    with pytest.raises(OSError, match="dlq disk full"):
+        wb(batch, 0)
+    assert _n_persistent(spark) == baseline
+
+
+def test_compactor_refuses_marked_raw_channel_even_with_row_type(spark, tmp_path):
+    """The _raw_channel marker written by raw_passthrough_sink refuses
+    compaction independent of schema, even when the raw rows carry a
+    row_type column like the unified sink's."""
+    raw = os.path.join(str(tmp_path), "hot_raw")
+    w = sk.raw_passthrough_sink(raw)
+    # raw rows that HAPPEN to carry a row_type column: the marker must
+    # still refuse compaction
+    w(
+        spark.createDataFrame(
+            [("c0", 1, "data")], "conv_id string, turn_idx long, row_type string"
+        ),
+        0,
+    )
+    assert os.path.exists(os.path.join(raw, "_raw_channel"))
+    with pytest.raises(ValueError, match="_raw_channel marker"):
+        sk.compact_data_epochs(spark, raw, fanout=2, grace_seconds=0)
+    assert sk.read_raw(spark, raw).count() == 1

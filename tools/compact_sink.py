@@ -1,8 +1,9 @@
 """Offline data-epoch compaction for an ordered-pipeline sink directory.
 
 The streaming sink compacts itself per epoch (SinkConfig.compact_epochs_after),
-but a sink written by an older build — or one whose stream ran with
-compaction disabled — accumulates one `epoch=N` dir per micro-batch. This
+but a sink whose stream ran with compaction disabled
+(`compact_epochs_after=None`) accumulates one `epoch=N` dir per
+micro-batch. This
 tool folds such a sink in place with the same leveled, crash-safe protocol
 (`sinks.compact_data_epochs`). Concurrency: readers are safe throughout
 (folds are `_SUCCESS`-gated, superseded dirs are visibility-hidden and
