@@ -205,6 +205,20 @@ def test_redact_pii_on_crafted_text(spark):
     assert (got[["n_email", "n_ipv4", "n_phone"]].loc[3] == 0).all()
 
 
+def test_redact_counts_match_insertions(spark):
+    df = spark.createDataFrame(
+        [(1, "contact a@1.2.3.4.net or 5.6.7.8"), (2, "x@y.com a@1.2.3.4.net")],
+        ["doc_id", "text"],
+    )
+    got = text.redact_pii(df).toPandas().set_index("doc_id")
+    # doc 1: the email consumes 1.2.3.4 — only the standalone ip counts
+    assert got.loc[1, "n_email"] == 1 and got.loc[1, "n_ipv4"] == 1
+    assert got.loc[1, "redacted"].count("<IPV4>") == got.loc[1, "n_ipv4"]
+    # doc 2: both matches are emails; no <IPV4> token is ever inserted
+    assert got.loc[2, "n_email"] == 2 and got.loc[2, "n_ipv4"] == 0
+    assert "<IPV4>" not in got.loc[2, "redacted"]
+
+
 def test_bpe_regex_token_count(spark):
     df = spark.createDataFrame([(1, "Hello, world! x2 (42)")], "doc_id long, text string")
     got = text.token_count(df).toPandas().iloc[0]
@@ -398,3 +412,47 @@ def test_ann_plan_shapes(spark, sf_dir):
     assert "BroadcastHashJoin" in ivf
     assert "CartesianProduct" not in ivf and "SortMergeJoin" not in ivf
     assert "ArrowEvalPython" in ivf
+
+
+def test_lsh_degenerate_bucket_capped(spark):
+    """Adversarial corpus: 500 identical docs share every band key. Without
+    a cap the band self-join expands 500²/2 pairs in ONE bucket; with the
+    cap the bucket is dropped (the exact tier owns identical docs) and the
+    query completes with no quadratic expansion."""
+    docs = spark.range(500).select(
+        F.col("id").alias("doc_id"), F.lit("same text everywhere here now").alias("text")
+    )
+    capped = dedup.minhash_lsh_pairs(docs, max_bucket=64)
+    assert capped.count() == 0  # mega-bucket excluded from pair expansion
+    stats = dedup.lsh_bucket_stats(docs).collect()
+    assert stats[0]["n_docs"] == 500  # the audit query exposes the cluster
+    # the cheaper exact tier still catches the cluster
+    ex = dedup.dedup_exact(docs).collect()
+    assert len(ex) == 1 and ex[0]["n_copies"] == 500
+    # a cap above every bucket size is a no-op vs the uncapped default:
+    # the capped path itself is lossless on benign data
+    benign = spark.range(6).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("distinct words for doc number "), F.col("id").cast("string")).alias("text"),
+    )
+    assert (
+        dedup.minhash_lsh_pairs(benign, max_bucket=64).collect()
+        == dedup.minhash_lsh_pairs(benign).collect()
+    )
+
+
+def test_vocab_topk_counts_and_tiebreak(spark):
+    df = spark.createDataFrame([(1, "a b b c C"), (2, "b  a\t x")], ["doc_id", "text"])
+    got = [(r["token"], r["n"]) for r in text.vocab_topk(df, k=3).collect()]
+    # case-folded, whitespace-split; ties broken by token for a stable cut
+    assert got == [("b", 3), ("a", 2), ("c", 2)]
+
+
+def test_doc_length_stats_exact(spark):
+    df = spark.createDataFrame(
+        [(i, "x" * n) for i, n in enumerate([4, 8, 10, 100])], ["doc_id", "text"]
+    )
+    row = text.doc_length_stats(df).collect()[0]
+    assert row["n_docs"] == 4 and row["max_chars"] == 100
+    assert row["p50_chars"] == 9.0  # exact percentile, linear interpolation
+    assert row["mean_chars"] == 30.5

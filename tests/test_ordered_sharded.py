@@ -2,6 +2,7 @@
 final statuses equal the batch status plan across the scenario suite;
 duplicate, TTL, capped-drain, tombstone and shard-blob semantics."""
 
+import numpy as np
 import pandas as pd
 import pytest
 
@@ -136,6 +137,8 @@ import time as _time
 from dataflow_ordered_processing_spark.operators import ordered_core as core
 from dataflow_ordered_processing_spark.streaming.ordered_sharded import (
     _HB_AT,
+    _TOMBS,
+    _conv_dumps,
     _conv_to_tuple,
     make_sharded_func,
 )
@@ -257,3 +260,190 @@ def test_null_conv_id_is_its_own_group():
         [("cA", 1), ("cB", 1), (None, 1), (None, 2)], key=str
     )
     assert sorted(statuses, key=str) == sorted(["cA", "cB", None], key=str)
+
+
+# -------- completed conversations become compact tombstones: excluded from
+# heartbeat sweeps, aged out silently under the TTL, late duplicates still
+# discarded and counted
+
+def _completed_conv(state_dict=None):
+    """Run one arrival batch containing a full 3-turn conversation (turn 3 =
+    end sentinel) through the sharded func; return the resulting state."""
+    cfg = OrderedStreamConfig(status_heartbeat_ms=50)
+    func = make_sharded_func(cfg)
+    state = _FakeState(
+        _state_with(state_dict or {}, hb_at=_time.time()), timed_out=False
+    )
+    batch = _shard_batch_rows([("cX", 1), ("cX", 2)])
+    end = _shard_batch_rows([("cX", 3)])
+    end.loc[:, "role"] = core.END_ROLE
+    end.loc[:, "text"] = core.END_TEXT
+    _collect(func((0,), iter([pd.concat([batch, end], ignore_index=True)]), state))
+    return state
+
+
+def test_completed_conv_becomes_tombstone():
+    state = _completed_conv()
+    d = pickle.loads(state.get[0])
+    assert "cX" not in {k for k in d if isinstance(k, str)}
+    assert d[_TOMBS]["cX"][0] == 3  # last_emitted preserved compactly
+
+
+def test_tombstones_excluded_from_heartbeat_sweep():
+    state = _completed_conv()
+    d = pickle.loads(state.get[0])
+    d[_HB_AT] = _time.time() - 10.0  # force a sweep on next invocation
+    state._v = (pickle.dumps(d, protocol=5),)
+    cfg = OrderedStreamConfig(status_heartbeat_ms=50, emit_status_every_batch=False)
+    func = make_sharded_func(cfg)
+    # arrival for an unrelated key triggers the overdue sweep
+    _, statuses = _collect(func((0,), iter([_shard_batch_rows([("cB", 2)])]), state))
+    assert "cX" not in statuses  # frozen tombstone: no heartbeat status
+
+
+def test_tombstone_ttl_evicts_silently():
+    cfg = OrderedStreamConfig(status_heartbeat_ms=50, evict_idle_after_heartbeats=2)
+    func = make_sharded_func(cfg)
+    state = _completed_conv()
+    for _ in range(3):
+        if not state.exists:
+            break
+        state.hasTimedOut = True
+        _, statuses = _collect(func((0,), iter([]), state))
+        assert "cX" not in statuses  # eviction emits no status (no gap)
+    assert not state.exists  # tombstone aged out → shard state freed
+
+
+def test_late_duplicate_after_completion_counted():
+    cfg = OrderedStreamConfig(status_heartbeat_ms=50)
+    func = make_sharded_func(cfg)
+    state = _completed_conv()
+    data, _ = _collect(func((0,), iter([_shard_batch_rows([("cX", 2)])]), state))
+    assert data == []  # re-delivery discarded, not re-emitted
+    d = pickle.loads(state.get[0])
+    tomb = d[_TOMBS]["cX"]
+    assert tomb[1] == 4  # received_count 3 + 1
+    assert tomb[3] == 1  # duplicate_count
+
+
+def test_tombstone_shard_stops_heartbeating():
+    """A shard holding only a completed conversation must not re-arm its
+    timer (no TTL), and a timer firing on it must emit no status."""
+    timer_set = []
+
+    class _TimedState(_FakeState):
+        def setTimeoutDuration(self, ms):
+            timer_set.append(ms)
+
+    state = _TimedState(_completed_conv().get[0])
+    func = make_sharded_func(OrderedStreamConfig(status_heartbeat_ms=50))
+
+    # duplicate arrival to a tombstone: status still emitted (arrival path),
+    # timer NOT re-armed (frozen state, nothing will ever change)
+    frames = list(func((0,), iter([_shard_batch_rows([("cX", 2)])]), state))
+    assert any((f["row_type"] == "status").any() for f in frames)
+    assert timer_set == []
+
+    # timer firing on a tombstone: silent (no status row, no data)
+    state.hasTimedOut = True
+    assert list(func((0,), iter([]), state)) == []
+
+
+# -------- shard-blob encoding: pre-pickled entries for sparse batches, plain
+# tuples for dense ones
+
+def test_untouched_convs_not_repickled():
+    """Shard-dict entries are stored pre-pickled: an arrival batch must
+    rewrite ONLY the touched conversations' bytes, leaving untouched
+    entries byte-identical (the outer blob pickle then memcpys them —
+    measured 13x cheaper per invocation at 10k pending convs / 100
+    touched, the 100-TB sparse-touch regime)."""
+
+    def pend(conv):
+        buf = {
+            "turn_idx": np.array([3, 5], dtype="int64"),
+            "role": np.array(["user", "user"], dtype=object),
+            "text": np.array([f"{conv}-a", f"{conv}-b"], dtype=object),
+            "tool": np.array([None, None], dtype=object),
+            "ts_us": np.array([1000, 2000], dtype="int64"),
+        }
+        return core.OrderedState(last_emitted=0, buffer=buf)
+
+    entries = {f"c{i}": _conv_dumps(pend(f"c{i}")) for i in range(5)}
+    state = _FakeState(pickle.dumps(dict(entries), protocol=5))
+    func = make_sharded_func(OrderedStreamConfig(emit_status_every_batch=False))
+    list(func((0,), iter([_shard_batch_rows([("c0", 1)])]), state))
+    after = pickle.loads(state.get[0])
+    assert after["c1"] == entries["c1"]  # untouched: byte-identical
+    assert isinstance(after["c0"], bytes) and after["c0"] != entries["c0"]
+
+
+def test_dense_batch_tuple_entries_load():
+    """A dense batch stores shard-dict entries as plain tuples (see
+    test_dense_touch_stores_plain_tuples); `_conv_loads` must read them
+    next to pre-pickled bytes entries."""
+    buf = {
+        "turn_idx": np.array([2], dtype="int64"),
+        "role": np.array(["user"], dtype=object),
+        "text": np.array(["t2"], dtype=object),
+        "tool": np.array([None], dtype=object),
+        "ts_us": np.array([1000], dtype="int64"),
+    }
+    dense = {"cL": _conv_to_tuple(core.OrderedState(last_emitted=0, buffer=buf))}
+    state = _FakeState(pickle.dumps(dense, protocol=5))
+    func = make_sharded_func(OrderedStreamConfig(emit_status_every_batch=False))
+    data, _ = _collect(func((0,), iter([_shard_batch_rows([("cL", 1)])]), state))
+    assert data == [("cL", 1), ("cL", 2)]  # gap closed through a tuple entry
+
+
+def test_dense_touch_stores_plain_tuples():
+    """Adaptive encoding: when a batch touches the majority of the shard's
+    conversations, entries are stored as plain tuples (no nested dumps
+    framing); sparse batches store bytes (see
+    test_untouched_convs_not_repickled)."""
+    state = _FakeState(None)
+    func = make_sharded_func(OrderedStreamConfig(emit_status_every_batch=False))
+    batch = _shard_batch_rows([("cA", 2), ("cB", 2)])  # all touched, all pending
+    list(func((0,), iter([batch]), state))
+    d = pickle.loads(state.get[0])
+    assert isinstance(d["cA"], tuple) and isinstance(d["cB"], tuple)
+
+
+# -------- heartbeat-sweep completion and tombstone resurrection
+
+def test_sweep_completion_honors_cleanup_on_complete():
+    """A capped drain finishing a conversation during a heartbeat sweep
+    must follow the same completion contract as the arrival path: eager
+    cleanup under cleanup_on_complete=True (no tombstone)."""
+    cfg = OrderedStreamConfig(
+        status_heartbeat_ms=50, max_emit_per_batch=5, cleanup_on_complete=True
+    )
+    func = make_sharded_func(cfg)
+    # pending buffer holds the full conversation incl. the end sentinel;
+    # the sweep's drain completes it
+    buf = {
+        "turn_idx": np.array([1, 2, 3], dtype="int64"),
+        "role": np.array(["user", "assistant", core.END_ROLE], dtype=object),
+        "text": np.array(["a", "b", core.END_TEXT], dtype=object),
+        "tool": np.array([None] * 3, dtype=object),
+        "ts_us": np.array([1, 2, 3], dtype="int64"),
+    }
+    st0 = core.OrderedState(last_emitted=0, buffer=buf)
+    st0.last_event_received = True
+    state = _FakeState(_state_with({"cC": _conv_to_tuple(st0)}), timed_out=True)
+    data, _ = _collect(func((0,), iter([]), state))
+    assert [t for _, t in data] == [1, 2, 3]
+    assert not state.exists  # eager cleanup: no tombstone, state freed
+
+
+def test_resurrected_conv_drops_stale_tombstone():
+    """A post-final turn that re-opens a gap resurrects the conversation
+    from its tombstone; the stale tombstone must not survive alongside the
+    active state."""
+    func = make_sharded_func(OrderedStreamConfig(status_heartbeat_ms=50))
+    state = _completed_conv()  # cX complete at turn 3, tombstoned
+    # bogus post-final turn 5 arrives (gap at 4) → resurrect as pending
+    list(func((0,), iter([_shard_batch_rows([("cX", 5)])]), state))
+    d = pickle.loads(state.get[0])
+    assert "cX" in {k for k in d if isinstance(k, str)}  # active again
+    assert "cX" not in d.get(_TOMBS, {})  # stale tombstone dropped

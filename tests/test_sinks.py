@@ -876,3 +876,16 @@ def test_compactor_refuses_marked_raw_channel_even_with_row_type(spark, tmp_path
     with pytest.raises(ValueError, match="_raw_channel marker"):
         sk.compact_data_epochs(spark, raw, fanout=2, grace_seconds=0)
     assert sk.read_raw(spark, raw).count() == 1
+
+
+def test_epoch_dirs_skip_uncommitted(tmp_path):
+    base = str(tmp_path / "sink")
+    for e, committed in [(0, True), (1, False), (2, True)]:
+        d = os.path.join(base, f"epoch={e}")
+        os.makedirs(d)
+        with open(os.path.join(d, "part-0.parquet"), "w") as f:
+            f.write("x")
+        if committed:
+            open(os.path.join(d, "_SUCCESS"), "w").close()
+    got = [os.path.basename(p) for p in sk.epoch_dirs(base)]
+    assert got == ["epoch=0", "epoch=2"]  # partial epoch=1 invisible
